@@ -51,10 +51,11 @@ def _doc_gram_fps(docs: DataFrame, *carry: str) -> DataFrame:
     Shared by q_ngram_novelty and q_split_leakage so the gram grain and
     fingerprint derivation can never drift apart. ``carry`` must include
     doc_id (the distinct is per document)."""
-    # round-13: fan the under-split scan to cluster width (host-gated,
-    # operators/fanout.py) — gram extraction + fingerprinting is the
-    # heavy map-side work of both consumers and ran in ONE task at test
-    # scale; distinct/min/count grains are placement-insensitive.
+    # round-13: fan the under-split scan to cluster width
+    # (operators/fanout.py; no-op once the scan already splits) — gram
+    # extraction + fingerprinting is the heavy map-side work of both
+    # consumers and ran in ONE task at test scale; distinct/min/count
+    # grains are placement-insensitive.
     toks = fan_out_scan(docs.filter(F.col("text").isNotNull())).select(
         *carry,
         F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("ts"),

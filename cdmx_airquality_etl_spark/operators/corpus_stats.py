@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from .fanout import fan_out_scan
 from ..sources.parquet import load_table
 from .dedup import _md5_int, _sql_md5_int
 

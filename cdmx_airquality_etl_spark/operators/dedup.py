@@ -99,12 +99,12 @@ def _doc_shingles(docs: DataFrame) -> DataFrame:
     """doc_id + distinct word-3-shingle array + its size.
 
     Round 13: the raw docs scan fans out to cluster width first
-    (fan_out_scan — host-gated, no-op on multi-split real inputs), so
-    shingling AND every downstream emission/kernel of the dedup family
-    parallelize instead of inheriting the test corpus's single-row-group
-    single task. Safe for every consumer: each aggregates exact integers
-    or computes row-local scores, so row placement cannot change a
-    result."""
+    (fan_out_scan — only when under-split, so a no-op on multi-split
+    real inputs), so shingling AND every downstream emission/kernel of
+    the dedup family parallelize instead of inheriting the test corpus's
+    single-row-group single task. Safe for every consumer: each
+    aggregates exact integers or computes row-local scores, so row
+    placement cannot change a result."""
     return fan_out_scan(docs).select(
         "doc_id",
         F.array_distinct(word_shingles(F.lower(F.col("text")), k=3)).alias("sh"),

@@ -1,155 +1,56 @@
-"""Host-gated fan-out of under-split scans (guide §2.1/§2.6/§6).
+"""Fan-out of under-split scans to cluster width (guide §2.1/§2.6/§6).
 
 Every driver test table is a single-row-group parquet file, so its scan
 is ONE task and all pre-exchange compute — shingling, anchor/prefix
 emission, the Arrow signature kernels — runs single-threaded no matter
-how wide ``local[N]`` is (the round-12 examination's "single-task
-pre-exchange stages" finding, and why the driver's 8-vs-32 scaling
-ratios sit ≈ 1 for most dedup queries). The scale-correct shape is the
-one a 100 TB table produces naturally: the scan splits by
-``maxPartitionBytes`` into far more tasks than cores. This helper
+how wide ``local[N]`` is (why the bench's 8-vs-32-core scaling ratios sat
+≈ 1 for most dedup queries). The scale-correct shape is the one a
+100 TB table produces naturally: the scan splits by
+``maxPartitionBytes`` into far more tasks than cores. ``fan_out_scan``
 restores that shape at test scale with a round-robin repartition to
 ``defaultParallelism``, applied ONLY when the scan has fewer partitions
 than the cluster width — so on real data, where the scan already
 splits, it inserts nothing.
 
-Round 12 prototyped the unconditional form and measured it a REGRESSION
-(OPTIMIZATION_r12.md §7): that week the sandbox VM's effective
-parallelism was ~5 cores (its committed 1/4/32-partition probe measured
-0.45/0.42/0.68 s — 32-way fan-out was net negative), so parallelizing
-paid pure scheduling overhead. The r12 VERDICT's ask #6 is the
-HOST-CONDITIONAL form shipped here: once per process, a Spark-side
-probe times the same small hash-heavy aggregate at 1 partition and at
-``defaultParallelism`` partitions, and fan-out engages only when the
-parallel run actually wins (measured on the healthy r13 window:
-1p ≈ 4.0 s vs 32p ≈ 0.4 s on the probe's full-size twin, and the real
-anchor emission 3.3 → 1.1 s). The probe is hash-over-string per row —
-deliberately compute-dense like the emissions it stands in for; a
-row-trivial probe (xxhash64 of a long) measures only scheduling
-overhead and cannot see the win (measured flat 1p/32p on the same
-window that runs emissions 3× faster in parallel).
+Round 12 measured this unconditional form as a REGRESSION
+(OPTIMIZATION_r12.md §7), but on a degraded window where the VM's
+effective parallelism was ~5 cores (1/4/32-partition probe at
+0.45/0.42/0.68 s), so a 32-way fan-out paid pure scheduling overhead.
+On the healthy r13 window the fanned emissions ran 1.5-3× faster
+(anchor emission 3.3 → 1.1 s, q_char_trigram 2.33 → 1.05 s).
 
-Correctness: a repartition only moves rows. Callers must still be
+Correctness: a repartition only moves rows. Callers must be
 partition-order-insensitive — every consumer here aggregates exact
 integers or computes row-local scores (the dedup family's documented
 bitwise-portability discipline), so placement cannot change any result.
 ``spark.sql.execution.sortBeforeRepartition`` (default on) keeps the
 round-robin assignment deterministic under task retries.
 
-``SPARK_GRAFT_SCAN_FANOUT`` overrides: ``0`` disables (the r12 shape),
-``1`` forces fan-out without probing (deterministic plans for tests),
-``auto``/unset probes the host.
+``SPARK_GRAFT_SCAN_FANOUT=0`` disables the fan-out (the reference
+shape for result-identity tests).
 """
 
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-# (pid, defaultParallelism) -> target partitions (0 = fan-out disengaged).
-# Keyed per process so a forked worker re-probes its own host window.
-_PROBE_CACHE: dict[tuple[int, int], int] = {}
-
-_PROBE_ROWS = 250_000
-# Demand a real parallel win before engaging: on the r12 degraded window
-# the parallel run LOST to the single-partition run (0.68 vs 0.45 s on
-# r12's committed probe — ratio 1.5), so any bar < 1 keeps that host on
-# the r12 shape. 0.75 rather than the original 0.6 (round-13 second
-# pass): on a fast-JVM window the whole 250k-row probe runs in ~0.4 s
-# single-threaded, so fixed per-stage scheduling (~0.15 s for a dp-task
-# stage) eats most of the probe's parallel win and the measured ratio
-# lands at 0.45-0.68 — while the REAL emissions the gate serves, whose
-# per-row work is 10-50× the probe's, measured 1.5-2.2× wins on that
-# same window (q_char_trigram 2.33→1.05, q_lsh_planner 5.74→3.87,
-# paired env-toggle A/B). The probe systematically UNDERSTATES the win,
-# so the bar sits high; the degraded shape it must catch is ratio > 1,
-# far above it.
-_ENGAGE_RATIO = 0.75
-
-
-def _probe_frame(
-    spark: SparkSession, n_partitions: int, rows: int = _PROBE_ROWS
-) -> DataFrame:
-    # md5-over-string per row: compute-dense like the shingle/anchor
-    # emissions this gate serves, so per-task scheduling overhead does
-    # not drown the signal (a bare xxhash64(id) probe measures flat).
-    return spark.range(0, rows, 1, numPartitions=n_partitions).select(
-        F.bit_xor(
-            F.conv(
-                F.substring(F.md5(F.col("id").cast("string")), 1, 15), 16, 10
-            ).cast("long")
-        ).alias("x")
-    )
 
 
 def scan_fanout_parallelism(spark: SparkSession) -> int:
-    """Target partition count for under-split scans, or 0 to leave the
-    scan alone. Probes the host once per (process, parallelism).
-
-    Probe cost diet (round 13, second pass): the original protocol —
-    full-size warm-up + full-size 1-partition run + full-size parallel
-    run — cost ~5.4 s on the healthy window, all charged to whichever
-    timed query touches fan_out_scan first. The single-partition run is
-    the expensive leg precisely on the hosts where fan-out will engage
-    (that is what "parallelism wins" means), so it is now LOWER-BOUNDED
-    instead of completed: t_one over the full row count is monotone in
-    the row count, hence t_one(full) ≥ t_one(quarter), and once
-    t_quarter alone clears t_par / ENGAGE_RATIO the engagement verdict
-    is already decided — no extrapolation assumption, just monotonicity.
-    Only hosts where the quarter run is NOT decisive (the degraded-VM
-    shape, where a 1-partition run is cheap) pay for the full run, and
-    there it costs ~0.5 s. Measured: healthy-window probe 5.4 s → ~1.6 s
-    (warm-up ~0.1, parallel 0.4, quarter ~1.0, full leg skipped); the
-    r12 degraded-window numbers (1p 0.45 vs 32p 0.68 full-size) still
-    disengage through the fallback full run."""
-    mode = os.environ.get("SPARK_GRAFT_SCAN_FANOUT", "auto")
-    if mode == "0":
+    """Target partition count for under-split scans: ``defaultParallelism``,
+    or 0 (leave scans alone) on a one-core cluster or under
+    ``SPARK_GRAFT_SCAN_FANOUT=0``."""
+    if os.environ.get("SPARK_GRAFT_SCAN_FANOUT") == "0":
         return 0
     dp = spark.sparkContext.defaultParallelism
-    if dp <= 1:
-        return 0
-    if mode == "1":
-        return dp
-    key = (os.getpid(), dp)
-    if key not in _PROBE_CACHE:
-        def run(np: int, rows: int = _PROBE_ROWS) -> float:
-            t0 = time.perf_counter()
-            # one row — bounded collect
-            _probe_frame(spark, np, rows).collect()
-            return time.perf_counter() - t0
-
-        spark.sparkContext.setJobDescription("fanout host probe")
-        try:
-            # JIT warm-up: same expressions → same codegen class as the
-            # timed runs; 1/8 of the rows is enough to compile it
-            run(min(4, dp), _PROBE_ROWS // 8)
-            # min of 2: the process's FIRST wide stage pays one-time
-            # scheduler/serializer warm-up (~0.25 s measured) that a
-            # single sample would charge to parallelism itself
-            t_par = min(run(dp), run(dp))
-            t_quarter = run(1, _PROBE_ROWS // 4)
-            if t_par < _ENGAGE_RATIO * t_quarter:
-                # t_one(full) ≥ t_quarter, so the full run can only
-                # strengthen this verdict — skip it
-                _PROBE_CACHE[key] = dp
-            else:
-                t_one = run(1)
-                _PROBE_CACHE[key] = (
-                    dp if t_par < _ENGAGE_RATIO * t_one else 0
-                )
-        finally:
-            spark.sparkContext.setJobDescription(None)
-    return _PROBE_CACHE[key]
+    return dp if dp > 1 else 0
 
 
 def fan_out_scan(df: DataFrame) -> DataFrame:
-    """Round-robin ``df`` to cluster width IF it is under-split and the
-    host profits from parallelism (see module docstring). No-op on real
-    multi-split inputs, on ``SPARK_GRAFT_SCAN_FANOUT=0``, and on hosts
-    whose probe shows no parallel win."""
+    """Round-robin ``df`` to cluster width IF it is under-split (see module
+    docstring). No-op on real multi-split inputs and on
+    ``SPARK_GRAFT_SCAN_FANOUT=0``."""
     n = scan_fanout_parallelism(df.sparkSession)
     if not n:
         return df

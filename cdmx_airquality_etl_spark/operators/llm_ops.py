@@ -251,7 +251,7 @@ def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     by gram text so the top-k is deterministic across engines."""
     docs = load_table(spark, sf_dir, "documents")
     grams = (
-        # round-13 host-gated scan fan-out: the gram expansion is the
+        # round-13 under-split scan fan-out: the gram expansion is the
         # query's map-side cost and ran single-task at test scale
         fan_out_scan(docs).select(F.array_distinct(_grams_spark(_DECON_N)).alias("grams"))
         .select(F.explode("grams").alias("gram"))

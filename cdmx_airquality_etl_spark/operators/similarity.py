@@ -1765,8 +1765,8 @@ def q_similarity_ann_ivfpq_probe(
     )
     if not q_rows:
         raise ValueError(
-            "IVFPQ probe: vec_id=0 is absent from the index — no query "
-            "vector to probe with"
+            "IVFPQ probe: vec_id=0 is absent from the corpus (zero/non-finite "
+            "embeddings are excluded) — no query vector to probe with"
         )
     q_emb = list(q_rows[0][0])
     probe_cells = _ivf_probe_cells(C, q_emb)

@@ -923,10 +923,10 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the kernel block above); only (type, b)-grain int64 partials cross
     # the Arrow boundary, and this final aggregate merges them exactly.
     # round-13: the kernel's input is the raw single-row-group scan, so
-    # the vectorized draw ran in ONE Python task; fan_out_scan (host-
-    # gated, operators/fanout.py) spreads it to cluster width. Partials
-    # are exact int64 sums keyed on (type, b) — row placement cannot
-    # change the merged result. (q_permutation_test / q_fdr_screen keep
+    # the vectorized draw ran in ONE Python task; fan_out_scan
+    # (operators/fanout.py) spreads the under-split scan to cluster
+    # width. Partials are exact int64 sums keyed on (type, b) — row
+    # placement cannot change the merged result. (q_permutation_test / q_fdr_screen keep
     # their shape: their kernel inputs are post-aggregate frames whose
     # 1-partition collapse happens at RUNTIME via AQE coalescing — the
     # static under-split check cannot see it, and an unconditional

@@ -298,8 +298,8 @@ def q_char_trigram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     languages, bounded output. Gram extraction is scan-side
     transform(sequence) — no Python."""
     docs = load_table(spark, sf_dir, "documents")
-    # round-13 host-gated scan fan-out: the normalize + gram transform is
-    # the map-side cost and ran single-task at test scale
+    # round-13 under-split scan fan-out: the normalize + gram transform
+    # is the map-side cost and ran single-task at test scale
     norm = fan_out_scan(docs).select(
         "lang",
         F.regexp_replace(F.lower(F.col("text")), "[^a-z]+", " ").alias("s"),

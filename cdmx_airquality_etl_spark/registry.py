@@ -22,6 +22,7 @@ already DOUBLE (DECIMAL promotes to double, matching Spark) or be wrapped
 
 from __future__ import annotations
 
+import warnings
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -62,13 +63,13 @@ def register(
 
 
 def resolve_oracles(sf_dir: str) -> dict[str, str]:
-    """Static oracles + factory oracles rendered for ``sf_dir``. Factory
-    failures degrade that one query to rows-only rather than failing the
-    whole contract call."""
+    """Static oracles + factory oracles rendered for ``sf_dir``. A factory
+    failure degrades that one query to rows-only, with a warning, rather
+    than failing the whole contract call."""
     out = dict(ORACLES)
     for name, factory in ORACLE_FACTORIES.items():
         try:
             out[name] = factory(sf_dir)
-        except Exception:  # noqa: BLE001 — degrade to rows-only
-            pass
+        except Exception as exc:  # noqa: BLE001 — degrade to rows-only
+            warnings.warn(f"{name}: oracle factory failed ({exc!r}); rows-only check")
     return out

@@ -21,12 +21,6 @@ SF_DIR = "/root/testdata/sf0.001"
 # then skips on the missing catalog, mirroring the delta gating.
 os.environ.setdefault("SPARK_GRAFT_ACID_DOUBLE", "1")
 
-# Deterministic plan shapes for the suite: the round-13 scan fan-out is
-# host-gated under "auto" (operators/fanout.py probes the VM), and a plan
-# pin must not flip with the hypervisor's mood. Force it ON — the suite
-# then always exercises the fanned shape the healthy-host bench runs;
-# fanout's own unit tests cover the "0"/probe behaviours explicitly.
-os.environ.setdefault("SPARK_GRAFT_SCAN_FANOUT", "1")
 _ACID_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "acid_double"
 )

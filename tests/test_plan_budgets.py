@@ -65,7 +65,7 @@ def test_dieted_query_stays_within_exchange_budget(spark, name, budget):
         .toString()
     )
     # Round 13: round-robin exchanges are excluded from the count — the
-    # host-gated scan fan-out (operators/fanout.py, forced ON by conftest)
+    # scan fan-out (operators/fanout.py; every under-split scan is fanned)
     # inserts one per REFERENCE to the fanned scan in the static plan
     # (AQE collapses the identical copies to ReusedExchange at runtime),
     # and the regression class this gate pins is subtree RE-DERIVATION,

@@ -293,7 +293,7 @@ def test_signature_kernels_fan_out_before_band_join(spark, sf_dir):
 def test_no_single_partition_python_kernel_feeds_wide_input(spark, sf_dir):
     """Round-13 generalization of the r12 cliff guard: every mapInPandas
     kernel whose input is a raw (single-row-group) scan must sit above a
-    fan-out — under SPARK_GRAFT_SCAN_FANOUT=1 (the suite default) its
+    fan-out — every under-split scan is fanned to cluster width, so its
     plan carries a RoundRobinPartitioning below the MapInPandas node.
     Covers the resampling kernel with a scan-grain input; the
     q_permutation_test / q_fdr_screen kernels read post-aggregate frames

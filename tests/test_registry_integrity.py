@@ -2,7 +2,17 @@
 DuckDB oracle or be on the declared rows-only list with a reason — a query
 can never silently lose its correctness check."""
 
-from cdmx_airquality_etl_spark.registry import ORACLE_FACTORIES, ORACLES, QUERIES
+import os
+import warnings
+
+import pytest
+
+from cdmx_airquality_etl_spark.registry import (
+    ORACLE_FACTORIES,
+    ORACLES,
+    QUERIES,
+    resolve_oracles,
+)
 
 # The exhaustive rows-only allowlist. Adding a query without an oracle fails
 # this test until it is justified here (SURVEY.md §7: only genuinely
@@ -37,3 +47,30 @@ def test_oracle_column_aliases_present():
     # oracle text and registry stay non-empty and 1:1 with queries
     assert len(QUERIES) >= 68
     assert set(ORACLES) <= set(QUERIES)
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_oracle_factories_render_without_degrading(sf_dir, sf):
+    # resolve_oracles degrades a failing factory to a rows-only check with
+    # a warning; on the shipped testdata no factory may take that path
+    data_dir = os.path.join(os.path.dirname(sf_dir), sf)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        oracles = resolve_oracles(data_dir)
+    assert not [str(w.message) for w in caught]
+    assert ORACLE_FACTORIES  # non-vacuous
+    for name in ORACLE_FACTORIES:
+        assert oracles[name].strip(), name
+
+
+def test_failing_oracle_factory_warns_and_degrades(monkeypatch):
+    def broken(_sf_dir):
+        raise FileNotFoundError("embeddings.parquet")
+
+    monkeypatch.setattr(
+        "cdmx_airquality_etl_spark.registry.ORACLE_FACTORIES",
+        {"q_broken_factory": broken},
+    )
+    with pytest.warns(UserWarning, match="q_broken_factory: oracle factory failed"):
+        oracles = resolve_oracles("unused")
+    assert "q_broken_factory" not in oracles

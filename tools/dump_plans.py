@@ -15,11 +15,6 @@ import sys
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
 
-# The inventory must be host-independent: pin the round-13 scan fan-out ON
-# (its "auto" mode probes the VM — operators/fanout.py) so PLANS.md always
-# documents the fanned shape the healthy-host bench runs.
-os.environ.setdefault("SPARK_GRAFT_SCAN_FANOUT", "1")
-
 from cdmx_airquality_etl_spark import QUERIES  # noqa: E402
 from cdmx_airquality_etl_spark.session import get_spark  # noqa: E402
 
