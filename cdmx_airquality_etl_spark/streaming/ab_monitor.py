@@ -11,10 +11,9 @@ Moment addition is associative and commutative, so ANY batch split
 converges to the same final state as the one-shot batch computation
 (tests/test_streaming_ab.py pins final-z equality with q_ab_welch).
 Addition is NOT idempotent, so replay safety comes entirely from the
-versioned-commit contract (the block-index discipline, block_index.py):
-each batch writes the FULL post-merge one-row state to its own
-``state=<batch_id>/`` directory committed by its ``_SUCCESS`` marker, and
-an already-committed batch id is skipped on replay — a crash mid-write
+commit protocol of streaming/commit.py: each batch writes the FULL
+post-merge one-row state as its own ``state=<batch_id>/`` version, and an
+already-committed batch id is skipped on replay — a crash mid-write
 leaves the previous version authoritative and the foreachBatch retry
 recomputes from it.
 
@@ -31,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.analytics import _SEQ_C
-from .block_index import _fs_and_path, assert_success_markers_enabled
+from .commit import available_now, committed, write_once
 
 _STATE_SCHEMA = (
     "na long, nb long, sa long, sb long, qa long, qb long"
@@ -74,25 +73,10 @@ def merge_moments(state: DataFrame, batch: DataFrame) -> DataFrame:
     )
 
 
-def _versions(spark: SparkSession, state_path: str) -> list[tuple[int, str]]:
-    fs, root, jvm = _fs_and_path(spark, state_path)
-    out = []
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            p = st.getPath()
-            name = p.getName()
-            if st.isDirectory() and name.startswith("state="):
-                marker = jvm.org.apache.hadoop.fs.Path(p, "_SUCCESS")
-                if fs.exists(marker):
-                    out.append((int(name.split("=", 1)[1]), p.toString()))
-    return sorted(out)
-
-
 def read_state(spark: SparkSession, state_path: str) -> DataFrame:
     """The newest COMMITTED cumulative moments; the zero row before any
-    batch commits (the block-index bootstrap contract)."""
-    assert_success_markers_enabled(spark)
-    versions = _versions(spark, state_path)
+    batch commits."""
+    versions = committed(spark, state_path, "state")
     if not versions:
         return spark.createDataFrame([(0, 0, 0, 0, 0, 0)], _STATE_SCHEMA)
     return spark.read.parquet(versions[-1][1]).select(*_MOMENTS)
@@ -110,15 +94,16 @@ def update_state(
     version. Replay-safe: an already-committed version for this batch id
     is left untouched (re-adding would double-count — the versioned
     commit, not idempotence, is the replay guarantee here)."""
-    assert_success_markers_enabled(spark)
-    vdir = posixpath.join(state_path, f"state={batch_id}")
-    fs, _, jvm = _fs_and_path(spark, vdir)
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(posixpath.join(vdir, "_SUCCESS"))):
-        return
-    state = read_state(spark, state_path)
-    merge_moments(
-        state, batch_moments(batch_df, cohort_col, value_col)
-    ).write.mode("overwrite").parquet(vdir)
+    write_once(
+        spark,
+        state_path,
+        "state",
+        batch_id,
+        lambda: merge_moments(
+            read_state(spark, state_path),
+            batch_moments(batch_df, cohort_col, value_col),
+        ),
+    )
 
 
 def read_ab_trajectory(
@@ -130,23 +115,17 @@ def read_ab_trajectory(
     c/√info boundary and the stop flag — q_ab_sequential's row, produced
     from incrementally-maintained state (same fixed-shape expressions,
     so the final version's z equals the batch statistic bitwise)."""
-    assert_success_markers_enabled(spark)
-    versions = _versions(spark, state_path)
+    versions = committed(spark, state_path, "state")
     if not versions:
         return spark.createDataFrame(
             [], "version long, " + _STATE_SCHEMA + ", z_welch double, "
             "info_frac double, z_boundary double, crossed long"
         )
-    frames = []
-    for vid, path in versions:
-        frames.append(
-            spark.read.parquet(path)
-            .select(*_MOMENTS)
-            .withColumn("version", F.lit(vid).cast("long"))
-        )
-    allv = frames[0]
-    for f in frames[1:]:
-        allv = allv.unionByName(f)
+    allv = (
+        spark.read.option("basePath", state_path)
+        .parquet(*[p for _, p in versions])
+        .select(F.col("state").cast("long").alias("version"), *_MOMENTS)
+    )
     na, nb = F.col("na").cast("double"), F.col("nb").cast("double")
     sa, sb = F.col("sa").cast("double"), F.col("sb").cast("double")
     qa, qb = F.col("qa").cast("double"), F.col("qb").cast("double")
@@ -183,26 +162,12 @@ def ab_monitor_stream(
 ):
     """Wire the monitor as a checkpointed AvailableNow stream, one file
     per trigger so the trajectory has one point per arriving file."""
-    assert_success_markers_enabled(spark)
-    stream = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        update_state(
-            batch_df.sparkSession,
-            batch_df,
-            state_path,
-            batch_id,
-            cohort_col,
-            value_col,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", posixpath.join(checkpoint_dir, "ab"))
-        .trigger(availableNow=True)
-        .start()
+    return available_now(
+        spark,
+        source_dir,
+        source_schema,
+        posixpath.join(checkpoint_dir, "ab"),
+        lambda df, bid: update_state(
+            df.sparkSession, df, state_path, bid, cohort_col, value_col
+        ),
     )

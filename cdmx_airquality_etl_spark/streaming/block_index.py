@@ -21,13 +21,11 @@ the incremental form of q_doc_dup_ratio.
 Exactly-once: the source checkpoint processes each file once; unlike the
 fingerprint anti-join, count merging is NOT idempotent under replay, so
 the index is APPEND-ONLY — each batch writes its partial counts to its own
-`batch=<id>/` subdirectory and a replay is detected by that batch's
-completed `_SUCCESS` marker (an incomplete crash-time write lacks the
-marker and is safely overwritten by the replay). No rewrite of
-already-merged batches ever happens, so a crash can never destroy prior
-state and per-batch I/O is O(batch), not O(index); readers aggregate the
-partials (correct because a document lives in exactly one batch, so
-distinct-doc counts are additive).
+`batch=<id>/` subdirectory under the commit protocol of
+streaming/commit.py (a committed batch replays as a no-op, a torn write
+is invisible and overwritten). Per-batch I/O is O(batch), not O(index);
+readers aggregate the committed partials (correct because a document
+lives in exactly one batch, so distinct-doc counts are additive).
 
 Scale notes: the collapsed index holds one row per distinct block (bounded
 by corpus block vocabulary); periodic compaction of old batch partials is
@@ -37,18 +35,15 @@ shared-block subset (size = corpus boilerplate).
 
 from __future__ import annotations
 
-import posixpath
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..hadoop_fs import fs_and_path
 from ..operators.dedup import _md5_int
 from ..operators.subdoc import doc_blocks
+from .commit import available_now, committed, write_once
 
 _INDEX_SCHEMA = "block_hash long, n_docs long, n_occurrences long"
-_MARKER_CONF = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
 
 
 def _batch_blocks(batch_df: DataFrame) -> DataFrame:
@@ -60,82 +55,38 @@ def _batch_blocks(batch_df: DataFrame) -> DataFrame:
     )
 
 
-def _batch_dir(index_path: str, batch_id: int) -> str:
-    return posixpath.join(index_path, f"batch={batch_id}")
-
-
-def _fs_and_path(spark: SparkSession, path: str):
-    """Hadoop FileSystem + Path for `path` — resolves whatever scheme the
-    path carries (file://, hdfs://, s3a://...), so marker checks and
-    listings work on any cluster filesystem, not just the driver's local
-    disk. Delegates to the shared helper (hadoop_fs.fs_and_path)."""
-    return fs_and_path(spark, path)
-
-
-def assert_success_markers_enabled(spark: SparkSession) -> None:
-    """The whole replay/crash story hangs on Spark's `_SUCCESS` marker: a
-    completed batch carries one, a crashed write doesn't. If the job
-    disabled marker emission, every batch would look crashed — the writer
-    would silently re-merge replays and the reader would see an empty
-    index — so fail loudly instead."""
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    if str(hconf.get(_MARKER_CONF, "true")).lower() == "false":
-        raise RuntimeError(
-            f"block index requires _SUCCESS markers, but {_MARKER_CONF} "
-            "is false — the replay guard and completed-batch reader "
-            "cannot function without them"
-        )
-
-
 def update_block_index(
     spark: SparkSession, batch_df: DataFrame, index_path: str, batch_id: int
 ) -> None:
     """Write one batch's partial block counts into its own append-only
-    subdirectory of the index.
-
-    Replay-safe AND crash-safe: a batch that finished writing carries
-    Spark's `_SUCCESS` marker — a replay of it is skipped; a batch that
-    crashed mid-write lacks the marker and is overwritten IN ITS OWN
-    subdirectory only, so prior batches' durable state is never touched
-    (counting is not naturally idempotent, which is why the fingerprint
-    anti-join's laissez-faire replay handling is not enough here)."""
-    assert_success_markers_enabled(spark)
-    bdir = _batch_dir(index_path, batch_id)
-    fs, _, jvm = _fs_and_path(spark, bdir)
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(posixpath.join(bdir, "_SUCCESS"))):
-        return  # replayed, fully-written batch: already merged
-    blocks = _batch_blocks(batch_df)
-    agg = blocks.groupBy("block_hash").agg(
-        F.countDistinct("doc_id").alias("n_docs"),
-        F.count(F.lit(1)).alias("n_occurrences"),
+    subdirectory of the index. A committed batch id is skipped (counting
+    is not naturally idempotent, which is why the fingerprint anti-join's
+    laissez-faire replay handling is not enough here)."""
+    write_once(
+        spark,
+        index_path,
+        "batch",
+        batch_id,
+        lambda: _batch_blocks(batch_df)
+        .groupBy("block_hash")
+        .agg(
+            F.countDistinct("doc_id").alias("n_docs"),
+            F.count(F.lit(1)).alias("n_occurrences"),
+        ),
     )
-    agg.write.mode("overwrite").parquet(bdir)
 
 
 def read_block_index(spark: SparkSession, index_path: str) -> DataFrame:
     """Collapsed view: one row per block with counts summed across the
-    COMPLETED per-batch partials. A batch directory without Spark's
-    _SUCCESS marker is a crashed, partially-written batch (the stream
-    will overwrite it on restart) — reading it would silently
-    under-count, so the reader applies the same marker check the
-    writer's replay guard uses. Listing goes through the Hadoop
-    FileSystem API, so the index may live on any cluster filesystem.
-    Before the first batch commits (or before the index exists at all)
-    the index IS the empty relation — return it as one, so consumers can
-    score against a fresh index without special-casing bootstrap."""
-    assert_success_markers_enabled(spark)
-    fs, root, jvm = _fs_and_path(spark, index_path)
-    complete: list[str] = []
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            p = st.getPath()
-            if st.isDirectory() and p.getName().startswith("batch="):
-                marker = jvm.org.apache.hadoop.fs.Path(p, "_SUCCESS")
-                if fs.exists(marker):
-                    complete.append(p.toString())
+    COMMITTED per-batch partials (a torn partial would silently
+    under-count). Before the first batch commits (or before the index
+    exists at all) the index IS the empty relation — return it as one, so
+    consumers can score against a fresh index without special-casing
+    bootstrap."""
+    complete = committed(spark, index_path, "batch")
     if not complete:
         return spark.createDataFrame([], _INDEX_SCHEMA)
-    raw = spark.read.option("basePath", index_path).parquet(*sorted(complete))
+    raw = spark.read.option("basePath", index_path).parquet(*[p for _, p in complete])
     return raw.groupBy("block_hash").agg(
         F.sum("n_docs").alias("n_docs"),
         F.sum("n_occurrences").alias("n_occurrences"),
@@ -173,19 +124,10 @@ def block_index_stream(
     checkpoint_dir: str,
 ):
     """Wire the incremental index as a checkpointed AvailableNow stream."""
-    assert_success_markers_enabled(spark)
-    stream = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        update_block_index(batch_df.sparkSession, batch_df, index_path, batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return available_now(
+        spark,
+        source_dir,
+        source_schema,
+        checkpoint_dir,
+        lambda df, bid: update_block_index(df.sparkSession, df, index_path, bid),
     )

@@ -6,18 +6,16 @@ same portable md5 row-hash) kept INCREMENTALLY: each micro-batch reduces
 to at most rows*width counter increments, which ADD into the persisted
 sketch. Addition is associative and commutative, so ANY batch split
 converges to the one-shot sketch; it is NOT idempotent, so replay safety
-comes from the versioned-state commit protocol instead — a batch id whose
-``state=<id>/_SUCCESS`` marker already exists is skipped, making the
+comes from the commit protocol of streaming/commit.py instead — a batch id
+whose ``state=<id>/`` version is already committed is skipped, making the
 update exactly-once per batch id (tests/test_streaming_cms.py pins both
 properties). This is the frequency telemetry a 100 TB ingest keeps
 instead of exact per-key counts: state is a fixed rows*width cell grid
 forever, merge traffic is at most that many rows per batch, and point
 queries read min-of-d cells.
 
-State durability follows the block-index discipline (block_index.py):
-each batch writes the FULL post-merge sketch to its own
-``state=<batch_id>/`` directory whose ``_SUCCESS`` marker commits it; the
-reader uses the newest COMMITTED version, so a crash mid-write leaves the
+Each batch writes the FULL post-merge sketch as its own version; the
+reader uses the newest committed one, so a crash mid-write leaves the
 previous version authoritative. Old versions are superseded, not mutated.
 """
 
@@ -30,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.dedup import _md5_int
-from .block_index import _fs_and_path, assert_success_markers_enabled
+from .commit import available_now, committed, write_once
 
 CMS_ROWS = 4
 CMS_WIDTH = 256  # q_countmin's geometry: est - exact ~ e/width * N
@@ -74,25 +72,10 @@ def merge_sketch(state: DataFrame, increments: DataFrame) -> DataFrame:
     )
 
 
-def _versions(spark: SparkSession, state_path: str) -> list[tuple[int, str]]:
-    fs, root, jvm = _fs_and_path(spark, state_path)
-    out = []
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            p = st.getPath()
-            name = p.getName()
-            if st.isDirectory() and name.startswith("state="):
-                marker = jvm.org.apache.hadoop.fs.Path(p, "_SUCCESS")
-                if fs.exists(marker):
-                    out.append((int(name.split("=", 1)[1]), p.toString()))
-    return sorted(out)
-
-
 def read_sketch(spark: SparkSession, state_path: str) -> DataFrame:
     """The newest COMMITTED sketch version; the empty sketch before any
-    batch commits (the block-index bootstrap contract)."""
-    assert_success_markers_enabled(spark)
-    versions = _versions(spark, state_path)
+    batch commits."""
+    versions = committed(spark, state_path, "state")
     if not versions:
         return spark.createDataFrame([], _STATE_SCHEMA)
     return spark.read.parquet(versions[-1][1]).select("r", "bucket", "cnt")
@@ -135,15 +118,15 @@ def update_sketch(
     Replay-safe BY the version check: addition is not idempotent, so an
     already-committed batch id MUST short-circuit (this is load-bearing,
     unlike ST-KMV where skipping is merely an optimization)."""
-    assert_success_markers_enabled(spark)
-    vdir = posixpath.join(state_path, f"state={batch_id}")
-    fs, _, jvm = _fs_and_path(spark, vdir)
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(posixpath.join(vdir, "_SUCCESS"))):
-        return
-    state = read_sketch(spark, state_path)
-    merge_sketch(state, batch_increments(batch_df, key_col)).write.mode(
-        "overwrite"
-    ).parquet(vdir)
+    write_once(
+        spark,
+        state_path,
+        "state",
+        batch_id,
+        lambda: merge_sketch(
+            read_sketch(spark, state_path), batch_increments(batch_df, key_col)
+        ),
+    )
 
 
 def cms_stream(
@@ -155,21 +138,10 @@ def cms_stream(
     key_col: str,
 ):
     """Wire the sketch maintenance as a checkpointed AvailableNow stream."""
-    assert_success_markers_enabled(spark)
-    stream = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        update_sketch(
-            batch_df.sparkSession, batch_df, state_path, batch_id, key_col
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", posixpath.join(checkpoint_dir, "cms"))
-        .trigger(availableNow=True)
-        .start()
+    return available_now(
+        spark,
+        source_dir,
+        source_schema,
+        posixpath.join(checkpoint_dir, "cms"),
+        lambda df, bid: update_sketch(df.sparkSession, df, state_path, bid, key_col),
     )

@@ -29,7 +29,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.types import StructType
 
+from .commit import available_now, committed, write_once
+
 DEFAULT_THRESHOLD = 0.5  # L1 distance above which a batch counts as drifted
+_VERDICT_SCHEMA = "batch_id long, n_rows long, l1_distance double, drifted boolean"
 
 
 def category_profile(df: DataFrame, key_col: str) -> DataFrame:
@@ -65,26 +68,12 @@ def batch_drift(batch_df: DataFrame, reference: DataFrame, key_col: str) -> Data
 
 def read_drift_log(spark: SparkSession, out_path: str) -> DataFrame:
     """The monitor's verdict log: union of all COMMITTED per-batch rows
-    (uncommitted crash leftovers excluded by the marker check, the same
-    filter the writer's replay guard applies). Empty relation before any
+    (uncommitted crash leftovers excluded). Empty relation before any
     batch commits."""
-    from .block_index import assert_success_markers_enabled
-    from .cms_maintenance import _fs_and_path
-
-    assert_success_markers_enabled(spark)
-    fs, root, jvm = _fs_and_path(spark, out_path)
-    committed: list[str] = []
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            p = st.getPath()
-            if st.isDirectory() and p.getName().startswith("state="):
-                if fs.exists(jvm.org.apache.hadoop.fs.Path(p, "_SUCCESS")):
-                    committed.append(p.toString())
-    if not committed:
-        return spark.createDataFrame(
-            [], "batch_id long, n_rows long, l1_distance double, drifted boolean"
-        )
-    return spark.read.parquet(*sorted(committed))
+    versions = committed(spark, out_path, "state")
+    if not versions:
+        return spark.createDataFrame([], _VERDICT_SCHEMA)
+    return spark.read.parquet(*[p for _, p in versions])
 
 
 def drift_monitor_stream(
@@ -107,43 +96,33 @@ def drift_monitor_stream(
     re-emit a batch's row after a crash-before-checkpoint-commit,
     double-counting drift alerts downstream. Each verdict row therefore
     commits to its own ``state=<batch_id>/`` subdirectory under the
-    block-index ``_SUCCESS``-marker protocol — a replayed committed id is
-    skipped, a crashed half-write lacks the marker, is invisible to
-    :func:`read_drift_log`, and is overwritten on retry."""
-    from .block_index import assert_success_markers_enabled
-    from .cms_maintenance import _fs_and_path
-
-    assert_success_markers_enabled(spark)
+    protocol of streaming/commit.py — a replayed committed id is skipped,
+    a crashed half-write is invisible to :func:`read_drift_log` and is
+    overwritten on retry."""
     ref_rows = reference.collect()  # bounded: one row per category
     ref_lit = spark.createDataFrame(ref_rows, reference.schema)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        vdir = posixpath.join(out_path, f"state={int(batch_id)}")
-        fs, _, jvm = _fs_and_path(sess, vdir)
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(posixpath.join(vdir, "_SUCCESS"))):
-            return  # replayed, fully-committed batch
-        row = batch_drift(batch_df, ref_lit, key_col).collect()[0]
-        sess.createDataFrame(
-            [
-                (
-                    int(batch_id),
-                    int(row["n_rows"]),
-                    float(row["l1_distance"]),
-                    bool(row["l1_distance"] > threshold),
-                )
-            ],
-            "batch_id long, n_rows long, l1_distance double, drifted boolean",
-        ).coalesce(1).write.mode("overwrite").parquet(vdir)
+        def _verdict() -> DataFrame:
+            row = batch_drift(batch_df, ref_lit, key_col).collect()[0]
+            return batch_df.sparkSession.createDataFrame(
+                [
+                    (
+                        int(batch_id),
+                        int(row["n_rows"]),
+                        float(row["l1_distance"]),
+                        bool(row["l1_distance"] > threshold),
+                    )
+                ],
+                _VERDICT_SCHEMA,
+            ).coalesce(1)
 
-    stream = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", posixpath.join(checkpoint_dir, "drift"))
-        .trigger(availableNow=True)
-        .start()
+        write_once(batch_df.sparkSession, out_path, "state", int(batch_id), _verdict)
+
+    return available_now(
+        spark,
+        source_dir,
+        source_schema,
+        posixpath.join(checkpoint_dir, "drift"),
+        _process,
     )

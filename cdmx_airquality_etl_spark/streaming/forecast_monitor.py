@@ -10,10 +10,10 @@ is the SAME `hw_from_daily` fold the batch operator uses, the final
 trajectory equals the batch q_holt_winters output bitwise
 (tests/test_streaming_forecast.py pins it).
 
-Replay safety follows ST-AB (streaming/ab_monitor.py): day-count addition
-is associative/commutative but NOT idempotent, so each batch writes the
-full post-merge day-grain state to its own ``state=<batch_id>/`` directory
-committed by ``_SUCCESS``, and an already-committed batch id is skipped.
+Replay safety is the commit protocol of streaming/commit.py: day-count
+addition is associative/commutative but NOT idempotent, so each batch
+writes the full post-merge day-grain state as its own ``state=<batch_id>/``
+version, and an already-committed batch id is skipped.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.timeseries import hw_from_daily
-from .block_index import _fs_and_path, assert_success_markers_enabled
+from .commit import available_now, committed, write_once
 
 _STATE_SCHEMA = "d long, y long"
 
@@ -50,24 +50,9 @@ def merge_daily(state: DataFrame, batch: DataFrame) -> DataFrame:
     )
 
 
-def _versions(spark: SparkSession, state_path: str) -> list[tuple[int, str]]:
-    fs, root, jvm = _fs_and_path(spark, state_path)
-    out = []
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            p = st.getPath()
-            name = p.getName()
-            if st.isDirectory() and name.startswith("state="):
-                marker = jvm.org.apache.hadoop.fs.Path(p, "_SUCCESS")
-                if fs.exists(marker):
-                    out.append((int(name.split("=", 1)[1]), p.toString()))
-    return sorted(out)
-
-
 def read_daily_state(spark: SparkSession, state_path: str) -> DataFrame:
     """The newest COMMITTED day-count series; empty before any commit."""
-    assert_success_markers_enabled(spark)
-    versions = _versions(spark, state_path)
+    versions = committed(spark, state_path, "state")
     if not versions:
         return spark.createDataFrame([], _STATE_SCHEMA)
     return spark.read.parquet(versions[-1][1]).select("d", "y")
@@ -83,15 +68,15 @@ def update_daily_state(
     """Merge one batch's day counts into the state and commit it as a new
     version; an already-committed batch id is skipped (re-adding would
     double-count — the versioned commit is the replay guarantee)."""
-    assert_success_markers_enabled(spark)
-    vdir = posixpath.join(state_path, f"state={batch_id}")
-    fs, _, jvm = _fs_and_path(spark, vdir)
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(posixpath.join(vdir, "_SUCCESS"))):
-        return
-    state = read_daily_state(spark, state_path)
-    merge_daily(state, batch_daily(batch_df, ts_col)).write.mode(
-        "overwrite"
-    ).parquet(vdir)
+    write_once(
+        spark,
+        state_path,
+        "state",
+        batch_id,
+        lambda: merge_daily(
+            read_daily_state(spark, state_path), batch_daily(batch_df, ts_col)
+        ),
+    )
 
 
 def read_forecast(spark: SparkSession, state_path: str) -> DataFrame:
@@ -113,21 +98,12 @@ def forecast_stream(
 ):
     """Wire the day-count maintenance as a checkpointed AvailableNow
     stream, one file per trigger."""
-    assert_success_markers_enabled(spark)
-    stream = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        update_daily_state(
-            batch_df.sparkSession, batch_df, state_path, batch_id, ts_col
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", posixpath.join(checkpoint_dir, "hw"))
-        .trigger(availableNow=True)
-        .start()
+    return available_now(
+        spark,
+        source_dir,
+        source_schema,
+        posixpath.join(checkpoint_dir, "hw"),
+        lambda df, bid: update_daily_state(
+            df.sparkSession, df, state_path, bid, ts_col
+        ),
     )

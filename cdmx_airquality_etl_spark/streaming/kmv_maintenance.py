@@ -11,13 +11,13 @@ pins it both ways). This is the sketch maintenance a 100 TB ingest runs
 instead of exact COUNT(DISTINCT): state is k rows per key forever, merge
 traffic is k values per key per batch, and estimates read in O(keys).
 
-State durability follows the block-index discipline (block_index.py): each
-batch writes the FULL post-merge sketch (tiny: keys x k rows) to its own
-``state=<batch_id>/`` directory whose ``_SUCCESS`` marker commits it; the
-reader uses the newest COMMITTED version, so a crash mid-write leaves the
-previous version authoritative and a replay simply rewrites the same
-bytes (the merge is idempotent). Old versions are superseded, not
-mutated; prune them with the plans/maintenance.py compaction pattern.
+State is versioned under the commit protocol of streaming/commit.py: each
+batch writes the FULL post-merge sketch (tiny: keys x k rows) as its own
+``state=<batch_id>/`` version and the reader uses the newest committed
+one, so a crash mid-write leaves the previous version authoritative and
+a replay simply rewrites the same bytes (the merge is idempotent). Old
+versions are superseded, not mutated; prune them with the
+plans/maintenance.py compaction pattern.
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from ..operators.dedup import _md5_int
-from .block_index import _fs_and_path, assert_success_markers_enabled
+from .commit import available_now, committed, write_once
 
 KMV_K = 64
 _NCHARS = 15  # 60-bit hash space
@@ -61,25 +61,10 @@ def merge_sketch(state: DataFrame, batch: DataFrame) -> DataFrame:
     )
 
 
-def _versions(spark: SparkSession, state_path: str) -> list[tuple[int, str]]:
-    fs, root, jvm = _fs_and_path(spark, state_path)
-    out = []
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            p = st.getPath()
-            name = p.getName()
-            if st.isDirectory() and name.startswith("state="):
-                marker = jvm.org.apache.hadoop.fs.Path(p, "_SUCCESS")
-                if fs.exists(marker):
-                    out.append((int(name.split("=", 1)[1]), p.toString()))
-    return sorted(out)
-
-
 def read_sketch(spark: SparkSession, state_path: str) -> DataFrame:
     """The newest COMMITTED sketch version; the empty sketch before any
-    batch commits (the block-index bootstrap contract)."""
-    assert_success_markers_enabled(spark)
-    versions = _versions(spark, state_path)
+    batch commits."""
+    versions = committed(spark, state_path, "state")
     if not versions:
         return spark.createDataFrame([], _STATE_SCHEMA)
     return spark.read.parquet(versions[-1][1]).select("key", "hv")
@@ -114,15 +99,16 @@ def update_sketch(
     """Merge one batch into the sketch and commit it as a new version.
     Replay-safe: an already-committed version for this batch id is left
     untouched (the merge is idempotent anyway; skipping saves the write)."""
-    assert_success_markers_enabled(spark)
-    vdir = posixpath.join(state_path, f"state={batch_id}")
-    fs, _, jvm = _fs_and_path(spark, vdir)
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(posixpath.join(vdir, "_SUCCESS"))):
-        return
-    state = read_sketch(spark, state_path)
-    merge_sketch(state, batch_hashes(batch_df, key_col, value_col)).write.mode(
-        "overwrite"
-    ).parquet(vdir)
+    write_once(
+        spark,
+        state_path,
+        "state",
+        batch_id,
+        lambda: merge_sketch(
+            read_sketch(spark, state_path),
+            batch_hashes(batch_df, key_col, value_col),
+        ),
+    )
 
 
 def kmv_stream(
@@ -135,21 +121,12 @@ def kmv_stream(
     value_col: str,
 ):
     """Wire the sketch maintenance as a checkpointed AvailableNow stream."""
-    assert_success_markers_enabled(spark)
-    stream = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        update_sketch(
-            batch_df.sparkSession, batch_df, state_path, batch_id, key_col, value_col
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", posixpath.join(checkpoint_dir, "kmv"))
-        .trigger(availableNow=True)
-        .start()
+    return available_now(
+        spark,
+        source_dir,
+        source_schema,
+        posixpath.join(checkpoint_dir, "kmv"),
+        lambda df, bid: update_sketch(
+            df.sparkSession, df, state_path, bid, key_col, value_col
+        ),
     )

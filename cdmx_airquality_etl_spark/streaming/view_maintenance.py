@@ -2,22 +2,18 @@
 
 Fact files land in a directory; each micro-batch materializes ``ΔA ⋈ B``
 into its own committed ``batch=<id>/`` subdirectory of the view
-(the plans/ivm_join delta-join algebra under the block-index commit
-protocol). Composes the corpus-ingest streaming skeleton (checkpointed
-file source, AvailableNow per scheduled run, foreachBatch) with the
+(the plans/ivm_join delta-join algebra under the commit protocol of
+streaming/commit.py). Composes the shared AvailableNow skeleton with the
 delta-join algebra, giving the continuously-maintained star-join view a
 warehouse actually serves queries from.
 
 Exactly-once (the real story, not the optimistic one): foreachBatch is
 at-least-once — a crash after a batch's write commits but before the
 streaming checkpoint commits REPLAYS the batch, and a plain parquet
-append would double-append its ΔA⋈B rows. The guard is the same
-batch-id ``_SUCCESS``-marker commit protocol as streaming/block_index /
-cms / kmv / ab: each batch writes to its own ``batch=<id>/``
-subdirectory with mode('overwrite'); a replayed id whose ``_SUCCESS``
-marker exists is skipped; a crashed half-written batch lacks the marker,
-is invisible to :func:`read_view`, and is overwritten in place on
-restart — prior batches' durable state is never touched.
+append would double-append its ΔA⋈B rows. The commit protocol absorbs
+the replay: a committed batch id is skipped, and a crashed half-written
+batch is invisible to :func:`read_view` and overwritten on restart —
+prior batches' durable state is never touched.
 
 Scale notes: per batch the work is O(|ΔA|) — the dimension broadcasts,
 the batch write touches only its own subdirectory, and nothing rescans
@@ -33,20 +29,10 @@ import posixpath
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from ..hadoop_fs import fs_and_path
 from ..plans.ivm_join import build_view
-from .block_index import assert_success_markers_enabled
+from .commit import available_now, committed, write_once
 
 SEED_BATCH_ID = -1  # the pre-stream view seed lives at batch=-1
-
-
-def _batch_dir(view_path: str, batch_id: int) -> str:
-    return posixpath.join(view_path, f"batch={batch_id}")
-
-
-def _is_committed(spark: SparkSession, bdir: str) -> bool:
-    fs, _, jvm = fs_and_path(spark, bdir)
-    return fs.exists(jvm.org.apache.hadoop.fs.Path(posixpath.join(bdir, "_SUCCESS")))
 
 
 def _assert_no_batch_column(df: DataFrame, where: str) -> None:
@@ -76,19 +62,18 @@ def apply_fact_delta_versioned(
 ) -> bool:
     """Materialize one batch's ``ΔA ⋈ B`` into its committed subdirectory.
 
-    Replay-safe: an id whose ``_SUCCESS`` exists short-circuits (the
-    append is not idempotent, so this is load-bearing, the ST-CMS rule).
-    Crash-safe: a half-written dir lacks the marker — it is both skipped
-    by read_view and overwritten here on retry. Returns True when the
-    batch was (re)written, False when skipped as already committed."""
-    assert_success_markers_enabled(spark)
-    bdir = _batch_dir(view_path, batch_id)
-    if _is_committed(spark, bdir):
-        return False
-    view = build_view(a_delta, b, key)
-    _assert_no_batch_column(view, "apply_fact_delta_versioned")
-    view.write.mode("overwrite").parquet(bdir)
-    return True
+    Replay-safe: a committed id short-circuits (the append is not
+    idempotent, so this is load-bearing). Crash-safe: a half-written dir
+    is both skipped by read_view and overwritten here on retry. Returns
+    True when the batch was (re)written, False when skipped as already
+    committed."""
+
+    def _build() -> DataFrame:
+        view = build_view(a_delta, b, key)
+        _assert_no_batch_column(view, "apply_fact_delta_versioned")
+        return view
+
+    return write_once(spark, view_path, "batch", batch_id, _build)
 
 
 def seed_view(view_df: DataFrame, view_path: str) -> None:
@@ -96,29 +81,22 @@ def seed_view(view_df: DataFrame, view_path: str) -> None:
     batch, so the seed and every later delta live under one uniform
     commit protocol."""
     _assert_no_batch_column(view_df, "seed_view")
-    view_df.write.mode("overwrite").parquet(_batch_dir(view_path, SEED_BATCH_ID))
+    view_df.write.mode("overwrite").parquet(
+        posixpath.join(view_path, f"batch={SEED_BATCH_ID}")
+    )
 
 
 def read_view(spark: SparkSession, view_path: str) -> DataFrame:
     """The queryable view: union of all COMMITTED batch subdirectories.
-    Uncommitted (crashed, in-flight) batch dirs are excluded by the same
-    marker check the writer's replay guard uses. Raises on a view with no
-    committed state — an unseeded view is a caller bug, not an empty
-    relation (the schema is unknowable here)."""
-    assert_success_markers_enabled(spark)
-    fs, root, jvm = fs_and_path(spark, view_path)
-    committed: list[str] = []
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            p = st.getPath()
-            if st.isDirectory() and p.getName().startswith("batch="):
-                if fs.exists(jvm.org.apache.hadoop.fs.Path(p, "_SUCCESS")):
-                    committed.append(p.toString())
-    if not committed:
+    Uncommitted (crashed, in-flight) batch dirs are excluded. Raises on a
+    view with no committed state — an unseeded view is a caller bug, not
+    an empty relation (the schema is unknowable here)."""
+    batches = committed(spark, view_path, "batch")
+    if not batches:
         raise FileNotFoundError(
             f"no committed batches under view {view_path!r} — seed_view first"
         )
-    raw = spark.read.option("basePath", view_path).parquet(*sorted(committed))
+    raw = spark.read.option("basePath", view_path).parquet(*[p for _, p in batches])
     return raw.drop("batch")
 
 
@@ -134,20 +112,12 @@ def view_maintenance_stream(
     """Wire the incremental join view as a checkpointed AvailableNow
     stream over landing fact files, one committed batch dir per
     micro-batch (replay-safe, see module docstring)."""
-    stream = (
-        spark.readStream.schema(fact_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(fact_dir)
-    )
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        apply_fact_delta_versioned(
-            batch_df.sparkSession, view_path, batch_df, dim, key, int(batch_id)
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return available_now(
+        spark,
+        fact_dir,
+        fact_schema,
+        checkpoint_dir,
+        lambda df, bid: apply_fact_delta_versioned(
+            df.sparkSession, view_path, df, dim, key, int(bid)
+        ),
     )

@@ -15,13 +15,23 @@ from cdmx_airquality_etl_spark.registry import QUERIES
 from cdmx_airquality_etl_spark.sources.parquet import load_table
 import pytest
 
+from cdmx_airquality_etl_spark.streaming import (
+    ab_monitor,
+    cms_maintenance,
+    drift,
+    forecast_monitor,
+    kmv_maintenance,
+    view_maintenance,
+)
 from cdmx_airquality_etl_spark.streaming.block_index import (
-    _MARKER_CONF,
-    assert_success_markers_enabled,
     block_index_stream,
     read_block_index,
     score_batch_against_index,
     update_block_index,
+)
+from cdmx_airquality_etl_spark.streaming.commit import (
+    MARKER_CONF,
+    assert_success_markers_enabled,
 )
 
 DOC_SCHEMA = StructType(
@@ -119,19 +129,48 @@ def test_score_against_empty_index(spark, sf_dir, tmp_path):
 def test_disabled_success_markers_fail_loudly(spark, tmp_path):
     """The replay guard and completed-batch reader both hang on _SUCCESS
     markers; a job that disabled marker emission must be rejected at the
-    door, not silently mis-merged."""
+    door, not silently mis-merged — by every sink's read and update entry
+    point, before it touches the state directory."""
+    ix = str(tmp_path / "ix")
+    ref = spark.createDataFrame([("en", 1.0)], "key string, frac double")
+    entry_points = {
+        "block_index.read": lambda: read_block_index(spark, ix),
+        "block_index.update": lambda: update_block_index(spark, None, ix, 0),
+        "view.read": lambda: view_maintenance.read_view(spark, ix),
+        "view.update": lambda: view_maintenance.apply_fact_delta_versioned(
+            spark, ix, None, None, "k", 0
+        ),
+        "cms.read": lambda: cms_maintenance.read_sketch(spark, ix),
+        "cms.update": lambda: cms_maintenance.update_sketch(spark, None, ix, 0, "k"),
+        "kmv.read": lambda: kmv_maintenance.read_sketch(spark, ix),
+        "kmv.update": lambda: kmv_maintenance.update_sketch(
+            spark, None, ix, 0, "k", "v"
+        ),
+        "ab.read": lambda: ab_monitor.read_state(spark, ix),
+        "ab.trajectory": lambda: ab_monitor.read_ab_trajectory(spark, ix, 10),
+        "ab.update": lambda: ab_monitor.update_state(spark, None, ix, 0, "k", "v"),
+        "forecast.read": lambda: forecast_monitor.read_daily_state(spark, ix),
+        "forecast.update": lambda: forecast_monitor.update_daily_state(
+            spark, None, ix, 0
+        ),
+        "drift.read": lambda: drift.read_drift_log(spark, ix),
+        "drift.stream": lambda: drift.drift_monitor_stream(
+            spark, ix, DOC_SCHEMA, ref, "lang", ix, str(tmp_path / "ck")
+        ),
+    }
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    hconf.set(_MARKER_CONF, "false")
+    hconf.set(MARKER_CONF, "false")
     try:
         with pytest.raises(RuntimeError, match="_SUCCESS"):
             assert_success_markers_enabled(spark)
-        with pytest.raises(RuntimeError, match="_SUCCESS"):
-            read_block_index(spark, str(tmp_path / "ix"))
-        with pytest.raises(RuntimeError, match="_SUCCESS"):
-            update_block_index(spark, None, str(tmp_path / "ix"), 0)
+        for name, call in entry_points.items():
+            with pytest.raises(RuntimeError, match="_SUCCESS"):
+                call()
+                pytest.fail(f"{name} ran with _SUCCESS markers disabled")
     finally:
-        hconf.set(_MARKER_CONF, "true")
+        hconf.set(MARKER_CONF, "true")
     assert_success_markers_enabled(spark)
+    assert not (tmp_path / "ix").exists()
 
 
 def test_stream_availablenow_builds_same_index(spark, sf_dir, tmp_path):
