@@ -9,7 +9,8 @@ resolve the filesystem from the path's own scheme, the same discipline
 the streaming block index adopted in round 6.
 
 Local-ONLY operations (atomic rename swaps) are the opposite case: they
-must loudly REFUSE remote schemes — see plans/maintenance._assert_local_path.
+must loudly REFUSE remote schemes — see plans/maintenance._local_path and
+plans/maintenance.rewrite_table.
 """
 
 from __future__ import annotations

@@ -25,17 +25,18 @@ Scale notes: both paths keep the big side (A) partitioned by the join
 key; ΔB and the affected-key set are dimension-sized and broadcast. The
 view is stored partitioned the same way the merge writer stores targets
 (plans/merge.py), so the delete+append touches only affected files on a
-real table format. The dimension-update rewrite goes through
-plans/maintenance._atomic_swap_write (write staging, rename swap, keep a
-``__old_`` survivor for recover_table) so a crash never loses the view;
-a production deployment swaps in the ACID MERGE/DELETE of
-plans/merge.py's Delta seam.
+real table format. The dimension-update rewrite is
+plans/maintenance.rewrite_table (its docstring is the protocol); a
+production deployment swaps in the ACID MERGE/DELETE of plans/merge.py's
+Delta seam.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .maintenance import rewrite_table
 
 
 def build_view(a: DataFrame, b: DataFrame, key: str) -> DataFrame:
@@ -62,20 +63,14 @@ def apply_dim_delta(
     ``b_delta_new`` carries the NEW images of the changed dimension rows
     (one row per changed key). View rows for those keys are dropped (an
     anti-join rewrite here; a DELETE WHERE on an ACID format) and the
-    join is recomputed only for the affected keys."""
+    join is recomputed only for the affected keys. The rewrite is one
+    locked :func:`~.maintenance.rewrite_table`: the new view materializes
+    fully before the old one moves aside, so a crash never loses it."""
     affected = b_delta_new.select(key).distinct()
-    current = spark.read.parquet(view_path)
-    kept = current.join(F.broadcast(affected), key, "left_anti")
-    a_touched = a.join(F.broadcast(affected), key, "left_semi")
-    refreshed = build_view(a_touched, b_delta_new, key)
-    out = kept.unionByName(refreshed)
-    # crash-safe rewrite via the shared write-tmp-then-rename swap
-    # (plans/maintenance._atomic_swap_write): the new view materializes
-    # fully in a tmp dir BEFORE the old one moves aside, the swap window
-    # is covered by recover_table's __old_ survivor, and the local-only /
-    # file:-scheme guard applies — a plain mode('overwrite') of view_path
-    # was itself non-atomic (crash mid-overwrite lost the view with
-    # nothing to recover).
-    from .maintenance import _atomic_swap_write
 
-    _atomic_swap_write(out, view_path)
+    def build(current: DataFrame) -> DataFrame:
+        kept = current.join(F.broadcast(affected), key, "left_anti")
+        a_touched = a.join(F.broadcast(affected), key, "left_semi")
+        return kept.unionByName(build_view(a_touched, b_delta_new, key))
+
+    rewrite_table(spark, view_path, build)

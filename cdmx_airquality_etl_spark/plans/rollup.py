@@ -10,7 +10,7 @@ restricted to self-decomposable aggregates so the merge is exact.
 
 Scale: the expensive side (the fact batch) is aggregated *before* the merge
 join, so the join touches |rollup-grain| rows, not |facts|; the stored rollup
-stays key-partitioned via plans/merge-style dynamic overwrite. AVG is derived
+is rewritten through plans/maintenance.rewrite_table. AVG is derived
 as sum/count at read time — never stored, so it stays mergeable. DECIMAL sums
 keep the result bitwise-identical to a from-scratch recompute (the invariant
 the test asserts).
@@ -18,9 +18,10 @@ the test asserts).
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .maintenance import rewrite_table
 
 # aggregate spec: measure column -> list of additive aggs to maintain
 AggSpec = dict[str, list[str]]
@@ -82,15 +83,12 @@ def refresh_rollup(
     spec: AggSpec,
 ) -> DataFrame:
     """Fold one fact batch into the rollup stored at ``rollup_path``
-    (create on first call) and return the refreshed rollup frame."""
-    from ..hadoop_fs import path_exists
-    from .maintenance import _atomic_swap_write
-
+    (create on first call) and return the refreshed rollup frame. The
+    store is one locked :func:`~.maintenance.rewrite_table`."""
     delta = batch_partials(batch, keys, spec)
-    if path_exists(spark, rollup_path):
-        current = spark.read.parquet(rollup_path)
-        merged = merge_partials(current, delta, keys, spec)
-        _atomic_swap_write(merged, rollup_path)
-    else:
-        delta.write.mode("overwrite").parquet(rollup_path)
+    rewrite_table(
+        spark,
+        rollup_path,
+        lambda cur: delta if cur is None else merge_partials(cur, delta, keys, spec),
+    )
     return spark.read.parquet(rollup_path)

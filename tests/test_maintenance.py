@@ -179,14 +179,25 @@ def test_remote_schemes_are_rejected(spark, tmp_path):
         vacuum,
     )
 
-    for fn in (
-        lambda p: table_stats(spark, p),
-        partition_columns,
-        recover_table,
-        vacuum,
-    ):
-        with _pytest.raises(NotImplementedError, match="local-filesystem-only"):
-            fn("s3a://bucket/table")
+    from cdmx_airquality_etl_spark.plans.merge import merge_into_parquet
+
+    batch = spark.createDataFrame([(1, 2)], "k long, v long")
+    sc = spark.sparkContext
+    sc.setJobGroup("remote-scheme-refusal", "must run no Spark job")
+    try:
+        for fn in (
+            lambda p: table_stats(spark, p),
+            partition_columns,
+            recover_table,
+            vacuum,
+            lambda p: merge_into_parquet(spark, batch, p, ["k"]),
+            lambda p: refresh_rollup(spark, batch, p, ["k"], {"v": ["sum"]}),
+        ):
+            with _pytest.raises(NotImplementedError, match="local-filesystem-only"):
+                fn("s3a://bucket/table")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("remote-scheme-refusal") == []
     # file:// and plain paths remain accepted (guard only, no behavior change)
     d = tmp_path / "t"
     d.mkdir()

@@ -71,8 +71,9 @@ def test_merge_idempotent_under_duplicated_batch(spark):
         counter_col="nupdates",
     )
     dup_batch = _snapshot(spark, [(1, "UIZ", "mala"), (1, "UIZ", "mala")])
-    merged = merge_upsert(target, dup_batch, KEYS, counter_col="nupdates",
-                          dedup_source=True)
+    merged = merge_upsert(
+        target, collapse_to_key_grain(dup_batch, KEYS), KEYS, counter_col="nupdates"
+    )
     rows = merged.collect()
     assert len(rows) == 1
     assert rows[0]["nupdates"] == 2

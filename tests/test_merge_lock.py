@@ -11,7 +11,9 @@ interleave and crash mid-window). These tests pin:
 - the judge's asked-for scenario: two SIMULTANEOUS merge_into_parquet runs
   into one warehouse path produce the deterministic serialized outcome —
   counter bumped exactly twice, no lost update, no swap debris;
-- the exists-probe running INSIDE the lock (concurrent first-merge).
+- the exists-probe running INSIDE the lock (concurrent first-merge);
+- every other rewrite of a local table (maintenance passes, rollup, join
+  view, recover_table, vacuum) waiting on the same sentinel.
 """
 
 import json
@@ -23,11 +25,18 @@ import time
 import pytest
 from pyspark.sql import Row
 
-from cdmx_airquality_etl_spark.plans.merge import (
+from cdmx_airquality_etl_spark.plans.ivm_join import apply_dim_delta, build_view
+from cdmx_airquality_etl_spark.plans.maintenance import (
     MergeLockTimeout,
-    merge_into_parquet,
+    cluster_rewrite,
+    compact,
     merge_lock,
+    recover_table,
+    vacuum,
+    zorder_rewrite,
 )
+from cdmx_airquality_etl_spark.plans.merge import merge_into_parquet
+from cdmx_airquality_etl_spark.plans.rollup import refresh_rollup
 
 
 def _batch(spark, rows):
@@ -180,3 +189,110 @@ def test_concurrent_first_merges_probe_inside_lock(spark, tmp_path):
     rows = {r["k"]: r["nupdates"] for r in spark.read.parquet(path).collect()}
     assert rows == {1: 2, 2: 2}  # create (=1) then one matched bump
     assert _no_debris(str(tmp_path / "wh2"), "t") == []
+
+
+def _tree(root):
+    out = []
+    for d, dirs, files in os.walk(root):
+        for n in dirs + files:
+            p = os.path.join(d, n)
+            out.append((os.path.relpath(p, root), os.stat(p).st_mtime_ns))
+    return sorted(out)
+
+
+def test_every_local_rewrite_waits_for_the_table_lock(spark, tmp_path):
+    """A compaction overlapping a scheduled merge must not swap in its own
+    pre-merge copy. Each entry point that changes a local table or its
+    swap siblings is started while the test holds merge_lock(path): it
+    must leave the directory untouched and keep waiting, then finish with
+    its normal result once the lock is released."""
+    facts = spark.range(40).selectExpr(
+        "id AS k", "id % 7 AS x", "id % 5 AS y", "CAST(id AS STRING) AS v"
+    )
+    dim = spark.createDataFrame([(0, "a"), (1, "b"), (2, "c")], "k long, name string")
+    dim_new = spark.createDataFrame([(1, "B")], "k long, name string")
+    spec = {"y": ["count", "sum"]}
+
+    def four_files(path):
+        facts.repartition(4).write.parquet(path)
+
+    def seeded_merge(path):
+        merge_into_parquet(spark, facts, path, ["k"], counter_col="nupdates")
+
+    def swap_survivor(path):
+        four_files(path)
+        os.rename(path, f"{path}__old_x")
+
+    def aged_old(path):
+        four_files(path)
+        os.makedirs(f"{path}__old_cafe")
+
+    def n_rows(path):
+        return spark.read.parquet(path).count()
+
+    cases = {
+        "compact": (
+            four_files,
+            lambda p: compact(spark, p, target_file_bytes=1 << 30),
+            lambda p, r: r["rewritten"] and r["after"]["n_files"] == 1,
+        ),
+        "cluster_rewrite": (
+            four_files,
+            lambda p: cluster_rewrite(spark, p, ["k"], n_files=2),
+            lambda p, r: r["rewritten"] and n_rows(p) == 40,
+        ),
+        "zorder_rewrite": (
+            four_files,
+            lambda p: zorder_rewrite(spark, p, "x", "y", n_files=2),
+            lambda p, r: r["rewritten"] and n_rows(p) == 40,
+        ),
+        "refresh_rollup": (
+            lambda p: refresh_rollup(spark, facts, p, ["x"], spec),
+            lambda p: refresh_rollup(spark, facts, p, ["x"], spec),
+            lambda p, r: r.agg({"n_rows": "sum"}).first()[0] == 80,
+        ),
+        "apply_dim_delta": (
+            lambda p: build_view(facts.select("k"), dim, "k").write.parquet(p),
+            lambda p: apply_dim_delta(spark, p, facts.select("k"), dim_new, "k"),
+            lambda p, r: sorted(map(tuple, spark.read.parquet(p).collect()))
+            == [(0, "a"), (1, "B"), (2, "c")],
+        ),
+        "merge_into_parquet": (
+            seeded_merge,
+            lambda p: merge_into_parquet(spark, facts, p, ["k"], counter_col="nupdates"),
+            lambda p, r: {row["nupdates"] for row in spark.read.parquet(p).collect()}
+            == {2},
+        ),
+        "recover_table": (
+            swap_survivor,
+            recover_table,
+            lambda p, r: r is True and n_rows(p) == 40,
+        ),
+        "vacuum": (
+            aged_old,
+            lambda p: vacuum(p, max_age_seconds=0),
+            lambda p, r: r == 1 and not os.path.exists(f"{p}__old_cafe"),
+        ),
+    }
+    for name, (setup, op, finished) in cases.items():
+        root = str(tmp_path / name)
+        path = os.path.join(root, "t")
+        setup(path)
+        out = {}
+
+        def run():
+            try:
+                out["result"] = op(path)
+            except Exception as e:  # pragma: no cover
+                out["error"] = e
+
+        with merge_lock(path):
+            before = _tree(root)
+            t = threading.Thread(target=run)
+            t.start()
+            t.join(timeout=2.0)
+            assert t.is_alive(), f"{name} did not wait for the lock: {out}"
+            assert _tree(root) == before, f"{name} changed the table under the lock"
+        t.join(timeout=300)
+        assert "error" not in out, f"{name}: {out.get('error')!r}"
+        assert finished(path, out["result"]), name
