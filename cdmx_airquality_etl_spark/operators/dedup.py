@@ -6,22 +6,21 @@ Four escalating strategies, all distributed set-logic — no driver loops:
 - q_dedup_fuzzy     — word-3-shingle Jaccard via ADJACENCY ANCHORS
                       (_anchor_jaccard_pairs): each doc emits hashed
                       anchor keys for nearby shingle pairs in its own
-                      sorted list, candidates come from an 8-byte-key
-                      self-join, and every candidate is verified exactly
-                      with array_intersect. EXACT (coverage proof on the
-                      function), and the sf0.1→10 decades measure it
-                      subquadratic where the old per-shingle inverted
-                      index went superlinear on a saturating vocabulary.
+                      sorted list, candidates are the pairs sharing ≥ 2
+                      keys (or two small docs sharing one) in an
+                      8-byte-key self-join whose hot keys are salted
+                      into bounded tasks, and every candidate is
+                      verified exactly with array_intersect. EXACT
+                      (coverage proof on the function), and the
+                      sf0.1→10 decades measure it subquadratic where a
+                      per-shingle inverted index goes superlinear on a
+                      saturating vocabulary.
 - q_dedup_containment — overlap coefficient |A∩B|/min(|A|,|B|) ≥ 0.9 via
                       the exact PREFIX FILTER (_prefix_containment_pairs,
                       round 11): rarest-first ordering, contained-side
                       prefix joined against a full df ≥ 2 index, exact
                       verify. Catches near-SUBSET duplication (doc
                       embedded in a longer doc) that Jaccard misses.
-                      (The capped-postings core _shared_shingle_pairs /
-                      _jaccard_pairs remains as a library baseline and
-                      for the cap-semantics tests; since round 11 NO
-                      registered query rides it.)
 - q_dedup_minhash   — MinHash signatures + LSH banding: candidate pairs come
                       from band-bucket equi-joins (|bands| shuffles of one
                       small row per doc), then exact Jaccard verification on
@@ -55,16 +54,9 @@ from ..sources.parquet import load_table
 from .fanout import fan_out_scan
 
 _JACCARD_THRESHOLD = 0.5
-# Per-shingle postings cap: a shingle appearing in more than this many docs
-# is dropped before candidate-pair expansion. A stop-phrase shingle with df=d
-# alone contributes d·(d−1)/2 candidate pairs — unbounded df is the quadratic
-# failure mode of shingle-based dedup at 100 TB. Dropping it costs recall only
-# for pairs whose *entire* overlap is stop-phrases (their Jaccard denominator
-# still counts the dropped shingle, so retained pairs' scores only shrink —
-# the cap never creates false positives). Observed max df: 7 at sf0.01,
-# 25 at sf0.1 — the default prunes nothing at test scale, so the oracle
-# stays exact; production corpora tune it to ~postings that fit one task.
-_MAX_POSTINGS = 1000
+# Postings of an anchor key with df above this are salted into ⌈df/H⌉
+# buckets by _salted_anchor_candidates (≤ H²/2 pairs per join task).
+_HOT_ANCHOR_SPLIT = 256
 
 
 def _norm_text(col: Column) -> Column:
@@ -109,76 +101,6 @@ def _doc_shingles(docs: DataFrame) -> DataFrame:
         "doc_id",
         F.array_distinct(word_shingles(F.lower(F.col("text")), k=3)).alias("sh"),
     ).withColumn("n_sh", F.size("sh"))
-
-
-def _shared_shingle_pairs(
-    shingled: DataFrame, max_postings: int = _MAX_POSTINGS
-) -> DataFrame:
-    """(doc_id_a, doc_id_b, n_a, n_b, shared) for every pair sharing ≥1
-    shingle — the inverted-index core both set-similarity metrics build on.
-
-    Plan shape: ONE shuffle groups postings by shingle; the postings cap
-    is enforced BEFORE any list materializes — a count window over the
-    shingle partition tags each posting with its shingle's document
-    frequency and rows outside [2, cap] drop there, so ``collect_list``
-    only ever aggregates ≤ cap rows per group (round-7 fix: the previous
-    ``size(ps) <= cap`` filter ran AFTER the collect, which meant the
-    hottest stop-shingle groups — exactly the ones the cap exists to
-    kill — still paid an unbounded list build in the aggregation buffer
-    before being thrown away; measured as the superlinear tail of the
-    sf1 scaling sweep on the saturating-vocabulary corpus). The window
-    and the collect share the same hash partitioning on shingle — still
-    one data-sized shuffle. Candidate pairs expand MAP-SIDE from each
-    capped list with native array higher-order functions (sorted, so
-    doc_id_a < doc_id_b by construction); a second shuffle counts shared
-    shingles per pair. Per-group state and per-row pair fan-out are both
-    bounded by the cap: ≤ cap structs, ≤ cap·(cap−1)/2 pairs — no task
-    can see a quadratic blow-up regardless of key skew.
-    """
-    exploded = shingled.select(
-        "doc_id", "n_sh", F.explode("sh").alias("shingle")
-    )
-    w_sh = Window.partitionBy("shingle")
-    posts = (
-        exploded.withColumn("sdf", F.count(F.lit(1)).over(w_sh))
-        .filter(F.col("sdf").between(2, max_postings))
-        .groupBy("shingle")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "n_sh"))).alias("ps"))
-    )
-    pairs = F.explode(
-        F.expr(
-            """flatten(transform(ps, (x, i) ->
-                 transform(slice(ps, i + 2, size(ps) - i - 1), y ->
-                   struct(x.doc_id AS doc_id_a, x.n_sh AS n_a,
-                          y.doc_id AS doc_id_b, y.n_sh AS n_b))))"""
-        )
-    ).alias("p")
-    return (
-        posts.select(pairs)
-        .select("p.*")
-        .groupBy("doc_id_a", "doc_id_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-
-
-def _jaccard_pairs(
-    shingled: DataFrame, threshold: float, max_postings: int = _MAX_POSTINGS
-) -> DataFrame:
-    """Candidate pairs from per-shingle postings lists → exact Jaccard ≥
-    threshold.
-
-    jaccard = |A∩B| / (|A|+|B|−|A∩B|); integer counts, so the double division
-    is bitwise-identical in any engine.
-    """
-    return (
-        _shared_shingle_pairs(shingled, max_postings)
-        .withColumn(
-            "jaccard",
-            F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_id_a", "doc_id_b", "jaccard")
-    )
 
 
 def anchor_params(threshold: float) -> tuple[int, int]:
@@ -251,9 +173,7 @@ def _reach_table(
     return ks[: s_stable - smin + 1], s_stable
 
 
-def _anchor_keys(
-    shingled: DataFrame, threshold: float, min_shared: int = 1
-) -> DataFrame:
+def _anchor_keys(shingled: DataFrame, threshold: float) -> DataFrame:
     """(doc_id, akey, __small) — the hashed, size-adaptive-reach adjacency
     anchor keys of :func:`_anchor_jaccard_pairs` (coverage proof there;
     reach algebra in :func:`_reach_table`). Factored out so the band-skew
@@ -268,38 +188,36 @@ def _anchor_keys(
     licenses (the ceil is biased DOWN by 1e-9 — an S_lb overestimate
     would shrink k unsoundly, an underestimate only adds anchors).
 
-    With ``min_shared = 2`` (the dual-anchor regime,
-    :func:`_anchor_jaccard_pairs`) the reach also satisfies the
-    ≥2-surviving-anchors table (survivors = 2, clamped at S_lb = 4
-    because S ∈ {2, 3} pairs are instead covered by the ``__small``
-    OR-branch: J ≥ t with S ≤ 3 forces |A|+|B| ≤ 3(1+t)/t, so both docs
-    sit under the small cutoff the flag records)."""
+    The reach is the larger of the ≥1-surviving-anchor table and the
+    ≥2-surviving-anchors table (survivors = 2, clamped at S_lb = 4),
+    which is what the dual-anchor candidate rule needs. S ∈ {2, 3} pairs
+    are covered instead by the ``__small`` flag: J ≥ t with S ≤ 3 forces
+    |A|+|B| ≤ 3(1+t)/t, so both docs sit under the small cutoff the flag
+    records."""
     _, cutoff = anchor_params(threshold)
     ks, s_stable = _reach_table(threshold)
+    ks2, s_stable2 = _reach_table(threshold, survivors=2)
     tratio = threshold / (1.0 + threshold)
     slb = (
         f"least(greatest(2, cast(ceil(size(__shs) * {tratio!r} - 1e-9) "
         f"as int)), {{cap}})"
     )
-    k_expr = (
+    # k = max(k₁(S_lb), k₂(max(S_lb, 4))) — entries of the survivors=2
+    # table are indexed from S_lb = 3
+    k1_expr = (
         f"element_at(array({', '.join(map(str, ks))}), "
         + slb.format(cap=s_stable)
         + " - 1)"
     )
+    k2_expr = (
+        f"element_at(array({', '.join(map(str, ks2))}), "
+        f"least(greatest("
+        + slb.format(cap=s_stable2)
+        + ", 4), "
+        + str(s_stable2)
+        + ") - 2)"
+    )
     n_small = int(3.0 * (1.0 + threshold) / threshold + 1e-9)
-    if min_shared >= 2:
-        ks2, s_stable2 = _reach_table(threshold, survivors=2)
-        # dual guarantee: k = max(k₁(S_lb), k₂(max(S_lb, 4))) — entries of
-        # the survivors=2 table are indexed from S_lb = 3
-        k2_expr = (
-            f"element_at(array({', '.join(map(str, ks2))}), "
-            f"least(greatest("
-            + slb.format(cap=s_stable2)
-            + ", 4), "
-            + str(s_stable2)
-            + ") - 2)"
-        )
-        k_expr = f"greatest({k_expr}, {k2_expr})"
     anchor_expr = f"""
       concat(
         flatten(transform(sequence(1, size(__shs)), i ->
@@ -313,62 +231,43 @@ def _anchor_keys(
     return (
         shingled.filter(F.col("n_sh") >= 1)
         .withColumn("__shs", F.array_sort("sh"))
-        .withColumn("__k", F.expr(k_expr))
-        .withColumn(
-            "__small",
-            (F.size("__shs") <= n_small) if min_shared >= 2 else F.lit(False),
-        )
+        .withColumn("__k", F.expr(f"greatest({k1_expr}, {k2_expr})"))
+        .withColumn("__small", F.size("__shs") <= n_small)
         .select(
             "doc_id", F.explode(F.expr(anchor_expr)).alias("akey"), "__small"
         )
     )
 
 
-def _salted_anchor_candidates(
-    anch: DataFrame,
-    max_anchor_postings: int | None = None,
-    hot_anchor_split: int | None = 256,
-    min_shared: int = 1,
-) -> DataFrame:
-    """Distinct (doc_id_a < doc_id_b) candidate pairs from a
-    (doc_id, akey, __small) anchor frame — the shared candidate stage of
-    the anchor family (_anchor_jaccard_pairs and q_dedup_weighted's
-    mass-distance anchors). Carries the df window (df = 1 drop + opt-in
-    exactness-trading cap) and the round-10 exactness-preserving salted
-    split for hot anchor keys; the coverage argument for the salt is on
-    the salted branch below, the guard semantics on
-    :func:`_anchor_jaccard_pairs`.
+def _salted_anchor_candidates(anch: DataFrame) -> DataFrame:
+    """Candidate pairs (doc_id_a < doc_id_b) from a (doc_id, akey, __small)
+    anchor frame — the shared candidate stage of the anchor family
+    (_anchor_jaccard_pairs and q_dedup_weighted's mass-distance anchors).
 
-    ``min_shared = 2`` is the DUAL-ANCHOR rule (the sf10 decade's fix):
-    a pair qualifies as a candidate only when it shares ≥ 2 distinct
-    anchor keys OR both docs carry the __small flag. Implemented as a
-    count aggregate over the (already salted) join output instead of the
-    bare distinct — the aggregate is map-side combinable, so the join's
-    multiplicity collapses before the shuffle the same way the distinct
-    collapsed it. Exactness leans on _anchor_keys' survivors=2 reach and
-    is UNCONDITIONAL under hash collisions (round-11 ADVICE review —
-    r10 documented a collision caveat here that is wrong in direction):
-    the count is over raw join ROWS, each doc emits every anchor pair
-    once, and a common surviving anchor always contributes ≥ 1 matched
-    row — so rows ≥ #common surviving anchors whatever the hashes do.
-    Two distinct survivors colliding onto one key make each doc emit
-    that key twice and the join yield FOUR rows, not one: collisions are
-    count-monotone, only ever inflating counts (the inflated false
-    candidates die in the exact verify)."""
-    if max_anchor_postings is not None or hot_anchor_split is not None:
-        # One count window keyed on the anchor tags every posting with its
-        # key's document frequency. Three uses, all exactness-preserving:
-        # df = 1 anchors drop (they can produce no pair), the opt-in
-        # max_anchor_postings cap applies, and the df feeds the salted
-        # split below. Measured overhead of the window on the homogeneous
-        # sf0.1 corpus: ~5% of the candidate stage.
-        anch = anch.withColumn(
-            "__adf", F.count(F.lit(1)).over(Window.partitionBy("akey"))
-        ).filter(
-            F.col("__adf").between(2, max_anchor_postings)
-            if max_anchor_postings is not None
-            else F.col("__adf") >= 2
-        )
+    DUAL-ANCHOR RULE: a pair is a candidate only when it shares ≥ 2
+    anchor keys OR both docs carry the __small flag (the reasons and the
+    sf10 measurements are on :func:`_anchor_jaccard_pairs`). It is a
+    count aggregate over the salted join output — map-side combinable,
+    so the join's multiplicity collapses before the shuffle. Exactness
+    leans on _anchor_keys' ≥ 2-survivor reach and is
+    UNCONDITIONAL under hash collisions: the count is over raw join
+    ROWS, each doc emits every anchor pair once, and a common surviving
+    anchor always contributes ≥ 1 matched row — so rows ≥ #common
+    surviving anchors whatever the hashes do. Two distinct survivors
+    colliding onto one key make each doc emit that key twice and the
+    join yield FOUR rows, not one: collisions are count-monotone, only
+    ever inflating counts (the inflated false candidates die in the
+    exact verify).
+
+    Hot anchor keys are salted (coverage argument in the body), and
+    df = 1 anchors drop first: they can produce no pair."""
+    # One count window keyed on the anchor tags every posting with its
+    # key's document frequency: df = 1 anchors drop, and the df sizes the
+    # salted split below. Measured overhead of the window on the
+    # homogeneous sf0.1 corpus: ~5% of the candidate stage.
+    anch = anch.withColumn(
+        "__adf", F.count(F.lit(1)).over(Window.partitionBy("akey"))
+    ).filter(F.col("__adf") >= 2)
     # merge hints throughout: every frame here derives from the shingled
     # scan, whose logical size estimate is the COMPRESSED parquet bytes —
     # the shingle arrays expand ~10-40× on materialization, so the static
@@ -381,106 +280,68 @@ def _salted_anchor_candidates(
     # observed at sf3 under the default 8g heap). Sort-merge spills both
     # sides — the only strategy that survives arbitrarily large
     # partitions, which is the contract a 100 TB corpus needs.
-    if hot_anchor_split is not None:
-        # EXACTNESS-PRESERVING hot-anchor treatment (round-10 VERDICT #4,
-        # replacing the exactness-trading max_anchor_postings cap as the
-        # default): a boilerplate cluster makes one anchor key hot, and a
-        # hot key in a self-join is ONE quadratic task AQE cannot split
-        # (the join INPUT partition is kilobytes; the blow-up is in the
-        # OUTPUT — BAND_SKEW.json measures a 1500-df key = 1.1M pairs in
-        # a single task). Salt: each posting hashes to one of
-        # s = ⌈df/H⌉ buckets, the A side replicates to bucket-pair tasks
-        # (b, j ≥ b) and the B side to (i ≤ b, b), and the join key grows
-        # to (akey, i, j) — the hot key's pair work lands in s² bounded
-        # tasks of ≤ H²/2 pairs each, data expansion ≤ (s+1)× on the hot
-        # key's rows only (cool keys have s = 1: one task, no
-        # replication, byte-identical work to the unsalted join).
-        # Coverage: pair {x, y} with buckets bx ≤ by is emitted by
-        # exactly task (bx, by) — x replicates A-side to (bx, j ≥ bx) ∋
-        # (bx, by), y replicates B-side to (i ≤ by, by) ∋ (bx, by); for
-        # bx = by the doc_id_a < doc_id_b filter keeps one orientation,
-        # for bx < by the pair arrives in one orientation and is
-        # canonicalized by least/greatest. Exact — no pair can be lost,
-        # and the downstream distinct absorbs nothing new.
-        h = int(hot_anchor_split)
-        salted = anch.withColumn(
-            "__s",
-            F.when(
-                F.col("__adf") > h, F.ceil(F.col("__adf") / h).cast("int")
-            ).otherwise(F.lit(1)),
-        ).withColumn(
-            "__b", F.pmod(F.xxhash64("doc_id", "akey"), F.col("__s")).cast("int")
-        )
-        side_a = salted.select(
-            F.col("doc_id").alias("doc_id_a"),
-            F.col("__small").alias("__sm_a"),
-            "akey",
-            F.col("__b").alias("ti"),
-            F.explode(F.expr("sequence(__b, __s - 1)")).alias("tj"),
-        )
-        side_b = salted.select(
-            F.col("doc_id").alias("doc_id_b"),
-            F.col("__small").alias("__sm_b"),
-            "akey",
-            F.explode(F.expr("sequence(0, __b)")).alias("ti"),
-            F.col("__b").alias("tj"),
-        )
-        raw = (
-            side_a.join(side_b.hint("merge"), ["akey", "ti", "tj"])
-            .filter(
-                (F.col("ti") < F.col("tj"))
-                | (F.col("doc_id_a") < F.col("doc_id_b"))
-            )
-            .select(
-                F.least("doc_id_a", "doc_id_b").alias("doc_id_a"),
-                F.greatest("doc_id_a", "doc_id_b").alias("doc_id_b"),
-                (F.col("__sm_a") & F.col("__sm_b")).alias("__both_small"),
-            )
-        )
-    else:
-        raw = (
-            anch.select(
-                F.col("doc_id").alias("doc_id_a"),
-                F.col("__small").alias("__sm_a"),
-                "akey",
-            )
-            .join(
-                anch.select(
-                    F.col("doc_id").alias("doc_id_b"),
-                    F.col("__small").alias("__sm_b"),
-                    "akey",
-                ).hint("merge"),
-                ["akey"],
-            )
-            .filter(F.col("doc_id_a") < F.col("doc_id_b"))
-            .select(
-                "doc_id_a",
-                "doc_id_b",
-                (F.col("__sm_a") & F.col("__sm_b")).alias("__both_small"),
-            )
-        )
-    if min_shared <= 1:
-        return raw.select("doc_id_a", "doc_id_b").distinct()
+    #
+    # EXACTNESS-PRESERVING hot-anchor split: a boilerplate cluster makes
+    # one anchor key hot, and a hot key in a self-join is ONE quadratic
+    # task AQE cannot split (the join INPUT partition is kilobytes; the
+    # blow-up is in the OUTPUT — BAND_SKEW.json measures a 1500-df key =
+    # 1.1M pairs in a single task). Salt: each posting hashes to one of
+    # s = ⌈df/H⌉ buckets, the A side replicates to bucket-pair tasks
+    # (b, j ≥ b) and the B side to (i ≤ b, b), and the join key grows to
+    # (akey, i, j) — the hot key's pair work lands in s² bounded tasks of
+    # ≤ H²/2 pairs each, data expansion ≤ (s+1)× on the hot key's rows
+    # only (cool keys have s = 1: one task, no replication). Coverage:
+    # pair {x, y} with buckets bx ≤ by is emitted by exactly task
+    # (bx, by) — x replicates A-side to (bx, j ≥ bx) ∋ (bx, by), y
+    # replicates B-side to (i ≤ by, by) ∋ (bx, by); for bx = by the
+    # doc_id_a < doc_id_b filter keeps one orientation, for bx < by the
+    # pair arrives in one orientation and is canonicalized by
+    # least/greatest. Exact — no pair is lost, and each raw join row
+    # still arrives exactly once, so the count below is unchanged.
+    h = _HOT_ANCHOR_SPLIT
+    salted = anch.withColumn(
+        "__s",
+        F.when(
+            F.col("__adf") > h, F.ceil(F.col("__adf") / h).cast("int")
+        ).otherwise(F.lit(1)),
+    ).withColumn(
+        "__b", F.pmod(F.xxhash64("doc_id", "akey"), F.col("__s")).cast("int")
+    )
+    side_a = salted.select(
+        F.col("doc_id").alias("doc_id_a"),
+        F.col("__small").alias("__sm_a"),
+        "akey",
+        F.col("__b").alias("ti"),
+        F.explode(F.expr("sequence(__b, __s - 1)")).alias("tj"),
+    )
+    side_b = salted.select(
+        F.col("doc_id").alias("doc_id_b"),
+        F.col("__small").alias("__sm_b"),
+        "akey",
+        F.explode(F.expr("sequence(0, __b)")).alias("ti"),
+        F.col("__b").alias("tj"),
+    )
     return (
-        raw.groupBy("doc_id_a", "doc_id_b")
+        side_a.join(side_b.hint("merge"), ["akey", "ti", "tj"])
+        .filter(
+            (F.col("ti") < F.col("tj")) | (F.col("doc_id_a") < F.col("doc_id_b"))
+        )
+        .select(
+            F.least("doc_id_a", "doc_id_b").alias("doc_id_a"),
+            F.greatest("doc_id_a", "doc_id_b").alias("doc_id_b"),
+            (F.col("__sm_a") & F.col("__sm_b")).alias("__both_small"),
+        )
+        .groupBy("doc_id_a", "doc_id_b")
         .agg(
             F.count(F.lit(1)).alias("__nk"),
             F.max("__both_small").alias("__both_small"),
         )
-        .filter(
-            (F.col("__nk") >= min_shared) | F.col("__both_small")
-        )
+        .filter((F.col("__nk") >= 2) | F.col("__both_small"))
         .select("doc_id_a", "doc_id_b")
     )
 
 
-def _anchor_jaccard_pairs(
-    shingled: DataFrame,
-    threshold: float,
-    max_anchor_postings: int | None = None,
-    hot_anchor_split: int | None = 256,
-    min_shared: int | str = "auto",
-) -> DataFrame:
+def _anchor_jaccard_pairs(shingled: DataFrame, threshold: float) -> DataFrame:
     """Exact Jaccard-≥-t pairs via ADJACENCY ANCHORS — the round-9
     restructure of the fuzzy-dedup core after the sf3 scaling decade showed
     the per-shingle inverted index going superlinear (exponent 1.38 over
@@ -494,16 +355,17 @@ def _anchor_jaccard_pairs(
     1. Each doc sorts its distinct shingle set and emits an anchor key
        xxhash64(lo, hi) for every pair of shingles at distance ≤ k in
        ITS OWN sorted list — k is per-doc SIZE-ADAPTIVE from
-       :func:`_reach_table` (round 10: k = 19 at t = 0.1 is forced only
-       by S = 2 pairs, which only tiny docs can be in; a median
-       52-shingle doc uses k = 12) — plus degenerate xxhash64(s, s)
-       anchors when the doc has ≤ cutoff shingles.
-    2. Candidates = anchor-key self-join (a.doc_id < b.doc_id) on the
-       8-byte hashed key (sorts ~5× narrower rows than the shingle-string
-       pair it replaces; a collision only ADDS a candidate, which step 3
-       kills — never loses one).
+       :func:`_reach_table` (a median 52-shingle doc at t = 0.1 uses a
+       far smaller k than the tiny docs that force the worst case) —
+       plus degenerate xxhash64(s, s) anchors when the doc has ≤ cutoff
+       shingles (:func:`_anchor_keys`).
+    2. Candidates = anchor-key self-join on the 8-byte hashed key, hot
+       keys salted into bounded tasks, keeping the pairs that share ≥ 2
+       keys or are both small (:func:`_salted_anchor_candidates`). A
+       collision only ADDS a candidate, which step 3 kills — never loses
+       one.
     3. Every candidate is verified EXACTLY: join both docs' shingle
-       arrays, shared = size(array_intersect), jaccard ≥ t, distinct.
+       arrays, shared = size(array_intersect), jaccard ≥ t.
 
     COVERAGE PROOF (no qualifying pair is missed). Let S = |A∩B|,
     extras = (|A|−S) + (|B|−S). J ≥ t ⇒ (1+t)S ≥ t(|A|+|B|) ⇒
@@ -518,87 +380,45 @@ def _anchor_jaccard_pairs(
     size bound licenses (its docstring carries that step). S = 1
     qualifying pairs force |A|+|B| ≤ (1+t)/t, i.e. both docs ≤ cutoff,
     and the (s, s) singleton anchors cover them. S = 0 pairs don't
-    qualify. ∎
+    qualify. So every qualifying pair shares ≥ 1 anchor key.
 
-    DUAL-ANCHOR RULE (``min_shared``, default "auto" = 2 at every
-    threshold since round 11 — see the engagement comment in the body).
-    The sf10 decade exposed the single-anchor candidate set saturating at
-    low thresholds: 500k docs over the fixed generator vocabulary gave
-    267M anchors whose keys saturate in turn (72% share their key) and
-    282M DISTINCT candidates for ~50k true pairs — 95% of candidates
-    share exactly ONE key (mean multiplicity 1.05), i.e. one recurring
-    phrase pair, while a true t = 0.1 pair of median-size docs needs
-    S ≥ 10 shared shingles. The fix demands TWO shared anchors: reach
-    comes from the survivors = 2 table (condition lost_A + lost_B ≤ S−3,
-    leaving ≥ 2 common surviving anchors — same gap argument as above),
-    clamped at S_lb = 4, so every pair with S ≥ 4 shares ≥ 2 keys; pairs
+    The candidate rule asks for TWO shared keys, so the reach also
+    satisfies the survivors = 2 table (same gap argument with condition
+    lost_A + lost_B ≤ S − 3, leaving ≥ 2 common surviving anchors),
+    clamped at S_lb = 4: every pair with S ≥ 4 shares ≥ 2 keys. Pairs
     with S ≤ 3 force |A|+|B| ≤ 3(1+t)/t, i.e. BOTH docs under the small
-    cutoff, and keep the ≥ 1-key rule via the __small flag OR-branch
-    (S = 2 can never guarantee two survivors: it has only one
-    consecutive-intersection pair). Candidates drop from the count
-    aggregate replacing the bare distinct. Cost of the bigger reach at
-    toy scale: q_lsh_planner sf0.1 4.9 → 6.0 s warm; benefit at sf10:
-    the candidate core collapses from the 282M that OOM'd the verify
-    stage to a volume the exact verify survives. Round 11 extended the
-    rule to t ≥ 0.25 after ITS sf10 decade caught the same saturation at
-    t = 0.5 (q_dedup_fuzzy sf3→10 slope 1.92, q_dedup_weighted spilling
-    past the sandbox disk; measured ≥1-key candidates 4.0M vs ≥2-key
-    22.8k at sf3) — intersection density protects true pairs' key
-    counts, not the false-candidate flood.
+    cutoff, and the __small flag admits them on the one key above (S = 2
+    can never guarantee two survivors: it has only one
+    consecutive-intersection pair). Each doc's k is the larger of the
+    two tables' entries. ∎
+
+    Why TWO anchors. The sf10 decade exposed the single-anchor candidate
+    set saturating: 500k docs over the fixed generator vocabulary gave
+    267M anchors whose keys saturate in turn (72% share their key) and
+    282M DISTINCT candidates for ~50k true pairs at t = 0.1 — 95% of
+    candidates share exactly ONE key (mean multiplicity 1.05), i.e. one
+    recurring phrase pair, while a true t = 0.1 pair of median-size docs
+    needs S ≥ 10 shared shingles. At t = 0.5 the same saturation showed
+    (q_dedup_fuzzy sf3→10 slope 1.92, q_dedup_weighted spilling past the
+    sandbox disk; measured ≥1-key candidates 4.0M vs ≥2-key 22.8k at sf3):
+    intersection density protects true pairs' key counts, not the
+    false-candidate flood, so the rule holds at every threshold. Cost of
+    the bigger reach: q_lsh_planner sf0.1 4.9 → 6.0 s warm at t = 0.1;
+    at t = 0.5 it adds ≤ 2 per tiny doc and nothing for median docs.
 
     Scale shape (100 TB): anchor rows are ≤ (k + 1)·|shingles| — LINEAR —
     and an anchor's postings df counts docs where the same two shingles are
     ≤ k apart, which stays O(1) even when every single shingle is corpus-hot
     (measured on the saturated sf3 twin: 23M anchor rows, 6.5M candidates —
     165× below the inverted index — and the n² coefficient shrinks from
-    ~1/V to ~1/V²-ish). Candidates are DISTINCT'd on bare ids BEFORE the
-    verify joins: on homogeneous corpora multiplicity is ≈1.016 (the
-    distinct is nearly free), but a shared boilerplate shingle RUN gives
-    every cluster pair ~dozens of common anchors, and verifying each copy
-    multiplied the band-skew probe's hot-cluster work ~60× (BASELINE.md
-    round 9 "band skew"). Verification is then two narrow id-joins against
-    the shingle arrays plus one map-side array_intersect per candidate.
-
-    ``max_anchor_postings`` is the probe-pinned HOT-ANCHOR GUARD, off by
-    default because it trades exactness: anchors shared by more than the
-    cap drop before the self-join (count window on the anchor key, the
-    _MAX_POSTINGS discipline), bounding any one key's pair fan-out at
-    cap²/2. A qualifying pair is lost only when EVERY one of its surviving
-    anchors is hotter than the cap — i.e. inside a near-duplicate cluster
-    larger than the cap, where the pairs are the quadratic OUTPUT itself.
-    The sub-threshold boilerplate regime the probe measures (hot anchors,
-    zero qualifying pairs among them) loses nothing.
-
-    ``hot_anchor_split`` (round 10, ON by default at H = 256) is the
-    EXACTNESS-PRESERVING hot-anchor treatment: postings of an anchor key
-    with df > H are salted into ⌈df/H⌉ buckets and the self-join key
-    widens to (akey, bucket_i, bucket_j), turning the one quadratic task
-    AQE cannot split into s² tasks of ≤ H²/2 pairs — the full coverage
-    argument is on the salted branch below. The same window also drops
-    df = 1 anchors (no pair can come from them) for every configuration
-    that pays it. Pass None for the raw unsalted join (no window, no df
-    filter) — the probe's A/B baseline.
+    ~1/V to ~1/V²-ish). Candidates are collapsed on bare ids BEFORE the
+    verify joins: a shared boilerplate shingle RUN gives every cluster
+    pair ~dozens of common anchors, and verifying each copy multiplied
+    the band-skew probe's hot-cluster work ~60× (BASELINE.md round 9
+    "band skew"). Verification is then two narrow id-joins against the
+    shingle arrays plus one map-side array_intersect per candidate.
     """
-    if min_shared == "auto":
-        # the dual-anchor regime is the default at EVERY threshold since
-        # round 11. Round 10 engaged it only at t < 0.25 ("the required
-        # intersection is dense enough at t ≥ 0.25 that one anchor stays
-        # selective") — and the round-11 sf10 decade falsified that for
-        # saturating vocabularies: at t = 0.5 the ≥1-key candidate set
-        # measured 4.0M for 216 true pairs at sf3 (≥2-key: 22.8k, a 175×
-        # collapse) and grew superlinearly to sf10 (q_dedup_fuzzy slope
-        # 1.92; q_dedup_weighted's spill exceeded the sandbox disk).
-        # Intersection density bounds the TRUE pairs' shared keys, not
-        # the FALSE candidates' — saturation eventually floods any
-        # fixed-arity key at any threshold. At t = 0.5 the survivors=2
-        # reach is nearly free (k = max(k₁, k₂) adds ≤ 2 per tiny doc,
-        # nothing for median docs), unlike t = 0.1 where r10 measured
-        # the 1.2× toy-scale price.
-        min_shared = 2
-    anch = _anchor_keys(shingled, threshold, min_shared=min_shared)
-    cand = _salted_anchor_candidates(
-        anch, max_anchor_postings, hot_anchor_split, min_shared=min_shared
-    )
+    cand = _salted_anchor_candidates(_anchor_keys(shingled, threshold))
     arr_a = shingled.select(
         F.col("doc_id").alias("doc_id_a"),
         F.col("sh").alias("__sh_a"),
@@ -1932,8 +1752,8 @@ def q_dedup_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     can carry, so no extra pre-pass), plus (s, s) singletons for docs with
     total mass ≤ wmax·(1+t)/t. Round 11 doubled the budget from the
     round-9 M = 2·wmax·(1−t)/t and demands TWO shared anchor keys per
-    candidate (min_shared = 2, the weighted twin of
-    _anchor_jaccard_pairs' dual-anchor rule): the single-anchor candidate
+    candidate (the weighted twin of _anchor_jaccard_pairs' dual-anchor
+    rule, via the shared _salted_anchor_candidates): the single-anchor candidate
     set saturated at the sf10 decade exactly like the unweighted one —
     its warm-up SPILLED PAST THE SANDBOX DISK where fuzzy merely went
     superlinear — because anchor-key df grows with corpus size at any
@@ -2047,7 +1867,7 @@ def q_dedup_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.expr(anchor_expr)).alias("akey"),
         (F.col("wt") <= small_cutoff).alias("__small"),
     )
-    cand = _salted_anchor_candidates(anch, min_shared=2)
+    cand = _salted_anchor_candidates(anch)
     wmaps = per_doc.select(
         "doc_id",
         F.map_from_arrays("__shs", "__ws").alias("wm"),
@@ -2185,7 +2005,7 @@ def q_lsh_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH parameter planner: before running banded dedup at scale,
     score every (bands × rows-per-band) split of a 128-hash signature
     budget against the corpus's OWN observed candidate-pair similarity
-    distribution (the capped-postings exact-Jaccard pairs, floored at
+    distribution (the exact adjacency-anchor Jaccard pairs, floored at
     s ≥ {mins}). Per config the S-curve detection probability
     p = 1 − (1 − s^r)^b aggregates into expected recall over true
     duplicate pairs (s ≥ {thr}) and expected false-positive rate over the

@@ -568,10 +568,6 @@ def xxhash64_long(value: int, seed: int = 42) -> int:
     return h - (1 << 64) if h >= (1 << 63) else h
 
 
-def _lit_array(values: list[float]) -> Column:
-    return F.array(*[F.lit(float(v)) for v in values])
-
-
 def _lit_array_sql(values: list[float]) -> str:
     """Literal double array as ONE SQL text fragment. Building literal
     arrays element-wise with F.lit costs a py4j round-trip per element —

@@ -351,8 +351,8 @@ def q_edit_distance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance over the first {p} characters. This is the
     candidate-then-verify composition at the heart of scalable dedup —
     the O(n²·len²) edit-distance only ever runs on the exact pair set the
-    anchor filter-verify join bounded (round 11 moved this off the capped
-    postings core, the last non-test user), and the prefix cap bounds the
+    anchor filter-verify join bounded (round 11 moved this off a capped
+    postings core), and the prefix cap bounds the
     per-pair cost.
     Both engines implement Levenshtein as the same integer DP; joins back
     to the corpus are key lookups."""

@@ -9,19 +9,25 @@ The coverage proof lives on the function; these tests attack it:
 - the adversarial shapes the proof's inequalities are tight on: S = 2 with
   all extras piled in one gap, exact-threshold pairs (J = t exactly),
   subset pairs, singleton/tiny docs (the S = 1 branch), identical docs;
-- parameter algebra of anchor_params.
+- parameter algebra of anchor_params;
+- the salted hot-anchor split (forced on by shrinking the module's
+  _HOT_ANCHOR_SPLIT) and the raw-row count behind the >= 2-key rule.
 """
 
 import itertools
+from unittest import mock
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from cdmx_airquality_etl_spark.operators import dedup
 from cdmx_airquality_etl_spark.operators.dedup import (
     _JACCARD_THRESHOLD,
     _anchor_jaccard_pairs,
+    _anchor_keys,
+    _salted_anchor_candidates,
     anchor_params,
 )
 
@@ -183,30 +189,22 @@ def test_matches_brute_force_on_random_corpora(spark, data, t):
     h=st.sampled_from([1, 2, 3]),
 )
 def test_salted_split_is_exact_at_tiny_h(spark, data, t, h):
-    """The round-10 salted hot-anchor split must be output-identical to
-    the unsalted join. H = 1..3 forces the salt to engage on virtually
-    every shared anchor (df ≥ 2 > 1), driving pairs through the
-    cross-bucket (ti < tj) task path and its least/greatest
-    canonicalization — the code path a hot production key would take."""
+    """The round-10 salted hot-anchor split must stay exact. H = 1..3
+    forces the salt to engage on virtually every shared anchor
+    (df ≥ 2 > 1), driving pairs through the cross-bucket (ti < tj) task
+    path and its least/greatest canonicalization — the code path a hot
+    production key would take."""
     sets = dict(enumerate(data))
-    rows = [(i, sorted(s)) for i, s in sets.items()]
-    shingled = spark.createDataFrame(
-        rows, "doc_id long, sh array<string>"
-    ).withColumn("n_sh", F.size("sh"))
-    salted = {
-        (r["doc_id_a"], r["doc_id_b"]): r["jaccard"]
-        for r in _anchor_jaccard_pairs(
-            shingled, t, hot_anchor_split=h
-        ).collect()
-    }
+    with mock.patch.object(dedup, "_HOT_ANCHOR_SPLIT", h):
+        salted = _spark_pairs(spark, sets, t)
     assert salted == pytest.approx(_brute(sets, t))
 
 
-def test_salted_split_engages_and_matches_unsalted(spark):
+def test_salted_split_engages_and_matches_brute_force(spark):
     """A 30-doc boilerplate cluster makes its run anchors df = 30; with
     H = 4 the salt must actually bucket them (s = ⌈30/4⌉ = 8) and the
-    output must equal the unsalted exact join — including the true
-    near-dup pair that lives OUTSIDE the cluster."""
+    output must equal brute force — including the true near-dup pair that
+    lives OUTSIDE the cluster."""
     boiler = " ".join(f"mm{i:02d}" for i in range(10))
     rows = []
     for i in range(30):
@@ -227,97 +225,27 @@ def test_salted_split_engages_and_matches_unsalted(spark):
         )
         .withColumn("n_sh", F.size("sh"))
     )
-
-    def pairs(**kw):
-        return {
-            (r["doc_id_a"], r["doc_id_b"]): r["jaccard"]
-            for r in _anchor_jaccard_pairs(
-                shingled, _JACCARD_THRESHOLD, **kw
-            ).collect()
-        }
-
-    unsalted = pairs(hot_anchor_split=None)
-    assert (100, 101) in unsalted
-    assert pairs(hot_anchor_split=4) == pytest.approx(unsalted)
-
-
-def test_hot_anchor_guard_bounds_candidates_without_changing_output(spark):
-    """The band-skew probe's pinned guard (round-9 VERDICT #3): a
-    boilerplate cluster — many docs sharing one shingle run, pairwise
-    Jaccard BELOW threshold — makes its anchors hot. With
-    max_anchor_postings set, those anchors drop before the self-join, so
-    no key can fan out past cap²/2; the output must be IDENTICAL to the
-    exact uncapped run because every qualifying pair still has a
-    sub-cap anchor (here: the boiler pairs never qualified at all)."""
-    from pyspark.sql import functions as F
-
-    boiler = " ".join(f"mm{i:02d}" for i in range(10))
-    rows = []
-    # 40-doc boilerplate cluster with unique tails (J ~ 8/(8+2*16) < 0.5)
-    for i in range(40):
-        tail = " ".join(f"t{i:02d}x{j:02d}" for j in range(18))
-        rows.append((i, f"{boiler} {tail}"))
-    # one true near-dup pair outside the cluster
-    rows.append((100, "aa bb cc dd ee ff gg hh"))
-    rows.append((101, "aa bb cc dd ee ff gg zz"))
-    from cdmx_airquality_etl_spark.operators.dedup import (
-        _JACCARD_THRESHOLD,
-        _anchor_jaccard_pairs,
+    # the salt engages: some anchor key is hotter than H = 4, so s > 1
+    max_df = (
+        _anchor_keys(shingled, _JACCARD_THRESHOLD)
+        .groupBy("akey")
+        .count()
+        .agg(F.max("count"))
+        .first()[0]
     )
-
-    shingled = (
-        spark.createDataFrame(rows, "doc_id long, text string")
-        .select(
-            "doc_id",
-            F.array_distinct(
-                F.expr(
-                    "transform(sequence(1, greatest(size(split(lower(text), ' ')) - 2, 1)),"
-                    " i -> concat_ws(' ', slice(split(lower(text), ' '), i, 3)))"
-                )
-            ).alias("sh"),
-        )
-        .withColumn("n_sh", F.size("sh"))
-    )
-    exact = {
-        (r["doc_id_a"], r["doc_id_b"]): r["jaccard"]
-        for r in _anchor_jaccard_pairs(shingled, _JACCARD_THRESHOLD).collect()
-    }
-    capped = {
-        (r["doc_id_a"], r["doc_id_b"]): r["jaccard"]
-        for r in _anchor_jaccard_pairs(
-            shingled, _JACCARD_THRESHOLD, max_anchor_postings=10
-        ).collect()
-    }
-    assert (100, 101) in exact
-    assert capped == exact  # guard engaged, output unchanged
-    # and the guard really engaged: boiler anchors exceed the cap
-    from cdmx_airquality_etl_spark.operators.dedup import anchor_params
-
-    k, cutoff = anchor_params(_JACCARD_THRESHOLD)
-    anch = (
-        shingled.withColumn("__shs", F.array_sort("sh"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"""flatten(transform(sequence(1, size(__shs)), i ->
-                      filter(transform(sequence(i + 1, i + {k}), j ->
-                        if(j <= size(__shs), struct(__shs[i-1] AS lo, __shs[j-1] AS hi),
-                           cast(null AS struct<lo:string,hi:string>))),
-                        p -> p IS NOT NULL)))"""
-                )
-            ).alias("a"),
-        )
-        .groupBy("a.lo", "a.hi")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    assert anch.filter(F.col("c") > 10).count() > 0
+    assert max_df > 4
+    sets = {r["doc_id"]: frozenset(r["sh"]) for r in shingled.collect()}
+    expect = _brute(sets, _JACCARD_THRESHOLD)
+    assert (100, 101) in expect
+    with mock.patch.object(dedup, "_HOT_ANCHOR_SPLIT", 4):
+        got = _spark_pairs(spark, sets, _JACCARD_THRESHOLD)
+    assert got == pytest.approx(expect)
 
 
-@pytest.mark.parametrize("hot_anchor_split", [None, 1], ids=["plain", "salted"])
-def test_collision_monotone_count_preserves_dual_anchor_pair(
-    spark, hot_anchor_split
-):
+@pytest.mark.parametrize(
+    "h", [dedup._HOT_ANCHOR_SPLIT, 1], ids=["plain", "salted"]
+)
+def test_collision_monotone_count_preserves_dual_anchor_pair(spark, h):
     """Executable form of the collision-monotonicity keystone in
     _salted_anchor_candidates' docstring (round-11 VERDICT #8): when a
     true pair's TWO distinct surviving anchors collide onto ONE xxhash64
@@ -328,37 +256,50 @@ def test_collision_monotone_count_preserves_dual_anchor_pair(
     schema _anchor_keys produces, with the collision materialized as a
     duplicated key value per doc.
 
-    The 4-row claim is pinned through the public min_shared parameter:
-    the collided pair must survive min_shared = 4 exactly (4 join rows)
-    and vanish at 5.  Negative control: a pair sharing ONE surviving
-    anchor (one row) must NOT pass the default guard — proving the
-    filter is live and the collision case passes on multiplicity, not
-    vacuously."""
-    from cdmx_airquality_etl_spark.operators.dedup import (
-        _salted_anchor_candidates,
-    )
-
+    That the count is over raw join ROWS (not distinct keys) is pinned by
+    a 2-row case: one doc emits a key twice and the other once — one
+    distinct key, two join rows — and the pair must be admitted.
+    Negative control: a pair sharing ONE surviving anchor (one row) must
+    NOT pass the guard — proving the filter is live and the collision
+    cases pass on multiplicity, not vacuously.  ``plain`` runs the
+    shipped H (no key is hot), ``salted`` forces H = 1 so every shared
+    key takes the bucket-pair path."""
     K = 1234567890123456789  # the collided 64-bit key value
     rows = [
         # docs 1, 2: two distinct survivors collided onto K → K twice each
         (1, K, False), (1, K, False), (2, K, False), (2, K, False),
         # docs 3, 4: a single shared surviving anchor (df = 2, one row)
         (3, 777, False), (4, 777, False),
+        # docs 5, 6: one key, emitted twice by 5 and once by 6 (2 rows)
+        (5, 888, False), (5, 888, False), (6, 888, False),
     ]
     anch = spark.createDataFrame(
         rows, "doc_id long, akey long, __small boolean"
     )
-
-    def pairs(min_shared):
-        return {
+    with mock.patch.object(dedup, "_HOT_ANCHOR_SPLIT", h):
+        got = {
             (r["doc_id_a"], r["doc_id_b"])
-            for r in _salted_anchor_candidates(
-                anch, hot_anchor_split=hot_anchor_split, min_shared=min_shared
-            ).collect()
+            for r in _salted_anchor_candidates(anch).collect()
         }
-
-    got = pairs(2)
     assert (1, 2) in got, "collision lost a dual-anchor pair"
     assert (3, 4) not in got, "single-anchor pair slipped the >=2 guard"
-    assert (1, 2) in pairs(4)  # exactly 4 joined rows...
-    assert (1, 2) not in pairs(5)  # ...and not one more
+    assert (5, 6) in got, "count is not over raw join rows"
+
+
+def test_salted_split_emits_every_pair_of_a_hot_key(spark):
+    """Coverage of the bucket-pair tasks on their own: 20 small docs share
+    ONE anchor key (df = 20), so with H = 4 it salts into s = 5 buckets and
+    every one of the 190 pairs must still come out exactly once — across
+    buckets as well as inside one (a lost cross-bucket orientation shows
+    up as a missing pair)."""
+    n = 20
+    anch = spark.createDataFrame(
+        [(d, 42, True) for d in range(n)],
+        "doc_id long, akey long, __small boolean",
+    )
+    with mock.patch.object(dedup, "_HOT_ANCHOR_SPLIT", 4):
+        got = [
+            (r["doc_id_a"], r["doc_id_b"])
+            for r in _salted_anchor_candidates(anch).collect()
+        ]
+    assert sorted(got) == list(itertools.combinations(range(n), 2))

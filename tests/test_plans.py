@@ -63,7 +63,7 @@ def test_group_agg_partial_final(spark, sf_dir):
 
 
 def test_fuzzy_dedup_anchor_join_shape(spark, sf_dir):
-    # round-11 DUAL-ANCHOR formulation (min_shared='auto'=2 at every
+    # round-11 DUAL-ANCHOR formulation (≥2 shared anchor keys at every
     # threshold after the sf10 single-anchor saturation cliff): anchors
     # exploded map-side (Generate) as HASHED 8-byte keys — xxhash64(lo, hi),
     # join key `akey` — candidates from an EQUI self-join on (akey[, bucket])
@@ -73,7 +73,8 @@ def test_fuzzy_dedup_anchor_join_shape(spark, sf_dir):
     # verify joins. This subsumes the old bare-id distinct (round ≤10) and is
     # a strictly stronger guard: the ≥2-shared-anchor requirement is what
     # keeps the candidate set ∝ true-pair volume at saturating vocabularies
-    # (tools/anchor_saturation_probe.py: 4.0M ≥1-key vs 22.8k ≥2-key at sf3).
+    # (measured at sf3 by a since-retired probe, BASELINE.md round 11:
+    # 4.0M ≥1-key vs 22.8k ≥2-key candidates).
     plan = _plan(spark, sf_dir, "q_dedup_fuzzy", mode="simple")
     assert "Generate explode" in plan  # map-side anchor expansion
     assert "CartesianProduct" not in plan

@@ -15,8 +15,9 @@ The coverage proof lives on the function; these tests attack it:
   bound exists for), equal-size ties (the (n, doc_id) canonical ordering),
   singleton docs, identical docs, df = 1-heavy docs (the budget-shrink
   argument for dropping them from the prefix);
-- CAP-FREEDOM: a stop-shingle with df far above the old _MAX_POSTINGS
-  must not cost a single pair — the property the old plan could not give.
+- CAP-FREEDOM: a stop-shingle with df far above the old postings cap
+  (1000) must not cost a single pair — the property the old plan could
+  not give.
 """
 
 import itertools
@@ -28,9 +29,11 @@ from pyspark.sql import functions as F
 
 from cdmx_airquality_etl_spark.operators.dedup import (
     _CONTAINMENT_THRESHOLD,
-    _MAX_POSTINGS,
     _prefix_containment_pairs,
 )
+
+# the per-shingle postings cap of the retired capped-postings plan
+_OLD_POSTINGS_CAP = 1000
 
 
 def _brute(sets: dict[int, frozenset], t: float):
@@ -125,7 +128,7 @@ def test_singletons_and_df1_budget(spark):
 
 
 def test_hot_shingle_beyond_old_cap_loses_nothing(spark):
-    """CAP-FREEDOM: a boilerplate shingle with df = 1.2 × _MAX_POSTINGS —
+    """CAP-FREEDOM: a boilerplate shingle with df = 1.2 × the old cap —
     the regime where the old capped-postings plan silently dropped every
     pair whose overlap ran through it — must cost the prefix plan nothing.
     Docs are (hot + 1 unique) two-shingle sets: every adjacent-id pair
@@ -135,7 +138,7 @@ def test_hot_shingle_beyond_old_cap_loses_nothing(spark):
     shingles are hotter — here each doc's unique shingle is df = 1, so the
     hot shingle IS every doc's entire surviving prefix, the worst case —
     and the run must still finish and stay exact."""
-    n = int(_MAX_POSTINGS * 1.2)
+    n = int(_OLD_POSTINGS_CAP * 1.2)
     sets = {i: frozenset(["hot", f"u{i:05d}"]) for i in range(n)}
     sets[n] = frozenset(["hot", "u00000"])  # duplicate of doc 0
     got = _spark_pairs(spark, sets, 0.9)

@@ -17,10 +17,9 @@ threshold (all collision work is wasted by construction) — and measures,
 for q_dedup_fuzzy (adjacency anchors) and q_dedup_minhash (banded LSH):
 
 - raw anchor self-join rows Σc(c−1)/2 (the quadratic work term) over the
-  SHIPPED dual-anchor frame, plus the actual ≥2-key|__small candidate
-  count entering exact verify (round-12: both from min_shared=2, the
-  configuration q_dedup_fuzzy runs — round-11 ADVICE flagged the probe
-  for mixing retired ≥1-key counts with dual-anchor timings),
+  operator's own anchor frame, plus the actual ≥2-key|__small candidate
+  count entering exact verify — the one configuration q_dedup_fuzzy
+  runs,
 - output rows,
 - warm wall time (min of --runs noop-sink executions),
 
@@ -111,19 +110,16 @@ def gen_onehot_documents(sf: float, hot_docs: int, block_words: int = 4) -> pa.T
 
 def _anchors(spark, sf_dir: str):
     """The anchor-key frame of q_dedup_fuzzy's candidate stage — the
-    operator's OWN dd._anchor_keys (round 10: hashed keys, size-adaptive
-    reach), not a reconstruction that could drift.  min_shared=2 matches
-    the shipped min_shared='auto' dual-anchor default (round-11 ADVICE:
-    the probe previously built the retired ≥1-key frame, so its counts
-    mixed configurations with the dual-anchor timings)."""
+    operator's OWN dd._anchor_keys (hashed keys, size-adaptive dual-anchor
+    reach), not a reconstruction that could drift."""
     import cdmx_airquality_etl_spark.operators.dedup as dd
     from cdmx_airquality_etl_spark.sources.parquet import load_table
 
     shingled = dd._doc_shingles(load_table(spark, sf_dir, "documents"))
-    return dd._anchor_keys(shingled, dd._JACCARD_THRESHOLD, min_shared=2)
+    return dd._anchor_keys(shingled, dd._JACCARD_THRESHOLD)
 
 
-def _candidates_fuzzy(spark, sf_dir: str, cap: int | None = None):
+def _candidates_fuzzy(spark, sf_dir: str):
     """Σ c·(c−1)/2 over anchor keys — the raw self-join ROW volume (the
     quadratic work term).  Under the dual-anchor rule this is the input
     to the ≥2-key collapse, not the verify-stage candidate count; the
@@ -131,10 +127,7 @@ def _candidates_fuzzy(spark, sf_dir: str, cap: int | None = None):
     from pyspark.sql import functions as F
 
     anch = _anchors(spark, sf_dir)
-    per_key = anch.groupBy("akey").agg(F.count(F.lit(1)).alias("c"))
-    if cap is not None:
-        per_key = per_key.filter(F.col("c") <= cap)
-    return per_key.agg(
+    return anch.groupBy("akey").agg(F.count(F.lit(1)).alias("c")).agg(
         F.sum(F.expr("c * (c - 1) / 2")).cast("long").alias("cands"),
         F.max("c").alias("hottest_key"),
     ).first()
@@ -146,9 +139,7 @@ def _candidates_dual(spark, sf_dir: str) -> int:
     operator's own _salted_anchor_candidates over the same frame."""
     import cdmx_airquality_etl_spark.operators.dedup as dd
 
-    return dd._salted_anchor_candidates(
-        _anchors(spark, sf_dir), min_shared=2
-    ).count()
+    return dd._salted_anchor_candidates(_anchors(spark, sf_dir)).count()
 
 
 def _candidates_minhash(spark, sf_dir: str):
@@ -188,25 +179,6 @@ def _time_query(spark, name: str, sf_dir: str, runs: int) -> dict:
     from cdmx_airquality_etl_spark.registry import QUERIES
 
     return _time_df(spark, lambda: QUERIES[name](spark, sf_dir), runs)
-
-
-def _time_fuzzy_variant(spark, sf_dir: str, runs: int, **kw) -> dict:
-    """Time dd._anchor_jaccard_pairs under an explicit guard config:
-    max_anchor_postings=cap (legacy exactness-trading cap),
-    hot_anchor_split=None (raw unsalted join), or the default salted
-    split — the A/B/C the round-10 exactness-preserving treatment is
-    judged on."""
-    import cdmx_airquality_etl_spark.operators.dedup as dd
-    from cdmx_airquality_etl_spark.sources.parquet import load_table
-
-    def mk():
-        return dd._anchor_jaccard_pairs(
-            dd._doc_shingles(load_table(spark, sf_dir, "documents")),
-            dd._JACCARD_THRESHOLD,
-            **kw,
-        )
-
-    return _time_df(spark, mk, runs)
 
 
 def main() -> int:
@@ -257,28 +229,17 @@ def main() -> int:
         "one_hot_docs": args.one_hot_docs,
         "corpora": {},
     }
-    cap = 1000
-    result["cap"] = cap
     for label, d in corpora:
         cf = _candidates_fuzzy(spark, d)
-        cf_cap = _candidates_fuzzy(spark, d, cap=cap)
         cm = _candidates_minhash(spark, d)
         entry = {
             # raw self-join rows over the DUAL-anchor frame (Σ c(c−1)/2)
             "anchor_join_rows": cf["cands"],
             "anchor_hottest_key": cf["hottest_key"],
-            "anchor_join_rows_capped": cf_cap["cands"],
             # pairs surviving the ≥2-key|__small collapse (verify input)
             "anchor_candidates_dual": _candidates_dual(spark, d),
             "band_candidates": cm["cands"],
             "band_hottest_key": cm["hottest_key"],
-            "q_dedup_fuzzy_capped": _time_fuzzy_variant(
-                spark, d, args.runs, max_anchor_postings=cap
-            ),
-            "q_dedup_fuzzy_unsalted": _time_fuzzy_variant(
-                spark, d, args.runs, hot_anchor_split=None
-            ),
-            # the registered query = the default SALTED split
             "q_dedup_fuzzy": _time_query(spark, "q_dedup_fuzzy", d, args.runs),
             "q_dedup_minhash": _time_query(
                 spark, "q_dedup_minhash", d, args.runs
