@@ -9,7 +9,7 @@
                    missing-value gating to distributional gating.
 - q_interpolate  — linear interpolation of a gappy series between known
                    observations, the continuous twin of q_forward_fill's
-                   LOCF (``relational_ext4.py``). The reference's hourly
+                   LOCF (``relational_ext.py``). The reference's hourly
                    snapshot model (``scrapper.py:44-52``) produces exactly
                    such gappy series when runs are missed.
 

@@ -2,8 +2,8 @@
 NULL ordering, negative division/modulo, empty-input aggregation, NULL
 keys in grouping/distinct — plus the window-explode rolling distinct count.
 
-Lineage: the fourth extension batch (relational_ext4.py) pinned NULL-safe
-joins and zero-fill; this batch pins the remaining cross-engine semantic
+Lineage: relational_ext.py (q_null_safe_join, q_dense_grid) pins NULL-safe
+joins and zero-fill; this module pins the remaining cross-engine semantic
 traps. Each query's WHOLE POINT is that the naive phrasing returns
 different answers in Spark vs DuckDB (Spark sorts NULLS FIRST ascending by
 default, DuckDB NULLS LAST; both define x % y by dividend sign but

@@ -1,16 +1,10 @@
 """Connected-components correctness on known graphs: chains require multiple
 propagation rounds, cycles must terminate, separate components must not leak
-labels into each other. The star-contraction variant must agree with the
-simple loop everywhere and converge in O(log n) rounds on deep graphs."""
-
-import math
+labels into each other."""
 
 from pyspark.sql import Row
 
-from cdmx_airquality_etl_spark.operators.clustering import (
-    connected_components,
-    connected_components_star,
-)
+from cdmx_airquality_etl_spark.operators.clustering import connected_components
 
 
 def _edges_df(spark, edges):
@@ -22,11 +16,6 @@ def _edges_df(spark, edges):
 def _labels(spark, edges):
     out = connected_components(_edges_df(spark, edges), "src", "dst")
     return {r["node"]: r["label"] for r in out.collect()}
-
-
-def _labels_star(spark, edges):
-    out, rounds = connected_components_star(_edges_df(spark, edges), "src", "dst")
-    return {r["node"]: r["label"] for r in out.collect()}, rounds
 
 
 def test_two_components_and_chain(spark):
@@ -43,35 +32,6 @@ def test_long_chain_needs_many_rounds(spark):
     n = 12
     got = _labels(spark, [(i, i + 1) for i in range(n)])
     assert got == {i: 0 for i in range(n + 1)}
-
-
-def test_star_agrees_with_simple_loop(spark):
-    cases = [
-        [(1, 2), (2, 3), (5, 6), (10, 11), (11, 12), (12, 13)],
-        [(1, 2), (2, 3), (3, 1)],  # cycle
-        [(7, 1), (7, 2), (7, 3), (7, 4), (0, 7)],  # hub with smaller outsider
-        [(i, i + 1) for i in range(20)],  # deep chain
-    ]
-    for edges in cases:
-        star, _ = _labels_star(spark, edges)
-        assert star == _labels(spark, edges), edges
-
-
-def test_star_converges_logarithmically_on_deep_chain(spark):
-    # a 64-node path has diameter 64: label propagation needs ~64 rounds,
-    # star contraction must finish in O(log n) — the point of the algorithm
-    n = 64
-    labels, rounds = _labels_star(spark, [(i, i + 1) for i in range(n)])
-    assert labels == {i: 0 for i in range(n + 1)}
-    assert rounds <= 2 * int(math.log2(n)) + 2  # 14 for n=64
-
-
-def test_star_hub_graph_single_round_body(spark):
-    # hub-heavy star graph: already a star — must converge immediately and
-    # keep the min node as representative
-    labels, rounds = _labels_star(spark, [(100, i) for i in range(1, 40)])
-    assert labels == {**{i: 1 for i in range(1, 40)}, 100: 1}
-    assert rounds <= 3
 
 
 def test_text_clusters_match_pairs(spark, sf_dir):

@@ -25,8 +25,6 @@ EVENT_MODULES = {
     "retail",
     "spatial",
     "tpch_ext",
-    "tpch_ext2",
-    "tpch_ext3",
     "ops_metrics",
 }
 

@@ -4,14 +4,17 @@ live registry. This catches the commonest drift — adding or renaming a
 query without regenerating the inventories — without re-deriving any
 plans (plan-COLUMN staleness is covered by regenerating via
 tools/dump_plans.py in the closing ritual; this test makes forgetting
-that regeneration loud)."""
+that regeneration loud). COVERAGE.md needs no Spark to render, so it is
+also compared byte for byte with a fresh render."""
 
 import os
 import re
+import sys
 
 from cdmx_airquality_etl_spark.registry import ORACLE_FACTORIES, ORACLES, QUERIES
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 
 def _table_names(path: str) -> set[str]:
@@ -27,6 +30,18 @@ def test_plans_md_rows_match_registry():
 
 def test_coverage_md_rows_match_registry():
     assert _table_names("COVERAGE.md") == set(QUERIES), (
+        "COVERAGE.md is stale — regenerate with tools/dump_coverage.py"
+    )
+
+
+def test_coverage_md_matches_fresh_render():
+    # byte-level: also catches moved `file:line` sites and edited summaries,
+    # which the row-set check above cannot see
+    import dump_coverage
+
+    with open(os.path.join(REPO, "COVERAGE.md")) as f:
+        committed = f.read()
+    assert committed == dump_coverage.render(), (
         "COVERAGE.md is stale — regenerate with tools/dump_coverage.py"
     )
 

@@ -2,6 +2,7 @@
 DuckDB oracle or be on the declared rows-only list with a reason — a query
 can never silently lose its correctness check."""
 
+import hashlib
 import os
 import warnings
 
@@ -26,6 +27,20 @@ ROWS_ONLY: dict[str, str] = {}
 # rows-only branch is dead code from here on.)
 
 CHECKED = set(ORACLES) | set(ORACLE_FACTORIES)
+
+
+# sha256 of "\n".join(QUERIES): the 312 registered names, in registration order.
+QUERY_ORDER_SHA256 = "ad55cf5c9bdfcf960e17a90064fb7a76c3e06fa0d8326edfe576d0db2955fde0"
+
+
+def test_query_order_is_pinned():
+    got = hashlib.sha256("\n".join(QUERIES).encode()).hexdigest()
+    assert got == QUERY_ORDER_SHA256, (
+        f"QUERIES order changed (sha256 {got[:16]}, {len(QUERIES)} names): the "
+        "registration order is load-bearing for the driver bench's cold "
+        "overhead and the ROTATE sample positions. If the change is "
+        "deliberate, re-pin the hash and re-baseline both."
+    )
 
 
 def test_every_query_is_checked():

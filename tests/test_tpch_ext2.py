@@ -1,5 +1,5 @@
-"""Semantics + plan-shape tests for the TPC-H decision-support batch B
-(Q2/Q7/Q9/Q10/Q11/Q15/Q21/Q22 shapes in operators/tpch_ext2.py)."""
+"""Semantics + plan-shape tests for the TPC-H multi-role and nested-aggregate
+queries (Q2/Q7/Q9/Q10/Q11/Q15/Q21/Q22 shapes in operators/tpch_ext.py)."""
 
 from pyspark.sql import functions as F
 

@@ -1,5 +1,5 @@
-"""Semantics + plan-shape tests for TPC-H batch C (Q12/Q16/Q20 shapes in
-operators/tpch_ext3.py) — completing 22/22 TPC-H plan families."""
+"""Semantics + plan-shape tests for the TPC-H Q12/Q16/Q20 shapes in
+operators/tpch_ext.py — with them, 22/22 TPC-H plan families are covered."""
 
 import pandas as pd
 import pyarrow.parquet as pq
