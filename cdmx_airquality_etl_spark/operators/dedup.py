@@ -59,8 +59,12 @@ _JACCARD_THRESHOLD = 0.5
 _HOT_ANCHOR_SPLIT = 256
 
 
-def _norm_text(col: Column) -> Column:
-    return F.regexp_replace(F.trim(F.lower(col)), r"\s+", " ")
+def content_fingerprint(col: Column) -> Column:
+    """The exact-dedup content identity: md5 of whitespace-normalized
+    text. The exact-dedup queries group on it and the streaming dedup and
+    corpus-ingest paths key on it, so a document has one identity in batch
+    and in stream."""
+    return F.md5(F.regexp_replace(F.trim(F.lower(col)), r"\s+", " "))
 
 
 # Portable content hash: the first `nchars` hex nibbles of md5 decoded to a
@@ -829,7 +833,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     sql_config.yaml:18 applied to content instead of keys."""
     docs = load_table(spark, sf_dir, "documents")
     return (
-        docs.select("doc_id", F.md5(_norm_text(F.col("text"))).alias("fingerprint"))
+        docs.select("doc_id", content_fingerprint(F.col("text")).alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(
             F.min("doc_id").alias("keeper_doc_id"),
@@ -867,7 +871,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             "doc_id",
             "n_chars",
-            F.md5(_norm_text(F.col("text"))).alias("fingerprint"),
+            content_fingerprint(F.col("text")).alias("fingerprint"),
         )
         .groupBy("fingerprint")
         .agg(
@@ -1017,7 +1021,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     side only, and a Bloom filter of corpus fingerprints (AQE injects one
     for selective joins) short-circuits most batch rows scan-side."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(_norm_text(F.col("text"))).alias("fp")
+    fp = content_fingerprint(F.col("text")).alias("fp")
     known = docs.filter(F.col("doc_id") < _INCR_SPLIT_ID).select(fp).distinct()
     batch = docs.filter(F.col("doc_id") >= _INCR_SPLIT_ID).select(
         "doc_id", "lang", fp
@@ -1052,7 +1056,7 @@ def q_duplicate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     over |distinct fingerprints| rows; nothing rescans documents."""
     docs = load_table(spark, sf_dir, "documents")
     g = (
-        docs.select(F.md5(_norm_text(F.col("text"))).alias("fp"))
+        docs.select(content_fingerprint(F.col("text")).alias("fp"))
         .groupBy("fp")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -1938,7 +1942,7 @@ def q_dup_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster-size-cardinality key — the same shape as q_degree_distribution
     one grain up. All counts exact BIGINTs."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " "))
+    fp = content_fingerprint(F.col("text"))
     clusters = docs.select(fp.alias("fp")).groupBy("fp").agg(
         F.count(F.lit(1)).cast("long").alias("cluster_size")
     )

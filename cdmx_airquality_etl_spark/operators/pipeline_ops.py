@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import register
-from .dedup import _sql_md5_int
+from .dedup import _sql_md5_int, content_fingerprint
 from ..sources.parquet import load_table
 
 
@@ -95,9 +95,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.split(F.trim(F.lower("text")), r"\s+")
     clean = docs.filter((F.col("n_chars") >= 80) & (F.size(toks) >= 15))
 
-    fingerprint = F.md5(
-        F.regexp_replace(F.trim(F.lower("text")), r"\s+", " ")
-    )
+    fingerprint = content_fingerprint(F.col("text"))
     quality = F.col("n_chars") * 10_000_000_000 - F.col("doc_id")
     kept = (
         clean.select("doc_id", "lang", "n_chars", "text", fingerprint.alias("fp"))

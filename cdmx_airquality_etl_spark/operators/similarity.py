@@ -17,11 +17,12 @@ Three tiers:
                         constant and candidate volume ~linear as the corpus
                         grows. Trades recall for a join that scales linearly
                         in bucket sizes — the documented LSH trade-off.
-- q_similarity_ann_ivf — IVF ANN: spherical k-means centroids trained on a
-                        bounded deterministic sample (train_ivf_centroids),
-                        assignment as a scan-side argmax over literal
-                        centroid arrays (no join/shuffle), multi-probe
-                        query over the nprobe nearest cells.
+- q_similarity_ann_ivf / _pq / _ivfpq / _ivfpq_probe — trained ANN indexes
+                        (IVF cells, PQ codes, both, and both persisted) on
+                        one core: a bounded deterministic training sample,
+                        scan-side assignment over literal centroid and
+                        codeword arrays (no join/shuffle), and one ADC
+                        shortlist + exact-cosine re-rank.
 
 Dot products are sequential left folds over double products (Spark
 ``aggregate``, oracle ``list_reduce`` — same order ⇒ bitwise-identical
@@ -53,6 +54,7 @@ _LSH_MAX_BITS = 24  # bounded by embedding dim (64); 2^24 buckets ≫ any corpus
 _LSH_TARGET_BUCKET = 32
 _IVF_SAMPLE_CAP = 50_000  # driver-side k-means training sample bound
 _IVF_NPROBE = 2  # query probes its nprobe nearest cells
+_IVF_ITERS = 8  # spherical k-means iterations of the IVF centroids
 
 
 def _dot(a: str, b: str) -> Column:
@@ -472,26 +474,84 @@ def q_dedup_embedding_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q_similarity_ann_ivf — IVF-bucketed ANN. Training is fully deterministic
-# (hash-stride sample, strided init, fixed iterations, no RNG), so the
-# trained centroids are a pure function of the corpus — which makes the
-# whole approximate search ORACLE-CHECKABLE: ivf_oracle_sql() retrains the
-# identical index from the parquet (no Spark) and emits the same literal
-# centroids into DuckDB SQL.
+# Trained-index core of the ANN family: q_similarity_ann_ivf, _pq, _ivfpq and
+# _ivfpq_probe are one pipeline with parts switched on.
+#
+#   sample  → _train_sample: the guarded corpus's hash-stride sample, at
+#             most _IVF_SAMPLE_CAP rows (pmod(xxhash64(vec_id), stride) == 0,
+#             stable under repartition), sorted by vec_id; raises on an
+#             empty corpus.
+#   train   → _kmeans_unit (IVF: spherical k-means, k = ⌈√n⌉ cells) and
+#             _pq_train (PQ: per-subspace L2 codebooks). Strided init, fixed
+#             iterations, no RNG — so the index is a pure function of the
+#             corpus.
+#   assign  → ivf_cell_col (literal-centroid argmax) and _pq_code_cols
+#             (per-subspace literal-codeword argmin): scan-side projections,
+#             no join, no shuffle.
+#   query   → _query_vector (vec_id 0), then driver-side _ivf_probe_cells
+#             and _pq_lut (k·dim numbers); _adc_topk keeps the ADC
+#             shortlist and _exact_topk re-ranks by exact cosine.
+#
+# Determinism is what makes every approximate search here ORACLE-CHECKABLE:
+# the *_oracle_sql generators read the corpus through _oracle_sample (the
+# same guard in DuckDB, the stride mask via the pure-Python xxhash64 twin,
+# the same Arrow float32 → float64 upcast), run the SAME numpy trainers and
+# driver-side helpers, and emit the identical index as literal DuckDB SQL.
+# They never call the Spark expression builders.
 # ---------------------------------------------------------------------------
-def _ivf_plan(n: int, k: int | None) -> tuple[int, int]:
-    """(k, stride) for a corpus of n surviving vectors — shared by the Spark
-    query and the oracle generator so both train on the same sample."""
+_PQ_M = 4  # subspaces (64-dim embedding → 4 × 16-dim subvectors)
+_PQ_K = 16  # codewords per subspace → a 4-byte code per vector
+_PQ_SHORTLIST = 50  # ADC candidates re-ranked by exact cosine
+_PQ_ITERS = 8
+_EMPTY_CORPUS = (
+    "ANN index: no usable embeddings after the degenerate-vector guard — "
+    "nothing to train on"
+)
+_NO_QUERY = (
+    "ANN query: vec_id=0 is absent or failed the degenerate-vector guard — "
+    "no query vector to probe with"
+)
+
+
+def _ivf_plan(n: int) -> tuple[int, int]:
+    """(k, stride) for a corpus of n surviving vectors: the classic IVF
+    nlist heuristic and the stride that bounds the training sample."""
     import math
 
-    if k is None:
-        k = max(4, math.ceil(math.sqrt(n)))  # classic IVF nlist heuristic
-    return k, max(1, n // _IVF_SAMPLE_CAP)
+    return max(4, math.ceil(math.sqrt(n))), max(1, n // _IVF_SAMPLE_CAP)
 
 
-def _kmeans_unit(embeddings, k: int, iters: int):
+def _train_sample(emb: DataFrame):
+    """(n, k, sample embeddings) of the guarded corpus ``emb`` — the
+    coreset every index here is trained on, never the full corpus. The
+    Arrow collect (never row-at-a-time py4j) is capped at _IVF_SAMPLE_CAP
+    rows, so driver memory is O(cap × dim) at any corpus size."""
+    n = emb.count()
+    if n == 0:
+        raise ValueError(_EMPTY_CORPUS)
+    k, stride = _ivf_plan(n)
+    sample = (
+        emb.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(stride)) == 0)
+        .select("vec_id", "embedding")
+        .toPandas()
+        .sort_values("vec_id")
+    )
+    return n, k, sample["embedding"]
+
+
+def _query_vector(emb: DataFrame) -> list:
+    """The query vector (vec_id 0) of the guarded corpus: one
+    row-group-stat-skipping lookup (at 100 TB the query vector arrives
+    from the application, not a scan)."""
+    rows = emb.filter(F.col("vec_id") == 0).select("embedding").take(1)
+    if not rows:
+        raise ValueError(_NO_QUERY)
+    return list(rows[0][0])
+
+
+def _kmeans_unit(embeddings, k: int):
     """Spherical k-means core: unit-normalize, strided deterministic init,
-    fixed iteration count. ``embeddings`` is any sequence of float vectors
+    _IVF_ITERS iterations. ``embeddings`` is any sequence of float vectors
     (Arrow float32 arrays from either Spark's toPandas or DuckDB's df() —
     identical values, identical float64 upcast ⇒ bitwise-identical
     centroids)."""
@@ -501,7 +561,7 @@ def _kmeans_unit(embeddings, k: int, iters: int):
     X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     k = min(k, len(X))
     C = X[:: max(1, len(X) // k)][:k].copy()  # strided deterministic init
-    for _ in range(iters):
+    for _ in range(_IVF_ITERS):
         assign = np.argmax(X @ C.T, axis=1)  # cosine == dot on unit vectors
         for j in range(k):
             members = X[assign == j]
@@ -511,30 +571,59 @@ def _kmeans_unit(embeddings, k: int, iters: int):
     return C
 
 
-def train_ivf_centroids(
-    emb: DataFrame, k: int | None = None, iters: int = 8
-) -> list[tuple[int, list[float]]]:
-    """Spherical k-means on a bounded, deterministic sample — how real IVF
-    indexes are trained: the index is built from a coreset, never the full
-    corpus. The collect is capped at _IVF_SAMPLE_CAP rows (hash-stride
-    sampling, stable under repartition), so driver memory is O(cap × dim)
-    regardless of corpus size; assignment of the FULL corpus stays
-    distributed (broadcast join in the caller). Deterministic: stride
-    sampling + strided init + fixed iteration count → identical centroids
-    every run, no RNG."""
-    n = emb.count()
-    if n == 0:
-        raise ValueError("IVF training: no usable embeddings after the "
-                         "degenerate-vector guard")
-    k, stride = _ivf_plan(n, k)
-    sample = (
-        emb.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(stride)) == 0)
-        .select("vec_id", "embedding")
-        .toPandas()  # Arrow batch transfer — never row-at-a-time py4j
-        .sort_values("vec_id")
-    )
-    C = _kmeans_unit(sample["embedding"], k, iters)
-    return [(j, C[j].tolist()) for j in range(len(C))]
+def train_ivf_centroids(emb: DataFrame) -> list[list[float]]:
+    """Unit-norm IVF centroids (row j is cell j) of the guarded corpus
+    ``emb``: spherical k-means on the bounded training sample. Assignment
+    of the FULL corpus stays distributed (ivf_cell_col)."""
+    _, k, sample = _train_sample(emb)
+    return _kmeans_unit(sample, k).tolist()
+
+
+def _pq_subdim(dim: int) -> int:
+    if dim % _PQ_M:
+        raise ValueError(f"PQ: dim {dim} not divisible by M={_PQ_M}")
+    return dim // _PQ_M
+
+
+def _pq_train(embeddings) -> list:
+    """Per-subspace L2 k-means codebooks from the training sample. Strided
+    init, argmin assignment with ties to the lowest codeword, centroid =
+    member mean, fixed iteration count, no RNG — _kmeans_unit's
+    determinism contract, but UN-normalized L2 per subspace (the standard
+    PQ objective, Jégou et al. 2011, TPAMI — public paper)."""
+    import numpy as np
+
+    X = np.asarray([list(e) for e in embeddings], dtype=np.float64)
+    sub = _pq_subdim(X.shape[1])
+    books = []
+    for m in range(_PQ_M):
+        Xm = X[:, m * sub : (m + 1) * sub]
+        k = min(_PQ_K, len(Xm))
+        C = Xm[:: max(1, len(Xm) // k)][:k].copy()
+        for _ in range(_PQ_ITERS):
+            d2 = ((Xm[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+            assign = np.argmin(d2, axis=1)  # ties → lowest codeword
+            for j in range(len(C)):
+                members = Xm[assign == j]
+                if len(members):
+                    C[j] = members.sum(axis=0) / len(members)
+        books.append(C)
+    return books
+
+
+def _pq_lut(books, q_emb) -> list:
+    """ADC lookup table: lut[m][j] = <q_m, c_mj>. Computed driver-side by
+    THIS shared helper in both the Spark query and the oracle generator,
+    then rendered as literals — no engine arithmetic involved, so the
+    tables are identical by construction."""
+    import numpy as np
+
+    q = np.asarray(list(q_emb), dtype=np.float64)
+    sub = _pq_subdim(len(q))
+    return [
+        (books[m] @ q[m * sub : (m + 1) * sub]).tolist()
+        for m in range(_PQ_M)
+    ]
 
 
 _XXH_P1 = 0x9E3779B185EBCA87
@@ -548,7 +637,7 @@ _U64 = (1 << 64) - 1
 def xxhash64_long(value: int, seed: int = 42) -> int:
     """Pure-Python twin of Spark's ``xxhash64(BIGINT)`` (XXH64 over the
     8-byte long, Spark's default seed 42), returned as Spark's SIGNED long.
-    Lets the Spark-free oracle generator reproduce the hash-stride IVF
+    Lets the Spark-free oracle generator reproduce the hash-stride
     training sample exactly when the corpus exceeds _IVF_SAMPLE_CAP (DuckDB
     has no Spark-compatible xxhash64). Bit-for-bit parity with F.xxhash64
     is pinned by tests/test_ivf_oracle.py::test_xxhash64_long_parity."""
@@ -566,6 +655,37 @@ def xxhash64_long(value: int, seed: int = 42) -> int:
     h = h * _XXH_P3 & _U64
     h ^= h >> 32
     return h - (1 << 64) if h >= (1 << 63) else h
+
+
+def _oracle_sample(sf_dir: str):
+    """(k, sample embeddings, query vector) for the oracle generators — the
+    Spark-free twin of _train_sample + _query_vector, read straight from
+    the parquet through the same degenerate-vector guard, with the same
+    errors."""
+    import os
+
+    import duckdb
+
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    con = duckdb.connect()
+    try:
+        con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+        rows = con.sql(
+            f"SELECT vec_id, embedding FROM embeddings WHERE {_SQL_NZ_PRED} "
+            "ORDER BY vec_id"
+        ).df()
+    finally:
+        con.close()
+    if len(rows) == 0:
+        raise ValueError(_EMPTY_CORPUS)
+    k, stride = _ivf_plan(len(rows))
+    embs = rows["embedding"]
+    if stride > 1:
+        embs = embs[[xxhash64_long(int(v)) % stride == 0 for v in rows["vec_id"]]]
+    qsel = rows[rows["vec_id"] == 0]
+    if len(qsel) == 0:
+        raise ValueError(_NO_QUERY)
+    return k, embs, qsel["embedding"].iloc[0]
 
 
 def _lit_array_sql(values: list[float]) -> str:
@@ -621,6 +741,36 @@ def ivf_cell_col(C, emb_col: str = "embedding") -> Column:
     return -F.expr(f"array_max(array({cell_scores_sql}))").getField("nj")
 
 
+def _pq_code_cols(books) -> list[Column]:
+    """PQ encoder c0..c{M-1}: per-subspace argmin over literal codewords —
+    min struct (d, j), ties to the lowest code — with d the squared L2 as
+    the same sequential fold the oracle's dists CTE runs. ONE parsed
+    expression per subspace."""
+    sub = len(books[0][0])
+
+    def dist_sql(m: int, codeword) -> str:
+        return (
+            f"aggregate(zip_with(slice(embedding, {m * sub + 1}, {sub}), "
+            f"{_lit_array_sql(codeword)}, "
+            "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
+            "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
+        )
+
+    return [
+        F.expr(
+            "array_min(array("
+            + ",".join(
+                f"struct({dist_sql(m, books[m][j])} AS d, {j} AS j)"
+                for j in range(len(books[m]))
+            )
+            + "))"
+        )
+        .getField("j")
+        .alias(f"c{m}")
+        for m in range(_PQ_M)
+    ]
+
+
 def _ivf_probe_cells(C, q_emb) -> list[int]:
     """Driver-side probe-cell resolution, shared verbatim by the Spark query
     and the oracle generator: rank centroids by cosine with the query
@@ -634,56 +784,108 @@ def _ivf_probe_cells(C, q_emb) -> list[int]:
     return order[:_IVF_NPROBE]
 
 
-def ivf_oracle_sql(sf_dir: str, iters: int = 8) -> str:
-    """Full DuckDB oracle for q_similarity_ann_ivf, rendered per sf_dir.
+def _in_probe_cells(C, q_emb) -> Column:
+    """Candidate filter: the query's probe cells, minus the query itself."""
+    return F.col("cell").isin(_ivf_probe_cells(C, q_emb)) & (F.col("vec_id") != 0)
 
-    Because training is deterministic (stride sample → strided init → fixed
-    iterations, no RNG), the index is a pure function of the corpus: this
-    generator retrains it straight from the parquet — DuckDB applies the
-    SAME degenerate-vector guard with the same sequential-fold dot, the
-    stride sample is reproduced via the pure-Python xxhash64 twin, and
-    _kmeans_unit yields bitwise-identical centroids (same Arrow float32 →
-    float64 upcast, same numpy ops). The rendered SQL then mirrors the
-    Spark plan: literal-centroid argmax assignment (ties → lowest id) →
-    nprobe cell filter → exact cosine → ORDER BY/LIMIT."""
-    import os
 
-    import duckdb
-    import numpy as np
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    con = duckdb.connect()
-    try:
-        con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
-        rows = con.sql(
-            f"SELECT vec_id, embedding FROM embeddings WHERE {_SQL_NZ_PRED} "
-            "ORDER BY vec_id"
-        ).df()
-    finally:
-        con.close()
-    n = len(rows)
-    if n == 0:
-        raise ValueError("IVF oracle: no usable embeddings after the guard")
-    k, stride = _ivf_plan(n, None)
-    embs = rows["embedding"]
-    if stride > 1:
-        mask = [
-            xxhash64_long(int(v)) % stride == 0 for v in rows["vec_id"]
-        ]
-        embs = embs[mask]
-    C = _kmeans_unit(embs, k, iters)
-    cents = [(j, C[j].tolist()) for j in range(len(C))]
-    C = np.asarray([c for _, c in cents])
-
-    qsel = rows[rows["vec_id"] == 0]
-    if len(qsel) == 0:
-        raise ValueError("IVF oracle: query vector vec_id=0 absent")
-    probe = _ivf_probe_cells(C, qsel["embedding"].iloc[0])
-
-    cent_rows = ",\n      ".join(
-        f"({j}, {_duck_lit_array(c)})" for j, c in cents
+def _exact_topk(cands: DataFrame, q_emb, *keep: str) -> DataFrame:
+    """Exact-cosine re-rank of ``cands`` against the literal query vector:
+    top _TOPK by (cosine desc, vec_id asc), keeping ``keep`` columns."""
+    q_lit = F.expr(_lit_array_sql(list(map(float, q_emb))))
+    cos = _dot("embedding", "__q") / (_norm("embedding") * _norm("__q"))
+    return (
+        cands.withColumn("__q", q_lit)
+        .select("vec_id", "label", *keep, cos.alias("cosine_sim"))
+        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id").asc())
+        .limit(_TOPK)
     )
-    probe_list = ",".join(str(p) for p in probe)
+
+
+def _adc_topk(coded: DataFrame, books, q_emb) -> DataFrame:
+    """ADC → shortlist → exact re-rank over PQ-coded candidates: the ADC
+    score is a fixed-order sum of literal-LUT lookups (left-assoc in both
+    engines), the best _PQ_SHORTLIST go to _exact_topk."""
+    lut = _pq_lut(books, q_emb)
+    adc = F.expr(
+        " + ".join(
+            f"element_at({_lit_array_sql(lut[m])}, c{m} + 1)"
+            for m in range(_PQ_M)
+        )
+    )
+    shortlist = (
+        coded.select("vec_id", "label", "embedding", adc.alias("adc_dot"))
+        .orderBy(F.col("adc_dot").desc(), F.col("vec_id").asc())
+        .limit(_PQ_SHORTLIST)
+    )
+    return _exact_topk(shortlist, q_emb, "adc_dot")
+
+
+def _duck_adc_sql(books, q_emb, src: str) -> str:
+    """DuckDB twin of _pq_code_cols + _adc_topk over the CTE ``src``
+    (vec_id, label, embedding): the codeword argmin per subspace (ties →
+    lowest code), the literal-LUT ADC sum in fixed subspace order, the
+    shortlist and the exact-cosine re-rank. Closes the WITH chain."""
+    lut = _pq_lut(books, q_emb)
+    sub = len(books[0][0])
+    cent_rows = ",\n      ".join(
+        f"({m}, {j}, {m * sub}, {_duck_lit_array(books[m][j].tolist())})"
+        for m in range(_PQ_M)
+        for j in range(len(books[m]))
+    )
+    adc = " + ".join(
+        f"{_duck_lit_array(lut[m])}[c{m} + 1]" for m in range(_PQ_M)
+    )
+    code_cols = ", ".join(
+        f"MAX(CASE WHEN m = {m} THEN code END) AS c{m}" for m in range(_PQ_M)
+    )
+    return f"""cent(m, j, off, c) AS (VALUES {cent_rows}),
+    dists AS (
+      SELECT e.vec_id, c.m, c.j,
+             list_reduce(list_transform(range(1, {sub} + 1),
+               i -> (CAST(e.embedding[i + c.off] AS DOUBLE) - c.c[i])
+                    * (CAST(e.embedding[i + c.off] AS DOUBLE) - c.c[i])),
+               (acc, x) -> acc + x) AS d
+      FROM {src} e CROSS JOIN cent c
+    ),
+    codes AS (
+      SELECT vec_id, m, j AS code
+      FROM (SELECT *, row_number() OVER
+              (PARTITION BY vec_id, m ORDER BY d ASC, j ASC) AS rn
+            FROM dists)
+      WHERE rn = 1
+    ),
+    coded AS (SELECT vec_id, {code_cols} FROM codes GROUP BY vec_id),
+    shortlist AS (
+      SELECT e.vec_id, e.label, e.embedding, {adc} AS adc_dot
+      FROM coded JOIN {src} e USING (vec_id)
+      WHERE e.vec_id <> 0
+      ORDER BY adc_dot DESC, vec_id ASC
+      LIMIT {_PQ_SHORTLIST}
+    ),
+    q AS (SELECT embedding AS qe FROM nz WHERE vec_id = 0)
+    SELECT s.vec_id, s.label, s.adc_dot,
+           {_sql_cos('s.embedding', 'q.qe')} AS cosine_sim
+    FROM shortlist s, q
+    ORDER BY cosine_sim DESC, vec_id ASC
+    LIMIT {_TOPK}
+    """
+
+
+# ---------------------------------------------------------------------------
+# q_similarity_ann_ivf — IVF-bucketed ANN over the trained-index core
+# ---------------------------------------------------------------------------
+def ivf_oracle_sql(sf_dir: str) -> str:
+    """Full DuckDB oracle for q_similarity_ann_ivf, rendered per sf_dir:
+    retrains the identical centroids (see the trained-index core), then
+    mirrors the Spark plan — literal-centroid argmax assignment (ties →
+    lowest id) → nprobe cell filter → exact cosine → ORDER BY/LIMIT."""
+    k, embs, q_emb = _oracle_sample(sf_dir)
+    C = _kmeans_unit(embs, k)
+    cent_rows = ",\n      ".join(
+        f"({j}, {_duck_lit_array(C[j].tolist())})" for j in range(len(C))
+    )
+    probe_list = ",".join(str(p) for p in _ivf_probe_cells(C, q_emb))
     return f"""
     WITH {_SQL_NZ_CTE},
     cent(j, c) AS (VALUES {cent_rows}),
@@ -724,38 +926,14 @@ def q_similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     model. Multi-probe buys recall at linear probe cost. For very large k
     (literal expressions grow O(k·dim)) the same plan swaps in a broadcast
     join + max_by aggregate.
-
-    Oracle-checked end to end: deterministic training makes the centroids a
-    pure function of the corpus, so ivf_oracle_sql() re-derives them
-    Spark-free and the driver hash-compares the full approximate search.
     """
     emb = _nonzero(load_table(spark, sf_dir, "embeddings"))
-    cents = train_ivf_centroids(emb)  # unit-norm centroids
-    C = [c for _, c in cents]
-
-    # driver-side probe-cell resolution for the query vector (one row)
-    q_rows = emb.filter(F.col("vec_id") == 0).select("embedding").take(1)
-    if not q_rows:
-        raise ValueError(
-            "IVF query: vec_id=0 is absent or failed the degenerate-vector "
-            "guard — no query vector to probe with"
-        )
-    q_emb = q_rows[0][0]
-    probe_cells = _ivf_probe_cells(C, q_emb)
-
+    C = train_ivf_centroids(emb)
+    q_emb = _query_vector(emb)
     assigned = emb.select(
         "vec_id", "label", "embedding", ivf_cell_col(C).alias("cell")
     )
-
-    q_lit = F.expr(_lit_array_sql(list(map(float, q_emb))))
-    cos = _dot("embedding", "__q") / (_norm("embedding") * _norm("__q"))
-    return (
-        assigned.filter(F.col("cell").isin(probe_cells) & (F.col("vec_id") != 0))
-        .withColumn("__q", q_lit)
-        .select("vec_id", "label", cos.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id").asc())
-        .limit(_TOPK)
-    )
+    return _exact_topk(assigned.filter(_in_probe_cells(C, q_emb)), q_emb)
 
 
 # ---------------------------------------------------------------------------
@@ -1145,162 +1323,17 @@ q_mrr_eval.__doc__ = q_mrr_eval.__doc__.format(q=_BATCH_QUERIES)
 
 
 # ---------------------------------------------------------------------------
-# q_similarity_ann_pq — product-quantization ANN (ADC shortlist + exact
-# re-rank). Like IVF, training is fully deterministic, so the codebooks are
-# a pure function of the corpus and the whole approximate search carries a
-# full DuckDB oracle.
+# q_similarity_ann_pq — product-quantization ANN over the trained-index core
 # ---------------------------------------------------------------------------
-_PQ_M = 4  # subspaces (64-dim embedding → 4 × 16-dim subvectors)
-_PQ_K = 16  # codewords per subspace → a 4-byte code per vector
-_PQ_SHORTLIST = 50  # ADC candidates re-ranked by exact cosine
-_PQ_ITERS = 8
-
-
-def _pq_subdim(dim: int) -> int:
-    if dim % _PQ_M:
-        raise ValueError(f"PQ: dim {dim} not divisible by M={_PQ_M}")
-    return dim // _PQ_M
-
-
-def _pq_train(embeddings) -> list:
-    """Per-subspace L2 k-means codebooks from a deterministic sample.
-    ``embeddings`` is any sequence of float vectors (Arrow float32 from
-    either engine's pandas bridge — identical float64 upcast ⇒ bitwise-
-    identical codebooks). Strided init, argmin assignment with ties to the
-    lowest codeword, centroid = member mean, fixed iteration count, no RNG
-    — the same determinism contract as _kmeans_unit, but UN-normalized L2
-    per subspace (the standard PQ objective, Jégou et al. 2011, TPAMI —
-    public paper)."""
-    import numpy as np
-
-    X = np.asarray([list(e) for e in embeddings], dtype=np.float64)
-    sub = _pq_subdim(X.shape[1])
-    books = []
-    for m in range(_PQ_M):
-        Xm = X[:, m * sub : (m + 1) * sub]
-        k = min(_PQ_K, len(Xm))
-        C = Xm[:: max(1, len(Xm) // k)][:k].copy()
-        for _ in range(_PQ_ITERS):
-            d2 = ((Xm[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            assign = np.argmin(d2, axis=1)  # ties → lowest codeword
-            for j in range(len(C)):
-                members = Xm[assign == j]
-                if len(members):
-                    C[j] = members.sum(axis=0) / len(members)
-        books.append(C)
-    return books
-
-
-def _pq_lut(books, q_emb) -> list:
-    """ADC lookup table: lut[m][j] = <q_m, c_mj>. Computed driver-side by
-    THIS shared helper in both the Spark query and the oracle generator,
-    then rendered as literals — no engine arithmetic involved, so the
-    tables are identical by construction."""
-    import numpy as np
-
-    q = np.asarray(list(q_emb), dtype=np.float64)
-    sub = _pq_subdim(len(q))
-    return [
-        (books[m] @ q[m * sub : (m + 1) * sub]).tolist()
-        for m in range(_PQ_M)
-    ]
-
-
-def _pq_spark_dist(m: int, sub: int, centroid: list) -> str:
-    """Squared L2 between subvector m and a literal codeword, as the same
-    sequential fold both engines run (see _pq_duck_dist)."""
-    return (
-        f"aggregate(zip_with(slice(embedding, {m * sub + 1}, {sub}), "
-        f"{_lit_array_sql(centroid)}, "
-        "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-
-
 def pq_oracle_sql(sf_dir: str) -> str:
     """Full DuckDB oracle for q_similarity_ann_pq: retrains the identical
-    codebooks straight from the parquet (stride sample via the pure-Python
-    xxhash64 twin, shared _pq_train), then mirrors the Spark plan — literal-
-    codeword argmin assignment per subspace (ties → lowest code), literal-
-    LUT ADC sum in fixed subspace order, ADC shortlist, exact-cosine
-    re-rank."""
-    import os
-
-    import duckdb
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    con = duckdb.connect()
-    try:
-        con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
-        rows = con.sql(
-            f"SELECT vec_id, embedding FROM embeddings WHERE {_SQL_NZ_PRED} "
-            "ORDER BY vec_id"
-        ).df()
-    finally:
-        con.close()
-    n = len(rows)
-    if n == 0:
-        raise ValueError("PQ oracle: no usable embeddings after the guard")
-    stride = max(1, n // _IVF_SAMPLE_CAP)
-    embs = rows["embedding"]
-    if stride > 1:
-        mask = [xxhash64_long(int(v)) % stride == 0 for v in rows["vec_id"]]
-        embs = embs[mask]
-    books = _pq_train(embs)
-    qsel = rows[rows["vec_id"] == 0]
-    if len(qsel) == 0:
-        raise ValueError("PQ oracle: query vector vec_id=0 absent")
-    q_emb = qsel["embedding"].iloc[0]
-    lut = _pq_lut(books, q_emb)
-    sub = _pq_subdim(len(list(q_emb)))
-
-    cent_rows = ",\n      ".join(
-        f"({m}, {j}, {m * sub}, {_duck_lit_array(books[m][j].tolist())})"
-        for m in range(_PQ_M)
-        for j in range(len(books[m]))
-    )
-    adc = " + ".join(
-        f"{_duck_lit_array(lut[m])}[c{m} + 1]" for m in range(_PQ_M)
-    )
-    code_cols = ", ".join(
-        f"MAX(CASE WHEN m = {m} THEN code END) AS c{m}" for m in range(_PQ_M)
-    )
+    codebooks (see the trained-index core), then mirrors the Spark plan —
+    codeword argmin per subspace → literal-LUT ADC → shortlist →
+    exact-cosine re-rank (_duck_adc_sql)."""
+    _, embs, q_emb = _oracle_sample(sf_dir)
     return f"""
     WITH {_SQL_NZ_CTE},
-    cent(m, j, off, c) AS (VALUES {cent_rows}),
-    dists AS (
-      SELECT e.vec_id, e.label, e.embedding, c.m, c.j,
-             list_reduce(list_transform(range(1, {sub} + 1),
-               i -> (CAST(e.embedding[i + c.off] AS DOUBLE) - c.c[i])
-                    * (CAST(e.embedding[i + c.off] AS DOUBLE) - c.c[i])),
-               (acc, x) -> acc + x) AS d
-      FROM nz e CROSS JOIN cent c
-    ),
-    codes AS (
-      SELECT vec_id, m, j AS code
-      FROM (SELECT *, row_number() OVER
-              (PARTITION BY vec_id, m ORDER BY d ASC, j ASC) AS rn
-            FROM dists)
-      WHERE rn = 1
-    ),
-    coded AS (
-      SELECT vec_id, {code_cols}
-      FROM codes GROUP BY vec_id
-    ),
-    shortlist AS (
-      SELECT e.vec_id, e.label, e.embedding, {adc} AS adc_dot
-      FROM coded JOIN nz e USING (vec_id)
-      WHERE e.vec_id <> 0
-      ORDER BY adc_dot DESC, vec_id ASC
-      LIMIT {_PQ_SHORTLIST}
-    ),
-    q AS (SELECT embedding AS qe FROM nz WHERE vec_id = 0)
-    SELECT s.vec_id, s.label, s.adc_dot,
-           {_sql_cos('s.embedding', 'q.qe')} AS cosine_sim
-    FROM shortlist s, q
-    ORDER BY cosine_sim DESC, vec_id ASC
-    LIMIT {_TOPK}
-    """
+    {_duck_adc_sql(_pq_train(embs), q_emb, "nz")}"""
 
 
 @register("q_similarity_ann_pq", oracle_factory=pq_oracle_sql)
@@ -1318,73 +1351,13 @@ def q_similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan does 4 array lookups + 3 adds per vector instead of 64 multiplies.
     Codes would be precomputed once at ingest (a materialized column),
     re-ranking reads full vectors for only the shortlist. Composes with
-    IVF (IVF-PQ) by running the same encoding inside probed cells.
-
-    Training/determinism contract is IVF's: bounded stride sample, strided
-    init, fixed iterations, no RNG (similarity.py:train_ivf_centroids) —
-    which is what lets pq_oracle_sql() re-derive identical codebooks
-    Spark-free and the driver hash-compare the full approximate search."""
+    IVF (IVF-PQ) by running the same encoding inside probed cells."""
     emb = _nonzero(load_table(spark, sf_dir, "embeddings"))
-    n = emb.count()
-    stride = max(1, n // _IVF_SAMPLE_CAP)
-    sample = (
-        emb.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(stride)) == 0)
-        .select("vec_id", "embedding")
-        .toPandas()
-        .sort_values("vec_id")
-    )
-    books = _pq_train(sample["embedding"])
-
-    q_rows = emb.filter(F.col("vec_id") == 0).select("embedding").take(1)
-    if not q_rows:
-        raise ValueError(
-            "PQ query: vec_id=0 is absent or failed the degenerate-vector "
-            "guard — no query vector to score with"
-        )
-    q_emb = q_rows[0][0]
-    lut = _pq_lut(books, q_emb)
-    sub = _pq_subdim(len(list(q_emb)))
-
-    # per-subspace argmin over literal codewords: min struct (d, j) → ties
-    # to the lowest code; ONE parsed expression per subspace
-    code_cols = [
-        F.expr(
-            "array_min(array("
-            + ",".join(
-                f"struct({_pq_spark_dist(m, sub, books[m][j].tolist())} "
-                f"AS d, {j} AS j)"
-                for j in range(len(books[m]))
-            )
-            + "))"
-        )
-        .getField("j")
-        .alias(f"c{m}")
-        for m in range(_PQ_M)
-    ]
-    coded = emb.select("vec_id", "label", "embedding", *code_cols)
-
-    # ADC: fixed-order sum of literal-LUT lookups (left-assoc in both
-    # engines), then shortlist → exact re-rank
-    adc = F.expr(
-        " + ".join(
-            f"element_at({_lit_array_sql(lut[m])}, c{m} + 1)"
-            for m in range(_PQ_M)
-        )
-    )
-    shortlist = (
-        coded.filter(F.col("vec_id") != 0)
-        .select("vec_id", "label", "embedding", adc.alias("adc_dot"))
-        .orderBy(F.col("adc_dot").desc(), F.col("vec_id").asc())
-        .limit(_PQ_SHORTLIST)
-    )
-    q_lit = F.expr(_lit_array_sql(list(map(float, q_emb))))
-    cos = _dot("embedding", "__q") / (_norm("embedding") * _norm("__q"))
-    return (
-        shortlist.withColumn("__q", q_lit)
-        .select("vec_id", "label", "adc_dot", cos.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id").asc())
-        .limit(_TOPK)
-    )
+    _, _, sample = _train_sample(emb)
+    books = _pq_train(sample)
+    q_emb = _query_vector(emb)
+    coded = emb.select("vec_id", "label", "embedding", *_pq_code_cols(books))
+    return _adc_topk(coded.filter(F.col("vec_id") != 0), books, q_emb)
 
 
 # ---------------------------------------------------------------------------
@@ -1392,60 +1365,16 @@ def q_similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # PQ-ADC scoring + exact re-rank, fully oracle-checked like its two parts
 # ---------------------------------------------------------------------------
 def ivfpq_oracle_sql(sf_dir: str) -> str:
-    """Oracle for the composed index: retrain the SAME deterministic IVF
-    centroids and PQ codebooks the Spark query trains (shared helpers, no
-    RNG anywhere), then mirror the plan — literal-centroid cell argmax →
-    nprobe filter → literal-codeword argmin codes → literal-LUT ADC →
-    shortlist → exact-cosine re-rank. Everything the index 'knows' enters
-    both plans as identical rendered literals."""
-    import os
-
-    import duckdb
-    import numpy as np
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    con = duckdb.connect()
-    try:
-        con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
-        rows = con.sql(
-            f"SELECT vec_id, embedding FROM embeddings WHERE {_SQL_NZ_PRED} "
-            "ORDER BY vec_id"
-        ).df()
-    finally:
-        con.close()
-    n = len(rows)
-    if n == 0:
-        raise ValueError("IVFPQ oracle: no usable embeddings after the guard")
-    k, stride = _ivf_plan(n, None)
-    embs = rows["embedding"]
-    if stride > 1:
-        mask = [xxhash64_long(int(v)) % stride == 0 for v in rows["vec_id"]]
-        embs = embs[mask]
-    C = _kmeans_unit(embs, k, 8)
-    books = _pq_train(embs)
-    qsel = rows[rows["vec_id"] == 0]
-    if len(qsel) == 0:
-        raise ValueError("IVFPQ oracle: query vector vec_id=0 absent")
-    q_emb = qsel["embedding"].iloc[0]
-    probe = _ivf_probe_cells(np.asarray(C), q_emb)
-    lut = _pq_lut(books, q_emb)
-    sub = _pq_subdim(len(list(q_emb)))
-
+    """Oracle for the composed index: retrain the SAME IVF centroids and
+    PQ codebooks the Spark query trains, then mirror the plan —
+    literal-centroid cell argmax → nprobe filter → _duck_adc_sql over the
+    surviving cells."""
+    k, embs, q_emb = _oracle_sample(sf_dir)
+    C = _kmeans_unit(embs, k)
     cell_rows = ",\n      ".join(
         f"({j}, {_duck_lit_array(C[j].tolist())})" for j in range(len(C))
     )
-    cent_rows = ",\n      ".join(
-        f"({m}, {j}, {m * sub}, {_duck_lit_array(books[m][j].tolist())})"
-        for m in range(_PQ_M)
-        for j in range(len(books[m]))
-    )
-    adc = " + ".join(
-        f"{_duck_lit_array(lut[m])}[c{m} + 1]" for m in range(_PQ_M)
-    )
-    code_cols = ", ".join(
-        f"MAX(CASE WHEN m = {m} THEN code END) AS c{m}" for m in range(_PQ_M)
-    )
-    probe_list = ",".join(str(p) for p in probe)
+    probe_list = ",".join(str(p) for p in _ivf_probe_cells(C, q_emb))
     return f"""
     WITH {_SQL_NZ_CTE},
     cell AS MATERIALIZED (VALUES {cell_rows}),
@@ -1463,36 +1392,7 @@ def ivfpq_oracle_sql(sf_dir: str) -> str:
             FROM scored)
       WHERE rn = 1 AND cell_id IN ({probe_list}) AND vec_id <> 0
     ),
-    cent(m, j, off, c) AS (VALUES {cent_rows}),
-    dists AS (
-      SELECT a.vec_id, c.m, c.j,
-             list_reduce(list_transform(range(1, {sub} + 1),
-               i -> (CAST(a.embedding[i + c.off] AS DOUBLE) - c.c[i])
-                    * (CAST(a.embedding[i + c.off] AS DOUBLE) - c.c[i])),
-               (acc, x) -> acc + x) AS d
-      FROM assigned a CROSS JOIN cent c
-    ),
-    codes AS (
-      SELECT vec_id, m, j AS code
-      FROM (SELECT *, row_number() OVER
-              (PARTITION BY vec_id, m ORDER BY d ASC, j ASC) AS rn
-            FROM dists)
-      WHERE rn = 1
-    ),
-    coded AS (SELECT vec_id, {code_cols} FROM codes GROUP BY vec_id),
-    shortlist AS (
-      SELECT a.vec_id, a.label, a.embedding, {adc} AS adc_dot
-      FROM coded JOIN assigned a USING (vec_id)
-      ORDER BY adc_dot DESC, vec_id ASC
-      LIMIT {_PQ_SHORTLIST}
-    ),
-    q AS (SELECT embedding AS qe FROM nz WHERE vec_id = 0)
-    SELECT s.vec_id, s.label, s.adc_dot,
-           {_sql_cos('s.embedding', 'q.qe')} AS cosine_sim
-    FROM shortlist s, q
-    ORDER BY cosine_sim DESC, vec_id ASC
-    LIMIT {_TOPK}
-    """
+    {_duck_adc_sql(_pq_train(embs), q_emb, "assigned")}"""
 
 
 @register("q_similarity_ann_ivfpq", oracle_factory=ivfpq_oracle_sql)
@@ -1502,81 +1402,24 @@ def q_similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the query's nprobe cells, PQ codes score ONLY the survivors by
     table lookup, and an exact-cosine pass re-ranks the ADC shortlist.
     Composes q_similarity_ann_ivf's literal-centroid cell argmax with
-    q_similarity_ann_pq's literal-codeword encoding — same deterministic
-    bounded-sample training, so the composition stays fully
-    oracle-checkable.
+    q_similarity_ann_pq's literal-codeword encoding on one training
+    sample.
 
     The 100 TB accounting: cells cut the scored fraction to ~nprobe/k of
     the corpus, PQ cuts per-vector scoring to 4 lookups + 3 adds over
     4-byte codes, and full 256-byte vectors are read only for the
     {_PQ_SHORTLIST}-row shortlist — each multiplier independent, all
     scan-side projections with zero shuffles before the final top-k."""
-    import numpy as np
-
     emb = _nonzero(load_table(spark, sf_dir, "embeddings"))
-    n = emb.count()
-    k, stride = _ivf_plan(n, None)
-    sample = (
-        emb.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(stride)) == 0)
-        .select("vec_id", "embedding")
-        .toPandas()
-        .sort_values("vec_id")
-    )
-    C = _kmeans_unit(sample["embedding"], k, 8)
-    books = _pq_train(sample["embedding"])
-
-    q_rows = emb.filter(F.col("vec_id") == 0).select("embedding").take(1)
-    if not q_rows:
-        raise ValueError(
-            "IVFPQ query: vec_id=0 is absent or failed the degenerate-vector "
-            "guard — no query vector to probe with"
-        )
-    q_emb = q_rows[0][0]
-    probe_cells = _ivf_probe_cells(np.asarray(C), q_emb)
-    lut = _pq_lut(books, q_emb)
-    sub = _pq_subdim(len(list(q_emb)))
-
+    _, k, sample = _train_sample(emb)
+    C = _kmeans_unit(sample, k)
+    books = _pq_train(sample)
+    q_emb = _query_vector(emb)
     assigned = emb.select(
-        "vec_id",
-        "label",
-        "embedding",
-        ivf_cell_col([C[j].tolist() for j in range(len(C))]).alias("cell"),
-    ).filter(F.col("cell").isin(probe_cells) & (F.col("vec_id") != 0))
-
-    code_cols = [
-        F.expr(
-            "array_min(array("
-            + ",".join(
-                f"struct({_pq_spark_dist(m, sub, books[m][j].tolist())} "
-                f"AS d, {j} AS j)"
-                for j in range(len(books[m]))
-            )
-            + "))"
-        )
-        .getField("j")
-        .alias(f"c{m}")
-        for m in range(_PQ_M)
-    ]
-    coded = assigned.select("vec_id", "label", "embedding", *code_cols)
-    adc = F.expr(
-        " + ".join(
-            f"element_at({_lit_array_sql(lut[m])}, c{m} + 1)"
-            for m in range(_PQ_M)
-        )
-    )
-    shortlist = (
-        coded.select("vec_id", "label", "embedding", adc.alias("adc_dot"))
-        .orderBy(F.col("adc_dot").desc(), F.col("vec_id").asc())
-        .limit(_PQ_SHORTLIST)
-    )
-    q_lit = F.expr(_lit_array_sql(list(map(float, q_emb))))
-    cos = _dot("embedding", "__q") / (_norm("embedding") * _norm("__q"))
-    return (
-        shortlist.withColumn("__q", q_lit)
-        .select("vec_id", "label", "adc_dot", cos.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id").asc())
-        .limit(_TOPK)
-    )
+        "vec_id", "label", "embedding", ivf_cell_col(C).alias("cell")
+    ).filter(_in_probe_cells(C, q_emb))
+    coded = assigned.select("vec_id", "label", "embedding", *_pq_code_cols(books))
+    return _adc_topk(coded, books, q_emb)
 
 
 # ---------------------------------------------------------------------------
@@ -1605,10 +1448,8 @@ def ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
     """Build-once/load-many IVF-PQ index for ``sf_dir``'s embeddings —
     the maintained artifact q_similarity_ann_ivfpq_probe probes.
 
-    The index is a pure function of the corpus (deterministic stride
-    sample, strided k-means init, fixed iterations — the determinism
-    contract every ANN oracle here already leans on), so building it
-    lazily here yields byte-identical cells/codes to the one-shot
+    The index is a pure function of the corpus (the trained-index core),
+    so building it lazily here yields the same cells/codes as the one-shot
     q_similarity_ann_ivfpq plan and the SAME DuckDB oracle stays exact.
 
     Layout: ``<root>/<key>/data`` is the coded corpus
@@ -1621,6 +1462,7 @@ def ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
     race just reuses the winner's index."""
     import json
     import os
+    import shutil
 
     src = os.path.join(sf_dir, "embeddings.parquet")
     st = os.stat(src)
@@ -1628,45 +1470,26 @@ def ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
     root = _ann_index_root()
     idx_dir = os.path.join(root, key)
     meta_path = os.path.join(idx_dir, "meta.json")
-    if os.path.exists(meta_path):
+
+    def fresh() -> bool:
+        if not os.path.exists(meta_path):
+            return False
         with open(meta_path) as f:
             meta = json.load(f)
-        if meta["src_size"] == st.st_size and meta["src_mtime"] == st.st_mtime:
-            return idx_dir
+        return (meta["src_size"], meta["src_mtime"]) == (st.st_size, st.st_mtime)
 
+    if fresh():
+        return idx_dir
     emb = _nonzero(load_table(spark, sf_dir, "embeddings"))
-    n = emb.count()
-    k, stride = _ivf_plan(n, None)
-    sample = (
-        emb.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(stride)) == 0)
-        .select("vec_id", "embedding")
-        .toPandas()
-        .sort_values("vec_id")
-    )
-    C = _kmeans_unit(sample["embedding"], k, 8)
-    books = _pq_train(sample["embedding"])
-    dim = len(sample["embedding"].iloc[0])
-    sub = _pq_subdim(dim)
-    code_cols = [
-        F.expr(
-            "array_min(array("
-            + ",".join(
-                f"struct({_pq_spark_dist(m, sub, books[m][j].tolist())} "
-                f"AS d, {j} AS j)"
-                for j in range(len(books[m]))
-            )
-            + "))"
-        )
-        .getField("j")
-        .alias(f"c{m}")
-        for m in range(_PQ_M)
-    ]
+    n, k, sample = _train_sample(emb)
+    C = _kmeans_unit(sample, k)
+    books = _pq_train(sample)
     coded = emb.select(
         "vec_id",
         "label",
         "embedding",
-        ivf_cell_col([C[j].tolist() for j in range(len(C))]).alias("cell"),
-        *code_cols,
+        ivf_cell_col(C).alias("cell"),
+        *_pq_code_cols(books),
     )
     os.makedirs(root, exist_ok=True)
     tmp = f"{idx_dir}.tmp.{os.getpid()}"
@@ -1680,31 +1503,20 @@ def ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
                 "src_mtime": st.st_mtime,
                 "n": n,
                 "k": int(len(C)),
-                "dim": dim,
-                "centroids": [list(map(float, c)) for c in C],
-                "books": [
-                    [list(map(float, cw)) for cw in books[m]]
-                    for m in range(_PQ_M)
-                ],
+                "dim": len(sample.iloc[0]),
+                "centroids": C.tolist(),
+                "books": [b.tolist() for b in books],
             },
             f,
         )
     try:
         os.rename(tmp, idx_dir)
     except OSError:
-        import shutil
-
         # lost the build race (or a stale index sits there): if the winner's
         # index is fresh, use it; otherwise replace it with ours
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                meta = json.load(f)
-            if (
-                meta["src_size"] == st.st_size
-                and meta["src_mtime"] == st.st_mtime
-            ):
-                shutil.rmtree(tmp, ignore_errors=True)
-                return idx_dir
+        if fresh():
+            shutil.rmtree(tmp, ignore_errors=True)
+            return idx_dir
         shutil.rmtree(idx_dir, ignore_errors=True)
         os.rename(tmp, idx_dir)
     return idx_dir
@@ -1740,57 +1552,21 @@ def q_similarity_ann_ivfpq_probe(
     idx_dir = ensure_ivfpq_index(spark, sf_dir)
     with open(os.path.join(idx_dir, "meta.json")) as f:
         meta = json.load(f)
-    C = np.asarray(meta["centroids"])
-    books = meta["books"]
-
-    idx = spark.read.parquet(os.path.join(idx_dir, "data"))
-    # the query vector: one row-group-stat-skipping lookup by vec_id (at
-    # 100 TB the query vector arrives from the application, not a scan).
-    # Sourced from the SINGLE-FILE embeddings table rather than the
-    # cell-partitioned index (identical rows by construction — the index
-    # data IS _nonzero(embeddings) plus derived columns, untouched
-    # embedding bytes): a take(1) against the ~k-directory index paid
-    # ~1.4 s of first-touch listing + multi-partition probing per fresh
-    # session, where the raw table is one footer-warmed file (guide §6
-    # small-files/listing cost; measured first-run 4.1 → 2.9 s).
-    q_rows = (
-        _nonzero(load_table(spark, sf_dir, "embeddings"))
-        .filter(F.col("vec_id") == 0)
-        .select("embedding")
-        .take(1)
-    )
-    if not q_rows:
-        raise ValueError(
-            "IVFPQ probe: vec_id=0 is absent from the corpus (zero/non-finite "
-            "embeddings are excluded) — no query vector to probe with"
-        )
-    q_emb = list(q_rows[0][0])
-    probe_cells = _ivf_probe_cells(C, q_emb)
     # json round-trips float64 exactly (repr-based), so these are the
-    # build's codebooks bit-for-bit and _pq_lut reproduces the one-shot
-    # plan's LUT literals exactly
-    lut = _pq_lut([np.asarray(b) for b in books], q_emb)
-
-    adc = F.expr(
-        " + ".join(
-            f"element_at({_lit_array_sql(lut[m])}, c{m} + 1)"
-            for m in range(_PQ_M)
-        )
-    )
-    shortlist = (
-        idx.filter(F.col("cell").isin(probe_cells) & (F.col("vec_id") != 0))
-        .select("vec_id", "label", "embedding", adc.alias("adc_dot"))
-        .orderBy(F.col("adc_dot").desc(), F.col("vec_id").asc())
-        .limit(_PQ_SHORTLIST)
-    )
-    q_lit = F.expr(_lit_array_sql(list(map(float, q_emb))))
-    cos = _dot("embedding", "__q") / (_norm("embedding") * _norm("__q"))
-    return (
-        shortlist.withColumn("__q", q_lit)
-        .select("vec_id", "label", "adc_dot", cos.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id").asc())
-        .limit(_TOPK)
-    )
+    # build's centroids/codebooks bit-for-bit and the probe cells and LUT
+    # literals equal the one-shot plan's
+    C = np.asarray(meta["centroids"])
+    books = [np.asarray(b) for b in meta["books"]]
+    idx = spark.read.parquet(os.path.join(idx_dir, "data"))
+    # the query vector comes from the SINGLE-FILE embeddings table, not the
+    # cell-partitioned index (identical rows by construction — the index
+    # data IS _nonzero(embeddings) plus derived columns): a take(1) against
+    # the ~k-directory index paid ~1.4 s of first-touch listing +
+    # multi-partition probing per fresh session, where the raw table is one
+    # footer-warmed file (guide §6 small-files/listing cost; measured
+    # first-run 4.1 → 2.9 s).
+    q_emb = _query_vector(_nonzero(load_table(spark, sf_dir, "embeddings")))
+    return _adc_topk(idx.filter(_in_probe_cells(C, q_emb)), books, q_emb)
 
 
 # ---------------------------------------------------------------------------

@@ -22,7 +22,7 @@ from pyspark.sql.window import Window
 
 from ..registry import register
 from ..sources.parquet import load_table
-from .dedup import _md5_int, _sql_md5_int
+from .dedup import _md5_int, _sql_md5_int, content_fingerprint
 
 # Tiny stopword inventories for the heuristic language-ID (n-gram/stopword
 # scoring). Deliberately small and hardcoded so the oracle SQL can repeat them
@@ -234,11 +234,10 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import word_shingles
 
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
     shingles = word_shingles(F.lower(F.col("text")), k=3)
     return docs.select(
         "doc_id",
-        F.md5(norm).alias("fp_full"),
+        content_fingerprint(F.col("text")).alias("fp_full"),
         F.array_min(F.transform(shingles, F.md5)).alias("fp_min_shingle"),
     )
 

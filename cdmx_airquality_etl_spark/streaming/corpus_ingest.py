@@ -25,14 +25,12 @@ otherwise one narrow projection + one aggregate over the batch.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
-
-def _fingerprint(col: Column) -> Column:
-    return F.md5(F.regexp_replace(F.trim(F.lower(col)), r"\s+", " "))
+from ..operators.dedup import content_fingerprint
 
 
 def dedup_batch_against_corpus(
@@ -42,7 +40,7 @@ def dedup_batch_against_corpus(
     fingerprint → anti-join corpus fingerprints → within-batch keep-first."""
     from ..hadoop_fs import path_exists
 
-    fp = batch_df.withColumn("fingerprint", _fingerprint(F.col("text")))
+    fp = batch_df.withColumn("fingerprint", content_fingerprint(F.col("text")))
     # scheme-aware probe: os.path.exists answers the wrong question for
     # hdfs://—s3a:// corpora (round-6 block-index discipline)
     if path_exists(spark, corpus_path):

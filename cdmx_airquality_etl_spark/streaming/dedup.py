@@ -20,17 +20,11 @@ forever-identity compose this with the corpus anti-join downstream).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.dedup import content_fingerprint
 from .joins import dedup_within_watermark
-
-
-def content_fingerprint(col: Column) -> Column:
-    """The q_dedup_exact identity: md5 of whitespace-normalized text (same
-    expression as corpus_ingest._fingerprint; duplicated here to keep the
-    module importable standalone)."""
-    return F.md5(F.regexp_replace(F.trim(F.lower(col)), r"\s+", " "))
 
 
 def dedup_stream_within_watermark(

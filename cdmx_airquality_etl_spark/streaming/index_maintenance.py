@@ -28,6 +28,8 @@ from pyspark.sql.types import StructType
 
 from ..operators.similarity import _nonzero, ivf_cell_col
 
+_INGEST_TIMEOUT_S = 300
+
 
 def assign_cells(batch: DataFrame, centroids: list) -> DataFrame:
     """Assign each (vec_id, embedding) row to its IVF cell — the exact
@@ -48,7 +50,9 @@ def ivf_ingest_stream(
     """One scheduled ingest run: stream new embedding files, assign cells,
     append cell-partitioned parquet. Returns the per-cell row counts of
     THIS run's appended vectors (the cell-balance health metric a real
-    index monitors). Exactly-once per source file via the checkpoint."""
+    index monitors). Exactly-once per source file via the checkpoint. A
+    run that does not finish within _INGEST_TIMEOUT_S is stopped and
+    raises TimeoutError: its counts would cover only part of the input."""
     counts: dict[int, int] = {}
 
     def handle(batch_df: DataFrame, _batch_id: int) -> None:
@@ -65,5 +69,10 @@ def ivf_ingest_stream(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    if not q.awaitTermination(_INGEST_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"IVF ingest from {source_dir} did not finish within "
+            f"{_INGEST_TIMEOUT_S} s; the stream was stopped"
+        )
     return counts

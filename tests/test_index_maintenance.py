@@ -5,6 +5,7 @@ appends must accumulate cell-partitioned, and re-runs must be exactly-once
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -35,7 +36,7 @@ EMB_SCHEMA = StructType(
 
 def _centroids(spark, sf_dir):
     emb = _nonzero(load_table(spark, sf_dir, "embeddings"))
-    return [c for _, c in train_ivf_centroids(emb)]
+    return train_ivf_centroids(emb)
 
 
 def test_streamed_assignment_equals_batch(spark, sf_dir, tmp_path):
@@ -91,3 +92,31 @@ def test_index_is_cell_partitioned(spark, sf_dir, tmp_path):
     one_cell = int(cell_dirs[0].split("=")[1])
     pruned = spark.read.parquet(idx).filter(F.col("cell") == one_cell)
     assert pruned.count() > 0
+
+
+def test_timed_out_ingest_stops_and_raises(spark, sf_dir, tmp_path, monkeypatch):
+    """A run that outlives its awaitTermination timeout must not return
+    partial counts while the stream keeps running: it stops and raises."""
+    from pyspark.sql.streaming import StreamingQuery
+
+    C = _centroids(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    src = str(tmp_path / "src")
+    emb.limit(20).write.parquet(src)
+    stopped = []
+    real_stop = StreamingQuery.stop
+
+    def stop(self):
+        stopped.append(self.id)
+        real_stop(self)
+
+    monkeypatch.setattr(
+        StreamingQuery, "awaitTermination", lambda self, timeout=None: False
+    )
+    monkeypatch.setattr(StreamingQuery, "stop", stop)
+    with pytest.raises(TimeoutError, match="did not finish"):
+        ivf_ingest_stream(
+            spark, src, EMB_SCHEMA, str(tmp_path / "index"), C, str(tmp_path / "ckpt")
+        )
+    assert len(stopped) == 1
+    assert all(q.id != stopped[0] for q in spark.streams.active)

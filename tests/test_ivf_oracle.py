@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 from cdmx_airquality_etl_spark.operators.similarity import (
     _ivf_plan,
     ivf_oracle_sql,
+    ivfpq_oracle_sql,
+    pq_oracle_sql,
     xxhash64_long,
 )
 from cdmx_airquality_etl_spark.registry import QUERIES
@@ -51,9 +53,9 @@ def test_stride_sample_parity(spark):
 
 
 def test_ivf_plan_shared_sizing():
-    k, stride = _ivf_plan(500, None)
+    k, stride = _ivf_plan(500)
     assert k == 23 and stride == 1
-    k, stride = _ivf_plan(200_000, None)
+    k, stride = _ivf_plan(200_000)
     assert stride == 4  # cap kicks in only beyond _IVF_SAMPLE_CAP
 
 
@@ -71,12 +73,45 @@ def test_ivf_oracle_matches_spark(spark, sf_dir):
         assert float(a["cosine_sim"]) == float(b["cosine_sim"])  # bitwise
 
 
-def test_ivf_query_vector_guard(spark, sf_dir, tmp_path):
-    """vec_id 0 absent → clear error, not IndexError (VERDICT r3 nit)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
-        F.col("vec_id") != 0
+def test_ann_family_fails_loudly_without_query_or_corpus(spark, sf_dir, tmp_path):
+    """Every trained ANN path — the four queries and the three oracle
+    factories — raises the same clear ValueError, not an IndexError or
+    numpy AxisError, when vec_id 0 is absent and when every vector is
+    degenerate (nothing survives the guard to train on)."""
+    noq, zero = tmp_path / "noq", tmp_path / "zero"
+    noq.mkdir()
+    zero.mkdir()
+    # single parquet files (both engines read them), same schema as sf_dir's
+    duckdb.sql(
+        f"COPY (SELECT * FROM '{sf_dir}/embeddings.parquet' WHERE vec_id <> 0) "
+        f"TO '{noq}/embeddings.parquet' (FORMAT PARQUET)"
     )
-    out = str(tmp_path / "noq")
-    emb.write.parquet(f"{out}/embeddings.parquet")
-    with pytest.raises(ValueError, match="vec_id=0"):
-        QUERIES["q_similarity_ann_ivf"](spark, out)
+    duckdb.sql(
+        "COPY (SELECT range AS vec_id, "
+        "CAST(list_transform(range(64), x -> 0.0) AS FLOAT[]) AS embedding, "
+        "CAST(range % 3 AS INTEGER) AS label FROM range(20)) "
+        f"TO '{zero}/embeddings.parquet' (FORMAT PARQUET)"
+    )
+
+    paths = {
+        name: (lambda d, q=QUERIES[name]: q(spark, d))
+        for name in (
+            "q_similarity_ann_ivf",
+            "q_similarity_ann_pq",
+            "q_similarity_ann_ivfpq",
+            "q_similarity_ann_ivfpq_probe",
+        )
+    }
+    paths.update(
+        ivf_oracle_sql=ivf_oracle_sql,
+        pq_oracle_sql=pq_oracle_sql,
+        ivfpq_oracle_sql=ivfpq_oracle_sql,
+    )
+    for corpus, msg in ((str(noq), "vec_id=0"), (str(zero), "no usable embeddings")):
+        for name, run in paths.items():
+            try:
+                run(corpus)
+            except ValueError as e:
+                assert msg in str(e), f"{name}: {e}"
+            else:
+                pytest.fail(f"{name} did not raise on {corpus}")

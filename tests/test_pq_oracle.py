@@ -14,8 +14,6 @@ L2 k-means iterations, no RNG). This file pins:
 """
 
 import duckdb
-import pytest
-from pyspark.sql import functions as F
 
 from cdmx_airquality_etl_spark.operators.similarity import (
     _duck_double_lit,
@@ -90,16 +88,6 @@ def test_pq_shortlist_recall_vs_exact(spark, sf_dir):
     assert len(approx & exact) >= len(exact) // 2
 
 
-def test_pq_query_vector_guard(spark, sf_dir, tmp_path):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
-        F.col("vec_id") != 0
-    )
-    out = str(tmp_path / "noq")
-    emb.write.parquet(f"{out}/embeddings.parquet")
-    with pytest.raises(ValueError, match="vec_id=0"):
-        QUERIES["q_similarity_ann_pq"](spark, out)
-
-
 def test_ivfpq_shortlist_recall_vs_exact(spark, sf_dir):
     """The composed index must still recover a useful fraction of the
     exact top-10 — both pruning stages (cells, codes) lose recall, so the
@@ -133,3 +121,44 @@ def test_ivfpq_oracle_matches_spark(spark, sf_dir):
         assert int(a["vec_id"]) == int(b["vec_id"])
         assert float(a["adc_dot"]) == float(b["adc_dot"])
         assert float(a["cosine_sim"]) == float(b["cosine_sim"])
+
+
+def test_ivfpq_probe_matches_one_shot_and_oracle(spark, sf_dir, tmp_path, monkeypatch):
+    """The probe answers from the persisted index: its rows must equal the
+    one-shot q_similarity_ann_ivfpq rows and the shared DuckDB oracle's,
+    a second call must reuse the index untouched, and a newer source
+    parquet must force a rebuild."""
+    import os
+    import shutil
+
+    from cdmx_airquality_etl_spark.operators.similarity import (
+        ensure_ivfpq_index,
+        ivfpq_oracle_sql,
+    )
+
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    src = str(corpus / "embeddings.parquet")
+    shutil.copy(f"{sf_dir}/embeddings.parquet", src)
+    monkeypatch.setenv("SPARK_GRAFT_ANN_INDEX_DIR", str(tmp_path / "index"))
+
+    def rows(df):
+        return [tuple(r) for r in df.collect()]
+
+    probe = rows(QUERIES["q_similarity_ann_ivfpq_probe"](spark, str(corpus)))
+    one_shot = rows(QUERIES["q_similarity_ann_ivfpq"](spark, str(corpus)))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{src}'")
+    oracle = [tuple(r) for r in con.sql(ivfpq_oracle_sql(str(corpus))).fetchall()]
+    assert len(probe) == 10
+    assert probe == one_shot == oracle
+
+    meta = os.path.join(ensure_ivfpq_index(spark, str(corpus)), "meta.json")
+    before = os.stat(meta).st_mtime_ns
+    assert rows(QUERIES["q_similarity_ann_ivfpq_probe"](spark, str(corpus))) == probe
+    assert os.stat(meta).st_mtime_ns == before, "fresh index must be reused"
+
+    st = os.stat(src)
+    os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert rows(QUERIES["q_similarity_ann_ivfpq_probe"](spark, str(corpus))) == probe
+    assert os.stat(meta).st_mtime_ns != before, "newer source must rebuild"

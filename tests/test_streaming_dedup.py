@@ -106,17 +106,19 @@ def test_batch_twin_equivalence(spark, tmp_path):
 
 
 def test_fingerprint_matches_corpus_ingest_identity(spark):
-    """streaming/dedup.py and streaming/corpus_ingest.py must share one
-    content identity, or a document deduped in-stream could still be
-    dropped/kept inconsistently by the corpus anti-join."""
-    from cdmx_airquality_etl_spark.streaming.corpus_ingest import _fingerprint
+    """streaming/dedup.py, streaming/corpus_ingest.py and the batch
+    exact-dedup queries must share one content identity, or a document
+    deduped in-stream could still be dropped/kept inconsistently by the
+    corpus anti-join: all three use operators/dedup.content_fingerprint."""
+    from cdmx_airquality_etl_spark.operators import dedup as batch_dedup
+    from cdmx_airquality_etl_spark.streaming import corpus_ingest
 
+    assert corpus_ingest.content_fingerprint is content_fingerprint
+    assert batch_dedup.content_fingerprint is content_fingerprint
     df = spark.createDataFrame(
         [("  Foo   BAR ",), ("foo bar",), ("unrelated",)], "text string"
     )
     a = [r[0] for r in df.select(content_fingerprint(F.col("text"))).collect()]
-    b = [r[0] for r in df.select(_fingerprint(F.col("text"))).collect()]
-    assert a == b
     assert a[0] == a[1] != a[2]
 
 
