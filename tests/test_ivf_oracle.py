@@ -73,6 +73,17 @@ def test_ivf_oracle_matches_spark(spark, sf_dir):
         assert float(a["cosine_sim"]) == float(b["cosine_sim"])  # bitwise
 
 
+def test_ivf_query_vector_guard(spark, sf_dir, tmp_path):
+    """vec_id 0 absent → clear error, not IndexError."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+        F.col("vec_id") != 0
+    )
+    out = str(tmp_path / "noq")
+    emb.write.parquet(f"{out}/embeddings.parquet")
+    with pytest.raises(ValueError, match="vec_id=0"):
+        QUERIES["q_similarity_ann_ivf"](spark, out)
+
+
 def test_ann_family_fails_loudly_without_query_or_corpus(spark, sf_dir, tmp_path):
     """Every trained ANN path — the four queries and the three oracle
     factories — raises the same clear ValueError, not an IndexError or

@@ -14,6 +14,8 @@ L2 k-means iterations, no RNG). This file pins:
 """
 
 import duckdb
+import pytest
+from pyspark.sql import functions as F
 
 from cdmx_airquality_etl_spark.operators.similarity import (
     _duck_double_lit,
@@ -86,6 +88,16 @@ def test_pq_shortlist_recall_vs_exact(spark, sf_dir):
         for r in QUERIES["q_similarity_topk"](spark, sf_dir).collect()
     }
     assert len(approx & exact) >= len(exact) // 2
+
+
+def test_pq_query_vector_guard(spark, sf_dir, tmp_path):
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+        F.col("vec_id") != 0
+    )
+    out = str(tmp_path / "noq")
+    emb.write.parquet(f"{out}/embeddings.parquet")
+    with pytest.raises(ValueError, match="vec_id=0"):
+        QUERIES["q_similarity_ann_pq"](spark, out)
 
 
 def test_ivfpq_shortlist_recall_vs_exact(spark, sf_dir):
