@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.parquet import load_table
+from ..sources.parquet import load_table, register_duck_view
 from .dedup import _md5_int, _sql_md5_int
 
 _MIN_PAIR_DOCS = 25  # support floor: pair must co-occur in ≥ this many docs
@@ -347,20 +347,11 @@ def _bm25_idf(n_docs: int, df: int) -> float:
 def _bm25_stats(sf_dir: str) -> tuple[int, dict[str, int]]:
     """(n_docs, df per query term) read via DuckDB — shared by the Spark
     query and the oracle factory so both render identical idf literals."""
-    import os
-
     import duckdb
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    # Spark writes parquet as a DIRECTORY of part files; DuckDB needs the
-    # glob form for those (driver testdata ships single files — both work)
-    if os.path.isdir(path):
-        path = os.path.join(path, "*.parquet")
     con = duckdb.connect()
     try:
-        con.sql(
-            f"CREATE VIEW documents AS SELECT * FROM '{path}'"
-        )
+        register_duck_view(con, sf_dir, "documents")
         n_docs = con.sql("SELECT COUNT(*) FROM documents").fetchone()[0]
         dfs = {}
         for t in _BM25_TERMS:

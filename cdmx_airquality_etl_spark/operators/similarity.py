@@ -38,7 +38,7 @@ from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
 from ..registry import register
-from ..sources.parquet import load_table
+from ..sources.parquet import load_table, register_duck_view
 
 _TOPK = 10
 _NEAR_DUP_COS = 0.35
@@ -662,14 +662,11 @@ def _oracle_sample(sf_dir: str):
     Spark-free twin of _train_sample + _query_vector, read straight from
     the parquet through the same degenerate-vector guard, with the same
     errors."""
-    import os
-
     import duckdb
 
-    path = os.path.join(sf_dir, "embeddings.parquet")
     con = duckdb.connect()
     try:
-        con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+        register_duck_view(con, sf_dir, "embeddings")
         rows = con.sql(
             f"SELECT vec_id, embedding FROM embeddings WHERE {_SQL_NZ_PRED} "
             "ORDER BY vec_id"
@@ -1427,7 +1424,8 @@ def q_similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Persisted-index cache root: one subdir per source corpus, keyed by the
 # sanitized sf_dir path, invalidated on the source parquet's (size, mtime).
-# Overridable for tests and sweeps; defaults inside the repo checkout.
+# Overridable for tests and sweeps; defaults to the user's cache
+# directory, never into the source tree.
 _ANN_INDEX_ENV = "SPARK_GRAFT_ANN_INDEX_DIR"
 
 
@@ -1435,12 +1433,7 @@ def _ann_index_root() -> str:
     import os
 
     return os.environ.get(
-        _ANN_INDEX_ENV,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.dirname(
-                os.path.abspath(__file__)))),
-            ".annindex",
-        ),
+        _ANN_INDEX_ENV, os.path.expanduser("~/.cache/spark_graft/annindex")
     )
 
 

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import register
-from ..sources.parquet import load_table
+from ..sources.parquet import load_table, register_duck_view
 from .similarity import _SQL_NZ_CTE, _dot, _nonzero, _sql_dot
 
 _Q_SHIFT = 16  # fixed-point scale 2^16 for moment quantization
@@ -666,14 +666,11 @@ def _pca_train_spark(spark: SparkSession, sf_dir: str):
 
 
 def _pca_train_duck(sf_dir: str):
-    import os
-
     import duckdb
 
-    path = os.path.join(sf_dir, "embeddings.parquet")
     con = duckdb.connect()
     try:
-        con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+        register_duck_view(con, sf_dir, "embeddings")
         rows = con.sql(
             f"""
             WITH {_SQL_NZ_CTE},

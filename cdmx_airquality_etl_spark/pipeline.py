@@ -114,14 +114,14 @@ def run(
     html_df: DataFrame,
     config: PipelineConfig,
     strict: bool = True,
-    quality_gate: bool = True,
 ) -> dict[str, int]:
     """One scheduled-run equivalent: ingest a batch of report pages and merge
     all three tables. Returns per-table merged-row counts.
 
     Ordering note: the V-GATE check (rejects must be empty) and the quality
     gate both run BEFORE any table write, reproducing scrapper.py:139-144's
-    abort-without-partial-load.
+    abort-without-partial-load. ``strict=False`` (CLI ``--lenient``) is the
+    operator override: both gates log their failure and the run merges.
     """
     result = ingest_reports(html_df)
     # the ingest lineage (HTML parse UDF included) feeds the reject count,
@@ -139,17 +139,16 @@ def run(
             if strict:
                 raise PipelineAbort(f"{n_rejects} pages failed the date gate")
 
-        if quality_gate:
-            from .quality import QualityGateError, gate
+        from .quality import QualityGateError, gate
 
-            try:
-                gate(frames["cdmx"], _fact_expectations())
-                gate(frames["edomex"], _fact_expectations())
-                gate(frames["gral_stats"], _date_expectations())
-            except QualityGateError as e:
-                log.error("quality gate: %s — aborting run", e)
-                if strict:
-                    raise PipelineAbort(str(e)) from e
+        try:
+            gate(frames["cdmx"], _fact_expectations())
+            gate(frames["edomex"], _fact_expectations())
+            gate(frames["gral_stats"], _date_expectations())
+        except QualityGateError as e:
+            log.error("quality gate: %s — aborting run", e)
+            if strict:
+                raise PipelineAbort(str(e)) from e
 
         counts: dict[str, int] = {}
         for name, df in frames.items():

@@ -75,3 +75,16 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every test table as a temp view for spark.sql use."""
     for name, df in load_tables(spark, sf_dir).items():
         df.createOrReplaceTempView(name)
+
+
+def register_duck_view(con, sf_dir: str, name: str) -> None:
+    """Register ``<sf_dir>/<name>.parquet`` as DuckDB view `name`. The
+    table may be one parquet file (the shipped testdata) or a directory
+    of part files, as Spark's ``df.write.parquet`` leaves it; DuckDB
+    reads the directory only through a glob."""
+    import os
+
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if os.path.isdir(path):
+        path = os.path.join(path, "*.parquet")
+    con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{path}'")

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.analytics import _SEQ_C
-from .commit import available_now, committed, write_once
+from .commit import assert_success_markers_enabled, available_now, committed, write_once
 
 _STATE_SCHEMA = (
     "na long, nb long, sa long, sb long, qa long, qb long"
@@ -162,6 +162,7 @@ def ab_monitor_stream(
 ):
     """Wire the monitor as a checkpointed AvailableNow stream, one file
     per trigger so the trajectory has one point per arriving file."""
+    assert_success_markers_enabled(spark)
     return available_now(
         spark,
         source_dir,

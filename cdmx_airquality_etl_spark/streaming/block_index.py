@@ -8,7 +8,7 @@ duplication against the index as it stood INCLUDING the batch itself —
 the incremental form of q_doc_dup_ratio.
 
     document files land in a directory
-      → readStream (checkpointed file source, AvailableNow per run)
+      → commit.available_now (checkpointed file source, one file per batch)
       → foreachBatch:
            1. explode the batch into disjoint token blocks (subdoc._blocks
               contract: lowercase, whitespace tokens, stride = width = 10)
@@ -41,7 +41,7 @@ from pyspark.sql.types import StructType
 
 from ..operators.dedup import _md5_int
 from ..operators.subdoc import doc_blocks
-from .commit import available_now, committed, write_once
+from .commit import assert_success_markers_enabled, available_now, committed, write_once
 
 _INDEX_SCHEMA = "block_hash long, n_docs long, n_occurrences long"
 
@@ -124,6 +124,7 @@ def block_index_stream(
     checkpoint_dir: str,
 ):
     """Wire the incremental index as a checkpointed AvailableNow stream."""
+    assert_success_markers_enabled(spark)
     return available_now(
         spark,
         source_dir,

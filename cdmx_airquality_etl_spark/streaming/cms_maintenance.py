@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.dedup import _md5_int
-from .commit import available_now, committed, write_once
+from .commit import assert_success_markers_enabled, available_now, committed, write_once
 
 CMS_ROWS = 4
 CMS_WIDTH = 256  # q_countmin's geometry: est - exact ~ e/width * N
@@ -138,6 +138,7 @@ def cms_stream(
     key_col: str,
 ):
     """Wire the sketch maintenance as a checkpointed AvailableNow stream."""
+    assert_success_markers_enabled(spark)
     return available_now(
         spark,
         source_dir,

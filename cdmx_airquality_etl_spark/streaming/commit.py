@@ -24,8 +24,18 @@ replay harmless with one protocol, owned by this module:
 - **Readers take the newest or the union.** Full-state sinks read the
   last entry of :func:`committed`; append-only sinks read all of them.
 
-:func:`available_now` is the stream skeleton the sinks share: one
-source file per trigger, each micro-batch handed to ``foreachBatch``.
+**One runner.** :func:`available_now` is the only place a stream over
+a file source starts; every public stream in this package goes through
+it. One call is one scheduled launcher run (C-SCHED): a checkpointed
+parquet file source drains every file not yet taken, with
+``Trigger.AvailableNow``, and hands each micro-batch to ``process``
+through ``foreachBatch``. Callers differ only in files per trigger (1
+for the seven sinks and ingest, 64 for corpus ingest and windowed
+counts, None for IVF ingest and running totals, i.e. one batch), and
+the two stateful streams pass an ``aggregate`` applied to the streaming
+frame plus its ``output_mode``. The runner returns the started query:
+the seven sinks hand it back as is (after checking the ``_SUCCESS``
+conf), the other streams await it before they return.
 """
 
 from __future__ import annotations
@@ -34,6 +44,7 @@ import posixpath
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from ..hadoop_fs import fs_and_path
@@ -104,16 +115,23 @@ def available_now(
     schema: StructType,
     checkpoint: str,
     process: Callable[[DataFrame, int], None],
-):
+    files_per_trigger: int | None = 1,
+    aggregate: Callable[[DataFrame], DataFrame] | None = None,
+    output_mode: str = "append",
+) -> StreamingQuery:
     """Start a checkpointed AvailableNow stream over the parquet files in
-    `source_dir`, one file per trigger, calling ``process(batch_df,
-    batch_id)`` on each micro-batch."""
-    assert_success_markers_enabled(spark)
+    `source_dir`, `files_per_trigger` files per micro-batch (None: no
+    cap), calling ``process(batch_df, batch_id)`` on each micro-batch of
+    ``aggregate(stream)`` (of the stream itself when None)."""
+    reader = spark.readStream.schema(schema)
+    if files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
+    stream = reader.parquet(source_dir)
+    if aggregate is not None:
+        stream = aggregate(stream)
     return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(process)
+        stream.writeStream.foreachBatch(process)
+        .outputMode(output_mode)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

@@ -2,7 +2,8 @@
 pipeline's front door, composed from pieces that are each oracle/test-proven:
 
     document files land in a directory
-      → readStream (checkpointed file source, AvailableNow per scheduled run)
+      → commit.available_now (checkpointed file source, one call per
+        scheduled run)
       → foreachBatch:
            1. fingerprint the batch (md5 of whitespace-normalized text —
               the q_dedup_exact identity)
@@ -31,6 +32,7 @@ from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from ..operators.dedup import content_fingerprint
+from .commit import available_now
 
 
 def dedup_batch_against_corpus(
@@ -60,25 +62,18 @@ def corpus_ingest_stream(
     source_schema: StructType,
     corpus_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
-    """Start (or run to completion, with AvailableNow) the dedup-ingest
-    stream. Returns the StreamingQuery."""
-    stream = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(source_dir)
-    )
+    """Run the dedup-ingest stream over every unseen file, 64 files per
+    micro-batch (commit.available_now), and return the finished
+    StreamingQuery."""
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
         kept = dedup_batch_against_corpus(spark, batch_df, corpus_path)
         kept.write.mode("append").parquet(corpus_path)
 
-    writer = stream.writeStream.foreachBatch(_ingest).option(
-        "checkpointLocation", checkpoint_dir
+    q = available_now(
+        spark, source_dir, source_schema, checkpoint_dir, _ingest,
+        files_per_trigger=64,
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    q.awaitTermination()
+    return q

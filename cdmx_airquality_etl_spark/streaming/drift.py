@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.types import StructType
 
-from .commit import available_now, committed, write_once
+from .commit import assert_success_markers_enabled, available_now, committed, write_once
 
 DEFAULT_THRESHOLD = 0.5  # L1 distance above which a batch counts as drifted
 _VERDICT_SCHEMA = "batch_id long, n_rows long, l1_distance double, drifted boolean"
@@ -119,6 +119,7 @@ def drift_monitor_stream(
 
         write_once(batch_df.sparkSession, out_path, "state", int(batch_id), _verdict)
 
+    assert_success_markers_enabled(spark)
     return available_now(
         spark,
         source_dir,

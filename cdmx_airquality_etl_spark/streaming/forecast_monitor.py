@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.timeseries import hw_from_daily
-from .commit import available_now, committed, write_once
+from .commit import assert_success_markers_enabled, available_now, committed, write_once
 
 _STATE_SCHEMA = "d long, y long"
 
@@ -98,6 +98,7 @@ def forecast_stream(
 ):
     """Wire the day-count maintenance as a checkpointed AvailableNow
     stream, one file per trigger."""
+    assert_success_markers_enabled(spark)
     return available_now(
         spark,
         source_dir,

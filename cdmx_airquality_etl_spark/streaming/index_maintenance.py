@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.similarity import _nonzero, ivf_cell_col
+from .commit import available_now
 
 _INGEST_TIMEOUT_S = 300
 
@@ -61,13 +62,9 @@ def ivf_ingest_stream(
         for r in assigned.groupBy("cell").count().collect():
             counts[r["cell"]] = counts.get(r["cell"], 0) + r["count"]
 
-    q = (
-        spark.readStream.schema(source_schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    q = available_now(
+        spark, source_dir, source_schema, checkpoint_dir, handle,
+        files_per_trigger=None,
     )
     if not q.awaitTermination(_INGEST_TIMEOUT_S):
         q.stop()

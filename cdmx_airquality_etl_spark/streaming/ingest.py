@@ -7,7 +7,8 @@ equivalent is a file-source stream with ``Trigger.AvailableNow`` driving the
 same keyed merge through ``foreachBatch``:
 
     new snapshot files land in a directory
-      → readStream picks up only unseen files (checkpointed source offsets)
+      → commit.available_now takes one unseen file per micro-batch
+        (checkpointed source offsets)
       → foreachBatch(merge_into_parquet)  — the M-UPSERT path, per batch
       → exactly-once per file via checkpoint + idempotent keyed merge
 
@@ -23,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..plans.merge import merge_into_parquet
+from .commit import available_now
 
 
 def ingest_stream(
@@ -34,15 +36,19 @@ def ingest_stream(
     counter_col: str | None = "nupdates",
     partition_col: str | None = None,
     checkpoint_dir: str | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int = 64,
+    max_files_per_trigger: int = 1,
     version_col: str | None = "_ingest_batch_id",
 ):
-    """Run (or start) the incremental ingest stream.
+    """Merge every unseen snapshot file into ``target_path``, then return
+    the finished StreamingQuery — the scheduled-batch shape of the
+    reference (one launcher run ≙ one call; commit.available_now).
 
-    With ``available_now=True`` this processes every unseen file then stops —
-    the scheduled-batch shape of the reference (one launcher run ≙ one call).
-    Returns the finished/running StreamingQuery.
+    One file per micro-batch by default, because one snapshot file is one
+    reference run: a batch of several snapshots collapses to one row per
+    key before the merge, so the counter would move once and an older
+    snapshot could win. ``checkpoint_dir`` is required (ValueError when
+    None): without it every run restarts at batch id 0 and the version
+    guard below would take the next run's re-scrape for a replay.
 
     ``version_col`` (default on) stamps each batch's rows with the
     micro-batch id and routes it to the merge's version guard, making the
@@ -52,11 +58,8 @@ def ingest_stream(
     tests/test_streaming_recovery.py). Pass None for the raw
     reference-parity behavior where every re-merge bumps the counter.
     """
-    stream = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
+    if checkpoint_dir is None:
+        raise ValueError("ingest_stream needs a checkpoint_dir that outlives the run")
 
     def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -74,11 +77,9 @@ def ingest_stream(
             version_col=version_col,
         )
 
-    writer = stream.writeStream.foreachBatch(_merge_batch).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()
+    query = available_now(
+        spark, source_dir, source_schema, checkpoint_dir, _merge_batch,
+        files_per_trigger=max_files_per_trigger,
+    )
+    query.awaitTermination()
+    return query

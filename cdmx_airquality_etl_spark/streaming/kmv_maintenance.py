@@ -30,7 +30,7 @@ from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from ..operators.dedup import _md5_int
-from .commit import available_now, committed, write_once
+from .commit import assert_success_markers_enabled, available_now, committed, write_once
 
 KMV_K = 64
 _NCHARS = 15  # 60-bit hash space
@@ -121,6 +121,7 @@ def kmv_stream(
     value_col: str,
 ):
     """Wire the sketch maintenance as a checkpointed AvailableNow stream."""
+    assert_success_markers_enabled(spark)
     return available_now(
         spark,
         source_dir,

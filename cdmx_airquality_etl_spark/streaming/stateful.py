@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .commit import available_now
+
 
 def windowed_counts(
     events: DataFrame,
@@ -87,25 +89,18 @@ def run_windowed_counts_stream(
     append via foreachBatch overwrite, since plain append mode would hold
     back open windows until the watermark passes — with AvailableNow over a
     closed directory we want every window emitted)."""
-    stream = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    counts = windowed_counts(
-        stream, ts_col=ts_col, key_col=key_col,
-        window_duration=window_duration, watermark_delay=watermark_delay,
-    )
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(output_path)
 
-    query = (
-        counts.writeStream.foreachBatch(_write)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    query = available_now(
+        spark, source_dir, source_schema, checkpoint_dir, _write,
+        files_per_trigger=max_files_per_trigger,
+        aggregate=lambda stream: windowed_counts(
+            stream, ts_col=ts_col, key_col=key_col,
+            window_duration=window_duration, watermark_delay=watermark_delay,
+        ),
+        output_mode="complete",
     )
     query.awaitTermination()
     return query

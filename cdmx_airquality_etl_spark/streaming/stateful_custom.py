@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .commit import available_now
+
 RUNNING_SCHEMA = "key string, n_events bigint, total_value double"
 _STATE_SCHEMA = "n bigint, total double"
 
@@ -67,20 +69,18 @@ def run_running_totals_stream(
     with batch_id — the latest row per key is the current state."""
     from pyspark.sql import functions as F
 
-    stream = spark.readStream.schema(source_schema).parquet(source_dir)
-    totals = running_totals(stream, key_col=key_col, value_col=value_col)
-
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
             "append"
         ).parquet(output_path)
 
-    q = (
-        totals.writeStream.foreachBatch(_write)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    q = available_now(
+        spark, source_dir, source_schema, checkpoint_dir, _write,
+        files_per_trigger=None,
+        aggregate=lambda stream: running_totals(
+            stream, key_col=key_col, value_col=value_col
+        ),
+        output_mode="update",
     )
     q.awaitTermination()
     return q

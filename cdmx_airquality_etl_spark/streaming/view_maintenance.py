@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from ..plans.ivm_join import build_view
-from .commit import available_now, committed, write_once
+from .commit import assert_success_markers_enabled, available_now, committed, write_once
 
 SEED_BATCH_ID = -1  # the pre-stream view seed lives at batch=-1
 
@@ -112,6 +112,7 @@ def view_maintenance_stream(
     """Wire the incremental join view as a checkpointed AvailableNow
     stream over landing fact files, one committed batch dir per
     micro-batch (replay-safe, see module docstring)."""
+    assert_success_markers_enabled(spark)
     return available_now(
         spark,
         fact_dir,

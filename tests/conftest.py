@@ -58,7 +58,7 @@ def sf_dir():
 @pytest.fixture(scope="session", autouse=True)
 def _ann_index_dir(tmp_path_factory):
     """Persisted ANN indexes (q_similarity_ann_ivfpq_probe) go to a
-    session tmp dir, never into the checkout's default .annindex/."""
+    session tmp dir, never into the user's default index cache."""
     mp = pytest.MonkeyPatch()
     mp.setenv("SPARK_GRAFT_ANN_INDEX_DIR", str(tmp_path_factory.mktemp("annindex")))
     yield

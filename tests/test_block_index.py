@@ -32,6 +32,7 @@ from cdmx_airquality_etl_spark.streaming.block_index import (
 from cdmx_airquality_etl_spark.streaming.commit import (
     MARKER_CONF,
     assert_success_markers_enabled,
+    available_now,
 )
 
 DOC_SCHEMA = StructType(
@@ -228,17 +229,7 @@ def test_kill_mid_batch_then_restart_is_exactly_once(spark, sf_dir, tmp_path):
             raise RuntimeError("injected crash between sink write and ckpt")
 
     def _start(fn):
-        stream = (
-            spark.readStream.schema(DOC_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(land, "snap*"))
-        )
-        return (
-            stream.writeStream.foreachBatch(fn)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return available_now(spark, os.path.join(land, "snap*"), DOC_SCHEMA, ckpt, fn)
 
     q = _start(_crashing)
     with pytest.raises(Exception):

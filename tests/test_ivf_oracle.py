@@ -126,3 +126,19 @@ def test_ann_family_fails_loudly_without_query_or_corpus(spark, sf_dir, tmp_path
                 assert msg in str(e), f"{name}: {e}"
             else:
                 pytest.fail(f"{name} did not raise on {corpus}")
+
+
+def test_oracle_factories_read_spark_written_corpus(spark, sf_dir, tmp_path):
+    """Spark writes a table as a directory of part files. Every oracle
+    factory reads the corpus through DuckDB and must accept that layout,
+    rendering the same oracle as for the single-file testdata."""
+    from cdmx_airquality_etl_spark.registry import ORACLE_FACTORIES
+    from cdmx_airquality_etl_spark.sources.parquet import load_table
+
+    for t in ("embeddings", "documents"):
+        load_table(spark, sf_dir, t).repartition(3).write.parquet(
+            str(tmp_path / f"{t}.parquet")
+        )
+    assert len(ORACLE_FACTORIES) >= 5
+    for name, factory in sorted(ORACLE_FACTORIES.items()):
+        assert factory(str(tmp_path)) == factory(sf_dir), name

@@ -68,6 +68,6 @@ def test_quality_gate_blocks_bad_station_codes(spark, tmp_path):
 
     assert not os.path.exists(cfg.table_path("cdmx"))
 
-    # with the gate off (operator override) the run proceeds
-    counts = run(spark, html_df, cfg, quality_gate=False)
+    # lenient mode (the operator override, CLI --lenient) logs and proceeds
+    counts = run(spark, html_df, cfg, strict=False)
     assert counts["cdmx"] == 2

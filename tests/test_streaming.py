@@ -4,6 +4,7 @@ their batch twins, no oracle)."""
 
 import os
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -69,6 +70,46 @@ def test_ingest_stream_incremental_merge(spark, tmp_path):
                   checkpoint_dir=ckpt)
     out3 = {r["clave_str"]: r for r in spark.read.parquet(tgt).collect()}
     assert out3["UIZ"]["nupdates"] == 2
+
+
+def _land_snapshot(spark, src, rows, mtime):
+    """Append one single-file snapshot to `src` and stamp its arrival time
+    (the file source takes files in modification-time order)."""
+    before = set(os.listdir(src)) if os.path.exists(src) else set()
+    spark.createDataFrame([Row(**r) for r in rows], SNAP_SCHEMA).coalesce(
+        1
+    ).write.mode("append").parquet(src)
+    for name in set(os.listdir(src)) - before:
+        if name.endswith(".parquet"):
+            os.utime(os.path.join(src, name), (mtime, mtime))
+
+
+def test_ingest_stream_backlog_merges_each_snapshot(spark, tmp_path):
+    """Two snapshots of one key land before a single run: each file is one
+    reference run, so the later value wins and the counter moves twice."""
+    src = str(tmp_path / "incoming")
+    tgt = str(tmp_path / "table")
+    key = {"report_ts": 2025052314, "clave_str": "UIZ"}
+    _land_snapshot(spark, src, [{**key, "calidad": "mala"}], 1_700_000_000)
+    _land_snapshot(spark, src, [{**key, "calidad": "buena"}], 1_700_000_100)
+    ingest_stream(spark, src, SNAP_SCHEMA, tgt,
+                  keys=["report_ts", "clave_str"],
+                  checkpoint_dir=str(tmp_path / "ckpt"))
+    got = [(r["calidad"], r["nupdates"]) for r in spark.read.parquet(tgt).collect()]
+    assert got == [("buena", 2)]
+
+
+def test_ingest_stream_requires_checkpoint(spark, tmp_path):
+    """Without a checkpoint each run would restart at batch id 0 and the
+    version guard would drop the next run's re-scrape as a replay."""
+    src = str(tmp_path / "incoming")
+    tgt = str(tmp_path / "table")
+    _land_snapshot(spark, src, [{"report_ts": 1, "clave_str": "UIZ",
+                                 "calidad": "buena"}], 1_700_000_000)
+    with pytest.raises(ValueError, match="checkpoint_dir"):
+        ingest_stream(spark, src, SNAP_SCHEMA, tgt,
+                      ["report_ts", "clave_str"], "nupdates", None, None)
+    assert not os.path.exists(tgt)
 
 
 def test_windowed_counts_stream_matches_batch(spark, tmp_path, sf_dir):

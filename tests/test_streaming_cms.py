@@ -28,6 +28,7 @@ from cdmx_airquality_etl_spark.streaming.cms_maintenance import (
     read_sketch,
     update_sketch,
 )
+from cdmx_airquality_etl_spark.streaming.commit import available_now
 
 EVENT_SCHEMA = StructType(
     [
@@ -180,17 +181,7 @@ def test_kill_mid_batch_then_restart_is_exactly_once(spark, sf_dir, tmp_path):
             raise RuntimeError("injected crash between sink write and ckpt")
 
     def _start(fn):
-        stream = (
-            spark.readStream.schema(EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(land, "snap*"))
-        )
-        return (
-            stream.writeStream.foreachBatch(fn)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return available_now(spark, os.path.join(land, "snap*"), EVENT_SCHEMA, ckpt, fn)
 
     q = _start(_crashing)
     with pytest.raises(Exception):

@@ -16,6 +16,7 @@ from pyspark.sql.types import (
 )
 
 from cdmx_airquality_etl_spark.sources.parquet import load_table
+from cdmx_airquality_etl_spark.streaming.commit import available_now
 from cdmx_airquality_etl_spark.streaming.kmv_maintenance import (
     KMV_K,
     batch_hashes,
@@ -151,17 +152,7 @@ def test_kill_mid_batch_then_restart_is_exactly_once(spark, sf_dir, tmp_path):
             raise RuntimeError("injected crash between sink write and ckpt")
 
     def _start(fn):
-        stream = (
-            spark.readStream.schema(EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(land, "snap*"))
-        )
-        return (
-            stream.writeStream.foreachBatch(fn)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return available_now(spark, os.path.join(land, "snap*"), EVENT_SCHEMA, ckpt, fn)
 
     q = _start(_crashing)
     with pytest.raises(Exception):

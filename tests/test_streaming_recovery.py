@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from cdmx_airquality_etl_spark.plans.ivm_join import build_view
+from cdmx_airquality_etl_spark.streaming.commit import available_now
 from cdmx_airquality_etl_spark.streaming.view_maintenance import (
     apply_fact_delta_versioned,
     read_view,
@@ -85,16 +86,8 @@ def test_kill_mid_batch_then_restart_is_exactly_once(spark, tmp_path):
             raise RuntimeError("injected crash between sink and checkpoint commit")
 
     def _run():
-        stream = (
-            spark.readStream.schema(FACT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(fact_dir, "*.parquet"))
-        )
-        q = (
-            stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        q = available_now(
+            spark, os.path.join(fact_dir, "*.parquet"), FACT_SCHEMA, ckpt, _process
         )
         q.awaitTermination()
 

@@ -43,6 +43,7 @@ from _ducklimits import apply_duck_limits  # noqa: E402
 import __spark_entry__ as entry_mod  # noqa: E402
 from cdmx_airquality_etl_spark.schemas import TESTDATA_TABLES  # noqa: E402
 from cdmx_airquality_etl_spark.session import get_spark  # noqa: E402
+from cdmx_airquality_etl_spark.sources.parquet import register_duck_view  # noqa: E402
 
 
 def cell(v) -> str:
@@ -113,7 +114,7 @@ def main() -> int:
     # directory keeps the checker a well-behaved co-tenant at any sf.
     apply_duck_limits(con)
     for t in TESTDATA_TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        register_duck_view(con, sf_dir, t)
 
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()

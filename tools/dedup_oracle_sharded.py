@@ -67,6 +67,7 @@ import duckdb  # noqa: E402
 from _ducklimits import apply_duck_limits  # noqa: E402
 
 from cdmx_airquality_etl_spark.registry import ORACLES, QUERIES  # noqa: E402
+from cdmx_airquality_etl_spark.sources.parquet import register_duck_view  # noqa: E402
 
 
 def _inject(text: str, anchor: str, where: str, count: int = 1) -> str:
@@ -204,10 +205,7 @@ def main() -> int:
 
     con = duckdb.connect()
     apply_duck_limits(con)
-    con.sql(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"'{args.sf_dir}/documents.parquet'"
-    )
+    register_duck_view(con, args.sf_dir, "documents")
 
     from cdmx_airquality_etl_spark.session import get_spark
 

@@ -52,6 +52,7 @@ from cdmx_airquality_etl_spark.operators.dedup import (  # noqa: E402
     _pow2_chain_sql,
 )
 from cdmx_airquality_etl_spark.session import get_spark  # noqa: E402
+from cdmx_airquality_etl_spark.sources.parquet import register_duck_view  # noqa: E402
 
 # The injection point inside the shared CTE constant: the pairs CTE's
 # GROUP BY, immediately after the self-join. If dedup.py's constant is
@@ -118,10 +119,7 @@ def main() -> int:
 
     con = duckdb.connect()
     apply_duck_limits(con)
-    con.sql(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"'{args.sf_dir}/documents.parquet'"
-    )
+    register_duck_view(con, args.sf_dir, "documents")
 
     acc = {b: [0, 0, 0, 0] for b, _ in _LSH_PLAN_CONFIGS}
     t0 = time.time()
