@@ -7,11 +7,15 @@ of the three reference tables, with the reference's control behaviors:
   same shape as the reference's config.yaml / sql_config.yaml, but DDL is
   declared StructTypes (schemas.py) — Catalyst needs no regex name-extraction
   (D-CREATETBL, scrapper.py:246-251).
-- D-CREATEDB / D-CREATETBL (scrapper.py:226-273): idempotent warehouse
-  bootstrap via the Spark catalog (CREATE DATABASE/TABLE IF NOT EXISTS);
-  existence checks go through spark.catalog, not a hand-parsed master table.
-- V-GATE (scrapper.py:139-144): unparseable pages abort the run before any
-  write — no partial loads (M-TXN is per-table inside the merge writer).
+- D-CREATEDB / D-CREATETBL (scrapper.py:226-273): ``bootstrap`` creates only
+  the database (CREATE DATABASE IF NOT EXISTS, idempotent); there is no
+  CREATE TABLE — each table's parquet directory is created by its first
+  merge write.
+- V-GATE (scrapper.py:139-144): a run has two phases. The check phase counts
+  the unparseable pages and runs the three tables' quality gates,
+  concurrently, on one persisted parse. The merge phase starts only after
+  every check has finished: no write starts before every check passes — no
+  partial loads (M-TXN is per-table inside the merge writer).
 - C-LOG (scrapper.py:307-314): driver-side structured logging per stage.
 - C-SCHED: one `run()` call ≙ one launcher.bat invocation; the streaming
   module (streaming/ingest.py) is the push-based equivalent.
@@ -20,13 +24,24 @@ of the three reference tables, with the reference's control behaviors:
 from __future__ import annotations
 
 import logging
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from .plans.merge import merge_into_parquet
 from .schemas import MERGE_KEYS
-from .sources.html_ingest import ingest_reports
+
+# ingest_reports (parse + ingest_parsed) is not called by run, which persists
+# the parse in between; it stays importable here because perfbench's
+# etl_scheduled workload wraps pipeline.ingest_reports.
+from .sources.html_ingest import (  # noqa: F401
+    ingest_parsed,
+    ingest_reports,
+    parse_pages,
+)
 
 log = logging.getLogger("cdmx_airquality_etl_spark.pipeline")
 
@@ -76,9 +91,10 @@ class PipelineConfig:
 
 
 def bootstrap(spark: SparkSession, config: PipelineConfig) -> None:
-    """Idempotent catalog bootstrap (D-CREATEDB/D-CREATETBL). Tables are
-    parquet-backed; re-running is a no-op, like the reference's
-    sqlite_master existence probe."""
+    """Idempotent catalog bootstrap (D-CREATEDB): creates only the database.
+    Tables are parquet directories that their first merge creates;
+    re-running is a no-op, like the reference's sqlite_master existence
+    probe."""
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {config.database}")
     log.info("database %s ready", config.database)
 
@@ -116,54 +132,82 @@ def run(
     strict: bool = True,
 ) -> dict[str, int]:
     """One scheduled-run equivalent: ingest a batch of report pages and merge
-    all three tables. Returns per-table merged-row counts.
+    all three tables. Returns each table's row count after the merge.
 
-    Ordering note: the V-GATE check (rejects must be empty) and the quality
-    gate both run BEFORE any table write, reproducing scrapper.py:139-144's
-    abort-without-partial-load. ``strict=False`` (CLI ``--lenient``) is the
-    operator override: both gates log their failure and the run merges.
+    The HTML parse runs once: its frame is persisted and the rejects and the
+    three tables are derived from it. Then two phases, each on a thread pool
+    as wide as there are tables and under the caller's job group and tags:
+
+    - check: the V-GATE reject count (rejects must be empty) and the three
+      quality gates run concurrently;
+    - merge: starts only after every check has finished, so no write starts
+      before every check passes (scrapper.py:139-144's
+      abort-without-partial-load). The three merges and their row counts run
+      concurrently; each writes its own path under its own ``merge_lock``.
+
+    A failing check raises ``PipelineAbort`` naming every failing table.
+    ``strict=False`` (CLI ``--lenient``) is the operator override: every
+    failing check is logged under its table name and the run merges. Any
+    other failure of a task is re-raised (the first, in table order) once
+    every task of its phase has ended.
     """
-    result = ingest_reports(html_df)
-    # the ingest lineage (HTML parse UDF included) feeds the reject count,
-    # the gates AND the merges — persist each frame so it runs once
-    frames = {
-        "cdmx": result.cdmx.persist(),
-        "edomex": result.edomex.persist(),
-        "gral_stats": result.gral_stats.persist(),
-    }
+    from .quality import QualityGateError, gate
 
+    parsed = parse_pages(html_df).persist()
     try:
-        n_rejects = result.rejects.count()
+        result = ingest_parsed(parsed)
+        frames = {
+            "cdmx": result.cdmx,
+            "edomex": result.edomex,
+            "gral_stats": result.gral_stats,
+        }
+
+        def concurrently(tasks):
+            # leaving the pool waits for every task, failed or not
+            with ThreadPoolExecutor(max_workers=len(frames)) as pool:
+                return {
+                    name: pool.submit(inheritable_thread_target(spark)(task))
+                    for name, task in tasks.items()
+                }
+
+        checks = concurrently(
+            {
+                "rejects": result.rejects.count,
+                "cdmx": partial(gate, result.cdmx, _fact_expectations()),
+                "edomex": partial(gate, result.edomex, _fact_expectations()),
+                "gral_stats": partial(gate, result.gral_stats, _date_expectations()),
+            }
+        )
+        problems = []
+        n_rejects = checks.pop("rejects").result()
         if n_rejects:
-            log.error("V-GATE: %d unparseable pages — aborting run", n_rejects)
-            if strict:
-                raise PipelineAbort(f"{n_rejects} pages failed the date gate")
+            problems.append(f"V-GATE: {n_rejects} unparseable pages")
+        for name, future in checks.items():
+            if isinstance(future.exception(), QualityGateError):
+                problems.append(f"table {name}: {future.exception()}")
+            else:
+                future.result()  # re-raises any other failure
+        action = "aborting run" if strict else "merging anyway (lenient)"
+        for problem in problems:
+            log.error("%s — %s", problem, action)
+        if problems and strict:
+            raise PipelineAbort("; ".join(problems))
 
-        from .quality import QualityGateError, gate
-
-        try:
-            gate(frames["cdmx"], _fact_expectations())
-            gate(frames["edomex"], _fact_expectations())
-            gate(frames["gral_stats"], _date_expectations())
-        except QualityGateError as e:
-            log.error("quality gate: %s — aborting run", e)
-            if strict:
-                raise PipelineAbort(str(e)) from e
-
-        counts: dict[str, int] = {}
-        for name, df in frames.items():
+        def merge(name: str) -> int:
             path = config.table_path(name)
             merge_into_parquet(
                 spark,
-                df,
+                frames[name],
                 path,
                 keys=MERGE_KEYS[name],
                 counter_col=config.counter_col,
                 partition_col=config.partition_col,
             )
-            counts[name] = spark.read.parquet(path).count()
-            log.info("merged table %s → %s (%d rows)", name, path, counts[name])
-        return counts
+            n = spark.read.parquet(path).count()
+            log.info("merged table %s → %s (%d rows)", name, path, n)
+            return n
+
+        merges = concurrently({name: partial(merge, name) for name in frames})
+        return {name: future.result() for name, future in merges.items()}
     finally:
-        for df in frames.values():
-            df.unpersist()
+        parsed.unpersist()

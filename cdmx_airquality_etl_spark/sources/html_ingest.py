@@ -220,7 +220,14 @@ def _station_fact(headered: DataFrame, rows_col: str, geo_col: str) -> DataFrame
 def ingest_reports(html_df: DataFrame) -> IngestResult:
     """Full extract+transform for a batch of report pages
     (page_id long, html string) → (cdmx, edomex, gral_stats, rejects)."""
-    headered = _header_fields(parse_pages(html_df))
+    return ingest_parsed(parse_pages(html_df))
+
+
+def ingest_parsed(parsed: DataFrame) -> IngestResult:
+    """The transform half of :func:`ingest_reports`: ``parse_pages`` output →
+    (cdmx, edomex, gral_stats, rejects), native expressions only. Callers
+    that persist ``parsed`` get all four frames from one parse."""
+    headered = _header_fields(parsed)
 
     ok = headered.filter(F.col("report_ts").isNotNull())
     rejects = headered.filter(F.col("report_ts").isNull()).select(
