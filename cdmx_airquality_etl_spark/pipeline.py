@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
 
 from .plans.merge import merge_into_parquet
-from .schemas import MERGE_KEYS
+from .schemas import MERGE_KEYS, TABLE_SCHEMAS
 
 # ingest_reports (parse + ingest_parsed) is not called by run, which persists
 # the parse in between; it stays importable here because perfbench's
@@ -41,6 +41,7 @@ from .sources.html_ingest import (  # noqa: F401
     ingest_parsed,
     ingest_reports,
     parse_pages,
+    summarize_pages,
 )
 
 log = logging.getLogger("cdmx_airquality_etl_spark.pipeline")
@@ -138,12 +139,18 @@ def run(
     three tables are derived from it. Then two phases, each on a thread pool
     as wide as there are tables and under the caller's job group and tags:
 
-    - check: the V-GATE reject count (rejects must be empty) and the three
-      quality gates run concurrently;
+    - check: one aggregate over the parse (``summarize_pages``) and the three
+      quality gates run concurrently. The aggregate counts the unparseable
+      pages (V-GATE: there must be none) and collects the
+      ``config.partition_col`` values of the parseable pages;
     - merge: starts only after every check has finished, so no write starts
       before every check passes (scrapper.py:139-144's
       abort-without-partial-load). The three merges and their row counts run
       concurrently; each writes its own path under its own ``merge_lock``.
+      Every table's rows come from the parseable pages, so each merge is
+      handed the check's partition values and runs no discovery job of its
+      own. The row counts read each table with its declared schema
+      (``schemas.TABLE_SCHEMAS``), so no job infers one from the files.
 
     A failing check raises ``PipelineAbort`` naming every failing table.
     ``strict=False`` (CLI ``--lenient``) is the operator override: every
@@ -162,26 +169,32 @@ def run(
             "gral_stats": result.gral_stats,
         }
 
+        def in_callers_context(task):
+            # with pinned-thread mode off (PYSPARK_PIN_THREAD=false) the
+            # "wrapper" is the session itself: there is no job group to carry
+            inherit = inheritable_thread_target(spark)
+            return task if inherit is spark else inherit(task)
+
         def concurrently(tasks):
             # leaving the pool waits for every task, failed or not
             with ThreadPoolExecutor(max_workers=len(frames)) as pool:
                 return {
-                    name: pool.submit(inheritable_thread_target(spark)(task))
+                    name: pool.submit(in_callers_context(task))
                     for name, task in tasks.items()
                 }
 
         checks = concurrently(
             {
-                "rejects": result.rejects.count,
+                "pages": partial(summarize_pages, parsed, config.partition_col),
                 "cdmx": partial(gate, result.cdmx, _fact_expectations()),
                 "edomex": partial(gate, result.edomex, _fact_expectations()),
                 "gral_stats": partial(gate, result.gral_stats, _date_expectations()),
             }
         )
         problems = []
-        n_rejects = checks.pop("rejects").result()
-        if n_rejects:
-            problems.append(f"V-GATE: {n_rejects} unparseable pages")
+        pages = checks.pop("pages").result()
+        if pages.rejects:
+            problems.append(f"V-GATE: {pages.rejects} unparseable pages")
         for name, future in checks.items():
             if isinstance(future.exception(), QualityGateError):
                 problems.append(f"table {name}: {future.exception()}")
@@ -202,8 +215,9 @@ def run(
                 keys=MERGE_KEYS[name],
                 counter_col=config.counter_col,
                 partition_col=config.partition_col,
+                partitions=pages.partitions,
             )
-            n = spark.read.parquet(path).count()
+            n = spark.read.schema(TABLE_SCHEMAS[name]).parquet(path).count()
             log.info("merged table %s → %s (%d rows)", name, path, n)
             return n
 

@@ -30,6 +30,7 @@ Scale design (100 TB):
 from __future__ import annotations
 
 import contextlib
+from collections.abc import Iterable
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
@@ -152,6 +153,14 @@ def merge_upsert(
     return joined.select(*out_cols)
 
 
+def _in_partitions(part: Column, values: list) -> Column:
+    """``part`` is one of ``values``, never NULL: a NULL ``part`` matches
+    when None is among the values (a plain ``isin`` never matches NULL)."""
+    present = [v for v in values if v is not None]
+    hit = F.coalesce(part.isin(present), F.lit(False))
+    return hit | part.isNull() if len(present) < len(values) else hit
+
+
 def merge_into_parquet(
     spark,
     source: DataFrame,
@@ -162,6 +171,7 @@ def merge_into_parquet(
     check_partition_alignment: bool = False,
     version_col: str | None = None,
     lock_timeout: float = 300.0,
+    partitions: Iterable | None = None,
 ) -> None:
     """Merge a batch into a parquet table at ``path`` (M-TXN equivalent).
 
@@ -171,6 +181,20 @@ def merge_into_parquet(
     write commit protocol provides the all-or-nothing behavior of the
     reference's BEGIN/COMMIT/ROLLBACK (scrapper.py:208-221).
     Without it: full-table merge + atomic directory swap (small tables only).
+
+    The touched partitions are the distinct ``partition_col`` values of the
+    batch, found by one collect before the write. A caller that already
+    holds them (``pipeline.run`` reads them off its page check) passes them
+    as ``partitions`` and the merge runs no discovery job; a superset is
+    fine (an extra partition is rewritten unchanged). A set that misses a
+    value of the batch fails the merge: an in-plan ``raise_error`` on the
+    batch's partition column makes the write job fail before dynamic
+    overwrite commits, so the table is left as it was and no rows are
+    dropped. ``partitions`` requires ``partition_col``.
+
+    Partition matching is null-safe: a NULL partition value touches the
+    NULL partition (``__HIVE_DEFAULT_PARTITION__``), whose target rows are
+    read and merged like any other, because dynamic overwrite replaces it.
 
     CONTRACT: ``partition_col`` must be functionally dependent on ``keys``
     (true for the reference layout: year_num is derived from the report_ts
@@ -195,6 +219,21 @@ def merge_into_parquet(
     single-writer.
     """
     source = collapse_to_key_grain(source, keys)
+    if partitions is not None:
+        partitions = list(partitions)
+        part = F.col(partition_col)
+        source = source.withColumn(
+            partition_col,
+            F.when(_in_partitions(part, partitions), part).otherwise(
+                F.raise_error(
+                    F.concat(
+                        F.lit(f"merge_into_parquet: {partition_col}="),
+                        F.coalesce(part.cast("string"), F.lit("NULL")),
+                        F.lit(" is outside the given partitions"),
+                    )
+                )
+            ),
+        )
     if counter_col is not None and counter_col not in source.columns:
         seed = source.withColumn(counter_col, F.lit(1))
     else:
@@ -227,10 +266,14 @@ def merge_into_parquet(
             seed.write.mode("overwrite").partitionBy(partition_col).parquet(path)
             return
         target = spark.read.parquet(path)
-        touched = [r[0] for r in source.select(partition_col).distinct().collect()]
+        if partitions is None:
+            partitions = [
+                r[0] for r in source.select(partition_col).distinct().collect()
+            ]
+        touched = _in_partitions(F.col(partition_col), partitions)
         if check_partition_alignment:
             stray = (
-                target.filter(~F.col(partition_col).isin(touched))
+                target.filter(~touched)
                 .select(*keys)
                 .join(F.broadcast(source.select(*keys).distinct()), keys, "left_semi")
                 .count()
@@ -246,7 +289,7 @@ def merge_into_parquet(
         # would silently switch every later partitioned overwrite in the
         # session to dynamic semantics
         (
-            merged(target.filter(F.col(partition_col).isin(touched)))
+            merged(target.filter(touched))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(partition_col)

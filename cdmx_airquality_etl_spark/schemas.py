@@ -73,6 +73,12 @@ GRAL_STATS_SCHEMA = StructType(
     + _DATE_PART_FIELDS
 )
 
+TABLE_SCHEMAS = {
+    "cdmx": CDMX_SCHEMA,
+    "edomex": EDOMEX_SCHEMA,
+    "gral_stats": GRAL_STATS_SCHEMA,
+}
+
 # Merge keys per table (scrapper.py:329-331).
 MERGE_KEYS = {
     "cdmx": ["report_ts", "clave_str"],

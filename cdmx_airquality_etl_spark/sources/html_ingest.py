@@ -32,7 +32,7 @@ from collections.abc import Iterator
 from typing import NamedTuple
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -217,6 +217,36 @@ def _station_fact(headered: DataFrame, rows_col: str, geo_col: str) -> DataFrame
     )
 
 
+def _unparseable() -> Column:
+    """V-GATE: the page's date line did not parse (scrapper.py:53-55)."""
+    return F.col("report_ts").isNull()
+
+
+class PageSummary(NamedTuple):
+    rejects: int
+    partitions: list | None
+
+
+def summarize_pages(parsed: DataFrame, partition_col: str | None) -> PageSummary:
+    """One aggregate over ``parse_pages`` output: the number of unparseable
+    pages (the rows of :func:`ingest_parsed`'s rejects) and, with
+    ``partition_col`` (a header column such as ``year_num``), its distinct
+    values over the parseable pages, NULL included.
+
+    Every row of the three tables comes from a parseable page and carries
+    that page's header columns, so the values cover each table's partitions;
+    a page with no station rows only adds a partition a table rewrites
+    unchanged."""
+    aggs = [F.count_if(_unparseable()).alias("rejects")]
+    if partition_col:
+        # a struct keeps a NULL value, which collect_set would skip
+        value = F.struct(partition_col)
+        aggs.append(F.collect_set(F.when(~_unparseable(), value)).alias("values"))
+    row = _header_fields(parsed).agg(*aggs).first()
+    values = [v[0] for v in row["values"]] if partition_col else None
+    return PageSummary(rejects=row["rejects"], partitions=values)
+
+
 def ingest_reports(html_df: DataFrame) -> IngestResult:
     """Full extract+transform for a batch of report pages
     (page_id long, html string) → (cdmx, edomex, gral_stats, rejects)."""
@@ -229,10 +259,8 @@ def ingest_parsed(parsed: DataFrame) -> IngestResult:
     that persist ``parsed`` get all four frames from one parse."""
     headered = _header_fields(parsed)
 
-    ok = headered.filter(F.col("report_ts").isNotNull())
-    rejects = headered.filter(F.col("report_ts").isNull()).select(
-        "page_id", "hora_text"
-    )
+    ok = headered.filter(~_unparseable())
+    rejects = headered.filter(_unparseable()).select("page_id", "hora_text")
 
     gral_stats = ok.select(
         "report_ts",

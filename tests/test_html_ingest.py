@@ -4,7 +4,12 @@ malformed-row filter and the V-GATE reject path."""
 
 from pyspark.sql import Row
 
-from cdmx_airquality_etl_spark.sources.html_ingest import ingest_reports
+from cdmx_airquality_etl_spark.sources.html_ingest import (
+    ingest_parsed,
+    ingest_reports,
+    parse_pages,
+    summarize_pages,
+)
 
 PAGE = """
 <html><body>
@@ -81,6 +86,19 @@ def test_ingest_vgate_rejects_unparseable_date(spark):
     assert [r["page_id"] for r in rejects] == [2]
     # good page still flows through
     assert res.gral_stats.count() == 1
+
+
+def test_summarize_pages_counts_rejects_and_partitions(spark):
+    html_df = spark.createDataFrame([
+        Row(page_id=1, html=PAGE),
+        Row(page_id=2, html=PAGE.replace("de mayo de 2025", "de mayo de 2024")),
+        Row(page_id=3, html=BAD_PAGE),
+    ])
+    parsed = parse_pages(html_df)
+    summary = summarize_pages(parsed, "year_num")
+    assert summary.rejects == 1 == ingest_parsed(parsed).rejects.count()
+    assert sorted(summary.partitions) == [2024, 2025]  # parseable pages only
+    assert summarize_pages(parsed, None) == (1, None)
 
 
 def test_ingest_merge_roundtrip(spark, tmp_path):

@@ -5,6 +5,7 @@ nupdates=1; changed values overwrite; NULLs store as NULL
 
 import os
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -144,3 +145,56 @@ def test_merge_partition_alignment_probe(spark, tmp_path):
                        check_partition_alignment=True)
     out = {r["clave_str"]: r for r in spark.read.parquet(path).collect()}
     assert out["UIZ"]["calidad"] == "regular" and out["UIZ"]["nupdates"] == 2
+
+
+def _keyed(spark, rows):
+    return spark.createDataFrame(rows, "k long, v string, year_num int")
+
+
+def _files(path):
+    """Every data file of a table: path → (bytes, rows)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    return {
+        p: (os.path.getsize(p), pq.ParquetFile(p).metadata.num_rows)
+        for p in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+    }
+
+
+@pytest.mark.parametrize("partitions", [None, [None]])
+def test_merge_into_null_partition_keeps_its_rows(spark, tmp_path, partitions):
+    """A NULL partition value touches the NULL partition: its target rows
+    are merged, not dropped by the dynamic overwrite that replaces it."""
+    path = os.path.join(str(tmp_path), "null_part")
+    merge_into_parquet(
+        spark, _keyed(spark, [(1, "a", None), (2, "b", None), (3, "c", 2024)]),
+        path, ["k"], counter_col="nupdates", partition_col="year_num")
+    given = {} if partitions is None else {"partitions": partitions}
+    merge_into_parquet(
+        spark, _keyed(spark, [(1, "z", None)]), path, ["k"],
+        counter_col="nupdates", partition_col="year_num", **given)
+    out = {r["k"]: (r["v"], r["nupdates"], r["year_num"])
+           for r in spark.read.parquet(path).collect()}
+    assert out == {1: ("z", 2, None), 2: ("b", 1, None), 3: ("c", 1, 2024)}
+
+
+def test_partitions_that_miss_a_batch_value_fail_before_commit(spark, tmp_path):
+    path = os.path.join(str(tmp_path), "guarded")
+    merge_into_parquet(
+        spark, _keyed(spark, [(1, "a", 2024), (2, "b", 2025)]), path, ["k"],
+        counter_col="nupdates", partition_col="year_num")
+    files = _files(path)
+    rows = sorted(spark.read.parquet(path).collect())
+    batch = _keyed(spark, [(1, "x", 2024), (2, "y", 2025), (3, "z", 2026)])
+    with pytest.raises(Exception, match="year_num=2025 is outside the given partitions"):
+        merge_into_parquet(spark, batch, path, ["k"], counter_col="nupdates",
+                           partition_col="year_num", partitions=[2024, 2026])
+    assert _files(path) == files
+    assert sorted(spark.read.parquet(path).collect()) == rows
+    # a superset only rewrites the extra partition unchanged
+    merge_into_parquet(spark, batch, path, ["k"], counter_col="nupdates",
+                       partition_col="year_num", partitions=[2023, 2024, 2025, 2026])
+    out = {r["k"]: (r["v"], r["nupdates"]) for r in spark.read.parquet(path).collect()}
+    assert out == {1: ("x", 2), 2: ("y", 2), 3: ("z", 1)}

@@ -1,16 +1,27 @@
 """E2E pipeline tests (C-MAIN shape): two scheduled runs over synthetic
 pages, V-GATE abort without partial load, config round-trip."""
 
+import os
+import uuid
+
 import pytest
 from pyspark.sql import Row
 
+from cdmx_airquality_etl_spark import pipeline
 from cdmx_airquality_etl_spark.pipeline import (
     PipelineAbort,
     PipelineConfig,
     bootstrap,
     run,
 )
+from cdmx_airquality_etl_spark.schemas import TABLE_SCHEMAS
 from tests.test_html_ingest import BAD_PAGE, PAGE
+
+
+def _page(hour, year=2025):
+    """PAGE as the report of another hour (``hour`` 0-23)."""
+    return PAGE.replace("14 h, mi&eacute;rcoles 23 de mayo de 2025",
+                        f"{hour} h, mi&eacute;rcoles 23 de mayo de {year}")
 
 
 def _cfg(tmp_path):
@@ -30,6 +41,16 @@ def test_two_runs_accumulate_and_bump(spark, tmp_path):
     cdmx = {r["clave_str"]: r for r in
             spark.read.parquet(cfg.table_path("cdmx")).collect()}
     assert cdmx["UIZ"]["nupdates"] == 2
+
+
+def test_declared_schemas_describe_the_written_tables(spark, tmp_path):
+    # run counts rows with the declared schemas instead of inferring them
+    cfg = _cfg(tmp_path)
+    run(spark, spark.createDataFrame([Row(page_id=1, html=PAGE)]), cfg)
+    for name, declared in TABLE_SCHEMAS.items():
+        inferred = spark.read.parquet(cfg.table_path(name)).schema
+        assert sorted((f.name, f.dataType) for f in inferred.fields) == sorted(
+            (f.name, f.dataType) for f in declared.fields), name
 
 
 def test_vgate_aborts_without_partial_load(spark, tmp_path):
@@ -128,7 +149,74 @@ def test_run_parses_each_page_once_under_callers_job_group(spark, tmp_path):
     assert evals.value == 3  # one parse per page: no gate or merge re-parses
     # every job of the run, the pool threads' merges included, is in "g"
     assert set(st.getJobIdsForGroup(None)) - ungrouped == set()
-    store = sc._jsc.sc().statusStore()
-    names = [store.job(j).name() for j in set(st.getJobIdsForGroup("g")) - grouped]
-    # the first run of a table writes it with one parquet job per table
-    assert sum(n.startswith("parquet at") for n in names) >= 3, names
+    # the first run of a table writes it with one write command per table,
+    # every job of which is in "g"
+    run_jobs = set(st.getJobIdsForGroup("g")) - grouped
+    conv = sc._jvm.scala.jdk.javaapi.CollectionConverters
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    writes = [
+        jobs
+        for e in conv.asJava(executions)
+        if "InsertIntoHadoopFsRelationCommand" in e.physicalPlanDescription()
+        and (jobs := set(conv.asJava(e.jobs()).keySet())) & run_jobs
+    ]
+    assert len(writes) == 3 and all(jobs <= run_jobs for jobs in writes), writes
+
+
+def test_run_without_pinned_threads(spark, tmp_path, monkeypatch):
+    # with PYSPARK_PIN_THREAD=false, inheritable_thread_target(session)
+    # returns the session itself; run must then submit the bare tasks
+    monkeypatch.setattr(pipeline, "inheritable_thread_target", lambda f: f)
+    html_df = spark.createDataFrame([Row(page_id=1, html=PAGE)])
+    assert run(spark, html_df, _cfg(tmp_path)) == {
+        "cdmx": 2, "edomex": 1, "gral_stats": 1}
+
+
+def test_run_hands_every_merge_the_parsed_partitions(spark, tmp_path, monkeypatch):
+    calls = {}
+    real = pipeline.merge_into_parquet
+
+    def spy(spark_, source, path, *args, **kwargs):
+        calls[os.path.basename(path)] = sorted(kwargs["partitions"])
+        return real(spark_, source, path, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "merge_into_parquet", spy)
+    cfg = _cfg(tmp_path)
+    html_df = spark.createDataFrame([
+        Row(page_id=1, html=_page(14, year=2024)),
+        Row(page_id=2, html=_page(15)),
+    ])
+    run(spark, html_df, cfg)
+    assert calls == {n: [2024, 2025] for n in ("cdmx", "edomex", "gral_stats")}
+    years = {r[0] for r in spark.read.parquet(cfg.table_path("cdmx"))
+             .select("year_num").collect()}
+    assert years == {2024, 2025}
+
+
+def test_hourly_run_stays_within_job_budget(spark, tmp_path):
+    """Job-count regression gate for one hourly ``run``: after a backfill,
+    a 2-page batch (the next hour plus a re-delivery of the last) must not
+    launch more jobs than measured.
+
+    Measured 29 jobs on local[4] with AQE on (the parse persist, one
+    page-check aggregate, the three gates, and per table a keyed merge
+    and a row count). Discovering the touched partitions in each merge and
+    inferring each table's schema for its count took 41. Budget = 29 + 2:
+    AQE and codegen versions move the count by a job or two, while a
+    per-table re-derivation adds at least three.
+    """
+    cfg = _cfg(tmp_path)
+    run(spark, spark.createDataFrame(
+        [Row(page_id=h, html=_page(h)) for h in range(6)]), cfg)
+    hourly = spark.createDataFrame(
+        [Row(page_id=6, html=_page(6)), Row(page_id=5, html=_page(5))])
+    sc = spark.sparkContext
+    group = f"hourly-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one hourly run")
+    try:
+        counts = run(spark, hourly, cfg)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert counts == {"cdmx": 14, "edomex": 7, "gral_stats": 7}
+    n = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n <= 31, f"{n} jobs for one hourly run (budget 31); see the docstring"
