@@ -7,13 +7,19 @@ lowercase → spaces→underscore) and its split/replace/substring helpers
 
 Two implementations of the normalize, per SURVEY.md §7 "hard parts":
 
-- ``normalize_text_col`` — pure native column expression (translate-based
-  accent fold + lower/trim/regexp_replace). Stays inside WholeStageCodegen,
-  no Python in the hot path; exact for the Spanish/Latin-1 domain the
-  reference actually sees (alcaldía names, month names).
+- ``normalize_text_col`` — a SQL renderer: given a column name or SQL
+  expression text it returns the SQL text of the native normalize
+  (translate-based accent fold + lower/trim/regexp_replace). Wrap it in
+  ``F.expr`` for a Column, or put it in ``selectExpr`` / ``where`` text: the
+  whole expression then costs one JVM call to build instead of one per
+  function. Stays inside WholeStageCodegen, no Python in the hot path;
+  exact for the Spanish/Latin-1 domain the reference actually sees
+  (alcaldía names, month names). ``fold_accents`` is its accent-fold part.
 - ``normalize_text_nfkd`` — Arrow-batched pandas UDF doing the exact NFKD →
   ascii-ignore fold of the reference, for inputs outside the translate
   table's domain. The slow path, kept off by default.
+
+``words`` and ``word_shingles`` build Columns.
 """
 
 from __future__ import annotations
@@ -25,6 +31,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
+
+from .sql import quote_str
 
 # Accent-fold table covering the Latin/Spanish domain of the reference data
 # (scrapper.py:23-24's NFKD+ascii-ignore restricted to chars that actually
@@ -45,17 +53,22 @@ _ACCENT_MAP = {
 }
 _ACCENT_SRC = "".join(_ACCENT_MAP)
 _ACCENT_DST = "".join(_ACCENT_MAP.values())
+_ACCENT_SQL_SRC = quote_str(_ACCENT_SRC)
+_ACCENT_SQL_DST = quote_str(_ACCENT_DST)
+_WHITESPACE_RUN = quote_str(r"\s+")
 
 
-def fold_accents(col: Column) -> Column:
-    """Native accent fold (á→a … ñ→n) — a char-map ``translate``, codegen'd."""
-    return F.translate(col, _ACCENT_SRC, _ACCENT_DST)
+def fold_accents(expr: str) -> str:
+    """SQL text of the native accent fold (á→a … ñ→n) of ``expr`` (a column
+    name or SQL text) — a char-map ``translate``, codegen'd."""
+    return f"translate({expr}, {_ACCENT_SQL_SRC}, {_ACCENT_SQL_DST})"
 
 
-def normalize_text_col(col: Column) -> Column:
-    """Native equivalent of scrapper.py:20-26 for the Latin domain:
-    accent-fold → trim → lower → whitespace runs → single underscore."""
-    return F.regexp_replace(F.lower(F.trim(fold_accents(col))), r"\s+", "_")
+def normalize_text_col(expr: str) -> str:
+    """SQL text of the native equivalent of scrapper.py:20-26 for the Latin
+    domain over ``expr`` (a column name or SQL text): accent-fold → trim →
+    lower → whitespace runs → single underscore."""
+    return f"regexp_replace(lower(trim({fold_accents(expr)})), {_WHITESPACE_RUN}, '_')"
 
 
 def _nfkd_fold(x: str | None) -> str | None:

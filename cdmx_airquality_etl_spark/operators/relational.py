@@ -116,7 +116,7 @@ def q_filter_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_normalize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
-    name_norm = normalize_text_col(F.col("p_name"))
+    name_norm = F.expr(normalize_text_col("p_name"))
     return part.select(
         "p_partkey",
         name_norm.alias("name_norm"),
@@ -141,16 +141,11 @@ def q_normalize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_regex_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    url = F.concat(
-        F.lit("https://cdn.example/"),
-        F.col("source"),
-        F.lit("/"),
-        F.col("lang"),
-        F.lit("_"),
-        F.col("doc_id").cast("string"),
-        F.lit(".svg"),
+    url = (
+        "concat('https://cdn.example/', source, '/', lang, '_', "
+        "CAST(doc_id AS STRING), '.svg')"
     )
-    return docs.select("doc_id", svg_basename(url).alias("icon_name"))
+    return docs.selectExpr("doc_id", f"{svg_basename(url)} AS icon_name")
 
 
 # ---------------------------------------------------------------------------
@@ -174,11 +169,11 @@ _MONTH_CASE_SQL = "CASE " + " ".join(
 )
 def q_map_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    month_num = F.month("o_orderdate")
+    month_num = "month(o_orderdate)"
     return (
-        orders.select(
-            map_decode(month_num, _NUM_TO_MONTH).alias("month_name_str"),
-            month_num.alias("month_num"),
+        orders.selectExpr(
+            f"{map_decode(month_num, _NUM_TO_MONTH)} AS month_name_str",
+            f"{month_num} AS month_num",
         )
         .groupBy("month_name_str", "month_num")
         .agg(F.count(F.lit(1)).alias("n_orders"))

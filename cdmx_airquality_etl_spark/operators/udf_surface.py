@@ -61,7 +61,7 @@ def q_udf_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the two implementations coincide on the corpus (they must: the
     corpus is ASCII; non-ASCII inputs are the UDF's reason to exist)."""
     docs = load_table(spark, sf_dir, "documents")
-    native = normalize_text_col(F.col("text"))
+    native = F.expr(normalize_text_col("text"))
     exact = normalize_text_nfkd(F.trim(F.col("text")))
     return docs.select(
         "doc_id",

@@ -12,10 +12,11 @@ of the three reference tables, with the reference's control behaviors:
   CREATE TABLE — each table's parquet directory is created by its first
   merge write.
 - V-GATE (scrapper.py:139-144): a run has two phases. The check phase counts
-  the unparseable pages and runs the three tables' quality gates,
-  concurrently, on one persisted parse. The merge phase starts only after
-  every check has finished: no write starts before every check passes — no
-  partial loads (M-TXN is per-table inside the merge writer).
+  the unparseable pages and runs the three tables' quality gates on one
+  persisted parse, the four checks concurrently, each on its own thread. The
+  merge phase starts only after every check has finished: no write starts
+  before every check passes — no partial loads (M-TXN is per-table inside
+  the merge writer).
 - C-LOG (scrapper.py:307-314): driver-side structured logging per stage.
 - C-SCHED: one `run()` call ≙ one launcher.bat invocation; the streaming
   module (streaming/ingest.py) is the push-based equivalent.
@@ -32,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
 
 from .plans.merge import merge_into_parquet
+from .quality import in_range, matches, not_null
 from .schemas import MERGE_KEYS, TABLE_SCHEMAS
 
 # ingest_reports (parse + ingest_parsed) is not called by run, which persists
@@ -104,26 +106,18 @@ class PipelineAbort(RuntimeError):
     """Raised when V-GATE rejects pages — the run writes nothing."""
 
 
-def _date_expectations():
-    """Expectations every ingested table shares (the V-GATE date identity
-    widened to ranges). Built lazily: Column exprs need the live session."""
-    from .quality import in_range, not_null
-
-    return [
-        not_null("report_ts"),
-        in_range("hour_num", 0, 23),
-        in_range("month_num", 1, 12),
-    ]
-
-
-def _fact_expectations():
-    """Station-fact expectations = shared date checks + station-key shape."""
-    from .quality import matches, not_null
-
-    return _date_expectations() + [
-        not_null("clave_str"),
-        matches("clave_str", "^[A-Z0-9]{2,5}$"),
-    ]
+# Expectations every ingested table shares (the V-GATE date identity widened
+# to ranges), and the station facts' = the shared date checks + station-key
+# shape.
+_DATE_EXPECTATIONS = [
+    not_null("report_ts"),
+    in_range("hour_num", 0, 23),
+    in_range("month_num", 1, 12),
+]
+_FACT_EXPECTATIONS = _DATE_EXPECTATIONS + [
+    not_null("clave_str"),
+    matches("clave_str", "^[A-Z0-9]{2,5}$"),
+]
 
 
 def run(
@@ -137,7 +131,7 @@ def run(
 
     The HTML parse runs once: its frame is persisted and the rejects and the
     three tables are derived from it. Then two phases, each on a thread pool
-    as wide as there are tables and under the caller's job group and tags:
+    with one thread per task and under the caller's job group and tags:
 
     - check: one aggregate over the parse (``summarize_pages``) and the three
       quality gates run concurrently. The aggregate counts the unparseable
@@ -149,8 +143,9 @@ def run(
       concurrently; each writes its own path under its own ``merge_lock``.
       Every table's rows come from the parseable pages, so each merge is
       handed the check's partition values and runs no discovery job of its
-      own. The row counts read each table with its declared schema
-      (``schemas.TABLE_SCHEMAS``), so no job infers one from the files.
+      own. The merges read their targets, and the row counts read each
+      table, with its declared schema (``schemas.TABLE_SCHEMAS``), so no job
+      infers one from the files.
 
     A failing check raises ``PipelineAbort`` naming every failing table.
     ``strict=False`` (CLI ``--lenient``) is the operator override: every
@@ -177,7 +172,7 @@ def run(
 
         def concurrently(tasks):
             # leaving the pool waits for every task, failed or not
-            with ThreadPoolExecutor(max_workers=len(frames)) as pool:
+            with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
                 return {
                     name: pool.submit(in_callers_context(task))
                     for name, task in tasks.items()
@@ -186,9 +181,9 @@ def run(
         checks = concurrently(
             {
                 "pages": partial(summarize_pages, parsed, config.partition_col),
-                "cdmx": partial(gate, result.cdmx, _fact_expectations()),
-                "edomex": partial(gate, result.edomex, _fact_expectations()),
-                "gral_stats": partial(gate, result.gral_stats, _date_expectations()),
+                "cdmx": partial(gate, result.cdmx, _FACT_EXPECTATIONS),
+                "edomex": partial(gate, result.edomex, _FACT_EXPECTATIONS),
+                "gral_stats": partial(gate, result.gral_stats, _DATE_EXPECTATIONS),
             }
         )
         problems = []
@@ -216,6 +211,7 @@ def run(
                 counter_col=config.counter_col,
                 partition_col=config.partition_col,
                 partitions=pages.partitions,
+                schema=TABLE_SCHEMAS[name],
             )
             n = spark.read.schema(TABLE_SCHEMAS[name]).parquet(path).count()
             log.info("merged table %s → %s (%d rows)", name, path, n)

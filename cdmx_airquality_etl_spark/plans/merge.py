@@ -31,12 +31,13 @@ from __future__ import annotations
 
 import contextlib
 from collections.abc import Iterable
-from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.types import StructType
 
+from ..functions.sql import quote_ident as _q
+from ..functions.sql import quote_str, sql_literal
 from ..hadoop_fs import path_exists
 from .maintenance import _local_path, merge_lock, rewrite_table
 
@@ -46,15 +47,17 @@ def collapse_to_key_grain(
 ) -> DataFrame:
     """Keep exactly one row per key from a batch (keep-last by ``order_by``
     desc, or an arbitrary-but-deterministic row if not given)."""
-    order_cols = [F.col(c).desc() for c in (order_by or [])] or [
-        F.col(c).desc() for c in source.columns if c not in keys
-    ]
+    order_cols = order_by or [c for c in source.columns if c not in keys]
     if not order_cols:  # key-only frame
         return source.dropDuplicates(keys)
-    w = Window.partitionBy(*keys).orderBy(*order_cols)
+    # DESC puts NULLs last: a non-NULL value wins the keep-last tie-break
+    w = (
+        f"PARTITION BY {', '.join(map(_q, keys))} "
+        f"ORDER BY {', '.join(f'{_q(c)} DESC' for c in order_cols)}"
+    )
     return (
-        source.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        source.selectExpr("*", f"row_number() OVER ({w}) AS __rn")
+        .where("__rn = 1")
         .drop("__rn")
     )
 
@@ -83,25 +86,32 @@ def merge_upsert(
     already idempotent, and the version guard makes the counter so —
     with no ledger side-channel: the version rides the same atomic write
     as the data, so there is no crash window between them.
+
+    The plan is built from SQL expression text: the join condition and the
+    output projection cost one JVM call each.
     """
-    t = target.alias("t")
-    s = source.alias("s")
-    cond = reduce(
-        lambda a, b: a & b, [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys]
-    )
-    joined = t.join(s, cond, "full_outer")
-
-    t_present = F.col(f"t.{keys[0]}").isNotNull()
-    s_present = F.col(f"s.{keys[0]}").isNotNull()
-
-    out_cols: list[Column] = [
-        F.coalesce(F.col(f"s.{k}"), F.col(f"t.{k}")).alias(k) for k in keys
-    ]
     if version_col is not None and version_col not in source.columns:
         raise ValueError(
             f"version_col {version_col!r} must be present in the source "
             f"(a constant batch version column)"
         )
+
+    def t(c: str) -> str:
+        return f"t.{_q(c)}"
+
+    def s(c: str) -> str:
+        return f"s.{_q(c)}"
+
+    t_present = f"{t(keys[0])} IS NOT NULL"
+    s_present = f"{s(keys[0])} IS NOT NULL"
+
+    def source_wins(c: str) -> str:
+        return f"CASE WHEN {s_present} THEN {s(c)} ELSE {t(c)} END"
+
+    cond = " AND ".join(f"{t(k)} = {s(k)}" for k in keys)
+    joined = target.alias("t").join(source.alias("s"), F.expr(cond), "full_outer")
+
+    out_cols = [f"coalesce({s(k)}, {t(k)}) AS {_q(k)}" for k in keys]
     skip = set(keys) | {counter_col, version_col}
     source_cols = set(source.columns)
     data_cols = [c for c in target.columns if c not in skip]
@@ -110,55 +120,51 @@ def merge_upsert(
             # matched → source wins even if source value is NULL (the reference
             # stores NULLs, scrapper.py:212); source-only → source; target-only
             # → target.
-            out_cols.append(
-                F.when(s_present, F.col(f"s.{c}"))
-                .otherwise(F.col(f"t.{c}"))
-                .alias(c)
-            )
+            out_cols.append(f"{source_wins(c)} AS {_q(c)}")
         else:
-            out_cols.append(F.col(f"t.{c}").alias(c))
+            out_cols.append(f"{t(c)} AS {_q(c)}")
     # columns new in source (schema widening)
     for c in source.columns:
         if c not in target.columns and c not in skip:
-            out_cols.append(F.col(f"s.{c}").alias(c))
+            out_cols.append(f"{s(c)} AS {_q(c)}")
 
     if version_col is not None:
         v_new = (
-            F.when(s_present, F.col(f"s.{version_col}"))
-            .otherwise(F.col(f"t.{version_col}"))
+            source_wins(version_col)
             if version_col in target.columns
-            else F.col(f"s.{version_col}")
+            else s(version_col)
         )
-        out_cols.append(v_new.alias(version_col))
+        out_cols.append(f"{v_new} AS {_q(version_col)}")
 
     if counter_col is not None:
         prev = (
-            F.coalesce(F.col(f"t.{counter_col}"), F.lit(1))
-            if counter_col in target.columns
-            else F.lit(1)
+            f"coalesce({t(counter_col)}, 1)" if counter_col in target.columns else "1"
         )
+        matched = f"{t_present} AND {s_present}"
         if version_col is not None and version_col in target.columns:
             # bump only when this batch version hasn't touched the row yet
             # (null-safe: a pre-versioned target row bumps normally)
-            fresh = ~F.col(f"t.{version_col}").eqNullSafe(
-                F.col(f"s.{version_col}")
-            )
-            bump = F.when(t_present & s_present & fresh, prev + 1).when(
-                t_present, prev
-            )
-        else:
-            bump = F.when(t_present & s_present, prev + 1).when(t_present, prev)
-        out_cols.append(bump.otherwise(F.lit(1)).alias(counter_col))
+            matched += f" AND NOT ({t(version_col)} <=> {s(version_col)})"
+        bump = (
+            f"CASE WHEN {matched} THEN {prev} + 1 "
+            f"WHEN {t_present} THEN {prev} ELSE 1 END"
+        )
+        out_cols.append(f"{bump} AS {_q(counter_col)}")
 
-    return joined.select(*out_cols)
+    return joined.selectExpr(*out_cols)
 
 
-def _in_partitions(part: Column, values: list) -> Column:
-    """``part`` is one of ``values``, never NULL: a NULL ``part`` matches
-    when None is among the values (a plain ``isin`` never matches NULL)."""
+def _in_partitions(part: str, values: list) -> str:
+    """SQL text: ``part`` is one of ``values``, never NULL: a NULL ``part``
+    matches when None is among the values (a plain ``IN`` never matches
+    NULL)."""
     present = [v for v in values if v is not None]
-    hit = F.coalesce(part.isin(present), F.lit(False))
-    return hit | part.isNull() if len(present) < len(values) else hit
+    hit = (
+        f"coalesce({part} IN ({', '.join(map(sql_literal, present))}), false)"
+        if present
+        else "false"
+    )
+    return f"({hit} OR {part} IS NULL)" if len(present) < len(values) else hit
 
 
 def merge_into_parquet(
@@ -172,6 +178,7 @@ def merge_into_parquet(
     version_col: str | None = None,
     lock_timeout: float = 300.0,
     partitions: Iterable | None = None,
+    schema: StructType | None = None,
 ) -> None:
     """Merge a batch into a parquet table at ``path`` (M-TXN equivalent).
 
@@ -191,6 +198,10 @@ def merge_into_parquet(
     batch's partition column makes the write job fail before dynamic
     overwrite commits, so the table is left as it was and no rows are
     dropped. ``partitions`` requires ``partition_col``.
+
+    ``schema`` is the table's declared schema: the partitioned branch then
+    reads the target with it instead of inferring one from the files (a
+    footer-reading job per merge).
 
     Partition matching is null-safe: a NULL partition value touches the
     NULL partition (``__HIVE_DEFAULT_PARTITION__``), whose target rows are
@@ -221,17 +232,15 @@ def merge_into_parquet(
     source = collapse_to_key_grain(source, keys)
     if partitions is not None:
         partitions = list(partitions)
-        part = F.col(partition_col)
+        part = _q(partition_col)
+        message = quote_str(f"merge_into_parquet: {partition_col}=")
         source = source.withColumn(
             partition_col,
-            F.when(_in_partitions(part, partitions), part).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(f"merge_into_parquet: {partition_col}="),
-                        F.coalesce(part.cast("string"), F.lit("NULL")),
-                        F.lit(" is outside the given partitions"),
-                    )
-                )
+            F.expr(
+                f"CASE WHEN {_in_partitions(part, partitions)} THEN {part} "
+                f"ELSE raise_error(concat({message}, "
+                f"coalesce(CAST({part} AS STRING), 'NULL'), "
+                f"' is outside the given partitions')) END"
             ),
         )
     if counter_col is not None and counter_col not in source.columns:
@@ -265,15 +274,16 @@ def merge_into_parquet(
         if not path_exists(spark, path):
             seed.write.mode("overwrite").partitionBy(partition_col).parquet(path)
             return
-        target = spark.read.parquet(path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        target = reader.parquet(path)
         if partitions is None:
             partitions = [
                 r[0] for r in source.select(partition_col).distinct().collect()
             ]
-        touched = _in_partitions(F.col(partition_col), partitions)
+        touched = _in_partitions(_q(partition_col), partitions)
         if check_partition_alignment:
             stray = (
-                target.filter(~touched)
+                target.where(f"NOT ({touched})")
                 .select(*keys)
                 .join(F.broadcast(source.select(*keys).distinct()), keys, "left_semi")
                 .count()
@@ -289,7 +299,7 @@ def merge_into_parquet(
         # would silently switch every later partitioned overwrite in the
         # session to dynamic semantics
         (
-            merged(target.filter(touched))
+            merged(target.where(touched))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(partition_col)
@@ -309,10 +319,6 @@ def merge_into_parquet(
 # installed — same dispatch, same generated SQL, snapshot-atomic
 # in-memory commit instead of a file-format commit.
 ACID_PROVIDERS = {"delta", "iceberg", "hudi", "graftmem"}
-
-
-def _q(ident: str) -> str:
-    return f"`{ident}`"
 
 
 def build_merge_into_sql(

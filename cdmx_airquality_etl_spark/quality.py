@@ -10,42 +10,48 @@ Scale design: every check compiles to a conditional aggregate over one scan
 (count_if), so a 50-expectation suite on a 100 TB batch costs one pass — not
 50. Uniqueness is the exception (needs a groupBy); it shares the same
 action. No row is ever collected except the violation examples (capped).
+
+Predicates are SQL expression text: a suite's aggregate is one
+``selectExpr``, one JVM call to build however many expectations it holds.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from .functions.sql import quote_ident, quote_str, sql_literal
 
 
 @dataclass
 class Expectation:
     name: str
-    predicate: Column  # True = row passes
+    predicate: str  # SQL text; true = row passes
 
 
 def not_null(col: str) -> Expectation:
-    return Expectation(f"not_null({col})", F.col(col).isNotNull())
+    return Expectation(f"not_null({col})", f"{quote_ident(col)} IS NOT NULL")
 
 
 def in_range(col: str, lo, hi) -> Expectation:
+    c = quote_ident(col)
     return Expectation(
         f"in_range({col},{lo},{hi})",
-        F.col(col).isNull() | F.col(col).between(lo, hi),
+        f"{c} IS NULL OR ({c} >= {sql_literal(lo)} AND {c} <= {sql_literal(hi)})",
     )
 
 
 def in_set(col: str, values: list) -> Expectation:
-    return Expectation(
-        f"in_set({col})", F.col(col).isNull() | F.col(col).isin(values)
-    )
+    c = quote_ident(col)
+    listed = f"{c} IN ({', '.join(map(sql_literal, values))})" if values else "false"
+    return Expectation(f"in_set({col})", f"{c} IS NULL OR {listed}")
 
 
 def matches(col: str, pattern: str) -> Expectation:
+    c = quote_ident(col)
     return Expectation(
-        f"matches({col})", F.col(col).isNull() | F.col(col).rlike(pattern)
+        f"matches({col})", f"{c} IS NULL OR {c} RLIKE {quote_str(pattern)}"
     )
 
 
@@ -78,27 +84,23 @@ def evaluate(
 ) -> QualityReport:
     """Evaluate all expectations in one aggregate pass (+ one groupBy pass
     when ``unique_keys`` is given)."""
-    aggs = [F.count(F.lit(1)).alias("__n")] + [
-        F.count_if(~e.predicate).alias(e.name) for e in expectations
+    aggs = ["count(1) AS __n"] + [
+        f"count_if(NOT ({e.predicate})) AS {quote_ident(e.name)}"
+        for e in expectations
     ]
-    row = df.agg(*aggs).first()
+    row = df.selectExpr(*aggs).first()
     violations = {
         e.name: row[e.name] for e in expectations if row[e.name] > 0
     }
 
     dup = 0
     if unique_keys:
-        dup = (
-            df.groupBy(*unique_keys)
-            .count()
-            .filter(F.col("count") > 1)
-            .count()
-        )
+        dup = df.groupBy(*unique_keys).count().where("`count` > 1").count()
 
     examples: dict[str, list] = {}
     for e in expectations:
         if e.name in violations:
-            examples[e.name] = df.filter(~e.predicate).limit(n_examples).collect()
+            examples[e.name] = df.where(f"NOT ({e.predicate})").limit(n_examples).collect()
     return QualityReport(
         n_rows=row["__n"],
         violations=violations,

@@ -8,7 +8,8 @@ raw pages instead of one page at a time:
   emits raw div texts + table rows. This is the ONLY Python-in-the-loop step;
   the reference's lxml stays a per-page CPU cost exactly the same way, but
   here pages are partitioned across executors.
-- Everything downstream is native column expressions: the Spanish date-line
+- Everything downstream is native expressions, written as SQL expression
+  text so that each DataFrame step is one JVM call: the Spanish date-line
   parse (F-REPL/F-SPLIT/F-SUBSTR, scrapper.py:38-52), month decode (F-DICT,
   :49), report_ts pack (F-CONCAT, :51), malformed-row filter (F-ROWFILT,
   :94-95), svg quality extraction (F-IMG, :101-102), text normalization
@@ -32,8 +33,7 @@ from collections.abc import Iterator
 from typing import NamedTuple
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -44,6 +44,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions import map_decode, normalize_text_col, svg_basename
+from ..functions.sql import quote_ident, quote_str
 from ..schemas import MONTH_MAP
 
 # div ids from the reference's extract config (config.yaml:1-3,18-24)
@@ -142,43 +143,58 @@ class IngestResult(NamedTuple):
     rejects: DataFrame
 
 
-def _header_fields(parsed: DataFrame) -> DataFrame:
-    """Native Spanish date-line parse + temp cast (scrapper.py:35-65).
+_HOUR_MARK = quote_str(r"\bh,?")
+_WHITESPACE_RUN = quote_str(r"\s+")
+_SIGNED_INT = quote_str(r"(-?\d+)")
+# The date line split into words: '14 h, miércoles 23 de mayo de 2025' →
+# [14, miércoles, 23, de, mayo, de, 2025] (F-REPL/F-SPLIT, scrapper.py:38-41)
+_DATE_WORDS = (
+    f"filter(split(trim(regexp_replace(hora_text, {_HOUR_MARK}, ' ')), "
+    f"{_WHITESPACE_RUN}), x -> x != '')"
+)
 
-    '14 h, miércoles 23 de mayo de 2025' → hour/weekday/day/month/year parts,
-    packed report_ts; '24 °C' → int celsius.
-    """
-    cleaned = F.regexp_replace(F.col("hora_text"), r"\bh,?", " ")
-    parts = F.filter(F.split(F.trim(cleaned), r"\s+"), lambda x: x != "")
-    month_name = normalize_text_col(F.element_at(parts, 5))
+
+def _date_word(i: int) -> str:
+    return f"element_at({_DATE_WORDS}, {i})"
+
+
+def _header_exprs() -> list[str]:
+    """SQL text of the native Spanish date-line parse + temp cast
+    (scrapper.py:35-65): '14 h, miércoles 23 de mayo de 2025' →
+    hour/weekday/day/month/year parts, packed report_ts; '24 °C' → int
+    celsius."""
+    month_name = normalize_text_col(_date_word(5))
     month_num = map_decode(month_name, MONTH_MAP)
-    year = F.element_at(parts, 7).cast("int")
-    day = F.element_at(parts, 3).cast("int")
-    hour = F.substring(F.element_at(parts, 1), 1, 2).cast("int")
-
+    year = f"CAST({_date_word(7)} AS INT)"
+    day = f"CAST({_date_word(3)} AS INT)"
+    hour = f"CAST(substring({_date_word(1)}, 1, 2) AS INT)"
     report_ts = (
-        year.cast("long") * 1000000
-        + month_num.cast("long") * 10000
-        + day.cast("long") * 100
-        + hour.cast("long")
+        f"CAST({year} AS BIGINT) * 1000000 + CAST({month_num} AS BIGINT) * 10000"
+        f" + CAST({day} AS BIGINT) * 100 + CAST({hour} AS BIGINT)"
     )
-    temp = F.regexp_extract(F.col("temp_text"), r"(-?\d+)", 1).cast("int")
+    temp = f"CAST(regexp_extract(temp_text, {_SIGNED_INT}, 1) AS INT)"
+    return [
+        "*",
+        f"{report_ts} AS report_ts",
+        f"{normalize_text_col(_date_word(2))} AS week_day_str",
+        f"{day} AS month_day_num",
+        f"{month_name} AS month_name_str",
+        f"{month_num} AS month_num",
+        f"{year} AS year_num",
+        f"{hour} AS hour_num",
+        f"{temp} AS temp_celsius_int",
+        f"{normalize_text_col('reco_text')} AS reco_uiv_str",
+        f"{normalize_text_col('pronostico_today')} AS score_air_str",
+        f"{normalize_text_col('pronostico_tomorrow')} AS score_air_next_day_str",
+    ]
 
-    return parsed.withColumns(
-        {
-            "report_ts": report_ts,
-            "week_day_str": normalize_text_col(F.element_at(parts, 2)),
-            "month_day_num": day,
-            "month_name_str": month_name,
-            "month_num": month_num,
-            "year_num": year,
-            "hour_num": hour,
-            "temp_celsius_int": temp,
-            "reco_uiv_str": normalize_text_col(F.col("reco_text")),
-            "score_air_str": normalize_text_col(F.col("pronostico_today")),
-            "score_air_next_day_str": normalize_text_col(F.col("pronostico_tomorrow")),
-        }
-    )
+
+_HEADER_EXPRS = _header_exprs()
+
+
+def _header_fields(parsed: DataFrame) -> DataFrame:
+    """``parsed`` plus its header columns (see :func:`_header_exprs`)."""
+    return parsed.selectExpr(*_HEADER_EXPRS)
 
 
 _DATE_PART_COLS = [
@@ -198,28 +214,23 @@ def _station_fact(headered: DataFrame, rows_col: str, geo_col: str) -> DataFrame
     explode carries the report-header columns onto every station row — the
     T-LIT constant-enrichment (scrapper.py:154-165) without a join.
     """
-    data_rows = F.slice(
-        F.col(rows_col), 3, F.greatest(F.size(rows_col) - 2, F.lit(1))
-    )
-    row = F.explode(data_rows).alias("row")
-    base = headered.select("report_ts", *_DATE_PART_COLS, row).filter(
-        F.size("row.cells") >= 4  # F-ROWFILT (scrapper.py:94-95)
-    )
-    cells = F.col("row.cells")
-    return base.select(
+    data_rows = f"slice({rows_col}, 3, greatest(size({rows_col}) - 2, 1))"
+    base = headered.selectExpr(
+        "report_ts", *_DATE_PART_COLS, f"explode({data_rows}) AS `row`"
+    ).where("size(`row`.cells) >= 4")  # F-ROWFILT (scrapper.py:94-95)
+    return base.selectExpr(
         "report_ts",
-        F.element_at(cells, 1).alias("clave_str"),
-        normalize_text_col(F.element_at(cells, 2)).alias(geo_col),
-        svg_basename(F.col("row.img_src")).alias("calidad_del_aire_str"),
-        normalize_text_col(F.element_at(cells, 4)).alias("parametro_str"),
-        F.lit(1).alias("nupdates"),
+        "element_at(`row`.cells, 1) AS clave_str",
+        f"{normalize_text_col('element_at(`row`.cells, 2)')} AS {geo_col}",
+        f"{svg_basename('`row`.img_src')} AS calidad_del_aire_str",
+        f"{normalize_text_col('element_at(`row`.cells, 4)')} AS parametro_str",
+        "1 AS nupdates",
         *_DATE_PART_COLS,
     )
 
 
-def _unparseable() -> Column:
-    """V-GATE: the page's date line did not parse (scrapper.py:53-55)."""
-    return F.col("report_ts").isNull()
+# V-GATE: the page's date line did not parse (scrapper.py:53-55)
+_UNPARSEABLE = "report_ts IS NULL"
 
 
 class PageSummary(NamedTuple):
@@ -237,12 +248,14 @@ def summarize_pages(parsed: DataFrame, partition_col: str | None) -> PageSummary
     that page's header columns, so the values cover each table's partitions;
     a page with no station rows only adds a partition a table rewrites
     unchanged."""
-    aggs = [F.count_if(_unparseable()).alias("rejects")]
+    aggs = [f"count_if({_UNPARSEABLE}) AS rejects"]
     if partition_col:
         # a struct keeps a NULL value, which collect_set would skip
-        value = F.struct(partition_col)
-        aggs.append(F.collect_set(F.when(~_unparseable(), value)).alias("values"))
-    row = _header_fields(parsed).agg(*aggs).first()
+        aggs.append(
+            f"collect_set(CASE WHEN NOT ({_UNPARSEABLE}) "
+            f"THEN struct({quote_ident(partition_col)}) END) AS `values`"
+        )
+    row = _header_fields(parsed).selectExpr(*aggs).first()
     values = [v[0] for v in row["values"]] if partition_col else None
     return PageSummary(rejects=row["rejects"], partitions=values)
 
@@ -259,16 +272,16 @@ def ingest_parsed(parsed: DataFrame) -> IngestResult:
     that persist ``parsed`` get all four frames from one parse."""
     headered = _header_fields(parsed)
 
-    ok = headered.filter(~_unparseable())
-    rejects = headered.filter(_unparseable()).select("page_id", "hora_text")
+    ok = headered.where(f"NOT ({_UNPARSEABLE})")
+    rejects = headered.where(_UNPARSEABLE).selectExpr("page_id", "hora_text")
 
-    gral_stats = ok.select(
+    gral_stats = ok.selectExpr(
         "report_ts",
         "temp_celsius_int",
         "reco_uiv_str",
         "score_air_str",
         "score_air_next_day_str",
-        F.lit(1).alias("nupdates"),
+        "1 AS nupdates",
         *_DATE_PART_COLS,
     )
     cdmx = _station_fact(ok, "cdmx_rows", "alcaldia_str")

@@ -2,6 +2,10 @@
 reference's domain (SURVEY.md §5.2; normalize_text at
 /root/reference/scrapper.py:20-26, report key at :51)."""
 
+import datetime
+import decimal
+
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -15,6 +19,7 @@ from cdmx_airquality_etl_spark.functions import (
     unpack_report_ts,
     word_shingles,
 )
+from cdmx_airquality_etl_spark.functions.sql import quote_str, sql_literal
 from cdmx_airquality_etl_spark.schemas import MONTH_MAP
 
 GOLDEN = [
@@ -41,7 +46,7 @@ def test_normalize_text_py_golden():
 def test_normalize_col_and_nfkd_udf_agree(spark):
     df = spark.createDataFrame([Row(s=r) for r, _ in GOLDEN if r is not None])
     out = df.select(
-        normalize_text_col(F.col("s")).alias("native"),
+        F.expr(normalize_text_col("s")).alias("native"),
         normalize_text_nfkd(F.trim(F.col("s"))).alias("nfkd"),
     ).collect()
     for row in out:
@@ -65,13 +70,13 @@ def test_svg_basename(spark):
     df = spark.createDataFrame(
         [Row(src="https://x/y/buena.svg"), Row(src="no-match"), Row(src="a/muy_mala.svg")]
     )
-    vals = [r[0] for r in df.select(svg_basename(F.col("src"))).collect()]
+    vals = [r[0] for r in df.select(F.expr(svg_basename("src"))).collect()]
     assert vals == ["buena", "", "muy_mala"]  # scrapper.py:101-102
 
 
 def test_month_map_decode(spark):
     df = spark.createDataFrame([Row(m="mayo"), Row(m="enero"), Row(m="nope")])
-    vals = [r[0] for r in df.select(map_decode(F.col("m"), MONTH_MAP)).collect()]
+    vals = [r[0] for r in df.select(F.expr(map_decode("m", MONTH_MAP))).collect()]
     assert vals == [5, 1, None]  # config.yaml:5-17
 
 
@@ -81,3 +86,26 @@ def test_word_shingles(spark):
     assert vals[0] == ["a b c", "b c d"]
     assert vals[1] == ["x y"]  # shorter than k → single bounded shingle
     assert vals[2] == ["solo"]
+
+
+def test_quote_str_round_trips(spark):
+    # Spark unescapes backslash sequences inside SQL string literals
+    tricky = ["plain", "it's", "back\\slash", "\\d+ and \\'", "%_\\%\\_", "ñ é", "\\u0041"]
+    got = spark.sql(
+        "SELECT " + ", ".join(f"{quote_str(v)} AS c{i}" for i, v in enumerate(tricky))
+    ).first()
+    assert list(got) == tricky
+
+
+@pytest.mark.parametrize(
+    "value",
+    [None, True, 7, -(2**31), 2**40, 1.5, -0.25, decimal.Decimal("-12.50"), "a'b",
+     datetime.date(2024, 2, 29)],
+)
+def test_sql_literal_types_like_lit(spark, value):
+    # same value and type as F.lit, so text and Column plans agree
+    row = spark.range(1).select(
+        F.expr(sql_literal(value)).alias("sql"), F.lit(value).alias("lit"))
+    assert row.schema["sql"].dataType == row.schema["lit"].dataType
+    got = row.first()
+    assert got["sql"] == got["lit"]

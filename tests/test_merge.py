@@ -10,6 +10,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from cdmx_airquality_etl_spark.plans.merge import (
+    build_merge_into_sql,
     collapse_to_key_grain,
     merge_into_parquet,
     merge_upsert,
@@ -198,3 +199,22 @@ def test_partitions_that_miss_a_batch_value_fail_before_commit(spark, tmp_path):
                        partition_col="year_num", partitions=[2023, 2024, 2025, 2026])
     out = {r["k"]: (r["v"], r["nupdates"]) for r in spark.read.parquet(path).collect()}
     assert out == {1: ("x", 2), 2: ("y", 2), 3: ("z", 1)}
+
+
+def test_backtick_in_a_column_name_is_quoted(spark):
+    # identifiers in the merge SQL text double an embedded backtick
+    weird = "we`ird"
+    schema = f"`k``ey` int, `{weird.replace('`', '``')}` string, nupdates int"
+    target = spark.createDataFrame([(1, "a", 1), (2, "b", 1)], schema)
+    source = spark.createDataFrame([(2, "B", 5), (3, "c", 5)], schema).drop("nupdates")
+    out = merge_upsert(target, collapse_to_key_grain(source, ["k`ey"]), ["k`ey"],
+                       counter_col="nupdates")
+    assert out.columns == ["k`ey", weird, "nupdates"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, "a", 1), (2, "B", 2), (3, "c", 1)]
+
+    sql = build_merge_into_sql("tgt", "src", ["k`ey"], [weird], "nupdates")
+    assert "ON t.`k``ey` = s.`k``ey`" in sql
+    assert "t.`we``ird` = s.`we``ird`" in sql
+    # the statement parses; before, `we`ird` closed the quote early
+    spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)

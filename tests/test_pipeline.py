@@ -2,12 +2,14 @@
 pages, V-GATE abort without partial load, config round-trip."""
 
 import os
+import threading
 import uuid
 
 import pytest
+from py4j.clientserver import ClientServerConnection
 from pyspark.sql import Row
 
-from cdmx_airquality_etl_spark import pipeline
+from cdmx_airquality_etl_spark import pipeline, quality
 from cdmx_airquality_etl_spark.pipeline import (
     PipelineAbort,
     PipelineConfig,
@@ -220,3 +222,57 @@ def test_hourly_run_stays_within_job_budget(spark, tmp_path):
     assert counts == {"cdmx": 14, "edomex": 7, "gral_stats": 7}
     n = len(sc.statusTracker().getJobIdsForGroup(group))
     assert n <= 31, f"{n} jobs for one hourly run (budget 31); see the docstring"
+
+
+def test_check_phase_runs_its_four_checks_at_once(spark, tmp_path, monkeypatch):
+    # the page summary and the three gates each get a thread: none of them
+    # waits for another to finish
+    barrier = threading.Barrier(4, timeout=60)
+    real_summary, real_gate = pipeline.summarize_pages, quality.gate
+
+    def together(real):
+        def task(*args, **kwargs):
+            barrier.wait()
+            return real(*args, **kwargs)
+        return task
+
+    monkeypatch.setattr(pipeline, "summarize_pages", together(real_summary))
+    monkeypatch.setattr(quality, "gate", together(real_gate))
+    html_df = spark.createDataFrame([Row(page_id=1, html=PAGE)])
+    assert run(spark, html_df, _cfg(tmp_path)) == {
+        "cdmx": 2, "edomex": 1, "gral_stats": 1}
+
+
+def test_hourly_run_driver_command_budget(spark, tmp_path, monkeypatch):
+    """Driver→JVM command gate for one hourly ``run``: the py4j commands the
+    calling thread sends (counted by wrapping
+    ``py4j.clientserver.ClientServerConnection.send_command``), after the
+    same 6-page backfill and 2-page hourly batch as the job budget test.
+
+    Measured 194 on local[4]: the run's DataFrames are built from SQL
+    expression text, one JVM call per DataFrame step. Building them from
+    ``F.col`` / ``.cast`` / ``.alias`` / ``when`` Columns, one JVM round
+    trip per call, sent 2,147. Budget = 400: a step or expectation added
+    costs a few commands, a return to per-call Column building costs
+    hundreds.
+    """
+    cfg = _cfg(tmp_path)
+    run(spark, spark.createDataFrame(
+        [Row(page_id=h, html=_page(h)) for h in range(6)]), cfg)
+    hourly = spark.createDataFrame(
+        [Row(page_id=6, html=_page(6)), Row(page_id=5, html=_page(5))])
+    caller = threading.current_thread()
+    sent = []
+    real_send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if threading.current_thread() is caller:
+            sent.append(command)
+        return real_send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    counts = run(spark, hourly, cfg)
+    monkeypatch.undo()
+    assert counts == {"cdmx": 14, "edomex": 7, "gral_stats": 7}
+    n = len(sent)
+    assert 0 < n <= 400, f"{n} commands on the calling thread (budget 400)"

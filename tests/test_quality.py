@@ -3,6 +3,7 @@ examples, uniqueness check, and the no-partial-load gate contract."""
 
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from cdmx_airquality_etl_spark.quality import (
     QualityGateError,
@@ -28,8 +29,6 @@ def _df(spark):
 
 
 def _expectations():
-    # built lazily: Column exprs need the JVM, which only exists once the
-    # session fixture has started
     return [
         not_null("k"),
         in_range("temp", -30, 60),
@@ -66,3 +65,14 @@ def test_gate_raises_and_passes(spark):
 
     clean = _df(spark).filter("k = 1")
     assert gate(clean, _expectations(), unique_keys=["k"]) is clean
+
+
+def test_matches_escapes_backslash_and_quote_like_rlike(spark):
+    # the pattern is rendered into SQL text: its backslashes and quote must
+    # reach the regex engine as written, as Column.rlike passes them
+    pattern = r"^[A-Z]\d'?$"
+    codes = ["A1", "A1'", "B'", "a1", None, "Z9'", "Q\\d", "Q12"]
+    df = spark.createDataFrame([Row(code=c) for c in codes], "code string")
+    want = df.filter(~(F.col("code").isNull() | F.col("code").rlike(pattern))).count()
+    assert want == 4  # B', a1, Q\d, Q12
+    assert evaluate(df, [matches("code", pattern)]).violations == {"matches(code)": want}
