@@ -8,8 +8,10 @@ identifier and literal in that text goes through one of these renderers.
 
 from __future__ import annotations
 
+import calendar
 import datetime
 import decimal
+import time
 
 
 def quote_ident(name: str) -> str:
@@ -25,7 +27,12 @@ def quote_str(value: str) -> str:
 
 def sql_literal(value) -> str:
     """The SQL literal of a Python value, typed as ``F.lit`` types it:
-    ints stay INT (BIGINT past 32 bits), floats DOUBLE, strings STRING."""
+    ints stay INT (BIGINT past 32 bits), floats DOUBLE, strings STRING.
+
+    Datetimes follow pyspark's py4j converters. A naive one is a
+    TIMESTAMP_NTZ of its wall clock when ``spark.sql.timestampType``
+    prefers that type. Otherwise a datetime is the TIMESTAMP instant it
+    names; a naive one is read in the Python process's local time zone."""
     if value is None:
         return "NULL"
     if isinstance(value, bool):
@@ -38,6 +45,16 @@ def sql_literal(value) -> str:
         return f"{value}BD"
     if isinstance(value, str):
         return quote_str(value)
-    if isinstance(value, datetime.date) and not isinstance(value, datetime.datetime):
+    if isinstance(value, datetime.datetime):
+        if value.tzinfo is None:
+            from pyspark.sql.utils import is_timestamp_ntz_preferred
+
+            if is_timestamp_ntz_preferred():
+                return f"TIMESTAMP_NTZ '{value.isoformat(' ', 'microseconds')}'"
+            seconds = time.mktime(value.timetuple())
+        else:
+            seconds = calendar.timegm(value.utctimetuple())
+        return f"timestamp_micros({int(seconds) * 1_000_000 + value.microsecond})"
+    if isinstance(value, datetime.date):
         return f"DATE '{value.isoformat()}'"
     raise TypeError(f"no SQL literal for {type(value).__name__} value {value!r}")

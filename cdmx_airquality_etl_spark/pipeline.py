@@ -30,6 +30,7 @@ from dataclasses import dataclass, field
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import IntegerType, StructField, StructType
 from pyspark.util import inheritable_thread_target
 
 from .plans.merge import merge_into_parquet
@@ -92,6 +93,17 @@ class PipelineConfig:
     def table_path(self, name: str) -> str:
         return self.tables.get(name, f"{self.warehouse_dir}/{self.database}/{name}")
 
+    def table_schema(self, name: str) -> StructType:
+        """Table ``name``'s declared schema (``schemas.TABLE_SCHEMAS``). The
+        ingest always emits ``nupdates``, so another ``counter_col`` is one
+        more column, appended where the merge's seed adds it."""
+        declared = TABLE_SCHEMAS[name]
+        if self.counter_col in declared.fieldNames():
+            return declared
+        return StructType(
+            declared.fields + [StructField(self.counter_col, IntegerType(), True)]
+        )
+
 
 def bootstrap(spark: SparkSession, config: PipelineConfig) -> None:
     """Idempotent catalog bootstrap (D-CREATEDB): creates only the database.
@@ -144,7 +156,7 @@ def run(
       Every table's rows come from the parseable pages, so each merge is
       handed the check's partition values and runs no discovery job of its
       own. The merges read their targets, and the row counts read each
-      table, with its declared schema (``schemas.TABLE_SCHEMAS``), so no job
+      table, with its declared schema (``config.table_schema``), so no job
       infers one from the files.
 
     A failing check raises ``PipelineAbort`` naming every failing table.
@@ -203,6 +215,7 @@ def run(
 
         def merge(name: str) -> int:
             path = config.table_path(name)
+            schema = config.table_schema(name)
             merge_into_parquet(
                 spark,
                 frames[name],
@@ -211,9 +224,9 @@ def run(
                 counter_col=config.counter_col,
                 partition_col=config.partition_col,
                 partitions=pages.partitions,
-                schema=TABLE_SCHEMAS[name],
+                schema=schema,
             )
-            n = spark.read.schema(TABLE_SCHEMAS[name]).parquet(path).count()
+            n = spark.read.schema(schema).parquet(path).count()
             log.info("merged table %s → %s (%d rows)", name, path, n)
             return n
 

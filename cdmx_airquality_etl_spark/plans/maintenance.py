@@ -38,6 +38,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # A path is remote when it carries an authority-form URI (scheme://) or ANY
 # scheme in its single-colon shorthand form — 'scheme:/path' (colon followed
@@ -234,6 +235,7 @@ def rewrite_table(
     path: str,
     build: Callable[[DataFrame | None], DataFrame],
     lock_timeout: float = 300.0,
+    schema: StructType | None = None,
 ) -> None:
     """Rewrite the local parquet table at ``path`` as ``build(current)`` —
     the one write-tmp-then-rename protocol every local rewrite uses (M-TXN:
@@ -245,7 +247,9 @@ def rewrite_table(
        maintenance pass, recover_table or vacuum waits instead of swapping
        in a stale copy (lost update); ``lock_timeout`` expiry raises
        :class:`MergeLockTimeout`.
-    2. read: the current table, or ``None`` when ``path`` does not exist.
+    2. read: the current table, or ``None`` when ``path`` does not exist;
+       with ``schema`` given it is read with that schema instead of one
+       inferred from the files.
     3. build: ``build(current)`` returns the new contents. It must not call
        another locked operation on the same path — the lock is not
        reentrant, so that would wait on itself until ``lock_timeout``.
@@ -263,7 +267,8 @@ def rewrite_table(
     local = _local_path(path)
     with merge_lock(local, timeout=lock_timeout):
         exists = os.path.exists(local)
-        writer = build(spark.read.parquet(path) if exists else None).write
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        writer = build(reader.parquet(path) if exists else None).write
         pcols = partition_columns(local) if exists else []
         if pcols:
             writer = writer.partitionBy(*pcols)

@@ -199,9 +199,13 @@ def merge_into_parquet(
     overwrite commits, so the table is left as it was and no rows are
     dropped. ``partitions`` requires ``partition_col``.
 
-    ``schema`` is the table's declared schema: the partitioned branch then
-    reads the target with it instead of inferring one from the files (a
-    footer-reading job per merge).
+    ``schema`` is the table's declared schema: both branches then read the
+    target with it instead of inferring one from the files (a
+    footer-reading job per merge). It must name every column of the batch
+    and ``counter_col`` / ``version_col`` (ValueError before any job
+    otherwise: a counter read as missing would restart at 1). A target
+    column it leaves out is dropped by the merge, so pass it only for a
+    table whose columns are all declared.
 
     Partition matching is null-safe: a NULL partition value touches the
     NULL partition (``__HIVE_DEFAULT_PARTITION__``), whose target rows are
@@ -229,6 +233,16 @@ def merge_into_parquet(
     concurrency-safe route, and the partitioned branch here is documented
     single-writer.
     """
+    if schema is not None:
+        missing = [
+            c
+            for c in [*source.columns, counter_col, version_col]
+            if c is not None and c not in schema.fieldNames()
+        ]
+        if missing:
+            raise ValueError(
+                f"merge_into_parquet: schema lacks column(s) {missing} of the merge"
+            )
     source = collapse_to_key_grain(source, keys)
     if partitions is not None:
         partitions = list(partitions)
@@ -255,7 +269,11 @@ def merge_into_parquet(
 
     if not partition_col:
         rewrite_table(
-            spark, path, lambda t: seed if t is None else merged(t), lock_timeout
+            spark,
+            path,
+            lambda t: seed if t is None else merged(t),
+            lock_timeout,
+            schema=schema,
         )
         return
 

@@ -100,7 +100,10 @@ def test_quote_str_round_trips(spark):
 @pytest.mark.parametrize(
     "value",
     [None, True, 7, -(2**31), 2**40, 1.5, -0.25, decimal.Decimal("-12.50"), "a'b",
-     datetime.date(2024, 2, 29)],
+     datetime.date(2024, 2, 29), datetime.datetime(2024, 2, 29, 13, 5, 7, 123456),
+     datetime.datetime(1969, 12, 31, 23, 59, 59, 5),
+     datetime.datetime(2024, 2, 29, 13, 5, 7,
+                       tzinfo=datetime.timezone(datetime.timedelta(hours=-6)))],
 )
 def test_sql_literal_types_like_lit(spark, value):
     # same value and type as F.lit, so text and Column plans agree
@@ -109,3 +112,17 @@ def test_sql_literal_types_like_lit(spark, value):
     assert row.schema["sql"].dataType == row.schema["lit"].dataType
     got = row.first()
     assert got["sql"] == got["lit"]
+
+
+def test_sql_literal_follows_a_preferred_timestamp_ntz(spark):
+    # a naive datetime is a wall-clock TIMESTAMP_NTZ when the session asks
+    value = datetime.datetime(2024, 2, 29, 13, 5, 7, 123456)
+    spark.conf.set("spark.sql.timestampType", "TIMESTAMP_NTZ")
+    try:
+        row = spark.range(1).select(
+            F.expr(sql_literal(value)).alias("sql"), F.lit(value).alias("lit"))
+        assert row.schema["sql"].dataType == row.schema["lit"].dataType
+        got = row.first()
+    finally:
+        spark.conf.unset("spark.sql.timestampType")
+    assert got["sql"] == got["lit"] == value

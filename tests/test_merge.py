@@ -3,11 +3,13 @@ the same snapshot leaves values equal but nupdates+1; new keys insert with
 nupdates=1; changed values overwrite; NULLs store as NULL
 (/root/reference/scrapper.py:197-212 semantics)."""
 
+import datetime
 import os
 
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from cdmx_airquality_etl_spark.plans.merge import (
     build_merge_into_sql,
@@ -218,3 +220,51 @@ def test_backtick_in_a_column_name_is_quoted(spark):
     assert "t.`we``ird` = s.`we``ird`" in sql
     # the statement parses; before, `we`ird` closed the quote early
     spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
+
+
+@pytest.mark.parametrize("given", [False, True])
+def test_merge_into_a_timestamp_partition_column(spark, tmp_path, given):
+    # the touched partitions render as TIMESTAMP literals, found or given
+    path = os.path.join(str(tmp_path), "ts_part")
+    t1, t2 = datetime.datetime(2024, 2, 29, 13), datetime.datetime(2025, 1, 1, 0, 30)
+
+    def batch(rows):
+        return spark.createDataFrame(rows, "k long, v string, ts timestamp")
+
+    merge_into_parquet(spark, batch([(1, "a", t1), (2, "b", t2)]), path, ["k"],
+                       counter_col="nupdates", partition_col="ts")
+    extra = {"partitions": [t1]} if given else {}
+    merge_into_parquet(spark, batch([(1, "z", t1), (3, "c", t1)]), path, ["k"],
+                       counter_col="nupdates", partition_col="ts", **extra)
+    out = {r["k"]: (r["v"], r["nupdates"], r["ts"])
+           for r in spark.read.parquet(path).collect()}
+    assert out == {1: ("z", 2, t1), 2: ("b", 1, t2), 3: ("c", 1, t1)}
+
+
+@pytest.mark.parametrize("partition_col", [None, "year_num"])
+def test_both_branches_read_the_target_with_the_given_schema(
+        spark, tmp_path, partition_col):
+    path = os.path.join(str(tmp_path), "declared")
+    # `note` is declared but in no file: only a read with the schema sees it
+    schema = StructType.fromDDL(
+        "k long, v string, year_num int, nupdates int, note string")
+    for v in ("a", "b"):
+        merge_into_parquet(spark, _keyed(spark, [(1, v, 2024)]), path, ["k"],
+                           counter_col="nupdates", partition_col=partition_col,
+                           schema=schema)
+    rows = spark.read.parquet(path).collect()
+    assert [(r["k"], r["v"], r["nupdates"], r["note"]) for r in rows] == [
+        (1, "b", 2, None)]
+
+
+def test_a_schema_without_a_merged_column_is_refused(spark, tmp_path):
+    # read through such a schema, the stored counter would restart at 1
+    path = os.path.join(str(tmp_path), "undeclared")
+    batch = _keyed(spark, [(1, "a", 2024)])
+    merge_into_parquet(spark, batch, path, ["k"], counter_col="n_runs",
+                       partition_col="year_num")
+    schema = StructType.fromDDL("k long, v string, year_num int, nupdates int")
+    with pytest.raises(ValueError, match=r"lacks column\(s\) \['n_runs'\]"):
+        merge_into_parquet(spark, batch, path, ["k"], counter_col="n_runs",
+                           partition_col="year_num", schema=schema)
+    assert [r["n_runs"] for r in spark.read.parquet(path).collect()] == [1]

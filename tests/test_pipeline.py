@@ -45,6 +45,18 @@ def test_two_runs_accumulate_and_bump(spark, tmp_path):
     assert cdmx["UIZ"]["nupdates"] == 2
 
 
+def test_a_configured_counter_column_accumulates(spark, tmp_path):
+    # the merges read the targets through a declared schema that holds the
+    # configured counter, so the stored counts carry over
+    cfg = PipelineConfig(warehouse_dir=str(tmp_path / "wh"), counter_col="n_runs")
+    html_df = spark.createDataFrame([Row(page_id=1, html=PAGE)])
+    for _ in range(3):
+        run(spark, html_df, cfg)
+    for name in TABLE_SCHEMAS:
+        rows = spark.read.parquet(cfg.table_path(name)).collect()
+        assert {r["n_runs"] for r in rows} == {3}, name
+
+
 def test_declared_schemas_describe_the_written_tables(spark, tmp_path):
     # run counts rows with the declared schemas instead of inferring them
     cfg = _cfg(tmp_path)
