@@ -1,12 +1,21 @@
 from .dates import date_part_columns, pack_report_ts, unpack_report_ts
 from .extract import map_decode, svg_basename
+from .portable import (
+    content_fingerprint,
+    exact_sum,
+    md5_int,
+    sql_content_fingerprint,
+    sql_exact_sum,
+    sql_md5_int,
+    sql_tokens,
+    tokens,
+)
 from .text import (
     fold_accents,
     normalize_text_col,
     normalize_text_nfkd,
     normalize_text_py,
     word_shingles,
-    words,
 )
 
 __all__ = [
@@ -20,5 +29,12 @@ __all__ = [
     "normalize_text_nfkd",
     "normalize_text_py",
     "word_shingles",
-    "words",
+    "tokens",
+    "sql_tokens",
+    "content_fingerprint",
+    "sql_content_fingerprint",
+    "md5_int",
+    "sql_md5_int",
+    "exact_sum",
+    "sql_exact_sum",
 ]

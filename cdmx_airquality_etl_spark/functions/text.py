@@ -19,7 +19,8 @@ Two implementations of the normalize, per SURVEY.md §7 "hard parts":
   ascii-ignore fold of the reference, for inputs outside the translate
   table's domain. The slow path, kept off by default.
 
-``words`` and ``word_shingles`` build Columns.
+``word_shingles`` builds a Column over ``portable.tokens`` (generalizes
+scrapper.py:41's split-and-drop-empties).
 """
 
 from __future__ import annotations
@@ -32,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
+from .portable import tokens
 from .sql import quote_str
 
 # Accent-fold table covering the Latin/Spanish domain of the reference data
@@ -91,14 +93,9 @@ def normalize_text_py(x: str | None) -> str | None:
     return _nfkd_fold(x)
 
 
-def words(col: Column) -> Column:
-    """Whitespace tokenization: trim then split on whitespace runs
-    (generalizes scrapper.py:41's split-and-drop-empties)."""
-    return F.split(F.trim(col), r"\s+")
-
-
 def word_shingles(col: Column, k: int = 3) -> Column:
-    """Array of k-word shingles (space-joined) from a text column.
+    """Array of k-word shingles (space-joined) over the ``tokens`` of a
+    text column (lowercased, split on whitespace runs).
 
     Implementation note (hot-path shape): the naive
     ``transform(sequence(1, n-k+1), i -> concat_ws(' ', slice(w, i, k)))``
@@ -112,7 +109,7 @@ def word_shingles(col: Column, k: int = 3) -> Column:
     Docs shorter than k words yield a single shingle of all their words,
     never an empty array for non-empty text.
     """
-    w = words(col)
+    w = tokens(col)
     n = F.size(w)
     shifted = [w] + [
         F.slice(w, j + 1, F.greatest(n - j, F.lit(1))) for j in range(1, k)

@@ -20,16 +20,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.portable import md5_int, sql_md5_int
 from ..registry import register
 from ..sources.parquet import load_table
-from .dedup import _md5_int, _sql_md5_int
 
 _CAPTURE_MOD = 3  # each capture samples ~1/3 of the population
 
 _CAP_A_SRC = "'a|' || c_custkey"
 _CAP_B_SRC = "'b|' || c_custkey"
-_SQL_CAP_A = f"{_sql_md5_int(_CAP_A_SRC, 12)} % {_CAPTURE_MOD} = 0"
-_SQL_CAP_B = f"{_sql_md5_int(_CAP_B_SRC, 12)} % {_CAPTURE_MOD} = 0"
+_SQL_CAP_A = f"{sql_md5_int(_CAP_A_SRC, 12)} % {_CAPTURE_MOD} = 0"
+_SQL_CAP_B = f"{sql_md5_int(_CAP_B_SRC, 12)} % {_CAPTURE_MOD} = 0"
 
 
 # ---------------------------------------------------------------------------
@@ -201,12 +201,12 @@ def q_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     an estimate the same query can't grade. One scan, one aggregate."""
     cust = load_table(spark, sf_dir, "customer")
     in_a = (
-        _md5_int(F.concat(F.lit("a|"), F.col("c_custkey").cast("string")), 12)
+        md5_int(F.concat(F.lit("a|"), F.col("c_custkey").cast("string")), 12)
         % _CAPTURE_MOD
         == 0
     ).cast("int")
     in_b = (
-        _md5_int(F.concat(F.lit("b|"), F.col("c_custkey").cast("string")), 12)
+        md5_int(F.concat(F.lit("b|"), F.col("c_custkey").cast("string")), 12)
         % _CAPTURE_MOD
         == 0
     ).cast("int")

@@ -26,10 +26,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.portable import md5_int, sql_md5_int, sql_tokens, tokens
 from ..registry import register
 from .fanout import fan_out_scan
 from ..sources.parquet import load_table
-from .dedup import _md5_int, _sql_md5_int
 
 # 5-gram grain matches q_decontaminate's contamination unit; 15 hex chars of
 # md5 fit a signed int64 (16^15 ≈ 1.15e18), so the shuffle key for the
@@ -37,7 +37,7 @@ from .dedup import _md5_int, _sql_md5_int
 _NOV_N = 5
 _NOV_HEX = 15
 
-_TOKS_SQL = r"string_split_regex(trim(lower(text)), '\s+')"
+_TOKS_SQL = sql_tokens("text")
 
 _BPE_TOP = 20
 
@@ -58,7 +58,7 @@ def _doc_gram_fps(docs: DataFrame, *carry: str) -> DataFrame:
     # grains are placement-insensitive.
     toks = fan_out_scan(docs.filter(F.col("text").isNotNull())).select(
         *carry,
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("ts"),
+        tokens(F.col("text")).alias("ts"),
     ).filter(F.size("ts") >= _NOV_N)
     return (
         toks.select(
@@ -70,7 +70,7 @@ def _doc_gram_fps(docs: DataFrame, *carry: str) -> DataFrame:
                 )
             ).alias("gram"),
         )
-        .select(*carry, _md5_int(F.col("gram"), _NOV_HEX).alias("fp"))
+        .select(*carry, md5_int(F.col("gram"), _NOV_HEX).alias("fp"))
         .distinct()
     )
 
@@ -79,7 +79,7 @@ def _doc_gram_fps(docs: DataFrame, *carry: str) -> DataFrame:
 def _sql_gram_fps(cols: str) -> str:
     return f"""
       SELECT DISTINCT {cols},
-             {_sql_md5_int("array_to_string(ts[i:i+4], ' ')", _NOV_HEX)} AS fp
+             {sql_md5_int("array_to_string(ts[i:i+4], ' ')", _NOV_HEX)} AS fp
       FROM (
         SELECT doc_id, lang, source, {_TOKS_SQL} AS ts
         FROM documents WHERE text IS NOT NULL
@@ -100,7 +100,7 @@ def _sql_gram_fps(cols: str) -> str:
     ),
     g AS (
       SELECT doc_id, source,
-             {_sql_md5_int("array_to_string(ts[i:i+4], ' ')", _NOV_HEX)} AS fp
+             {sql_md5_int("array_to_string(ts[i:i+4], ' ')", _NOV_HEX)} AS fp
       FROM toks, UNNEST(range(1, len(ts) - 3)) AS u(i)
       WHERE len(ts) >= {_NOV_N}
     ),
@@ -221,7 +221,7 @@ def q_source_skew_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             "source",
             F.explode(
-                F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+                tokens(F.col("text"))
             ).alias("t"),
         )
         .groupBy("source", "t")
@@ -317,7 +317,7 @@ def q_bpe_first_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = docs.select(
         F.explode(
-            F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+            tokens(F.col("text"))
         ).alias("t")
     ).filter(F.length("t") >= 2).select(
         F.explode(

@@ -43,9 +43,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from ..functions.portable import sql_tokens, tokens
 from ..registry import register
 from ..sources.parquet import load_table
-from .textstats import _SQL_QC_SCORE_MILLI, _sql_toks, _toks, qc_score_milli
+from .textstats import _SQL_QC_SCORE_MILLI, qc_score_milli
 
 # Rule thresholds, chosen to discriminate on the synthetic corpus (observed
 # at sf0.01: n_words 10..99 with quartiles 32/76, mean word length
@@ -97,7 +98,7 @@ _SQL_STOPS = ", ".join(f"'{s}'" for s in _STOPWORDS)
 # rule thresholds can never fork between uses.
 _SQL_GOPHER = f"""
     WITH tok AS (
-      SELECT doc_id, lang, {_sql_toks('text')} AS toks
+      SELECT doc_id, lang, {sql_tokens('text')} AS toks
       FROM documents WHERE text IS NOT NULL
     ),
     m AS (
@@ -138,7 +139,7 @@ def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     so both engines canonicalize identically.
     """
     docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = _toks(F.col("text"))
+    toks = tokens(F.col("text"))
     stops = F.array(*[F.lit(s) for s in _STOPWORDS])
     m = docs.select(
         "doc_id",
@@ -178,7 +179,7 @@ def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_unigram_lm",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, lang, unnest({_sql_toks('text')}) AS word
+      SELECT doc_id, lang, unnest({sql_tokens('text')}) AS word
       FROM documents WHERE text IS NOT NULL
     ),
     counts AS (SELECT word, COUNT(*) AS c FROM tok GROUP BY word),
@@ -209,7 +210,7 @@ def q_unigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     tok = docs.select(
-        "doc_id", "lang", F.explode(_toks(F.col("text"))).alias("word")
+        "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("word")
     )
     counts = tok.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
     tot = counts.agg(
@@ -281,7 +282,7 @@ _TARGET_MIX_SQL = ", ".join(f"('{lang}', {w})" for lang, w in _TARGET_MIX)
     "q_mixing_weights",
     oracle=f"""
     WITH tok AS (
-      SELECT lang, len({_sql_toks('text')}) AS n_toks
+      SELECT lang, len({sql_tokens('text')}) AS n_toks
       FROM documents WHERE text IS NOT NULL
     ),
     actual AS (
@@ -317,7 +318,7 @@ def q_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     (literal × BIGINT) / BIGINT — two correctly-rounded IEEE ops with
     identical operand order in both engines."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    tok = docs.select("lang", F.size(_toks(F.col("text"))).alias("n_toks"))
+    tok = docs.select("lang", F.size(tokens(F.col("text"))).alias("n_toks"))
     actual = tok.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_toks").cast("long").alias("lang_toks"),

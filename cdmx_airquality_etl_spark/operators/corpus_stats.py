@@ -20,14 +20,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.portable import md5_int, sql_md5_int, sql_tokens, tokens
 from ..registry import register
 from ..sources.parquet import load_table, register_duck_view
-from .dedup import _md5_int, _sql_md5_int
 
 _MIN_PAIR_DOCS = 25  # support floor: pair must co-occur in ≥ this many docs
 _TOP_PAIRS = 20
 
-_TOKS = r"string_split_regex(trim(lower(text)), '\s+')"
+_TOKS = sql_tokens("text")
 
 
 @register(
@@ -79,7 +79,7 @@ def q_cooccur_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             "doc_id",
             F.explode(
-                F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+                tokens(F.col("text"))
             ).alias("t"),
         )
         .filter(F.col("t") != "")
@@ -194,7 +194,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         F.explode(
-            F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+            tokens(F.col("text"))
         ).alias("token")
     ).filter(F.col("token") != "")
     candidates = (
@@ -280,7 +280,7 @@ def q_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "lang",
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("ts"),
+        tokens(F.col("text")).alias("ts"),
     ).filter(F.size("ts") >= 2)
     bg = toks.select(
         "doc_id",
@@ -423,7 +423,7 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
     )
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = tokens(F.col("text"))
     dl = docs.select("doc_id", F.size(toks).alias("dl"))
     avg_dl = dl.agg(
         (
@@ -502,7 +502,7 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINTs; coverage is one correctly-rounded division."""
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("token")
+        F.explode(tokens(F.col("text"))).alias("token")
     ).filter(F.col("token") != "")
     counts = tok.groupBy("token").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     tot = counts.agg(
@@ -555,7 +555,7 @@ _FH_BUCKETS = 1 << _FH_BITS
            CAST(SUM(occupancy) AS BIGINT) AS n_features,
            CAST(SUM(occupancy - 1) AS BIGINT) AS n_collided
     FROM occ GROUP BY occupancy
-    """.format(h=_sql_md5_int("'fh|' || source || '#' || t", 12)),
+    """.format(h=sql_md5_int("'fh|' || source || '#' || t", 12)),
 )
 def q_feature_hash_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashing-trick audit (Weinberger et al. 2009): project the
@@ -570,13 +570,13 @@ def q_feature_hash_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: distinct-(source, token) aggregate (the shuffle is the
     feature space, not the corpus), then two nested hash aggregates over
     feature-sized and bucket-sized inputs. All exact integers; the hash
-    is the portable md5-prefix both engines share (dedup._md5_int
+    is the portable md5-prefix both engines share (portable.md5_int
     contract)."""
     feats = (
         load_table(spark, sf_dir, "documents")
         .select(
             "source",
-            F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("t"),
+            F.explode(tokens(F.col("text"))).alias("t"),
         )
         .filter(F.col("t") != "")
         .distinct()
@@ -584,7 +584,7 @@ def q_feature_hash_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     occ = (
         feats.select(
             (
-                _md5_int(
+                md5_int(
                     F.concat(F.lit("fh|"), F.col("source"), F.lit("#"), F.col("t")),
                     12,
                 )
@@ -649,7 +649,7 @@ def q_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents")
         .select(
             "source",
-            F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("t"),
+            F.explode(tokens(F.col("text"))).alias("t"),
         )
         .filter(F.col("t") != "")
     )

@@ -30,7 +30,7 @@ Four escalating strategies, all distributed set-logic — no driver loops:
 
 Every strategy carries a FULL DuckDB oracle: MinHash/SimHash run their
 seeded permutations over a portable base hash (md5 hex decoded to int64 —
-_md5_int / _sql_md5_int) rather than engine-specific xxhash64/murmur3, so
+functions/portable.md5_int) rather than engine-specific xxhash64/murmur3, so
 signatures, banding, candidate joins and verification are all
 value-checked cross-engine.
 
@@ -49,6 +49,13 @@ from pyspark.sql.window import Window
 
 from ..functions import word_shingles
 from ..functions.bloom import bloom_filter_bytes, might_contain
+from ..functions.portable import (
+    content_fingerprint,
+    sql_content_fingerprint,
+    sql_md5_int,
+    sql_tokens,
+    tokens,
+)
 from ..registry import QUERIES, register
 from ..sources.parquet import load_table
 from .fanout import fan_out_scan
@@ -57,38 +64,6 @@ _JACCARD_THRESHOLD = 0.5
 # Postings of an anchor key with df above this are salted into ⌈df/H⌉
 # buckets by _salted_anchor_candidates (≤ H²/2 pairs per join task).
 _HOT_ANCHOR_SPLIT = 256
-
-
-def content_fingerprint(col: Column) -> Column:
-    """The exact-dedup content identity: md5 of whitespace-normalized
-    text. The exact-dedup queries group on it and the streaming dedup and
-    corpus-ingest paths key on it, so a document has one identity in batch
-    and in stream."""
-    return F.md5(F.regexp_replace(F.trim(F.lower(col)), r"\s+", " "))
-
-
-# Portable content hash: the first `nchars` hex nibbles of md5 decoded to a
-# BIGINT. Spark decodes with native conv(); DuckDB (no conv) decodes each
-# nibble by position in the hex alphabet — identical integers, which is
-# what lets the seeded MinHash/SimHash pipelines carry EXACT oracles
-# instead of rows-only checks (xxhash64/murmur3 exist only in Spark).
-_HEX = "0123456789abcdef"
-
-
-def _md5_int(col: Column, nchars: int) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, nchars), 16, 10).cast("long")
-
-
-def _sql_md5_int(expr: str, nchars: int) -> str:
-    return (
-        "("
-        + " + ".join(
-            f"(strpos('{_HEX}', substr(md5({expr}), {i + 1}, 1)) - 1) * "
-            f"{16 ** (nchars - 1 - i)}"
-            for i in range(nchars)
-        )
-        + ")"
-    )
 
 
 def _doc_shingles(docs: DataFrame) -> DataFrame:
@@ -103,7 +78,7 @@ def _doc_shingles(docs: DataFrame) -> DataFrame:
     placement cannot change a result."""
     return fan_out_scan(docs).select(
         "doc_id",
-        F.array_distinct(word_shingles(F.lower(F.col("text")), k=3)).alias("sh"),
+        F.array_distinct(word_shingles(F.col("text"), k=3)).alias("sh"),
     ).withColumn("n_sh", F.size("sh"))
 
 
@@ -819,8 +794,8 @@ def _prefix_containment_pairs(
 # ---------------------------------------------------------------------------
 @register(
     "q_dedup_exact",
-    oracle=r"""
-    SELECT md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fingerprint,
+    oracle=rf"""
+    SELECT {sql_content_fingerprint("text")} AS fingerprint,
            min(doc_id) AS keeper_doc_id,
            count(*) AS n_copies
     FROM documents
@@ -847,8 +822,8 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_dedup_keep_best",
-    oracle=r"""
-    SELECT md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fingerprint,
+    oracle=rf"""
+    SELECT {sql_content_fingerprint("text")} AS fingerprint,
            max_by(doc_id, n_chars * 10000000000 - doc_id) AS keeper_doc_id,
            MAX(n_chars) AS keeper_chars,
            COUNT(*) AS n_copies
@@ -888,8 +863,8 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Shared shingle-pair CTE chain (tok → sh → e → pairs), reused verbatim by
 # the fuzzy/containment oracles and the text-cluster closure oracle so the
 # pair semantics can never drift between them.
-_SQL_SHINGLE_PAIR_CTES = r"""tok AS (
-      SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS w
+_SQL_SHINGLE_PAIR_CTES = rf"""tok AS (
+      SELECT doc_id, {sql_tokens("text")} AS w
       FROM documents
     ),
     sh AS (
@@ -944,7 +919,7 @@ _CONTAINMENT_THRESHOLD = 0.9
     "q_dedup_containment",
     oracle=rf"""
     WITH tok AS (
-      SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS w
+      SELECT doc_id, {sql_tokens("text")} AS w
       FROM documents
     ),
     sh AS (
@@ -997,12 +972,12 @@ _INCR_SPLIT_ID = 250  # doc_id < split = known corpus, >= split = new batch
     "q_dedup_incremental",
     oracle=rf"""
     WITH known AS (
-      SELECT DISTINCT md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp
+      SELECT DISTINCT {sql_content_fingerprint("text")} AS fp
       FROM documents WHERE doc_id < {_INCR_SPLIT_ID}
     ),
     batch AS (
       SELECT doc_id, lang,
-             md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp
+             {sql_content_fingerprint("text")} AS fp
       FROM documents WHERE doc_id >= {_INCR_SPLIT_ID}
     )
     SELECT b.doc_id, b.lang
@@ -1034,9 +1009,9 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_duplicate_stats",
-    oracle=r"""
+    oracle=rf"""
     WITH g AS (
-      SELECT md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp,
+      SELECT {sql_content_fingerprint("text")} AS fp,
              COUNT(*) AS n
       FROM documents GROUP BY 1
     )
@@ -1088,7 +1063,7 @@ _MH_BAND_SIZE = 3  # 12 hashes → 4 bands of 3
 # tokenization) + the portable per-shingle base hash folded into [0, p)
 _MH_SHINGLE_CTES = rf"""
     tok AS (
-      SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS w
+      SELECT doc_id, {sql_tokens("text")} AS w
       FROM documents
     ),
     sh AS (
@@ -1101,7 +1076,7 @@ _MH_SHINGLE_CTES = rf"""
       SELECT doc_id, unnest(shs) AS shingle FROM sh
     ),
     h AS (
-      SELECT doc_id, {_sql_md5_int('shingle', 8)} % {_MH_PRIME} AS h0 FROM e
+      SELECT doc_id, {sql_md5_int('shingle', 8)} % {_MH_PRIME} AS h0 FROM e
     )"""
 
 _MH_SIG_SQL = ", ".join(
@@ -1284,7 +1259,7 @@ def _mh_candidates(bands: DataFrame) -> DataFrame:
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash/LSH near-dup pairs, exact-Jaccard-verified — with a full
     DuckDB oracle: the permuted hashes run on a PORTABLE base hash (md5 hex
-    → int, see _md5_int), so every stage (signatures, banding, candidate
+    → int, see portable.md5_int), so every stage (signatures, banding, candidate
     join, exact verify) is reproducible SQL. a·H + b stays under 2^63
     (a < 2^32, H < p ≈ 2^30), so the modular arithmetic is exact int64 in
     both engines; band keys are ':'-joined strings, not an engine hash.
@@ -1497,11 +1472,11 @@ _SH_BANDS_SQL = "\n      UNION ALL\n".join(
     "q_dedup_simhash",
     oracle=rf"""
     WITH tok AS (
-      SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS t
+      SELECT doc_id, unnest({sql_tokens("text")}) AS t
       FROM documents
     ),
     th AS (
-      SELECT doc_id, {_sql_md5_int('t', 15)} AS h FROM tok
+      SELECT doc_id, {sql_md5_int('t', 15)} AS h FROM tok
     ),
     bits AS (
       SELECT doc_id, b.b AS bit, SUM(((h >> b.b) & 1) * 2 - 1) AS vote
@@ -1526,7 +1501,7 @@ _SH_BANDS_SQL = "\n      UNION ALL\n".join(
 )
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs — with a full DuckDB oracle: per-token 60-bit
-    PORTABLE hashes (md5 hex → int, _md5_int) vote per bit; docs whose
+    PORTABLE hashes (md5 hex → int, portable.md5_int) vote per bit; docs whose
     signatures agree on any 15-bit band are candidates; pairs within
     Hamming distance 8 are returned. The oracle recomputes the votes in
     long format (doc, bit) — same integer sums, same sign rule, same packed
@@ -1541,7 +1516,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate, the largest codegen unit in the registry. One packed
     # signature row per doc comes back; no postings shuffle.
     toks = fan_out_scan(docs).select(
-        "doc_id", F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("toks")
+        "doc_id", tokens(F.col("text")).alias("toks")
     )
     packed = _sig_fan_out(
         toks.mapInPandas(_sh_sig_partials, "doc_id long, simhash long")
@@ -1642,7 +1617,7 @@ def q_simhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_dup_source_matrix",
     oracle=rf"""
     WITH tok AS (
-      SELECT doc_id, source, string_split_regex(trim(lower(text)), '\s+') AS w
+      SELECT doc_id, source, {sql_tokens("text")} AS w
       FROM documents
     ),
     sh AS (
@@ -1916,9 +1891,9 @@ def q_dedup_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_dup_size_histogram",
-    oracle=r"""
+    oracle=rf"""
     WITH clusters AS (
-      SELECT md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp,
+      SELECT {sql_content_fingerprint("text")} AS fp,
              CAST(COUNT(*) AS BIGINT) AS cluster_size
       FROM documents
       GROUP BY 1

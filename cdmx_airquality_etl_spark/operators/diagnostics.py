@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.portable import md5_int, sql_md5_int
 from ..registry import register
 from ..sources.parquet import load_table
 
@@ -179,9 +180,8 @@ _KMV_SPACE = float(16**_KMV_NCHARS)  # 2^60, exactly representable
 
 
 def _kmv_oracle_sql() -> str:
-    from .dedup import _sql_md5_int
 
-    hv = _sql_md5_int("CAST(o_custkey AS VARCHAR)", _KMV_NCHARS)
+    hv = sql_md5_int("CAST(o_custkey AS VARCHAR)", _KMV_NCHARS)
     return f"""
     WITH h AS (
       SELECT DISTINCT o_orderpriority AS pri, {hv} AS hv
@@ -214,7 +214,7 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-count estimation per group via a K-minimum-values sketch —
     the PORTABLE alternative to HyperLogLog: q_group_approx must stay
     rows-only because HLL++ registers are engine-specific, but KMV over
-    the repo's portable md5 hash (dedup._md5_int) is a deterministic
+    the repo's portable md5 hash (portable.md5_int) is a deterministic
     function of the data, so the ESTIMATOR ITSELF is oracle-checked here,
     alongside the exact count it approximates (the estimator-calibration
     pattern of minhash_estimate / ann_recall).
@@ -230,12 +230,11 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     of cardinality, the same reason production engines sketch instead of
     exact-counting. The exact COUNT(DISTINCT) rides along only as the
     calibration column."""
-    from .dedup import _md5_int
 
     orders = load_table(spark, sf_dir, "orders")
     h = orders.select(
         F.col("o_orderpriority").alias("pri"),
-        _md5_int(F.col("o_custkey").cast("string"), _KMV_NCHARS).alias("hv"),
+        md5_int(F.col("o_custkey").cast("string"), _KMV_NCHARS).alias("hv"),
     ).distinct()
     wr = Window.partitionBy("pri").orderBy("hv")
     wc = Window.partitionBy("pri")
@@ -349,9 +348,8 @@ _SET_B = "2-HIGH"
 
 
 def _kmv_setops_oracle_sql() -> str:
-    from .dedup import _sql_md5_int
 
-    hv = _sql_md5_int("CAST(o_custkey AS VARCHAR)", _KMV_NCHARS)
+    hv = sql_md5_int("CAST(o_custkey AS VARCHAR)", _KMV_NCHARS)
     return f"""
     WITH tagged AS (
       SELECT {hv} AS hv,
@@ -408,7 +406,6 @@ def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership flags are MAX-aggregated bits, and the two final divisions
     are correctly-rounded IEEE ops on exact integers — the estimator (not
     just the truth) is engine-reproducible and oracle-checked."""
-    from .dedup import _md5_int
 
     orders = load_table(spark, sf_dir, "orders")
     tagged = (
@@ -423,7 +420,7 @@ def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("in_b"),
         )
         .select(
-            _md5_int(F.col("o_custkey").cast("string"), _KMV_NCHARS).alias("hv"),
+            md5_int(F.col("o_custkey").cast("string"), _KMV_NCHARS).alias("hv"),
             "in_a",
             "in_b",
         )
@@ -471,9 +468,8 @@ _LATE_BUCKET_US = 60 * 1_000_000  # 1-minute lateness buckets
 
 
 def _wm_oracle_sql() -> str:
-    from .dedup import _sql_md5_int
 
-    jitter = _sql_md5_int("CAST(event_id AS VARCHAR)", 3)
+    jitter = sql_md5_int("CAST(event_id AS VARCHAR)", 3)
     return f"""
     WITH arrived AS (
       SELECT ts, event_id + ({jitter} % {_ARRIVAL_JITTER}) AS arr
@@ -522,12 +518,11 @@ def q_watermark_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     (|batches| rows — metadata), never a global window over raw events;
     events join their batch's mark by batch id (broadcast). One fact
     shuffle total, for the final histogram aggregate."""
-    from .dedup import _md5_int
 
     ev = load_table(spark, sf_dir, "events").select(
         (
             F.col("event_id")
-            + _md5_int(F.col("event_id").cast("string"), 3) % _ARRIVAL_JITTER
+            + md5_int(F.col("event_id").cast("string"), 3) % _ARRIVAL_JITTER
         ).alias("arr"),
         F.unix_micros("ts").alias("ts_us"),
     )

@@ -26,31 +26,27 @@ bitwise-portability discipline), so placement cannot change any result.
 ``spark.sql.execution.sortBeforeRepartition`` (default on) keeps the
 round-robin assignment deterministic under task retries.
 
-``SPARK_GRAFT_SCAN_FANOUT=0`` disables the fan-out (the reference
-shape for result-identity tests).
+Tests that need the un-fanned reference shape monkeypatch
+``scan_fanout_parallelism`` to return 0; ``fan_out_scan`` looks it up at
+call time.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
 
 def scan_fanout_parallelism(spark: SparkSession) -> int:
     """Target partition count for under-split scans: ``defaultParallelism``,
-    or 0 (leave scans alone) on a one-core cluster or under
-    ``SPARK_GRAFT_SCAN_FANOUT=0``."""
-    if os.environ.get("SPARK_GRAFT_SCAN_FANOUT") == "0":
-        return 0
+    or 0 (leave scans alone) on a one-core cluster."""
     dp = spark.sparkContext.defaultParallelism
     return dp if dp > 1 else 0
 
 
 def fan_out_scan(df: DataFrame) -> DataFrame:
     """Round-robin ``df`` to cluster width IF it is under-split (see module
-    docstring). No-op on real multi-split inputs and on
-    ``SPARK_GRAFT_SCAN_FANOUT=0``."""
+    docstring). No-op on real multi-split inputs and on a one-core
+    cluster."""
     n = scan_fanout_parallelism(df.sparkSession)
     if not n:
         return df

@@ -12,15 +12,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from ..functions.portable import exact_sum, sql_exact_sum
 from ..registry import register
 from ..sources.parquet import load_table
 
 
 @register(
     "q_flagship_revenue",
-    oracle="""
+    oracle=f"""
     SELECT r.r_name, year(o.o_orderdate) AS order_year,
-           CAST(SUM(CAST(l.l_extendedprice * (1.0 - l.l_discount) AS DECIMAL(18,4))) AS DOUBLE)
+           {sql_exact_sum("l.l_extendedprice * (1.0 - l.l_discount)", 4)}
              AS revenue,
            COUNT(*) AS n_lineitems
     FROM lineitem l
@@ -55,7 +56,7 @@ def q_flagship_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("r_name", F.year("o_orderdate").alias("order_year"))
         .agg(
-            F.sum(F.col("rev").cast("decimal(18,4)")).cast("double").alias("revenue"),
+            exact_sum(F.col("rev"), 4).alias("revenue"),
             F.count(F.lit(1)).alias("n_lineitems"),
         )
     )

@@ -10,8 +10,8 @@ estimator plus its calibration against exact counts — the
 estimator-quality pattern q_minhash_estimate / q_ann_recall pins.
 
 Determinism policy: node ids, distances, degrees and sketch cells are pure
-BIGINT; hashes are the portable md5-derived int64 (_md5_int /
-_sql_md5_int, dedup.py) so both engines bucket identically; ratios divide
+BIGINT; hashes are the portable md5-derived int64
+(functions/portable.md5_int) so both engines bucket identically; ratios divide
 exact integers once at the end."""
 
 from __future__ import annotations
@@ -20,10 +20,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.portable import md5_int, sql_md5_int, sql_tokens, tokens
 from ..registry import register
 from ..sources.parquet import load_table
-from .dedup import _md5_int, _sql_md5_int
-from .textstats import _sql_toks, _toks
 
 _SP_MAX_HOPS = 4
 _SP_SOURCE = 2  # node id of customer 1 (customer nodes are 2·custkey)
@@ -253,7 +252,7 @@ def q_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_countmin",
     oracle=f"""
     WITH tok AS (
-      SELECT unnest({_sql_toks('text')}) AS token FROM documents
+      SELECT unnest({sql_tokens('text')}) AS token FROM documents
     ),
     exact AS (
       SELECT token, CAST(COUNT(*) AS BIGINT) AS exact_n FROM tok GROUP BY token
@@ -261,7 +260,7 @@ def q_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows_ AS (SELECT * FROM range(0, {_CM_ROWS}) AS t(r)),
     cells AS (
       SELECT r,
-             {_sql_md5_int("r || '|' || token", 15)} % {_CM_WIDTH} AS bucket,
+             {sql_md5_int("r || '|' || token", 15)} % {_CM_WIDTH} AS bucket,
              CAST(SUM(exact_n) AS BIGINT) AS cell_n
       FROM exact CROSS JOIN rows_
       GROUP BY 1, 2
@@ -277,7 +276,7 @@ def q_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     CROSS JOIN rows_
     JOIN cells c
       ON c.r = rows_.r
-     AND c.bucket = {_sql_md5_int("rows_.r || '|' || p.token", 15)} % {_CM_WIDTH}
+     AND c.bucket = {sql_md5_int("rows_.r || '|' || p.token", 15)} % {_CM_WIDTH}
     GROUP BY p.token, p.exact_n
     """,
 )
@@ -293,13 +292,13 @@ def q_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     watches to size the width."""
     tok = (
         load_table(spark, sf_dir, "documents")
-        .select(F.explode(_toks(F.col("text"))).alias("token"))
+        .select(F.explode(tokens(F.col("text"))).alias("token"))
     )
     exact = tok.groupBy("token").agg(F.count(F.lit(1)).alias("exact_n"))
     rows = spark.range(_CM_ROWS).select(F.col("id").alias("r"))
     keyed = exact.crossJoin(F.broadcast(rows))
     bucket = (
-        _md5_int(F.concat(F.col("r").cast("string"), F.lit("|"), F.col("token")), 15)
+        md5_int(F.concat(F.col("r").cast("string"), F.lit("|"), F.col("token")), 15)
         % _CM_WIDTH
     )
     cells = keyed.groupBy("r", bucket.alias("bucket")).agg(
@@ -335,11 +334,11 @@ q_countmin.__doc__ = q_countmin.__doc__.format(rows=_CM_ROWS, width=_CM_WIDTH, k
     "q_winnowing",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, {_sql_toks('text')} AS w FROM documents
+      SELECT doc_id, {sql_tokens('text')} AS w FROM documents
     ),
     grams AS (
       SELECT doc_id, i AS pos,
-             {_sql_md5_int(f"array_to_string(w[i:i+{_WIN_K - 1}], ' ')", 15)} AS h
+             {sql_md5_int(f"array_to_string(w[i:i+{_WIN_K - 1}], ' ')", 15)} AS h
       FROM tok, unnest(range(1, greatest(len(w) - {_WIN_K - 1}, 1) + 1)) AS t(i)
       WHERE len(w) >= {_WIN_K}
     ),
@@ -371,7 +370,7 @@ def q_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output per doc: gram count, selected-fingerprint count, and the
     global minimum (the doc's cheapest retrieval probe)."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", _toks(F.col("text")).alias("w")).filter(
+    tok = docs.select("doc_id", tokens(F.col("text")).alias("w")).filter(
         F.size("w") >= _WIN_K
     )
     grams = tok.select(
@@ -385,7 +384,7 @@ def q_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_id",
         (F.col("pos0") + 1).alias("pos"),
-        _md5_int(F.col("gram"), 15).alias("h"),
+        md5_int(F.col("gram"), 15).alias("h"),
     )
     wmin = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, _WIN_W - 1)
     wcnt = Window.partitionBy("doc_id")

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.portable import sql_exact_sum
 from ..registry import register
 from ..sources.parquet import load_table
 
@@ -32,10 +33,10 @@ _CUTOFF = "1999-01-01"
 
 @register(
     "q_incremental_agg",
-    oracle="""
+    oracle=f"""
     SELECT o_custkey,
            COUNT(*) AS order_cnt,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+           {sql_exact_sum("o_totalprice")}
              AS total_spend,
            strftime(MAX(o_orderdate), '%Y-%m-%d') AS last_order_date
     FROM orders

@@ -23,18 +23,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
-from ..functions import word_shingles, words
+from ..functions import word_shingles
+from ..functions.portable import md5_int, sql_md5_int, sql_tokens, tokens
 from ..registry import register
 from .fanout import fan_out_scan
 from ..sources.parquet import load_table
-from .dedup import _md5_int, _sql_md5_int
 
 # Word n-gram length for decontamination. Real pipelines use 8-13-gram
 # overlap (GPT-3 used 13-grams); the synthetic corpus draws from a small
 # vocabulary, so 5-grams give the same mechanics with observable overlap.
 _DECON_N = 5
 
-_TOKS_SQL = r"string_split_regex(trim(lower(text)), '\s+')"
+_TOKS_SQL = sql_tokens("text")
 # DuckDB list slice is 1-based inclusive; range(a, b) is [a, b).
 _GRAMS_SQL = (
     f"CASE WHEN len(toks) >= {_DECON_N} THEN "
@@ -51,8 +51,8 @@ _GRAMS_SQL = (
 
 def _grams_spark(n: int):
     return F.when(
-        F.size(words(F.lower(F.col("text")))) >= n,
-        word_shingles(F.lower(F.col("text")), k=n),
+        F.size(tokens(F.col("text"))) >= n,
+        word_shingles(F.col("text"), k=n),
     ).otherwise(F.array().cast("array<string>"))
 
 
@@ -331,7 +331,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "lang", "doc_id", F.size(words(F.lower(F.col("text")))).alias("n_toks")
+        "lang", "doc_id", F.size(tokens(F.col("text"))).alias("n_toks")
     )
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -454,7 +454,7 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        words(F.lower(F.col("text"))).alias("toks"),
+        tokens(F.col("text")).alias("toks"),
     )
     starts = F.sequence(
         F.lit(0),
@@ -537,7 +537,7 @@ _NEG_K = 4  # candidate slots per anchor
     cand AS (
       SELECT e.vec_id AS anchor_id, e.label AS anchor_label,
              CAST(t.slot AS BIGINT) AS slot,
-             {_sql_md5_int("'neg|' || e.vec_id || '|' || t.slot", 12)} % nv.n
+             {sql_md5_int("'neg|' || e.vec_id || '|' || t.slot", 12)} % nv.n
                AS neg_id
       FROM embeddings e, nv, unnest(range(0, {_NEG_K})) AS t(slot)
     )
@@ -576,7 +576,7 @@ def q_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "anchor_label",
             F.col("slot").cast("long").alias("slot"),
             (
-                _md5_int(
+                md5_int(
                     F.concat(
                         F.lit("neg|"),
                         F.col("anchor_id").cast("string"),
@@ -647,7 +647,7 @@ def q_prefix_sharing(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates (prefix-cardinality, then group-size-cardinality). All
     exact integers."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    ts = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    ts = tokens(F.col("text"))
     pfx = docs.select(ts.alias("ts")).filter(F.size("ts") >= _PREFIX_K).select(
         F.md5(F.array_join(F.slice("ts", 1, _PREFIX_K), " ")).alias("pfx_fp")
     )
@@ -681,7 +681,7 @@ _DSIR_TARGET_LANG = "en"  # the "target domain" the raw corpus is scored to
     ),
     feat AS (
       SELECT doc_id, lang,
-             {_sql_md5_int("'dsir|' || t", 12)} % {_DSIR_BUCKETS} AS f
+             {sql_md5_int("'dsir|' || t", 12)} % {_DSIR_BUCKETS} AS f
       FROM tok WHERE t <> ''
     ),
     raw AS (SELECT f, CAST(COUNT(*) AS BIGINT) AS cr FROM feat GROUP BY f),
@@ -737,7 +737,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-document sum is a SEQUENTIAL FOLD over feature-id-sorted
     terms (the q_neyman_allocation discipline) — bitwise-equal in both
     engines; the feature hash is the portable md5-prefix contract
-    (dedup._md5_int)."""
+    (portable.md5_int)."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     feat = (
         # round-13: scan fan-out measured flat-to-negative here (paired
@@ -746,14 +746,14 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             "doc_id",
             "lang",
-            F.explode(words(F.lower(F.col("text")))).alias("t"),
+            F.explode(tokens(F.col("text"))).alias("t"),
         )
         .filter(F.col("t") != "")
         .select(
             "doc_id",
             "lang",
             (
-                _md5_int(F.concat(F.lit("dsir|"), F.col("t")), 12)
+                md5_int(F.concat(F.lit("dsir|"), F.col("t")), 12)
                 % _DSIR_BUCKETS
             ).alias("f"),
         )

@@ -15,8 +15,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.portable import (
+    content_fingerprint,
+    md5_int,
+    sql_content_fingerprint,
+    sql_md5_int,
+    sql_tokens,
+    tokens,
+)
 from ..registry import register
-from .dedup import _sql_md5_int, content_fingerprint
 from ..sources.parquet import load_table
 
 
@@ -57,12 +64,12 @@ def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_curation_pipeline",
-    oracle=r"""
+    oracle=rf"""
     WITH clean AS (
       SELECT doc_id, lang, n_chars, text
       FROM documents
       WHERE n_chars >= 80
-        AND len(string_split_regex(trim(lower(text)), '\s+')) >= 15
+        AND len({sql_tokens("text")}) >= 15
     ),
     kept AS (
       SELECT max_by(doc_id, n_chars * 10000000000 - doc_id) AS doc_id,
@@ -70,13 +77,13 @@ def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
              max_by(n_chars, n_chars * 10000000000 - doc_id) AS n_chars,
              max_by(text, n_chars * 10000000000 - doc_id) AS text
       FROM clean
-      GROUP BY md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'))
+      GROUP BY {sql_content_fingerprint("text")}
     )
     SELECT CASE WHEN ascii(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) % 10 < 8
                 THEN 'train' ELSE 'eval' END AS split,
            lang,
            COUNT(*) AS n_docs,
-           CAST(SUM(len(string_split_regex(trim(lower(text)), '\s+'))) AS BIGINT)
+           CAST(SUM(len({sql_tokens("text")})) AS BIGINT)
              AS total_tokens,
            CAST(SUM(n_chars) AS BIGINT) AS total_chars
     FROM kept
@@ -92,7 +99,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles, and nothing materializes in between — the composition argument
     for building curation on a relational engine rather than gluing scripts."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.lower("text")), r"\s+")
+    toks = tokens("text")
     clean = docs.filter((F.col("n_chars") >= 80) & (F.size(toks) >= 15))
 
     fingerprint = content_fingerprint(F.col("text"))
@@ -162,10 +169,10 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_token_shard",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
       SELECT lang, doc_id,
-             len(string_split_regex(trim(lower(text)), '\s+')) AS n_toks
+             len({sql_tokens("text")}) AS n_toks
       FROM documents
     ),
     cum AS (
@@ -192,7 +199,7 @@ def q_token_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash aggregate; at 100 TB a single giant language would range-partition
     on doc_id with per-range offsets merged after (two-pass), same math."""
     docs = load_table(spark, sf_dir, "documents")
-    n_toks = F.size(F.split(F.trim(F.lower("text")), r"\s+"))
+    n_toks = F.size(tokens("text"))
     w = Window.partitionBy("lang").orderBy("doc_id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -333,16 +340,15 @@ def q_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_dataset_card",
-    oracle=r"""
+    oracle=rf"""
     WITH base AS (
       SELECT doc_id, lang, source, n_chars,
              CASE WHEN text IS NULL OR trim(text) = '' THEN 1 ELSE 0 END
                AS is_empty,
              CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-                  ELSE len(string_split_regex(trim(lower(text)), '\s+')) END
+                  ELSE len({sql_tokens("text")}) END
                AS n_toks,
-             md5(regexp_replace(trim(lower(coalesce(text, ''))),
-                                '\s+', ' ', 'g')) AS fp
+             {sql_content_fingerprint("coalesce(text, '')")} AS fp
       FROM documents
     ),
     core AS (
@@ -401,12 +407,8 @@ def q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("int")
     n_toks = F.when(
         F.col("text").isNull() | (F.trim(F.col("text")) == ""), F.lit(0)
-    ).otherwise(F.size(F.split(F.trim(F.lower(F.col("text"))), r"\s+")))
-    fp = F.md5(
-        F.regexp_replace(
-            F.trim(F.lower(F.coalesce(F.col("text"), F.lit("")))), r"\s+", " "
-        )
-    )
+    ).otherwise(F.size(tokens(F.col("text"))))
+    fp = content_fingerprint(F.coalesce(F.col("text"), F.lit("")))
     base = docs.select(
         "doc_id",
         "lang",
@@ -485,7 +487,7 @@ _WS_HEX_CHARS = 12  # 48 bits of md5 → the per-doc uniform draw
              CASE WHEN text IS NULL THEN 0.0e0
                   ELSE least(1.0e0, CAST(strlen(text) AS DOUBLE)
                                     / 1000.0e0) END AS keep_p,
-             {_sql_md5_int("CAST(doc_id AS VARCHAR)", _WS_HEX_CHARS)} AS draw
+             {sql_md5_int("CAST(doc_id AS VARCHAR)", _WS_HEX_CHARS)} AS draw
       FROM documents
     )
     SELECT lang,
@@ -522,11 +524,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.octet_length(F.col("text")).cast("double") / F.lit(1000.0),
         )
     )
-    draw = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, _WS_HEX_CHARS),
-        16,
-        10,
-    ).cast("long")
+    draw = md5_int(F.col("doc_id").cast("string"), _WS_HEX_CHARS)
     kept = (
         draw.cast("double") / F.lit(float(16**_WS_HEX_CHARS)) < keep_p
     ).cast("int")

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.portable import md5_int, sql_md5_int
 from ..registry import register
 from ..sources.parquet import load_table
 
@@ -315,6 +316,8 @@ def _geom_cum() -> list[float]:
 
 
 _DP_CUM = _geom_cum()
+# The uniform draw behind each released count: 32 bits of md5 over 2^32.
+_DP_DRAW_SQL = sql_md5_int("'dp:' || event_type", 8) + " / 4294967296.0"
 
 
 def _dp_noise_sql(u: str) -> str:
@@ -337,7 +340,7 @@ def _dp_noise_sql(u: str) -> str:
     ),
     noised AS (
       SELECT event_type, n_raw,
-             {_dp_noise_sql("((strpos('0123456789abcdef', substr(md5('dp:' || event_type), 1, 1)) - 1) * 268435456 + (strpos('0123456789abcdef', substr(md5('dp:' || event_type), 2, 1)) - 1) * 16777216 + (strpos('0123456789abcdef', substr(md5('dp:' || event_type), 3, 1)) - 1) * 1048576 + (strpos('0123456789abcdef', substr(md5('dp:' || event_type), 4, 1)) - 1) * 65536 + (strpos('0123456789abcdef', substr(md5('dp:' || event_type), 5, 1)) - 1) * 4096 + (strpos('0123456789abcdef', substr(md5('dp:' || event_type), 6, 1)) - 1) * 256 + (strpos('0123456789abcdef', substr(md5('dp:' || event_type), 7, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(md5('dp:' || event_type), 8, 1)) - 1)) / 4294967296.0")} AS dp_noise
+             {_dp_noise_sql(_DP_DRAW_SQL)} AS dp_noise
       FROM raw
     )
     SELECT event_type, n_raw, CAST(dp_noise AS BIGINT) AS dp_noise,
@@ -369,7 +372,7 @@ def q_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("n_raw"))
     )
     u = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("dp:"), F.col("event_type"))), 1, 8), 16, 10).cast("long")
+        md5_int(F.concat(F.lit("dp:"), F.col("event_type")), 8)
         / F.lit(4294967296.0)
     )
     noise = F.lit(_DP_TAIL)

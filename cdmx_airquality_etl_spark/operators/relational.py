@@ -25,15 +25,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
+from ..functions.portable import exact_sum, sql_exact_sum
 from ..functions import map_decode, normalize_text_col, pack_report_ts, svg_basename
 from ..registry import register
 from ..schemas import MONTH_MAP
 from ..sources.parquet import load_table
-
-
-def _dsum(col, scale: int = 2):
-    """Order-independent double sum: sum through DECIMAL(18,s), back to double."""
-    return F.sum(col.cast(f"decimal(18,{scale})")).cast("double")
 
 
 # ---------------------------------------------------------------------------
@@ -186,10 +182,10 @@ def q_map_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_dim_join_broadcast",
-    oracle="""
+    oracle=f"""
     SELECT r.r_name, n.n_name,
            count(*) AS n_customers,
-           CAST(SUM(CAST(c.c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_acctbal
+           {sql_exact_sum("c.c_acctbal")} AS sum_acctbal
     FROM customer c
     JOIN nation n ON c.c_nationkey = n.n_nationkey
     JOIN region r ON n.n_regionkey = r.r_regionkey
@@ -206,7 +202,7 @@ def q_dim_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("r_name", "n_name")
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
-            _dsum(F.col("c_acctbal")).alias("sum_acctbal"),
+            exact_sum(F.col("c_acctbal")).alias("sum_acctbal"),
         )
     )
 
@@ -236,10 +232,10 @@ def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_join_left",
-    oracle="""
+    oracle=f"""
     SELECT c.c_custkey,
            count(o.o_orderkey) AS n_urgent_orders,
-           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_urgent_price
+           {sql_exact_sum("o.o_totalprice")} AS sum_urgent_price
     FROM customer c
     LEFT JOIN (SELECT * FROM orders WHERE o_orderpriority = '1-URGENT') o
       ON o.o_custkey = c.c_custkey
@@ -257,7 +253,7 @@ def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_custkey")
         .agg(
             F.count("o_orderkey").alias("n_urgent_orders"),
-            _dsum(F.col("o_totalprice")).alias("sum_urgent_price"),
+            exact_sum(F.col("o_totalprice")).alias("sum_urgent_price"),
         )
     )
 
@@ -379,13 +375,13 @@ def q_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_group_agg",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-           CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(l_quantity) AS avg_qty,
-           CAST(SUM(CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) / COUNT(l_discount) AS avg_disc,
+           {sql_exact_sum("l_quantity")} AS sum_qty,
+           {sql_exact_sum("l_extendedprice")} AS sum_base_price,
+           {sql_exact_sum("l_extendedprice * (1.0 - l_discount)", 4)} AS sum_disc_price,
+           {sql_exact_sum("l_quantity")} / COUNT(l_quantity) AS avg_qty,
+           {sql_exact_sum("l_discount", 4)} / COUNT(l_discount) AS avg_disc,
            COUNT(*) AS count_order
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
@@ -399,11 +395,11 @@ def q_group_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            _dsum(F.col("l_quantity")).alias("sum_qty"),
-            _dsum(F.col("l_extendedprice")).alias("sum_base_price"),
-            _dsum(disc_price, scale=4).alias("sum_disc_price"),
-            (_dsum(F.col("l_quantity")) / F.count("l_quantity")).alias("avg_qty"),
-            (_dsum(F.col("l_discount"), scale=4) / F.count("l_discount")).alias("avg_disc"),
+            exact_sum(F.col("l_quantity")).alias("sum_qty"),
+            exact_sum(F.col("l_extendedprice")).alias("sum_base_price"),
+            exact_sum(disc_price, scale=4).alias("sum_disc_price"),
+            (exact_sum(F.col("l_quantity")) / F.count("l_quantity")).alias("avg_qty"),
+            (exact_sum(F.col("l_discount"), scale=4) / F.count("l_discount")).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
     )
@@ -493,11 +489,11 @@ def q_group_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_rollup_cube",
-    oracle="""
+    oracle=f"""
     SELECT year(o_orderdate) AS order_year,
            o_orderstatus,
            GROUPING(year(o_orderdate), o_orderstatus) AS gid,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
+           {sql_exact_sum("o_totalprice")} AS sum_price,
            COUNT(*) AS n_orders
     FROM orders
     GROUP BY ROLLUP(year(o_orderdate), o_orderstatus)
@@ -511,7 +507,7 @@ def q_rollup_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rollup("order_year", "o_orderstatus")
         .agg(
             F.grouping_id().alias("gid"),
-            _dsum(F.col("o_totalprice")).alias("sum_price"),
+            exact_sum(F.col("o_totalprice")).alias("sum_price"),
             F.count(F.lit(1)).alias("n_orders"),
         )
     )
@@ -715,10 +711,10 @@ def q_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_json_extract",
-    oracle="""
+    oracle=f"""
     SELECT CAST(json_extract_string(props, '$.k') AS INTEGER) AS k_int,
            COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+           {sql_exact_sum("value", 4)} AS sum_value
     FROM events
     GROUP BY 1
     """,
@@ -731,7 +727,7 @@ def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("k_int")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            _dsum(F.col("value"), scale=4).alias("sum_value"),
+            exact_sum(F.col("value"), scale=4).alias("sum_value"),
         )
     )
 

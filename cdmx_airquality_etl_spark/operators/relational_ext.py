@@ -35,17 +35,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.portable import exact_sum, sql_exact_sum, sql_tokens, tokens
 from ..registry import register
 from ..sources.parquet import load_table
 
 
 @register(
     "q_cube",
-    oracle="""
+    oracle=f"""
     SELECT o_orderstatus, o_orderpriority,
            GROUPING(o_orderstatus, o_orderpriority) AS gid,
            COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+           {sql_exact_sum("o_totalprice")} AS sum_price
     FROM orders
     GROUP BY CUBE(o_orderstatus, o_orderpriority)
     """,
@@ -59,7 +60,7 @@ def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.cube("o_orderstatus", "o_orderpriority").agg(
             F.grouping_id().alias("gid"),
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("sum_price"),
+            exact_sum(F.col("o_totalprice")).alias("sum_price"),
         )
     )
 
@@ -197,10 +198,10 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_explode_tokens",
-    oracle=r"""
+    oracle=rf"""
     SELECT doc_id, u.tok, CAST(u.pos AS INTEGER) AS pos
     FROM (
-      SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS w
+      SELECT doc_id, {sql_tokens("text")} AS w
       FROM documents WHERE doc_id < 50
     ), LATERAL (
       SELECT unnest(w) AS tok, generate_subscripts(w, 1) - 1 AS pos
@@ -211,7 +212,7 @@ def q_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lateral array expansion with ordinality (posexplode ↔ unnest WITH
     ORDINALITY) — the S-TBL rows→records shape as a first-class operator."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
-    toks = F.split(F.trim(F.lower("text")), r"\s+")
+    toks = tokens("text")
     return docs.select("doc_id", F.posexplode(toks).alias("pos", "tok")).select(
         "doc_id", "tok", F.col("pos").cast("int").alias("pos")
     )
@@ -370,9 +371,9 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_range_join",
-    oracle="""
+    oracle=f"""
     SELECT b.band, COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+           {sql_exact_sum("o.o_totalprice")} AS sum_price
     FROM orders o
     JOIN (VALUES ('low', 0.0, 50000.0),
                  ('mid', 50000.0, 150000.0),
@@ -398,16 +399,16 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy("band").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("sum_price"),
+        exact_sum(F.col("o_totalprice")).alias("sum_price"),
     )
 
 
 @register(
     "q_time_bucket",
-    oracle="""
+    oracle=f"""
     SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS bucket_day, event_type,
            COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+           {sql_exact_sum("value", 6)} AS sum_value
     FROM events
     GROUP BY 1, 2
     """,
@@ -427,7 +428,7 @@ def q_time_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
         ).agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
+            exact_sum(F.col("value"), 6).alias("sum_value"),
         )
     )
 
@@ -531,14 +532,14 @@ def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_array_funcs",
-    oracle=r"""
+    oracle=rf"""
     SELECT doc_id,
            len(toks) AS n_toks,
            len(list_distinct(toks)) AS n_distinct,
            array_to_string(list_sort(list_distinct(toks))[1:3], ',') AS first3_sorted,
            list_contains(toks, 'the') AS has_the
     FROM (
-      SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS toks
+      SELECT doc_id, {sql_tokens("text")} AS toks
       FROM documents WHERE doc_id < 100
     )
     """,
@@ -550,7 +551,7 @@ def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     compose. Distinct output is sorted before slicing because set order is
     engine-specific."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    toks = F.split(F.trim(F.lower("text")), r"\s+")
+    toks = tokens("text")
     return docs.select(
         "doc_id",
         F.size(toks).cast("long").alias("n_toks"),

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.portable import exact_sum, sql_exact_sum
 from ..registry import register
 from ..sources.parquet import load_table
 
@@ -108,13 +109,13 @@ def q_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_rfm",
-    oracle="""
+    oracle=f"""
     WITH mx AS (SELECT MAX(o_orderdate) AS mo FROM orders),
     base AS (
       SELECT o_custkey AS c_custkey,
              CAST(datediff('day', CAST(MAX(o_orderdate) AS DATE), CAST(MAX(mo) AS DATE)) AS BIGINT) AS recency_days,
              CAST(COUNT(*) AS BIGINT) AS frequency,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS monetary
+             {sql_exact_sum("o_totalprice")} AS monetary
       FROM orders, mx GROUP BY o_custkey
     )
     SELECT c_custkey, recency_days, frequency, monetary,
@@ -145,7 +146,7 @@ def q_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("mo").cast("date"), F.max("o_orderdate").cast("date")
             ).cast("bigint").alias("recency_days"),
             F.count(F.lit(1)).alias("frequency"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("monetary"),
+            exact_sum(F.col("o_totalprice")).alias("monetary"),
         )
     )
     return base.select(

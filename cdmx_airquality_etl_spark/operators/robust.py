@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.portable import exact_sum, sql_exact_sum
 from ..registry import register
 from ..sources.parquet import load_table
 
@@ -391,7 +392,7 @@ def q_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_winsorized_mean",
-    oracle="""
+    oracle=f"""
     WITH bounds AS (
       SELECT o_orderpriority,
              quantile_disc(o_totalprice, 0.05) AS lo,
@@ -400,10 +401,9 @@ def q_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT o.o_orderpriority,
            COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*)
+           {sql_exact_sum("o_totalprice")} / COUNT(*)
              AS raw_mean,
-           CAST(SUM(CAST(LEAST(GREATEST(o_totalprice, lo), hi)
-                         AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*)
+           {sql_exact_sum("LEAST(GREATEST(o_totalprice, lo), hi)")} / COUNT(*)
              AS winsorized_mean,
            CAST(SUM(CASE WHEN o_totalprice < lo OR o_totalprice > hi
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_clamped
@@ -443,11 +443,11 @@ def q_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
             (
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double")
+                exact_sum(F.col("o_totalprice"))
                 / F.count(F.lit(1))
             ).alias("raw_mean"),
             (
-                F.sum(clamped.cast("decimal(18,2)")).cast("double")
+                exact_sum(clamped)
                 / F.count(F.lit(1))
             ).alias("winsorized_mean"),
             F.sum(out_of_band.cast("int")).cast("long").alias("n_clamped"),

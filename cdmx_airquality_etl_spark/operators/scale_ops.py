@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.portable import exact_sum, sql_exact_sum
 from ..registry import register
 from ..sources.parquet import load_table
 
@@ -155,9 +156,9 @@ _SALT_BUCKETS = 16
 
 @register(
     "q_group_salted",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
+           {sql_exact_sum("l_extendedprice")} AS sum_price,
            COUNT(*) AS n_rows
     FROM lineitem
     GROUP BY l_returnflag
@@ -193,9 +194,9 @@ def q_group_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_join_skew_salted",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority, COUNT(*) AS n_items,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+           {sql_exact_sum("l_extendedprice")} AS sum_price
     FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     GROUP BY o_orderpriority
     """,
@@ -229,8 +230,7 @@ def q_join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_items"),
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-        .cast("double")
+        exact_sum(F.col("l_extendedprice"))
         .alias("sum_price"),
     )
 
@@ -306,10 +306,10 @@ _BLOOM_BITS = 8192  # bitmap size (bits); driver state is bounded by this
 
 @register(
     "q_bloom_prune",
-    oracle="""
+    oracle=f"""
     SELECT o.o_orderpriority,
            COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+           {sql_exact_sum("o.o_totalprice")}
              AS revenue
     FROM orders o
     WHERE o.o_custkey IN (
@@ -377,8 +377,7 @@ def q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
+            exact_sum(F.col("o_totalprice"))
             .alias("revenue"),
         )
     )

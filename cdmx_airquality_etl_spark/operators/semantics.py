@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.portable import exact_sum, sql_exact_sum
 from ..registry import register
 from ..sources.parquet import load_table
 
@@ -122,11 +123,11 @@ def q_division_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_empty_agg",
-    oracle="""
+    oracle=f"""
     WITH none AS (SELECT * FROM orders WHERE o_totalprice < 0 AND o_totalprice > 1)
     SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
            CAST(COUNT(o_custkey) AS BIGINT) AS n_vals,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
+           {sql_exact_sum("o_totalprice")} AS sum_price,
            CAST(MIN(o_totalprice) AS DOUBLE) AS min_price,
            CAST(MAX(o_totalprice) AS DOUBLE) AS max_price
     FROM none
@@ -144,7 +145,7 @@ def q_empty_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return none.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count("o_custkey").alias("n_vals"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("sum_price"),
+        exact_sum(F.col("o_totalprice")).alias("sum_price"),
         F.min("o_totalprice").cast("double").alias("min_price"),
         F.max("o_totalprice").cast("double").alias("max_price"),
     )

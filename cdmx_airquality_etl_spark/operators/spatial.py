@@ -18,9 +18,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.portable import md5_int, sql_md5_int
 from ..registry import register
 from ..sources.parquet import load_table
-from .dedup import _md5_int, _sql_md5_int
 
 _GRID = 10000  # coordinate domain [0, GRID)
 _CELL = 250  # cell width; radius search is bounded by one cell
@@ -32,8 +32,8 @@ _RADIUS2 = 200 * 200  # squared radius for the pair join (< _CELL, so 3x3 covers
 # sets spatial joins are built for)
 _X_SRC = "'x|' || c_custkey"
 _Y_SRC = "'y|' || c_custkey"
-_X_EXPR = f"{_sql_md5_int(_X_SRC, 12)} % {_GRID}"
-_Y_EXPR = f"{_sql_md5_int(_Y_SRC, 12)} % {_GRID}"
+_X_EXPR = f"{sql_md5_int(_X_SRC, 12)} % {_GRID}"
+_Y_EXPR = f"{sql_md5_int(_Y_SRC, 12)} % {_GRID}"
 _SQL_POINTS = f"""
     pts AS (
       SELECT c_custkey AS id,
@@ -48,8 +48,8 @@ _SQL_POINTS = f"""
 
 def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
-    x = _md5_int(F.concat(F.lit("x|"), F.col("c_custkey").cast("string")), 12) % _GRID
-    y = _md5_int(F.concat(F.lit("y|"), F.col("c_custkey").cast("string")), 12) % _GRID
+    x = md5_int(F.concat(F.lit("x|"), F.col("c_custkey").cast("string")), 12) % _GRID
+    y = md5_int(F.concat(F.lit("y|"), F.col("c_custkey").cast("string")), 12) % _GRID
     return cust.select(
         F.col("c_custkey").alias("id"),
         x.alias("x"),

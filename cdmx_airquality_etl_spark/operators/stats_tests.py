@@ -27,8 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.portable import exact_sum, sql_exact_sum
 from ..registry import register
-from .dedup import _md5_int, _sql_md5_int
 from .fanout import fan_out_scan
 from ..sources.parquet import load_table
 from .similarity import _SQL_NZ_CTE, _dot, _nonzero, _sql_cos
@@ -482,11 +482,11 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     rel_tot AS (SELECT CAST(SUM(rel) AS BIGINT) AS r FROM ranked),
     dcg AS (
-      SELECT CAST(SUM(CAST(rel * disc AS DECIMAL(18,12))) AS DOUBLE) AS dcg
+      SELECT {sql_exact_sum("rel * disc", 12)} AS dcg
       FROM ranked JOIN disc USING (rnk) WHERE rnk <= {_NDCG_K}
     ),
     idcg AS (
-      SELECT CAST(SUM(CAST(disc AS DECIMAL(18,12))) AS DOUBLE) AS idcg
+      SELECT {sql_exact_sum("disc", 12)} AS idcg
       FROM disc, rel_tot WHERE rnk <= LEAST(r, {_NDCG_K})
     )
     SELECT dcg.dcg AS dcg, idcg.idcg AS idcg,
@@ -528,15 +528,14 @@ def q_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranked.filter(F.col("rnk") <= _NDCG_K)
         .join(F.broadcast(disc), "rnk")
         .agg(
-            F.sum((F.col("rel") * F.col("disc")).cast("decimal(18,12)"))
-            .cast("double")
+            exact_sum(F.col("rel") * F.col("disc"), 12)
             .alias("dcg")
         )
     )
     idcg = (
         disc.crossJoin(F.broadcast(rel_tot))
         .filter(F.col("rnk") <= F.least(F.col("r"), F.lit(_NDCG_K)))
-        .agg(F.sum(F.col("disc").cast("decimal(18,12)")).cast("double").alias("idcg"))
+        .agg(exact_sum(F.col("disc"), 12).alias("idcg"))
     )
     return (
         dcg.crossJoin(F.broadcast(idcg))
@@ -880,7 +879,7 @@ def _fdr_partials(batches):
     ),
     point AS (
       SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
-             CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)
+             {sql_exact_sum("value", 6)} / COUNT(*)
                AS mean_value
       FROM events GROUP BY event_type
     )
@@ -951,7 +950,7 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     point = events.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         (
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
+            exact_sum(F.col("value"), 6)
             / F.count(F.lit(1))
         ).alias("mean_value"),
     )

@@ -22,9 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.portable import md5_int, sql_md5_int, sql_tokens, tokens
 from ..registry import register
 from ..sources.parquet import load_table
-from .dedup import _md5_int, _sql_md5_int
 
 _BLOCK_W = 10  # tokens per disjoint block
 _HEADER_K = 5  # opening tokens defining a template header
@@ -34,7 +34,7 @@ _HEADER_K = 5  # opening tokens defining a template header
 _SQL_BLOCKS = f"""
     tok AS (
       SELECT doc_id, lang, source,
-             string_split_regex(trim(lower(text)), '\\s+') AS w
+             {sql_tokens("text")} AS w
       FROM documents
     ),
     blocks AS (
@@ -54,7 +54,7 @@ def doc_blocks(docs: DataFrame, *carry: str) -> DataFrame:
     (streaming/block_index.py), so the two grains cannot drift apart."""
     tok = docs.select(
         "doc_id", *carry,
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("w"),
+        tokens(F.col("text")).alias("w"),
     ).filter(F.size("w") >= _BLOCK_W)
     return tok.select(
         "doc_id", *carry,
@@ -78,7 +78,7 @@ def _blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_block_dedup",
     oracle=f"""
     WITH {_SQL_BLOCKS}
-    SELECT {_sql_md5_int('blk', 15)} AS block_hash,
+    SELECT {sql_md5_int('blk', 15)} AS block_hash,
            CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
            CAST(COUNT(*) AS BIGINT) AS n_occurrences
     FROM blocks
@@ -96,7 +96,7 @@ def q_block_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain down."""
     blocks = _blocks(spark, sf_dir)
     return (
-        blocks.select(_md5_int(F.col("blk"), 15).alias("block_hash"), "doc_id")
+        blocks.select(md5_int(F.col("blk"), 15).alias("block_hash"), "doc_id")
         .groupBy("block_hash")
         .agg(
             F.countDistinct("doc_id").alias("n_docs"),
@@ -114,7 +114,7 @@ def q_block_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_SQL_BLOCKS},
     hashed AS (
-      SELECT doc_id, {_sql_md5_int('blk', 15)} AS h FROM blocks
+      SELECT doc_id, {sql_md5_int('blk', 15)} AS h FROM blocks
     ),
     shared AS (
       SELECT h FROM hashed GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2
@@ -138,7 +138,7 @@ def q_doc_dup_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts back onto the per-doc block list, then one aggregate per
     doc. Exact integer counts, one division."""
     blocks = _blocks(spark, sf_dir)
-    hashed = blocks.select("doc_id", _md5_int(F.col("blk"), 15).alias("h"))
+    hashed = blocks.select("doc_id", md5_int(F.col("blk"), 15).alias("h"))
     shared = (
         hashed.groupBy("h")
         .agg(F.countDistinct("doc_id").alias("nd"))
@@ -160,7 +160,7 @@ def q_doc_dup_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_template_headers — documents sharing their opening tokens
 # ---------------------------------------------------------------------------
 _SQL_HEADER_EXPR = (
-    r"array_to_string((string_split_regex(trim(lower(text)), '\s+'))"
+    f"array_to_string(({sql_tokens('text')})"
     f"[1:{_HEADER_K}], ' ')"
 )
 
@@ -170,9 +170,9 @@ _SQL_HEADER_EXPR = (
     oracle=f"""
     WITH pre AS (
       SELECT doc_id, source,
-             {_sql_md5_int(_SQL_HEADER_EXPR, 15)} AS h
+             {sql_md5_int(_SQL_HEADER_EXPR, 15)} AS h
       FROM documents
-      WHERE len(string_split_regex(trim(lower(text)), '\\s+')) >= {_HEADER_K}
+      WHERE len({sql_tokens("text")}) >= {_HEADER_K}
     )
     SELECT h AS header_hash,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -190,10 +190,10 @@ def q_template_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate. Scan-side prefix hash, one aggregate — the cheapest
     template sweep that exists, run before any shingle machinery."""
     docs = load_table(spark, sf_dir, "documents")
-    w = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    w = tokens(F.col("text"))
     pre = docs.select(
         "doc_id", "source",
-        _md5_int(F.array_join(F.slice(w, 1, _HEADER_K), " "), 15).alias("h"),
+        md5_int(F.array_join(F.slice(w, 1, _HEADER_K), " "), 15).alias("h"),
     ).where(F.size(w) >= _HEADER_K)
     return (
         pre.groupBy(F.col("h").alias("header_hash"))
@@ -213,10 +213,10 @@ q_template_headers.__doc__ = q_template_headers.__doc__.format(k=_HEADER_K)
 # ---------------------------------------------------------------------------
 @register(
     "q_tokenizer_fertility",
-    oracle=r"""
+    oracle=rf"""
     WITH c AS (
       SELECT lang,
-             CAST(SUM(len(string_split_regex(trim(lower(text)), '\s+'))) AS BIGINT) AS ws_tokens,
+             CAST(SUM(len({sql_tokens("text")})) AS BIGINT) AS ws_tokens,
              CAST(SUM(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))) AS BIGINT) AS bpe_tokens,
              CAST(SUM(length(text)) AS BIGINT) AS chars,
              CAST(COUNT(*) AS BIGINT) AS n_docs
@@ -239,7 +239,7 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     bpe_re = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
     c = docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(F.split(F.trim(F.lower(F.col("text"))), r"\s+"))).alias("ws_tokens"),
+        F.sum(F.size(tokens(F.col("text")))).alias("ws_tokens"),
         F.sum(F.size(F.regexp_extract_all("text", F.lit(bpe_re), 0))).alias("bpe_tokens"),
         F.sum(F.length("text")).alias("chars"),
     )

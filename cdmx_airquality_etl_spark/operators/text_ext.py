@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.portable import sql_tokens, tokens
 from ..registry import register
 from .fanout import fan_out_scan
 from ..sources.parquet import load_table
@@ -30,7 +31,7 @@ from .dedup import (
     _anchor_jaccard_pairs,
     _doc_shingles,
 )
-from .textstats import _EN_STOP, _sql_toks, _toks
+from .textstats import _EN_STOP
 
 _SENT_RE = "[.!?]+"
 _VOWEL_RE = "[aeiouy]+"
@@ -50,7 +51,7 @@ _RAKE_STOPS = list(_EN_STOP)
     oracle=f"""
     WITH c AS (
       SELECT doc_id,
-             CAST(len({_sql_toks('text')}) AS BIGINT) AS n_words,
+             CAST(len({sql_tokens('text')}) AS BIGINT) AS n_words,
              CAST(greatest(len(regexp_extract_all(text, '{_SENT_RE}')), 1) AS BIGINT) AS n_sentences,
              CAST(len(regexp_extract_all(lower(text), '{_VOWEL_RE}')) AS BIGINT) AS n_syllables
       FROM documents
@@ -71,7 +72,7 @@ def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan-side regexp counting, WholeStageCodegen, no shuffle — a
     readability band filter costs one corpus scan at any size."""
     docs = load_table(spark, sf_dir, "documents")
-    n_words = F.size(_toks(F.col("text"))).cast("bigint")
+    n_words = F.size(tokens(F.col("text"))).cast("bigint")
     n_sent = F.greatest(
         F.size(F.regexp_extract_all("text", F.lit(_SENT_RE), 0)), F.lit(1)
     ).cast("bigint")
@@ -99,8 +100,8 @@ def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_keyword_rake",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_sql_toks('text')}) AS w,
-             generate_subscripts({_sql_toks('text')}, 1) AS pos
+      SELECT doc_id, unnest({sql_tokens('text')}) AS w,
+             generate_subscripts({sql_tokens('text')}, 1) AS pos
       FROM documents
     ),
     marked AS (
@@ -163,7 +164,7 @@ def q_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     # after, so the added round-robin exchange buys nothing — reverted
     tok = docs.select(
         "doc_id",
-        F.posexplode(_toks(F.col("text"))).alias("pos0", "w"),
+        F.posexplode(tokens(F.col("text"))).alias("pos0", "w"),
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "w")
     stop = F.when(
         F.col("w").isin(*_RAKE_STOPS) | ~F.col("w").rlike("[a-z0-9]"), 1
@@ -214,7 +215,7 @@ def q_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_zipf_profile",
     oracle=f"""
     WITH tok AS (
-      SELECT unnest({_sql_toks('text')}) AS token FROM documents
+      SELECT unnest({sql_tokens('text')}) AS token FROM documents
     ),
     freq AS (
       SELECT token, CAST(COUNT(*) AS BIGINT) AS n FROM tok GROUP BY token
@@ -243,7 +244,7 @@ def q_zipf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain (≤ corpus-distinct tokens). Exact integers; one division for
     the share."""
     tok = load_table(spark, sf_dir, "documents").select(
-        F.explode(_toks(F.col("text"))).alias("token")
+        F.explode(tokens(F.col("text"))).alias("token")
     )
     freq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
     tot = freq.agg(F.sum("n").alias("t"), F.count(F.lit(1)).alias("v"))

@@ -20,9 +20,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
+from ..functions.portable import (
+    content_fingerprint,
+    md5_int,
+    sql_md5_int,
+    sql_tokens,
+    tokens,
+)
 from ..registry import register
 from ..sources.parquet import load_table
-from .dedup import _md5_int, _sql_md5_int, content_fingerprint
 
 # Tiny stopword inventories for the heuristic language-ID (n-gram/stopword
 # scoring). Deliberately small and hardcoded so the oracle SQL can repeat them
@@ -32,17 +38,9 @@ _ES_STOP = ["el", "la", "de", "los", "y", "en", "es"]
 _PUNCT_CLASS = "[.,;:!?]"
 
 
-def _toks(col: Column) -> Column:
-    return F.split(F.trim(F.lower(col)), r"\s+")
-
-
-def _sql_toks(expr: str) -> str:
-    return f"string_split_regex(trim(lower({expr})), '\\s+')"
-
-
-def _hits(tokens: Column, stops: list[str]) -> Column:
+def _hits(toks: Column, stops: list[str]) -> Column:
     arr = F.array(*[F.lit(s) for s in stops])
-    return F.size(F.filter(tokens, lambda t: F.array_contains(arr, t)))
+    return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
 
 
 def _sql_hits(toks_expr: str, stops: list[str]) -> str:
@@ -60,15 +58,15 @@ def _sql_hits(toks_expr: str, stops: list[str]) -> str:
            COUNT(*) AS n_docs,
            CAST(SUM(n_chars) AS BIGINT) AS total_chars,
            CAST(SUM(n_chars) AS DOUBLE) / COUNT(*) AS avg_chars,
-           CAST(SUM(len({_sql_toks('text')})) AS BIGINT) AS total_tokens,
-           CAST(SUM(len({_sql_toks('text')})) AS DOUBLE) / COUNT(*) AS avg_tokens
+           CAST(SUM(len({sql_tokens('text')})) AS BIGINT) AS total_tokens,
+           CAST(SUM(len({sql_tokens('text')})) AS DOUBLE) / COUNT(*) AS avg_tokens
     FROM documents
     GROUP BY lang
     """,
 )
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(_toks(F.col("text")))
+    n_tokens = F.size(tokens(F.col("text")))
     return (
         docs.select("lang", "n_chars", n_tokens.alias("n_tokens"))
         .groupBy("lang")
@@ -92,7 +90,7 @@ _BPE_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
     "q_token_count",
     oracle=f"""
     SELECT doc_id,
-           len({_sql_toks('text')}) AS n_ws_tokens,
+           len({sql_tokens('text')}) AS n_ws_tokens,
            len(regexp_extract_all(text, '{_BPE_RE}')) AS n_bpe_tokens,
            length(text) AS n_chars_txt
     FROM documents
@@ -102,7 +100,7 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        F.size(_toks(F.col("text"))).alias("n_ws_tokens"),
+        F.size(tokens(F.col("text"))).alias("n_ws_tokens"),
         F.size(F.regexp_extract_all("text", F.lit(_BPE_RE), 0)).alias("n_bpe_tokens"),
         F.length("text").alias("n_chars_txt"),
     )
@@ -117,8 +115,8 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH scored AS (
       SELECT doc_id, lang,
-             {_sql_hits(_sql_toks('text'), _EN_STOP)} AS en_hits,
-             {_sql_hits(_sql_toks('text'), _ES_STOP)} AS es_hits
+             {_sql_hits(sql_tokens('text'), _EN_STOP)} AS en_hits,
+             {_sql_hits(sql_tokens('text'), _ES_STOP)} AS es_hits
       FROM documents
     )
     SELECT doc_id, lang,
@@ -134,7 +132,7 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = _toks(F.col("text"))
+    toks = tokens(F.col("text"))
     scored = docs.select(
         "doc_id",
         "lang",
@@ -162,8 +160,8 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH feat AS (
       SELECT doc_id,
-             len({_sql_toks('text')}) AS n_toks,
-             {_sql_hits(_sql_toks('text'), _EN_STOP)} AS stop_hits,
+             len({sql_tokens('text')}) AS n_toks,
+             {_sql_hits(sql_tokens('text'), _EN_STOP)} AS stop_hits,
              length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS punct_chars,
              length(text) AS n_chars_txt
       FROM documents
@@ -179,7 +177,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = _toks(F.col("text"))
+    toks = tokens(F.col("text"))
     feat = docs.select(
         "doc_id",
         F.size(toks).alias("n_toks"),
@@ -210,11 +208,11 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_doc_fingerprint",
-    oracle=r"""
+    oracle=rf"""
     WITH tok AS (
       SELECT doc_id,
              regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS norm_text,
-             string_split_regex(trim(lower(text)), '\s+') AS w
+             {sql_tokens("text")} AS w
       FROM documents
     ),
     sh AS (
@@ -234,7 +232,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import word_shingles
 
     docs = load_table(spark, sf_dir, "documents")
-    shingles = word_shingles(F.lower(F.col("text")), k=3)
+    shingles = word_shingles(F.col("text"), k=3)
     return docs.select(
         "doc_id",
         content_fingerprint(F.col("text")).alias("fp_full"),
@@ -320,9 +318,9 @@ _QC_W = _qc_weights()
 # model literal can never fork between its uses.
 _SQL_QC_SCORE_MILLI = (
     f"{_QC_BIAS_MILLI} + CAST(coalesce(list_sum(list_transform("
-    f"{_sql_toks('text')}, "
+    f"{sql_tokens('text')}, "
     f"t -> [{', '.join(str(w) for w in _QC_W)}]"
-    f"[({_sql_md5_int('t', 8)}) % {_QC_DIM} + 1]"
+    f"[({sql_md5_int('t', 8)}) % {_QC_DIM} + 1]"
     f")), 0) AS BIGINT)"
 )
 
@@ -332,11 +330,11 @@ def qc_score_milli() -> Column:
     F.col('text') under the embedded hashed linear model."""
     w_arr = F.array(*[F.lit(w).cast("long") for w in _QC_W])
     tok_weight = lambda t: F.element_at(  # noqa: E731
-        w_arr, (F.pmod(_md5_int(t, 8), F.lit(_QC_DIM)) + 1).cast("int")
+        w_arr, (F.pmod(md5_int(t, 8), F.lit(_QC_DIM)) + 1).cast("int")
     )
     return F.lit(_QC_BIAS_MILLI).cast("long") + F.coalesce(
         F.aggregate(
-            _toks(F.col("text")),
+            tokens(F.col("text")),
             F.lit(0).cast("long"),
             lambda acc, t: acc + tok_weight(t),
         ),
@@ -392,7 +390,7 @@ _TFIDF_MIN_LEN = 3
     "q_tfidf_topterms",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, lang, unnest({_sql_toks('text')}) AS term
+      SELECT doc_id, lang, unnest({sql_tokens('text')}) AS term
       FROM documents
     ),
     tf AS (
@@ -434,7 +432,7 @@ def q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     without cross-engine ln() risk)."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", "lang", F.explode(_toks(F.col("text"))).alias("term")
+        "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("term")
     ).filter(F.length("term") >= _TFIDF_MIN_LEN)
     tf = toks.groupBy("lang", "term").agg(
         F.count(F.lit(1)).alias("tf"),
@@ -460,10 +458,10 @@ def q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH scored AS (
       SELECT lang,
-             CASE WHEN {_sql_hits(_sql_toks('text'), _EN_STOP)}
-                       > {_sql_hits(_sql_toks('text'), _ES_STOP)} THEN 'en'
-                  WHEN {_sql_hits(_sql_toks('text'), _ES_STOP)}
-                       > {_sql_hits(_sql_toks('text'), _EN_STOP)} THEN 'es'
+             CASE WHEN {_sql_hits(sql_tokens('text'), _EN_STOP)}
+                       > {_sql_hits(sql_tokens('text'), _ES_STOP)} THEN 'en'
+                  WHEN {_sql_hits(sql_tokens('text'), _ES_STOP)}
+                       > {_sql_hits(sql_tokens('text'), _EN_STOP)} THEN 'es'
                   ELSE 'unknown' END AS lang_pred
       FROM documents
     ),

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.portable import exact_sum, sql_exact_sum
 from ..registry import register
 from ..sources.parquet import load_table
 
@@ -489,7 +490,7 @@ _HOP_SLIDE_US = 900 * 1_000_000  # sliding every 15 minutes → 4 windows/event
     )
     SELECT window_start_us, event_type,
            COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+           {sql_exact_sum("value", 6)} AS sum_value
     FROM hopped
     GROUP BY 1, 2
     """,
@@ -518,7 +519,7 @@ def q_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
+            exact_sum(F.col("value"), 6).alias("sum_value"),
         )
     )
 

@@ -39,9 +39,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.portable import exact_sum, sql_exact_sum
 from ..registry import register
 from ..sources.parquet import load_table
-from .relational import _dsum
 
 _Q18_MIN_QTY = 300
 
@@ -95,8 +95,8 @@ def q_tpch_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_tpch_forecast_revenue",
-    oracle="""
-    SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+    oracle=f"""
+    SELECT {sql_exact_sum("l_extendedprice * l_discount", 4)} AS revenue
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
       AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
@@ -120,7 +120,7 @@ def q_tpch_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_discount") <= 0.07)
             & (F.col("l_quantity") < 24)
         )
-        .agg(_dsum(F.col("l_extendedprice") * F.col("l_discount"), scale=4).alias("revenue"))
+        .agg(exact_sum(F.col("l_extendedprice") * F.col("l_discount"), scale=4).alias("revenue"))
     )
 
 
@@ -168,12 +168,14 @@ def q_tpch_cust_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_tpch_promo_effect",
-    oracle="""
+    oracle=f"""
     SELECT CAST(100.0 AS DOUBLE)
-           * CAST(SUM(CAST(CASE WHEN p_type = 'PROMO'
-                                THEN l_extendedprice * (1.0 - l_discount)
-                                ELSE 0 END AS DECIMAL(18,4))) AS DOUBLE)
-           / CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE)
+           * {sql_exact_sum(
+               "CASE WHEN p_type = 'PROMO' "
+               "THEN l_extendedprice * (1.0 - l_discount) ELSE 0 END",
+               4,
+           )}
+           / {sql_exact_sum("l_extendedprice * (1.0 - l_discount)", 4)}
            AS promo_revenue
     FROM lineitem JOIN part ON l_partkey = p_partkey
     WHERE l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
@@ -198,8 +200,8 @@ def q_tpch_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             (
                 F.lit(100.0)
-                * _dsum(promo, scale=4)
-                / _dsum(disc, scale=4)
+                * exact_sum(promo, scale=4)
+                / exact_sum(disc, scale=4)
             ).alias("promo_revenue")
         )
     )
@@ -210,14 +212,14 @@ def q_tpch_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_tpch_small_qty",
-    oracle="""
+    oracle=f"""
     WITH part_avg AS (
       SELECT l_partkey AS pk,
              CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
              CAST(COUNT(*) AS BIGINT) AS cnt
       FROM lineitem GROUP BY l_partkey
     )
-    SELECT CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS DOUBLE)
+    SELECT CAST({sql_exact_sum("l_extendedprice")} / 7.0 AS DOUBLE)
            AS avg_yearly
     FROM lineitem
     JOIN part ON p_partkey = l_partkey
@@ -258,7 +260,7 @@ def q_tpch_small_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
             < F.col("sum_qty")
         )
         .agg(
-            (_dsum(F.col("l_extendedprice")) / F.lit(7.0)).alias("avg_yearly")
+            (exact_sum(F.col("l_extendedprice")) / F.lit(7.0)).alias("avg_yearly")
         )
     )
 
@@ -323,8 +325,8 @@ def q_tpch_large_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_tpch_disjunctive",
-    oracle="""
-    SELECT CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE)
+    oracle=f"""
+    SELECT {sql_exact_sum("l_extendedprice * (1.0 - l_discount)", 4)}
            AS revenue
     FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 5
@@ -358,7 +360,7 @@ def q_tpch_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .filter(pred)
-        .agg(_dsum(disc, scale=4).alias("revenue"))
+        .agg(exact_sum(disc, scale=4).alias("revenue"))
     )
 
 
@@ -438,10 +440,10 @@ def q_tpch_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_tpch_cross_border",
-    oracle="""
+    oracle=f"""
     SELECT ns.n_name AS supp_nation,
            CAST(EXTRACT(year FROM l_shipdate) AS INT) AS ship_year,
-           CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+           {sql_exact_sum("l_extendedprice * (1.0 - l_discount)", 4)} AS revenue
     FROM lineitem
     JOIN orders   ON o_orderkey = l_orderkey
     JOIN customer ON c_custkey = o_custkey
@@ -485,7 +487,7 @@ def q_tpch_cross_border(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("supp_nation"),
             F.year("l_shipdate").alias("ship_year"),
         )
-        .agg(_dsum(disc, scale=4).alias("revenue"))
+        .agg(exact_sum(disc, scale=4).alias("revenue"))
     )
 
 
@@ -494,12 +496,14 @@ def q_tpch_cross_border(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_tpch_product_profit",
-    oracle="""
+    oracle=f"""
     SELECT n_name AS nation,
            CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year,
-           CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-                         - l_quantity * p_retailprice * CAST(0.2 AS DOUBLE)
-                    AS DECIMAL(18,4))) AS DOUBLE) AS profit
+           {sql_exact_sum(
+               "l_extendedprice * (1.0 - l_discount)"
+               " - l_quantity * p_retailprice * CAST(0.2 AS DOUBLE)",
+               4,
+           )} AS profit
     FROM lineitem
     JOIN orders   ON o_orderkey = l_orderkey
     JOIN part     ON p_partkey = l_partkey
@@ -541,7 +545,7 @@ def q_tpch_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").alias("o_year"),
         )
-        .agg(_dsum(profit, scale=4).alias("profit"))
+        .agg(exact_sum(profit, scale=4).alias("profit"))
     )
 
 
@@ -550,9 +554,9 @@ def q_tpch_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_tpch_returned_items",
-    oracle="""
+    oracle=f"""
     SELECT c_custkey, c_name,
-           CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+           {sql_exact_sum("l_extendedprice * (1.0 - l_discount)", 4)} AS revenue,
            CAST(c_acctbal AS DOUBLE) AS c_acctbal, n_name
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
@@ -597,7 +601,7 @@ def q_tpch_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cust, orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(_dsum(disc, scale=4).alias("revenue"))
+        .agg(exact_sum(disc, scale=4).alias("revenue"))
         .select(
             "c_custkey", "c_name", "revenue",
             F.col("c_acctbal").cast("double").alias("c_acctbal"), "n_name",
@@ -777,14 +781,14 @@ def q_tpch_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_tpch_lapsed_customers",
-    oracle="""
+    oracle=f"""
     WITH avg_bal AS (
-      SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS ab
+      SELECT {sql_exact_sum("c_acctbal")} / COUNT(*) AS ab
       FROM customer WHERE c_acctbal > 0
     )
     SELECT c_mktsegment,
            CAST(COUNT(*) AS BIGINT) AS numcust,
-           CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
+           {sql_exact_sum("c_acctbal")} AS totacctbal
     FROM customer, avg_bal
     WHERE c_acctbal > ab
       AND NOT EXISTS (
@@ -810,7 +814,7 @@ def q_tpch_lapsed_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.filter(F.col("c_acctbal") > 0)
         .agg(
             (
-                F.sum(F.col("c_acctbal").cast("decimal(18,2)")).cast("double")
+                exact_sum(F.col("c_acctbal"))
                 / F.count(F.lit(1))
             ).alias("ab")
         )
@@ -827,7 +831,7 @@ def q_tpch_lapsed_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            _dsum(F.col("c_acctbal")).alias("totacctbal"),
+            exact_sum(F.col("c_acctbal")).alias("totacctbal"),
         )
     )
 

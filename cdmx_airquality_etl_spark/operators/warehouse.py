@@ -45,9 +45,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.portable import exact_sum, sql_exact_sum
 from ..registry import register
 from ..sources.parquet import load_table
-from .relational import _dsum
 
 _Q3_CUTOFF = "1998-06-01"
 _TOPK_NEIGHBORS = 3
@@ -60,7 +60,7 @@ _TOPK_NEIGHBORS = 3
     "q_tpch_shipping",
     oracle=f"""
     SELECT l_orderkey,
-           CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+           {sql_exact_sum("l_extendedprice * (1.0 - l_discount)", 4)} AS revenue,
            strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
            o_orderpriority
     FROM customer
@@ -102,7 +102,7 @@ def q_tpch_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             li.l_orderkey == orders.o_orderkey,
         )
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(_dsum(disc_price, scale=4).alias("revenue"))
+        .agg(exact_sum(disc_price, scale=4).alias("revenue"))
         .select(
             "l_orderkey",
             "revenue",
@@ -120,9 +120,9 @@ def q_tpch_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q_tpch_local_volume",
-    oracle="""
+    oracle=f"""
     SELECT n_name,
-           CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+           {sql_exact_sum("l_extendedprice * (1.0 - l_discount)", 4)} AS revenue
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -177,7 +177,7 @@ def q_tpch_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("c_nationkey") == supp.s_nationkey),
         )
         .groupBy("n_name")
-        .agg(_dsum(disc_price, scale=4).alias("revenue"))
+        .agg(exact_sum(disc_price, scale=4).alias("revenue"))
     )
 
 

@@ -5,11 +5,15 @@ re-exports the dicts to the driver. Keeping the Spark implementation and the
 DuckDB oracle SQL side by side in the same decorator call is what keeps
 column names / rounding / semantics in sync (the driver hash-compares them).
 
-Hash-stability policy for float columns (see SURVEY.md §5.1): any aggregated
-monetary/double column is summed through ``DECIMAL(18,2|4)`` (exact,
-order-independent in both engines) and only then cast back to double, so the
-Spark and DuckDB values are bitwise identical regardless of partial-aggregation
-order. Per-row double arithmetic is IEEE-deterministic and needs no such care.
+The expressions whose results both engines must compute bit for bit are
+stated once, each with its Spark and DuckDB twin, in
+``functions/portable.py``: whitespace tokens, the content fingerprint, the
+md5 → BIGINT hash and the exact sum. Hash-stability policy for float columns
+(see SURVEY.md §5.1): any aggregated monetary/double column is summed with
+``exact_sum`` / ``sql_exact_sum`` (through ``DECIMAL(18, scale)``, exact and
+order-independent in both engines, then back to double), so the Spark and
+DuckDB values are bitwise identical regardless of partial-aggregation order.
+Per-row double arithmetic is IEEE-deterministic and needs no such care.
 
 Numeric-literal rule for oracle SQL: DuckDB parses ``0.15`` as DECIMAL, and
 DECIMAL×BIGINT stays EXACT — one rounding *fewer* than Spark's double×long,

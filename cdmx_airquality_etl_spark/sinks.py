@@ -22,6 +22,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def _sqlite_ident(name: str) -> str:
+    """A double-quoted SQLite identifier; an embedded ``"`` is doubled."""
+    return '"' + name.replace('"', '""') + '"'
+
+
 def upsert_to_sqlite(
     df: DataFrame,
     db_path: str,
@@ -44,16 +49,17 @@ def upsert_to_sqlite(
     cols = df.columns
     data_cols = [c for c in cols if c not in key_columns and c != counter_col]
 
-    col_defs = ", ".join(f'"{c}"' for c in cols)
+    col_defs = ", ".join(_sqlite_ident(c) for c in cols)
     placeholders = ", ".join("?" for _ in cols)
-    updates = [f'"{c}" = excluded."{c}"' for c in data_cols]
+    updates = [f"{_sqlite_ident(c)} = excluded.{_sqlite_ident(c)}" for c in data_cols]
     if counter_col and counter_col in cols:
-        updates.append(f'"{counter_col}" = "{table}"."{counter_col}" + 1')
-    conflict = ", ".join(f'"{k}"' for k in key_columns)
+        counter = _sqlite_ident(counter_col)
+        updates.append(f"{counter} = {_sqlite_ident(table)}.{counter} + 1")
+    conflict = ", ".join(_sqlite_ident(k) for k in key_columns)
     # key-only frame with no counter → nothing to update on conflict
     action = f"DO UPDATE SET {', '.join(updates)}" if updates else "DO NOTHING"
     sql = (
-        f'INSERT INTO "{table}" ({col_defs}) VALUES ({placeholders}) '
+        f"INSERT INTO {_sqlite_ident(table)} ({col_defs}) VALUES ({placeholders}) "
         f"ON CONFLICT({conflict}) {action}"
     )
 

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..operators.dedup import _md5_int
+from ..functions.portable import md5_int
 from ..operators.subdoc import doc_blocks
 from .commit import assert_success_markers_enabled, available_now, committed, write_once
 
@@ -51,7 +51,7 @@ def _batch_blocks(batch_df: DataFrame) -> DataFrame:
     subdoc.doc_blocks helper the batch operators use, so the streaming
     grain can never drift from the batch grain."""
     return doc_blocks(batch_df).select(
-        "doc_id", _md5_int(F.col("blk"), 15).alias("block_hash")
+        "doc_id", md5_int(F.col("blk"), 15).alias("block_hash")
     )
 
 

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..operators.dedup import _md5_int
+from ..functions.portable import md5_int
 from .commit import assert_success_markers_enabled, available_now, committed, write_once
 
 CMS_ROWS = 4
@@ -41,7 +41,7 @@ def _bucket(r, key) -> F.Column:
     q_countmin's bucket derivation so stream state and the batch
     calibrator agree on every cell."""
     return (
-        _md5_int(F.concat(r.cast("string"), F.lit("|"), key.cast("string")), 15)
+        md5_int(F.concat(r.cast("string"), F.lit("|"), key.cast("string")), 15)
         % CMS_WIDTH
     )
 

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
-from ..operators.dedup import content_fingerprint
+from ..functions.portable import content_fingerprint
 from .commit import available_now
 
 

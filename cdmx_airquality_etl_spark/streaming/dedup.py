@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.dedup import content_fingerprint
+from ..functions.portable import content_fingerprint
 from .joins import dedup_within_watermark
 
 

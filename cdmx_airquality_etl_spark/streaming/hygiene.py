@@ -27,15 +27,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from ..functions import word_shingles, words
+from ..functions import tokens, word_shingles
 
 
 def doc_grams(col_name: str = "text", n: int = 5):
     """Word n-gram array for a document column; [] when shorter than n
     words (matches the batch operator's gate)."""
-    c = F.lower(F.col(col_name))
+    c = F.col(col_name)
     return F.when(
-        F.size(words(c)) >= n, word_shingles(c, k=n)
+        F.size(tokens(c)) >= n, word_shingles(c, k=n)
     ).otherwise(F.array().cast("array<string>"))
 
 

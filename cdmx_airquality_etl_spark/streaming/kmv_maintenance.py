@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
-from ..operators.dedup import _md5_int
+from ..functions.portable import md5_int
 from .commit import assert_success_markers_enabled, available_now, committed, write_once
 
 KMV_K = 64
@@ -44,7 +44,7 @@ def batch_hashes(batch_df: DataFrame, key_col: str, value_col: str) -> DataFrame
     portable md5 hash, so stream state and batch estimator agree."""
     return batch_df.select(
         F.col(key_col).cast("string").alias("key"),
-        _md5_int(F.col(value_col).cast("string"), _NCHARS).alias("hv"),
+        md5_int(F.col(value_col).cast("string"), _NCHARS).alias("hv"),
     ).distinct()
 
 

@@ -32,6 +32,7 @@ sys.path.insert(0, REPO_ROOT)
 
 from pyspark.sql import functions as F
 
+from cdmx_airquality_etl_spark.functions import tokens
 from cdmx_airquality_etl_spark.operators.llm_ops import (
     _DECON_N,
     _PACK_CAP,
@@ -136,7 +137,7 @@ def main() -> None:
     )
 
     # 5. greedy packing per (split, lang) via the pure recurrence
-    toks = F.size(F.split(F.trim(F.lower("text")), r"\s+"))
+    toks = F.size(tokens("text"))
     packed = (
         split.withColumn("n_toks", toks)
         .groupBy("split", "lang")

@@ -3,20 +3,16 @@
 import hashlib
 
 import pandas as pd
-import pyarrow.parquet as pq
 
 from cdmx_airquality_etl_spark.operators.audit_ops import _CAPTURE_MOD
 from cdmx_airquality_etl_spark.registry import QUERIES
-
-
-def _read(sf_dir, name):
-    return pq.read_table(f"{sf_dir}/{name}.parquet").to_pandas()
+from tests.helpers import read_pandas
 
 
 def test_recon_totals_matches_pandas(spark, sf_dir):
     rows = {r["month"]: r for r in QUERIES["q_recon_totals"](spark, sf_dir).collect()}
-    orders = _read(sf_dir, "orders")
-    li = _read(sf_dir, "lineitem")
+    orders = read_pandas(sf_dir, "orders")
+    li = read_pandas(sf_dir, "lineitem")
     orders["month"] = pd.to_datetime(orders["o_orderdate"]).dt.strftime("%Y-%m")
     merged = li.merge(orders[["o_orderkey", "month"]], left_on="l_orderkey", right_on="o_orderkey")
     for month, g in list(orders.groupby("month"))[:12]:
@@ -35,7 +31,7 @@ def test_recon_totals_matches_pandas(spark, sf_dir):
 def test_temporal_lookup_each_click_matches_one_version(spark, sf_dir):
     rows = QUERIES["q_temporal_lookup"](spark, sf_dir).collect()
     assert rows
-    ev = _read(sf_dir, "events")
+    ev = read_pandas(sf_dir, "events")
     ev["ts"] = pd.to_datetime(ev["ts"])
     total_assigned = sum(r["n_clicks"] for r in rows)
     # replay: count clicks that fall inside some signup version interval
@@ -53,7 +49,7 @@ def test_temporal_lookup_each_click_matches_one_version(spark, sf_dir):
 
 def test_capture_recapture_estimator(spark, sf_dir):
     r = QUERIES["q_capture_recapture"](spark, sf_dir).collect()[0]
-    cust = _read(sf_dir, "customer")
+    cust = read_pandas(sf_dir, "customer")
 
     def mark(p, k):
         return int(hashlib.md5(f"{p}|{int(k)}".encode()).hexdigest()[:12], 16) % _CAPTURE_MOD == 0

@@ -4,8 +4,6 @@
 import hashlib
 from collections import defaultdict
 
-import pyarrow.parquet as pq
-
 from cdmx_airquality_etl_spark.operators.graph_ext import (
     _CM_WIDTH,
     _SP_MAX_HOPS,
@@ -14,15 +12,12 @@ from cdmx_airquality_etl_spark.operators.graph_ext import (
     _WIN_W,
 )
 from cdmx_airquality_etl_spark.registry import QUERIES
-
-
-def _read(sf_dir, name):
-    return pq.read_table(f"{sf_dir}/{name}.parquet").to_pandas()
+from tests.helpers import read_pandas
 
 
 def _edges(sf_dir):
-    li = _read(sf_dir, "lineitem")[["l_orderkey", "l_suppkey"]]
-    orders = _read(sf_dir, "orders")[["o_orderkey", "o_custkey"]]
+    li = read_pandas(sf_dir, "lineitem")[["l_orderkey", "l_suppkey"]]
+    orders = read_pandas(sf_dir, "orders")[["o_orderkey", "o_custkey"]]
     m = li.merge(orders, left_on="l_orderkey", right_on="o_orderkey")
     pairs = {(int(c) * 2, int(s) * 2 + 1) for c, s in zip(m.o_custkey, m.l_suppkey)}
     adj = defaultdict(set)
@@ -68,7 +63,7 @@ def test_shortest_path_alternates_roles(spark, sf_dir):
 def test_link_prediction_jaccard_exact(spark, sf_dir):
     rows = QUERIES["q_link_prediction"](spark, sf_dir).collect()
     assert rows
-    li = _read(sf_dir, "lineitem")[["l_suppkey", "l_partkey"]].drop_duplicates()
+    li = read_pandas(sf_dir, "lineitem")[["l_suppkey", "l_partkey"]].drop_duplicates()
     cat = li.groupby("l_suppkey")["l_partkey"].apply(set)
     for r in rows:
         a, b = cat[r["supp_a"]], cat[r["supp_b"]]
@@ -103,7 +98,7 @@ def test_countmin_never_underestimates(spark, sf_dir):
 
 def test_countmin_matches_python_sketch(spark, sf_dir):
     rows = {r["token"]: r for r in QUERIES["q_countmin"](spark, sf_dir).collect()}
-    docs = _read(sf_dir, "documents")
+    docs = read_pandas(sf_dir, "documents")
     counts = defaultdict(int)
     for t in docs["text"]:
         for tok in t.strip().lower().split():
@@ -123,7 +118,7 @@ def test_countmin_matches_python_sketch(spark, sf_dir):
 # ---------------------------------------------------------------------------
 def test_winnowing_matches_python(spark, sf_dir):
     rows = {r["doc_id"]: r for r in QUERIES["q_winnowing"](spark, sf_dir).collect()}
-    docs = _read(sf_dir, "documents")
+    docs = read_pandas(sf_dir, "documents")
     checked = 0
     for rec in docs.itertuples():
         w = rec.text.strip().lower().split()
@@ -153,7 +148,7 @@ def test_winnowing_matches_python(spark, sf_dir):
 def test_winnowing_shared_run_guarantee(spark, sf_dir):
     # two docs sharing a run of >= k+w-1 tokens share a fingerprint: verify
     # on the corpus itself by construction with duplicated texts
-    docs = _read(sf_dir, "documents")
+    docs = read_pandas(sf_dir, "documents")
     dup = docs[docs.duplicated("text", keep=False)]
     if len(dup) >= 2:
         rows = {r["doc_id"]: r for r in QUERIES["q_winnowing"](spark, sf_dir).collect()}

@@ -7,13 +7,7 @@ from pyspark.sql import functions as F
 
 from cdmx_airquality_etl_spark.registry import QUERIES
 from cdmx_airquality_etl_spark.sources.parquet import load_table
-
-
-def _plan(spark, sf_dir, name, mode="formatted"):
-    df = QUERIES[name](spark, sf_dir)
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), mode
-    )
+from tests.helpers import query_plan
 
 
 # ---------------------------------------------------------------------------
@@ -32,9 +26,9 @@ def test_decontaminate_counts_partition_corpus(spark, sf_dir):
 def test_decontaminate_broadcasts_benchmark_grams(spark, sf_dir):
     # the benchmark side must be the broadcast side of the semi-join: the
     # corpus never shuffles for contamination detection
-    plan = _plan(spark, sf_dir, "q_decontaminate")
+    plan = query_plan(spark, sf_dir, "q_decontaminate")
     assert "BroadcastHashJoin" in plan
-    semi_lines = [l for l in _plan(spark, sf_dir, "q_decontaminate", "simple").splitlines() if "LeftSemi" in l]
+    semi_lines = [l for l in query_plan(spark, sf_dir, "q_decontaminate", "simple").splitlines() if "LeftSemi" in l]
     assert semi_lines and all("Broadcast" in l for l in semi_lines)
 
 
@@ -69,7 +63,7 @@ def test_global_shuffle_deterministic_and_partitioned(spark, sf_dir):
     # the rank window must be hash-partitioned by shard, not a global
     # single-partition sort (the 1-row shard-count aggregate is the only
     # legitimate SinglePartition exchange in the plan)
-    plan = _plan(spark, sf_dir, "q_global_shuffle")
+    plan = query_plan(spark, sf_dir, "q_global_shuffle")
     assert "hashpartitioning(shard_id" in plan
     assert plan.count("SinglePartition") <= 1
 
@@ -145,7 +139,7 @@ def test_repetition_score_invariants(spark, sf_dir):
 
 def test_repetition_score_is_scan_side(spark, sf_dir):
     # per-doc scoring is a zero-shuffle projection: no Exchange in the plan
-    plan = _plan(spark, sf_dir, "q_repetition_score")
+    plan = query_plan(spark, sf_dir, "q_repetition_score")
     assert "Exchange" not in plan
     assert "codegen id" in plan
 
@@ -155,14 +149,14 @@ def test_repetition_score_is_scan_side(spark, sf_dir):
 # ---------------------------------------------------------------------------
 def test_boilerplate_topk_is_one_agg_plus_take_ordered(spark, sf_dir):
     # "simple" mode keeps Exchange and its partitioning on one line
-    plan = _plan(spark, sf_dir, "q_boilerplate_ngrams", mode="simple")
+    plan = query_plan(spark, sf_dir, "q_boilerplate_ngrams", mode="simple")
     assert "TakeOrderedAndProject" in plan  # never a global sort
     assert "partial_count" in plan  # map-side combine absorbs duplication
     assert plan.count("Exchange hashpartitioning") == 1  # one gram shuffle
 
 
 def test_ann_lsh_broadcasts_query_and_takes_ordered(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_similarity_ann_lsh", mode="simple")
+    plan = query_plan(spark, sf_dir, "q_similarity_ann_lsh", mode="simple")
     assert "TakeOrderedAndProject" in plan
     # the 1-row query side and the 1-row bits row are broadcast; the corpus
     # side never shuffles for the probe

@@ -2,19 +2,15 @@
 (operators/ops_metrics.py)."""
 
 import pandas as pd
-import pyarrow.parquet as pq
 
 from cdmx_airquality_etl_spark.operators.ops_metrics import _AGE_BUCKET_DAYS
 from cdmx_airquality_etl_spark.registry import QUERIES
-
-
-def _read(sf_dir, name):
-    return pq.read_table(f"{sf_dir}/{name}.parquet").to_pandas()
+from tests.helpers import read_pandas
 
 
 def test_seasonal_profile_weighted_mean_is_one(spark, sf_dir):
     rows = QUERIES["q_seasonal_profile"](spark, sf_dir).collect()
-    ev = _read(sf_dir, "events")
+    ev = read_pandas(sf_dir, "events")
     ev["day"] = (pd.to_datetime(ev["ts"]).dt.normalize() - pd.Timestamp("1970-01-01")).dt.days
     daily = ev.groupby("day").size()
     n_days, total = len(daily), daily.sum()
@@ -30,8 +26,8 @@ def test_seasonal_profile_weighted_mean_is_one(spark, sf_dir):
 
 def test_order_cycle_time_matches_pandas(spark, sf_dir):
     rows = {r["o_orderpriority"]: r for r in QUERIES["q_order_cycle_time"](spark, sf_dir).collect()}
-    orders = _read(sf_dir, "orders")
-    li = _read(sf_dir, "lineitem")
+    orders = read_pandas(sf_dir, "orders")
+    li = read_pandas(sf_dir, "lineitem")
     m = li.merge(orders, left_on="l_orderkey", right_on="o_orderkey")
     m["od"] = pd.to_datetime(m["o_orderdate"]).dt.normalize()
     m["sd"] = pd.to_datetime(m["l_shipdate"]).dt.normalize()
@@ -52,7 +48,7 @@ def test_order_cycle_time_matches_pandas(spark, sf_dir):
 
 def test_backlog_aging_counts_open_orders(spark, sf_dir):
     rows = QUERIES["q_backlog_aging"](spark, sf_dir).collect()
-    orders = _read(sf_dir, "orders")
+    orders = read_pandas(sf_dir, "orders")
     open_o = orders[orders.o_orderstatus == "O"].copy()
     horizon = pd.to_datetime(orders["o_orderdate"]).max().normalize()
     open_o["age"] = (horizon - pd.to_datetime(open_o["o_orderdate"]).dt.normalize()).dt.days

@@ -5,18 +5,11 @@ aggregation. These are the guarantees that survive a 100× scale-up."""
 
 import pytest
 
-from cdmx_airquality_etl_spark.registry import QUERIES
-
-
-def _plan(spark, sf_dir, name, mode="formatted"):
-    df = QUERIES[name](spark, sf_dir)
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), mode
-    )
+from tests.helpers import query_plan
 
 
 def test_filter_pushdown_and_pruning(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_filter_pred")
+    plan = query_plan(spark, sf_dir, "q_filter_pred")
     assert "PushedFilters:" in plan
     assert "IsNotNull(l_discount)" in plan or "GreaterThan(l_discount" in plan
     assert "EqualTo(l_returnflag,R)" in plan
@@ -26,7 +19,7 @@ def test_filter_pushdown_and_pruning(spark, sf_dir):
 
 
 def test_scan_project_prunes_columns(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_scan_project")
+    plan = query_plan(spark, sf_dir, "q_scan_project")
     read_schema_line = next(l for l in plan.splitlines() if "ReadSchema" in l)
     for col in ("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"):
         assert col in read_schema_line
@@ -35,13 +28,13 @@ def test_scan_project_prunes_columns(spark, sf_dir):
 
 
 def test_dim_join_is_broadcast(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_dim_join_broadcast")
+    plan = query_plan(spark, sf_dir, "q_dim_join_broadcast")
     assert plan.count("BroadcastHashJoin") >= 2
     assert "SortMergeJoin" not in plan
 
 
 def test_flagship_broadcasts_dims(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_flagship_revenue")
+    plan = query_plan(spark, sf_dir, "q_flagship_revenue")
     # nation and region must be broadcast; fact-fact joins may be any
     # shuffle strategy
     assert plan.count("BroadcastHashJoin") >= 2
@@ -49,13 +42,13 @@ def test_flagship_broadcasts_dims(spark, sf_dir):
 
 
 def test_topk_uses_take_ordered(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_sort_limit_topk")
+    plan = query_plan(spark, sf_dir, "q_sort_limit_topk")
     assert "TakeOrderedAndProject" in plan
     assert "Sort " not in plan  # no global sort materialization
 
 
 def test_group_agg_partial_final(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_group_agg")
+    plan = query_plan(spark, sf_dir, "q_group_agg")
     assert "partial" in plan.lower()  # map-side combine present
     # partial + final pair around one exchange
     assert plan.count("HashAggregate") >= 2
@@ -75,7 +68,7 @@ def test_fuzzy_dedup_anchor_join_shape(spark, sf_dir):
     # keeps the candidate set ∝ true-pair volume at saturating vocabularies
     # (measured at sf3 by a since-retired probe, BASELINE.md round 11:
     # 4.0M ≥1-key vs 22.8k ≥2-key candidates).
-    plan = _plan(spark, sf_dir, "q_dedup_fuzzy", mode="simple")
+    plan = query_plan(spark, sf_dir, "q_dedup_fuzzy", mode="simple")
     assert "Generate explode" in plan  # map-side anchor expansion
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -104,7 +97,7 @@ def test_fuzzy_dedup_anchor_join_shape(spark, sf_dir):
 
 @pytest.mark.parametrize("name", ["q_join_semi", "q_join_anti"])
 def test_semi_anti_join_shapes(spark, sf_dir, name):
-    plan = _plan(spark, sf_dir, name)
+    plan = query_plan(spark, sf_dir, name)
     kind = "LeftSemi" if name == "q_join_semi" else "LeftAnti"
     assert kind in plan
 
@@ -113,14 +106,14 @@ def test_topk_per_group_pushes_group_limit(spark, sf_dir):
     # rank<=k must become a WindowGroupLimit so each map task keeps only k
     # rows per group before the window shuffle — without it, the full fact
     # table flows through the sort at 100 TB
-    plan = _plan(spark, sf_dir, "q_topk_per_group")
+    plan = query_plan(spark, sf_dir, "q_topk_per_group")
     assert "WindowGroupLimit" in plan
 
 
 def test_range_join_is_broadcast_nlj(spark, sf_dir):
     # non-equi join against a 3-row band table: must be a broadcast nested
     # loop (map-side, no shuffle of the fact side), never a cartesian
-    plan = _plan(spark, sf_dir, "q_range_join")
+    plan = query_plan(spark, sf_dir, "q_range_join")
     assert "BroadcastNestedLoopJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -128,20 +121,20 @@ def test_range_join_is_broadcast_nlj(spark, sf_dir):
 def test_exists_subquery_rewrites_to_joins(spark, sf_dir):
     # Catalyst must decorrelate EXISTS/NOT EXISTS into semi/anti hash joins —
     # no per-row subquery execution survives in the physical plan
-    plan = _plan(spark, sf_dir, "q_exists_subquery")
+    plan = query_plan(spark, sf_dir, "q_exists_subquery")
     assert "LeftSemi" in plan
     assert "LeftAnti" in plan
 
 
 def test_unpivot_is_narrow_expand(spark, sf_dir):
     # melt = Expand (each row → 3 rows) with no exchange: a narrow transform
-    plan = _plan(spark, sf_dir, "q_unpivot")
+    plan = query_plan(spark, sf_dir, "q_unpivot")
     assert "Expand" in plan
     assert "Exchange" not in plan
 
 
 def test_time_bucket_partial_agg(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_time_bucket")
+    plan = query_plan(spark, sf_dir, "q_time_bucket")
     assert "partial" in plan.lower()
     assert plan.count("HashAggregate") >= 2
 
@@ -149,7 +142,7 @@ def test_time_bucket_partial_agg(spark, sf_dir):
 def test_stratified_sample_is_one_pruned_agg(spark, sf_dir):
     # hash-membership sampling must stay a scan-side filter feeding one hash
     # aggregate: only (doc_id, lang) read, one exchange, no window/join
-    plan = _plan(spark, sf_dir, "q_stratified_sample", mode="simple")
+    plan = query_plan(spark, sf_dir, "q_stratified_sample", mode="simple")
     assert plan.count("Exchange") == 1
     assert "Join" not in plan and "Window" not in plan
     read = next(l for l in plan.splitlines() if "FileScan" in l)
@@ -158,7 +151,7 @@ def test_stratified_sample_is_one_pruned_agg(spark, sf_dir):
 
 def test_pii_scrub_is_scan_side(spark, sf_dir):
     # redaction is a pure projection: pushed id filter, no exchange at all
-    plan = _plan(spark, sf_dir, "q_pii_scrub")
+    plan = query_plan(spark, sf_dir, "q_pii_scrub")
     assert "PushedFilters: [IsNotNull(doc_id), LessThan(doc_id,200)]" in plan
     assert "Exchange" not in plan
 
@@ -167,17 +160,17 @@ def test_quantile_bucket_broadcasts_boundaries(spark, sf_dir):
     # the scale-safe global-quantile form: boundaries reduce to ONE row
     # (SinglePartition exchange of a pruned 1-column scan) and come back as
     # a broadcast — the fact scan itself never sorts or shuffles
-    plan = _plan(spark, sf_dir, "q_quantile_bucket", mode="simple")
+    plan = query_plan(spark, sf_dir, "q_quantile_bucket", mode="simple")
     assert "BroadcastNestedLoopJoin" in plan  # 1-row bounds cross join
     assert "Exchange SinglePartition" in plan
     assert "Exchange rangepartitioning" not in plan  # no global sort
 
 
 def test_dedup_incremental_is_anti_join_on_fingerprints(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_dedup_incremental", mode="simple")
+    plan = query_plan(spark, sf_dir, "q_dedup_incremental", mode="simple")
     assert "LeftAnti" in plan
     # both sides push their doc_id split predicate into the scan
-    full = _plan(spark, sf_dir, "q_dedup_incremental")
+    full = query_plan(spark, sf_dir, "q_dedup_incremental")
     assert "GreaterThanOrEqual(doc_id,250)" in full
     assert "LessThan(doc_id,250)" in full
 
@@ -185,7 +178,7 @@ def test_dedup_incremental_is_anti_join_on_fingerprints(spark, sf_dir):
 def test_quality_classifier_is_scan_side(spark, sf_dir):
     # the hashed linear model is a pure projection: no shuffle, no join —
     # at 100 TB it runs at parquet-scan speed
-    plan = _plan(spark, sf_dir, "q_quality_classifier", mode="simple")
+    plan = query_plan(spark, sf_dir, "q_quality_classifier", mode="simple")
     assert "Exchange" not in plan
     assert "Join" not in plan
     read_schema_line = next(
@@ -198,7 +191,7 @@ def test_tfidf_single_token_shuffle_and_broadcast_n(spark, sf_dir):
     # tf/df aggregate is the only pass over token volume (one exchange on
     # (lang, term) + partial agg); per-language doc counts join broadcast;
     # the window runs on per-term rows, never raw tokens
-    plan = _plan(spark, sf_dir, "q_tfidf_topterms")
+    plan = query_plan(spark, sf_dir, "q_tfidf_topterms")
     assert "BroadcastHashJoin" in plan
     assert "partial" in plan.lower()
     assert "SortMergeJoin" not in plan
@@ -208,7 +201,7 @@ def test_lateral_join_decorrelates(spark, sf_dir):
     # Catalyst must rewrite the correlated LATERAL subquery into a
     # join + per-key ranking (WindowGroupLimit), NOT per-outer-row
     # re-execution; both scans keep their pushed filters
-    plan = _plan(spark, sf_dir, "q_lateral_join")
+    plan = query_plan(spark, sf_dir, "q_lateral_join")
     assert "WindowGroupLimit" in plan
     assert "LessThan(c_custkey,300)" in plan
     assert "EqualTo(o_orderstatus,F)" in plan
@@ -218,7 +211,7 @@ def test_dedup_semantic_anchor_is_linear(spark, sf_dir):
     # every member scores against exactly ONE anchor: the member↔anchor
     # join is on bucket (equi), and no all-pairs self-join condition
     # (vec_id < vec_id) appears anywhere in the plan
-    plan = _plan(spark, sf_dir, "q_dedup_semantic", mode="simple")
+    plan = query_plan(spark, sf_dir, "q_dedup_semantic", mode="simple")
     assert "vec_id#" in plan
     assert " < vec_id" not in plan.replace("anchor_id", "")
 
@@ -226,7 +219,7 @@ def test_dedup_semantic_anchor_is_linear(spark, sf_dir):
 def test_chunk_documents_is_zero_shuffle_generate(spark, sf_dir):
     # chunking is a scan-side explode over window starts: no exchange, no
     # join — output volume is the stride-policy duplication only
-    plan = _plan(spark, sf_dir, "q_chunk_documents", mode="simple")
+    plan = query_plan(spark, sf_dir, "q_chunk_documents", mode="simple")
     assert "Exchange" not in plan
     assert "Generate" in plan
 
@@ -234,7 +227,7 @@ def test_chunk_documents_is_zero_shuffle_generate(spark, sf_dir):
 def test_cap_per_source_uses_window_group_limit(spark, sf_dir):
     # rank<=K per source must pre-cut map-side (WindowGroupLimit) so the
     # shuffle never carries the full corpus for a hot source
-    plan = _plan(spark, sf_dir, "q_cap_per_source")
+    plan = query_plan(spark, sf_dir, "q_cap_per_source")
     assert "WindowGroupLimit" in plan
 
 
@@ -248,16 +241,16 @@ def test_wscg_detection_uses_aqe_off_plan(spark, sf_dir):
     from dump_plans import summarize
 
     for name in ("q_scan_project", "q_group_agg"):
-        plan = _plan(spark, sf_dir, name)
+        plan = query_plan(spark, sf_dir, name)
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
-            plan_no_aqe = _plan(spark, sf_dir, name)
+            plan_no_aqe = query_plan(spark, sf_dir, name)
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", "true")
         assert summarize(plan, plan_no_aqe)["wscg"] is True
     # and the under-reporting the fix replaces: the AQE-on string alone
     # misses q_group_agg's codegen spans
-    assert "[codegen id :" not in _plan(spark, sf_dir, "q_group_agg")
+    assert "[codegen id :" not in query_plan(spark, sf_dir, "q_group_agg")
 
 
 def test_signature_kernels_fan_out_before_band_join(spark, sf_dir):
@@ -281,7 +274,7 @@ def test_signature_kernels_fan_out_before_band_join(spark, sf_dir):
         "q_minhash_estimate",
         "q_simhash_calibration",
     ):
-        plan = _plan(spark, sf_dir, name, mode="simple")
+        plan = query_plan(spark, sf_dir, name, mode="simple")
         assert "MapInPandas" in plan, name
         # a repartition exchange keyed on the bare doc_id (the distinct's
         # exchange is keyed on doc_id_a/doc_id_b and does not match)
@@ -299,7 +292,7 @@ def test_no_single_partition_python_kernel_feeds_wide_input(spark, sf_dir):
     Covers the resampling kernel with a scan-grain input; the
     q_permutation_test / q_fdr_screen kernels read post-aggregate frames
     (already behind an exchange) and are exempt by the same rule."""
-    plan = _plan(spark, sf_dir, "q_bootstrap_ci", mode="formatted")
+    plan = query_plan(spark, sf_dir, "q_bootstrap_ci", mode="formatted")
     assert "MapInPandas" in plan
     assert "REPARTITION_BY_NUM" in plan or "RoundRobinPartitioning" in plan, (
         "bootstrap kernel input lost its fan-out — the vectorized draw "

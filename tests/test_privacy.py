@@ -2,19 +2,14 @@
 
 import math
 
-import pyarrow.parquet as pq
-
 from cdmx_airquality_etl_spark.operators.privacy import _BAL_BAND, _K_ANON, _L_DIV
 from cdmx_airquality_etl_spark.registry import QUERIES
-
-
-def _read(sf_dir, name):
-    return pq.read_table(f"{sf_dir}/{name}.parquet").to_pandas()
+from tests.helpers import read_pandas
 
 
 def test_k_anonymity_matches_pandas(spark, sf_dir):
     rows = {(r["c_mktsegment"], r["c_nationkey"]): r for r in QUERIES["q_k_anonymity"](spark, sf_dir).collect()}
-    cust = _read(sf_dir, "customer")
+    cust = read_pandas(sf_dir, "customer")
     g = cust.groupby(["c_mktsegment", "c_nationkey"]).size()
     assert len(rows) == len(g)
     for (seg, nat), n in g.items():
@@ -25,7 +20,7 @@ def test_k_anonymity_matches_pandas(spark, sf_dir):
 
 def test_l_diversity_at_most_group_size(spark, sf_dir):
     rows = QUERIES["q_l_diversity"](spark, sf_dir).collect()
-    cust = _read(sf_dir, "customer")
+    cust = read_pandas(sf_dir, "customer")
     cust["band"] = (cust["c_acctbal"] / _BAL_BAND).map(math.floor)
     for r in rows:
         assert 1 <= r["n_sensitive"] <= r["group_size"]
@@ -36,7 +31,7 @@ def test_l_diversity_at_most_group_size(spark, sf_dir):
 
 def test_suppression_plan_accounts_every_record(spark, sf_dir):
     rows = QUERIES["q_suppression_plan"](spark, sf_dir).collect()
-    cust = _read(sf_dir, "customer")
+    cust = read_pandas(sf_dir, "customer")
     assert sum(r["n_records"] for r in rows) == len(cust)
     for r in rows:
         kept = r["n_records"] - r["n_suppressed"]

@@ -1,22 +1,11 @@
 """Semantics tests for the retail-analytics batch (operators/retail.py)."""
 
 import pandas as pd
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from cdmx_airquality_etl_spark.operators.retail import _DIVISION_BRANDS
 from cdmx_airquality_etl_spark.registry import QUERIES
-
-
-def _read(sf_dir, name):
-    return pq.read_table(f"{sf_dir}/{name}.parquet").to_pandas()
-
-
-def _plan(spark, sf_dir, name, mode="formatted"):
-    df = QUERIES[name](spark, sf_dir)
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), mode
-    )
+from tests.helpers import query_plan, read_pandas
 
 
 # ---------------------------------------------------------------------------
@@ -25,7 +14,7 @@ def _plan(spark, sf_dir, name, mode="formatted"):
 def test_market_basket_lift_and_support(spark, sf_dir):
     rows = QUERIES["q_market_basket"](spark, sf_dir).collect()
     assert rows
-    li = _read(sf_dir, "lineitem")[["l_orderkey", "l_partkey"]].drop_duplicates()
+    li = read_pandas(sf_dir, "lineitem")[["l_orderkey", "l_partkey"]].drop_duplicates()
     n_orders = li["l_orderkey"].nunique()
     part_n = li.groupby("l_partkey").size()
     baskets = li.groupby("l_orderkey")["l_partkey"].apply(set)
@@ -39,7 +28,7 @@ def test_market_basket_lift_and_support(spark, sf_dir):
 
 
 def test_market_basket_topk_plan(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_market_basket")
+    plan = query_plan(spark, sf_dir, "q_market_basket")
     assert "TakeOrderedAndProject" in plan
 
 
@@ -48,7 +37,7 @@ def test_market_basket_topk_plan(spark, sf_dir):
 # ---------------------------------------------------------------------------
 def test_rfm_scores_in_range_and_monotone(spark, sf_dir):
     rows = QUERIES["q_rfm"](spark, sf_dir).collect()
-    orders = _read(sf_dir, "orders")
+    orders = read_pandas(sf_dir, "orders")
     assert len(rows) == orders["o_custkey"].nunique()
     for r in rows:
         for s in ("r_score", "f_score", "m_score"):
@@ -65,7 +54,7 @@ def test_rfm_scores_in_range_and_monotone(spark, sf_dir):
 
 def test_rfm_replays_aggregates(spark, sf_dir):
     rows = {r["c_custkey"]: r for r in QUERIES["q_rfm"](spark, sf_dir).collect()}
-    orders = _read(sf_dir, "orders")
+    orders = read_pandas(sf_dir, "orders")
     mx = pd.to_datetime(orders["o_orderdate"]).max().normalize()
     g = orders.groupby("o_custkey")
     for ck, sub in list(g)[:20]:
@@ -100,9 +89,9 @@ def test_abc_classes_partition_revenue(spark, sf_dir):
 def test_relational_division_buys_all_brands(spark, sf_dir):
     rows = QUERIES["q_relational_division"](spark, sf_dir).collect()
     assert rows
-    li = _read(sf_dir, "lineitem")
-    orders = _read(sf_dir, "orders")
-    part = _read(sf_dir, "part")
+    li = read_pandas(sf_dir, "lineitem")
+    orders = read_pandas(sf_dir, "orders")
+    part = read_pandas(sf_dir, "part")
     merged = li.merge(orders, left_on="l_orderkey", right_on="o_orderkey").merge(
         part, left_on="l_partkey", right_on="p_partkey"
     )
@@ -120,8 +109,8 @@ def test_relational_division_buys_all_brands(spark, sf_dir):
 def test_top_percent_is_exact_fraction(spark, sf_dir):
     rows = QUERIES["q_top_percent"](spark, sf_dir).collect()
     assert rows
-    orders = _read(sf_dir, "orders")
-    cust = _read(sf_dir, "customer")
+    orders = read_pandas(sf_dir, "orders")
+    cust = read_pandas(sf_dir, "customer")
     seg = orders.merge(cust, left_on="o_custkey", right_on="c_custkey")
     sizes = seg.groupby("c_mktsegment").size()
     got = pd.DataFrame([r.asDict() for r in rows])

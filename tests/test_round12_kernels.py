@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from cdmx_airquality_etl_spark.functions.portable import md5_int
 from cdmx_airquality_etl_spark.operators import stats_tests as st
 from cdmx_airquality_etl_spark.operators import dedup as dd
 
@@ -117,7 +118,7 @@ def test_mh_sig_partials_match_jvm_mins(spark):
     shingled = dd._doc_shingles(load_table(spark, SF_DIR, "documents"))
     eh = shingled.select("doc_id", F.explode("sh").alias("shingle")).select(
         "doc_id",
-        F.pmod(dd._md5_int(F.col("shingle"), 8), F.lit(dd._MH_PRIME)).alias("h0"),
+        F.pmod(md5_int(F.col("shingle"), 8), F.lit(dd._MH_PRIME)).alias("h0"),
     )
     mins = [
         F.min(
@@ -144,7 +145,7 @@ def test_sh_sig_partials_match_jvm_votes(spark):
     toks = docs.select(
         "doc_id",
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("tok"),
-    ).withColumn("h", dd._md5_int(F.col("tok"), 15))
+    ).withColumn("h", md5_int(F.col("tok"), 15))
     votes = [
         F.sum((F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) * 2 - 1)).alias(
             f"v{b}"

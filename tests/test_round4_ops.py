@@ -6,13 +6,7 @@ from pyspark.sql import functions as F
 
 from cdmx_airquality_etl_spark.registry import QUERIES
 from cdmx_airquality_etl_spark.sources.parquet import load_table
-
-
-def _plan(spark, sf_dir, name, mode="formatted"):
-    df = QUERIES[name](spark, sf_dir)
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), mode
-    )
+from tests.helpers import query_plan
 
 
 # ---------------------------------------------------------------------------
@@ -36,7 +30,7 @@ def test_entity_resolution_blocking_and_threshold(spark, sf_dir):
 def test_entity_resolution_candidates_are_value_domain(spark, sf_dir):
     # the pairwise stage must run on the distinct-name aggregate, not raw
     # rows: the plan joins two HashAggregate outputs
-    plan = _plan(spark, sf_dir, "q_entity_resolution")
+    plan = query_plan(spark, sf_dir, "q_entity_resolution")
     assert "HashAggregate" in plan
 
 
@@ -197,9 +191,9 @@ def test_bloom_prune_equals_plain_semijoin(spark, sf_dir):
 def test_bloom_prune_plan_shape(spark, sf_dir):
     # prune must sit scan-side (a Filter with shiftright on xxhash64), and
     # the verify join must be a broadcast semi-join — no shuffle of orders
-    plan = _plan(spark, sf_dir, "q_bloom_prune")
+    plan = query_plan(spark, sf_dir, "q_bloom_prune")
     assert "shiftright" in plan
-    simple = _plan(spark, sf_dir, "q_bloom_prune", "simple")
+    simple = query_plan(spark, sf_dir, "q_bloom_prune", "simple")
     semi = [l for l in simple.splitlines() if "LeftSemi" in l]
     assert semi and all("Broadcast" in l for l in semi)
 

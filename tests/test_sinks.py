@@ -7,6 +7,7 @@ import sqlite3
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from cdmx_airquality_etl_spark.sinks import (
     read_csv,
@@ -41,6 +42,32 @@ def test_sqlite_upsert_semantics(spark, tmp_path):
         for k, v, n in sqlite3.connect(db).execute("SELECT k, v, nupdates FROM t")
     )
     assert got == {1: ("a2", 2), 2: ("b", 1), 3: ("c", 1)}
+
+
+def test_sqlite_upsert_quotes_identifiers_holding_a_double_quote(spark, tmp_path):
+    # a `"` inside a table, key or column name must be doubled in the SQL
+    schema = StructType(
+        [
+            StructField('k"ey', LongType()),
+            StructField('we"ird', StringType()),
+            StructField("nupdates", LongType()),
+        ]
+    )
+    db = str(tmp_path / "aq.db")
+    con = sqlite3.connect(db)
+    con.execute(
+        'CREATE TABLE "t""q" ("k""ey" INTEGER PRIMARY KEY, "we""ird" TEXT, '
+        "nupdates INTEGER DEFAULT 1)"
+    )
+    con.commit()
+    con.close()
+
+    for v in ("a", "b"):
+        df = spark.createDataFrame([(1, v, 1)], schema)
+        assert upsert_to_sqlite(df, db, 't"q', ['k"ey']) == 1
+
+    got = sqlite3.connect(db).execute('SELECT * FROM "t""q"').fetchall()
+    assert got == [(1, "b", 2)]
 
 
 def test_sqlite_sink_refuses_large_frames(spark, sf_dir, tmp_path):

@@ -6,7 +6,6 @@ import math
 
 import numpy as np
 import pandas as pd
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from cdmx_airquality_etl_spark.operators.stats_tests import (
@@ -16,10 +15,7 @@ from cdmx_airquality_etl_spark.operators.stats_tests import (
     _NDCG_K,
 )
 from cdmx_airquality_etl_spark.registry import QUERIES
-
-
-def _read(sf_dir, name):
-    return pq.read_table(f"{sf_dir}/{name}.parquet").to_pandas()
+from tests.helpers import read_pandas
 
 
 # ---------------------------------------------------------------------------
@@ -27,7 +23,7 @@ def _read(sf_dir, name):
 # ---------------------------------------------------------------------------
 def test_ols_matches_numpy_polyfit(spark, sf_dir):
     rows = {r["event_type"]: r for r in QUERIES["q_ols_group"](spark, sf_dir).collect()}
-    ev = _read(sf_dir, "events")
+    ev = read_pandas(sf_dir, "events")
     ev["x"] = (pd.to_datetime(ev["ts"]).dt.normalize() - pd.Timestamp("1970-01-01")).dt.days
     for et, g in ev.groupby("event_type"):
         slope, intercept = np.polyfit(g["x"], g["value"], 1)
@@ -42,7 +38,7 @@ def test_ols_matches_numpy_polyfit(spark, sf_dir):
 # ---------------------------------------------------------------------------
 def test_chi_square_matches_manual(spark, sf_dir):
     got = QUERIES["q_chi_square"](spark, sf_dir).collect()[0]
-    ev = _read(sf_dir, "events")
+    ev = read_pandas(sf_dir, "events")
     ev["dow"] = (
         (pd.to_datetime(ev["ts"]).dt.normalize() - pd.Timestamp("1970-01-01")).dt.days % 7
     )
@@ -59,7 +55,7 @@ def test_chi_square_matches_manual(spark, sf_dir):
 # ---------------------------------------------------------------------------
 def test_ks_binned_matches_manual(spark, sf_dir):
     got = QUERIES["q_ks_binned"](spark, sf_dir).collect()[0]
-    ev = _read(sf_dir, "events")
+    ev = read_pandas(sf_dir, "events")
     a = ev.loc[ev.event_type == "click", "value"]
     b = ev.loc[ev.event_type == "view", "value"]
     bins = np.minimum((np.floor(np.asarray(a) * _KS_BINS / _KS_HI)).astype(int), _KS_BINS - 1)
@@ -76,7 +72,7 @@ def test_ks_binned_matches_manual(spark, sf_dir):
 # ---------------------------------------------------------------------------
 def test_auc_matches_rank_formula(spark, sf_dir):
     got = QUERIES["q_auc_rank"](spark, sf_dir).collect()[0]
-    docs = _read(sf_dir, "documents")
+    docs = read_pandas(sf_dir, "documents")
     y = (docs["lang"] == "en").to_numpy()
     s = docs["n_chars"].to_numpy(dtype=float)
     # midrank Mann-Whitney AUC
@@ -101,7 +97,7 @@ def test_auc_matches_rank_formula(spark, sf_dir):
 # ---------------------------------------------------------------------------
 def test_gini_bounds_and_manual(spark, sf_dir):
     rows = QUERIES["q_gini_sources"](spark, sf_dir).collect()
-    docs = _read(sf_dir, "documents")
+    docs = read_pandas(sf_dir, "documents")
     for r in rows:
         cnt = docs.loc[docs.source == r["source"], "lang"].value_counts()
         p = cnt / cnt.sum()
@@ -120,7 +116,7 @@ def test_benford_shares_sum_to_one(spark, sf_dir):
     assert len(rows) == 9
     assert abs(sum(r["share"] for r in rows) - 1.0) < 1e-9
     assert abs(sum(r["expected"] for r in rows) - 1.0) < 1e-12
-    orders = _read(sf_dir, "orders")
+    orders = read_pandas(sf_dir, "orders")
     d1 = orders["o_totalprice"].map(lambda v: int(str(v).lstrip("0.")[0]))
     counts = d1.value_counts()
     for r in rows:
@@ -132,7 +128,7 @@ def test_benford_shares_sum_to_one(spark, sf_dir):
 # ---------------------------------------------------------------------------
 def test_ndcg_matches_manual(spark, sf_dir):
     got = QUERIES["q_ndcg"](spark, sf_dir).collect()[0]
-    emb = _read(sf_dir, "embeddings")
+    emb = read_pandas(sf_dir, "embeddings")
     vecs = {r.vec_id: np.asarray(r.embedding, dtype=float) for r in emb.itertuples()}
     labels = dict(zip(emb.vec_id, emb.label))
     q = vecs[0]

@@ -109,10 +109,12 @@ def test_fingerprint_matches_corpus_ingest_identity(spark):
     """streaming/dedup.py, streaming/corpus_ingest.py and the batch
     exact-dedup queries must share one content identity, or a document
     deduped in-stream could still be dropped/kept inconsistently by the
-    corpus anti-join: all three use operators/dedup.content_fingerprint."""
+    corpus anti-join: all three use functions/portable.content_fingerprint."""
+    from cdmx_airquality_etl_spark.functions import portable
     from cdmx_airquality_etl_spark.operators import dedup as batch_dedup
     from cdmx_airquality_etl_spark.streaming import corpus_ingest
 
+    assert portable.content_fingerprint is content_fingerprint
     assert corpus_ingest.content_fingerprint is content_fingerprint
     assert batch_dedup.content_fingerprint is content_fingerprint
     df = spark.createDataFrame(

@@ -6,13 +6,7 @@ from pyspark.sql import functions as F
 from cdmx_airquality_etl_spark.operators.tpch_ext import _Q18_MIN_QTY
 from cdmx_airquality_etl_spark.registry import QUERIES
 from cdmx_airquality_etl_spark.sources.parquet import load_table
-
-
-def _plan(spark, sf_dir, name, mode="formatted"):
-    df = QUERIES[name](spark, sf_dir)
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), mode
-    )
+from tests.helpers import query_plan
 
 
 # ---------------------------------------------------------------------------
@@ -43,7 +37,7 @@ def test_priority_exists_counts_match_manual(spark, sf_dir):
 
 
 def test_priority_exists_plans_semi_join(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_tpch_priority_exists")
+    plan = query_plan(spark, sf_dir, "q_tpch_priority_exists")
     assert "LeftSemi" in plan or "left_semi" in plan.lower()
     assert "PushedFilters" in plan  # quarter filter reaches the orders scan
 
@@ -58,7 +52,7 @@ def test_forecast_revenue_positive_single_row(spark, sf_dir):
 
 
 def test_forecast_revenue_all_predicates_pushed(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_tpch_forecast_revenue")
+    plan = query_plan(spark, sf_dir, "q_tpch_forecast_revenue")
     assert "PushedFilters" in plan
     # projection pruned to the three needed columns
     assert "l_returnflag" not in plan.split("ReadSchema")[1][:400]
@@ -86,7 +80,7 @@ def test_promo_effect_is_a_share(spark, sf_dir):
 
 
 def test_promo_effect_single_agg_pass(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_tpch_promo_effect")
+    plan = query_plan(spark, sf_dir, "q_tpch_promo_effect")
     assert "BroadcastHashJoin" in plan
     # one aggregate pass over the join, not two per-branch scans unioned
     assert "Union" not in plan
@@ -116,7 +110,7 @@ def test_small_qty_threshold_exact(spark, sf_dir):
 
 
 def test_small_qty_broadcasts_part_avg(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_tpch_small_qty")
+    plan = query_plan(spark, sf_dir, "q_tpch_small_qty")
     assert "BroadcastHashJoin" in plan
 
 
@@ -133,7 +127,7 @@ def test_large_volume_rows_exceed_threshold(spark, sf_dir):
 
 
 def test_large_volume_topk_not_global_sort(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_tpch_large_volume")
+    plan = query_plan(spark, sf_dir, "q_tpch_large_volume")
     assert "TakeOrderedAndProject" in plan
 
 
@@ -164,7 +158,7 @@ def test_disjunctive_matches_union_of_branches(spark, sf_dir):
 
 
 def test_disjunctive_derives_scan_filters(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_tpch_disjunctive")
+    plan = query_plan(spark, sf_dir, "q_tpch_disjunctive")
     assert "BroadcastHashJoin" in plan
     # Catalyst derives a single-side residual for the part scan from the OR
     assert "p_brand" in plan

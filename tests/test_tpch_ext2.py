@@ -5,13 +5,7 @@ from pyspark.sql import functions as F
 
 from cdmx_airquality_etl_spark.registry import QUERIES
 from cdmx_airquality_etl_spark.sources.parquet import load_table
-
-
-def _plan(spark, sf_dir, name, mode="formatted"):
-    df = QUERIES[name](spark, sf_dir)
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), mode
-    )
+from tests.helpers import query_plan
 
 
 # ---------------------------------------------------------------------------
@@ -33,7 +27,7 @@ def test_min_cost_supplier_is_the_min(spark, sf_dir):
 
 
 def test_min_cost_supplier_broadcasts_dims(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_tpch_min_cost_supplier")
+    plan = query_plan(spark, sf_dir, "q_tpch_min_cost_supplier")
     assert "BroadcastHashJoin" in plan
     assert "TakeOrderedAndProject" in plan
 
@@ -82,7 +76,7 @@ def test_product_profit_covers_only_widget_parts(spark, sf_dir):
 def test_product_profit_dims_broadcast(spark, sf_dir):
     # part/supplier/nation are hinted dimensions; the orders join is
     # deliberately un-hinted (fact-scale — AQE picks its strategy)
-    plan = _plan(spark, sf_dir, "q_tpch_product_profit")
+    plan = query_plan(spark, sf_dir, "q_tpch_product_profit")
     assert "BroadcastHashJoin" in plan
 
 
@@ -118,7 +112,7 @@ def test_important_stock_threshold_holds(spark, sf_dir):
 
 def test_important_stock_no_collect_threshold(spark, sf_dir):
     # the scalar threshold must arrive via broadcast join, not a collect
-    plan = _plan(spark, sf_dir, "q_tpch_important_stock")
+    plan = query_plan(spark, sf_dir, "q_tpch_important_stock")
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
@@ -157,7 +151,7 @@ def test_waiting_supplier_counts_positive(spark, sf_dir):
 def test_waiting_supplier_single_fact_shuffle(spark, sf_dir):
     # the agg reformulation must not self-join lineitem (the EXISTS/NOT
     # EXISTS phrasing would scan the fact three times)
-    plan = _plan(spark, sf_dir, "q_tpch_waiting_supplier")
+    plan = query_plan(spark, sf_dir, "q_tpch_waiting_supplier")
     assert plan.count("lineitem.parquet") <= 2  # tree + detail mention
 
 
@@ -176,5 +170,5 @@ def test_lapsed_customers_anti_join_holds(spark, sf_dir):
 
 
 def test_lapsed_customers_plans_anti_join(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_tpch_lapsed_customers")
+    plan = query_plan(spark, sf_dir, "q_tpch_lapsed_customers")
     assert "LeftAnti" in plan or "left_anti" in plan.lower()

@@ -2,21 +2,10 @@
 operators/tpch_ext.py — with them, 22/22 TPC-H plan families are covered."""
 
 import pandas as pd
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from cdmx_airquality_etl_spark.registry import QUERIES
-
-
-def _read(sf_dir, name):
-    return pq.read_table(f"{sf_dir}/{name}.parquet").to_pandas()
-
-
-def _plan(spark, sf_dir, name, mode="formatted"):
-    df = QUERIES[name](spark, sf_dir)
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), mode
-    )
+from tests.helpers import query_plan, read_pandas
 
 
 # ---------------------------------------------------------------------------
@@ -24,8 +13,8 @@ def _plan(spark, sf_dir, name, mode="formatted"):
 # ---------------------------------------------------------------------------
 def test_shipmode_priority_matches_pandas(spark, sf_dir):
     rows = {r["ship_class"]: r for r in QUERIES["q_tpch_shipmode_priority"](spark, sf_dir).collect()}
-    li = _read(sf_dir, "lineitem")
-    orders = _read(sf_dir, "orders")
+    li = read_pandas(sf_dir, "lineitem")
+    orders = read_pandas(sf_dir, "orders")
     m = li.merge(orders, left_on="l_orderkey", right_on="o_orderkey")
     m["ship"] = pd.to_datetime(m["l_shipdate"])
     m["odate"] = pd.to_datetime(m["o_orderdate"])
@@ -42,7 +31,7 @@ def test_shipmode_priority_matches_pandas(spark, sf_dir):
 
 
 def test_shipmode_priority_single_aggregate(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_tpch_shipmode_priority")
+    plan = query_plan(spark, sf_dir, "q_tpch_shipmode_priority")
     assert "Union" not in plan  # one conditional pass, not two scans
 
 
@@ -51,8 +40,8 @@ def test_shipmode_priority_single_aggregate(spark, sf_dir):
 # ---------------------------------------------------------------------------
 def test_parts_supplier_count_matches_pandas(spark, sf_dir):
     rows = {(r["p_type"], r["size_band"]): r for r in QUERIES["q_tpch_parts_supplier_count"](spark, sf_dir).collect()}
-    li = _read(sf_dir, "lineitem")[["l_partkey", "l_suppkey"]].drop_duplicates()
-    part = _read(sf_dir, "part")
+    li = read_pandas(sf_dir, "lineitem")[["l_partkey", "l_suppkey"]].drop_duplicates()
+    part = read_pandas(sf_dir, "part")
     part = part[part.p_brand != "Brand#1"]
     m = li.merge(part, left_on="l_partkey", right_on="p_partkey")
     m["band"] = m["p_size"] // 10
@@ -74,5 +63,5 @@ def test_concentrated_suppliers_gate_holds(spark, sf_dir):
 
 
 def test_concentrated_suppliers_one_fact_scan_two_aggs(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_tpch_concentrated_suppliers")
+    plan = query_plan(spark, sf_dir, "q_tpch_concentrated_suppliers")
     assert "BroadcastHashJoin" in plan

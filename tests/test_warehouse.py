@@ -7,13 +7,7 @@ from pyspark.sql import functions as F
 from cdmx_airquality_etl_spark.operators.warehouse import _TOPK_NEIGHBORS
 from cdmx_airquality_etl_spark.registry import QUERIES
 from cdmx_airquality_etl_spark.sources.parquet import load_table
-
-
-def _plan(spark, sf_dir, name, mode="formatted"):
-    df = QUERIES[name](spark, sf_dir)
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), mode
-    )
+from tests.helpers import query_plan
 
 
 # ---------------------------------------------------------------------------
@@ -28,7 +22,7 @@ def test_tpch_shipping_topk_ordered(spark, sf_dir):
 
 
 def test_tpch_shipping_plan_broadcasts_dims(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_tpch_shipping")
+    plan = query_plan(spark, sf_dir, "q_tpch_shipping")
     assert "BroadcastHashJoin" in plan
     # the final ORDER BY ... LIMIT must be a top-k, not a global sort
     assert "TakeOrderedAndProject" in plan
@@ -40,7 +34,7 @@ def test_tpch_shipping_plan_broadcasts_dims(spark, sf_dir):
 # q_tpch_local_volume
 # ---------------------------------------------------------------------------
 def test_tpch_local_volume_no_shuffle_joins(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q_tpch_local_volume")
+    plan = query_plan(spark, sf_dir, "q_tpch_local_volume")
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan, "all dimension joins must broadcast"
 
@@ -76,7 +70,7 @@ def test_constraint_suite_clean_corpus_passes(spark, sf_dir):
 def test_constraint_suite_single_fact_aggregate(spark, sf_dir):
     # scan-side checks fold into hash aggregates; referential check is a
     # broadcast anti-join — no sort-merge anywhere
-    plan = _plan(spark, sf_dir, "q_constraint_suite")
+    plan = query_plan(spark, sf_dir, "q_constraint_suite")
     assert "HashAggregate" in plan
     assert "SortMergeJoin" not in plan
 
