@@ -7,7 +7,9 @@ from .portable import (
     sql_content_fingerprint,
     sql_exact_sum,
     sql_md5_int,
+    sql_split_bucket,
     sql_tokens,
+    split_bucket,
     tokens,
 )
 from .text import (
@@ -37,4 +39,6 @@ __all__ = [
     "sql_md5_int",
     "exact_sum",
     "sql_exact_sum",
+    "split_bucket",
+    "sql_split_bucket",
 ]

@@ -22,6 +22,10 @@ twin takes and returns DuckDB SQL text).
   ``DECIMAL(18, scale)`` and cast back to double. The decimal sum is exact
   and so independent of partial-aggregation order; a plain double sum can
   differ in the last ulp between engines and between runs.
+- ``split_bucket`` / ``sql_split_bucket``: the content-hash split and
+  sampling bucket, the ASCII code of hex digit ``k`` of md5 of an id's
+  string form, modulo ``m``. md5 renders lowercase hex in both engines, so
+  every id lands in the same bucket in either one.
 """
 
 from __future__ import annotations
@@ -70,6 +74,17 @@ def sql_md5_int(expr: str, nchars: int) -> str:
         )
         + ")"
     )
+
+
+def split_bucket(col: str, k: int, m: int) -> Column:
+    """ASCII code of hex digit ``k`` (1-based) of md5 of column ``col`` as a
+    string, mod ``m``."""
+    return F.ascii(F.substring(F.md5(F.col(col).cast("string")), k, 1)) % m
+
+
+def sql_split_bucket(expr: str, k: int, m: int) -> str:
+    """DuckDB SQL text of ``split_bucket`` over the SQL expression ``expr``."""
+    return f"ascii(substr(md5(CAST({expr} AS VARCHAR)), {k}, 1)) % {m}"
 
 
 def exact_sum(col: Column, scale: int = 2) -> Column:

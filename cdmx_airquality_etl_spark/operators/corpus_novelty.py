@@ -26,7 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.portable import md5_int, sql_md5_int, sql_tokens, tokens
+from ..functions.portable import md5_int, split_bucket, sql_md5_int, sql_split_bucket
+from ..functions.portable import sql_tokens, tokens
 from ..registry import register
 from .fanout import fan_out_scan
 from ..sources.parquet import load_table
@@ -338,27 +339,13 @@ def q_bpe_first_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # q_split_leakage — n-gram leakage audit between the content-hash splits
 # ---------------------------------------------------------------------------
-_SPLIT_SQL = (
-    "CASE WHEN ascii(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) % 10 < 8 "
-    "THEN 'train' ELSE 'eval' END"
-)
-
-
-def _split_col():
-    from pyspark.sql import functions as F  # local alias for readability
-
-    bucket = (
-        F.ascii(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)) % 10
-    )
-    return F.when(bucket < 8, "train").otherwise("eval")
-
-
 @register(
     "q_split_leakage",
     oracle=f"""
     WITH dg AS ({_sql_gram_fps("doc_id, lang")}),
     split_g AS (
-      SELECT dg.*, {_SPLIT_SQL} AS split FROM dg
+      SELECT dg.*, CASE WHEN {sql_split_bucket('doc_id', 1, 10)} < 8
+                   THEN 'train' ELSE 'eval' END AS split FROM dg
     ),
     train_fp AS (SELECT DISTINCT fp FROM split_g WHERE split = 'train'),
     eval_docs AS (
@@ -401,7 +388,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     (registry float rules)."""
     docs = load_table(spark, sf_dir, "documents")
     dg = _doc_gram_fps(docs, "doc_id", "lang").withColumn(
-        "split", _split_col()
+        "split", F.when(split_bucket("doc_id", 1, 10) < 8, "train").otherwise("eval")
     )
     train_fp = dg.filter(F.col("split") == "train").select("fp").distinct()
     eval_g = dg.filter(F.col("split") == "eval")

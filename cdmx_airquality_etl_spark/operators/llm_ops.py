@@ -133,36 +133,25 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus (clamped) so per-shard rank state stays ~_SHUF_TARGET_DOCS rows
 # per reducer no matter the corpus size — a FIXED count would make each
 # shard O(n) and the rank window a fat reducer at 100 TB. The shard key is
-# the first 4 md5 nibbles decoded portably (strpos/instr over the hex
-# alphabet — md5 renders lowercase hex in both engines), giving a uniform
+# the portable md5_int of the seeded id over 4 hex digits, a uniform
 # 0..65535 hash to take modulo the corpus-sized count.
 _SHUF_TARGET_DOCS = 64
 _SHUF_MIN_SHARDS = 8
 _SHUF_MAX_SHARDS = 65536
-_SHUF_KEY_SQL = "md5('shuf42:' || CAST(doc_id AS VARCHAR))"
-_HEX = "0123456789abcdef"
-_SHUF_HASH16_SQL = " + ".join(
-    f"(strpos('{_HEX}', substr({_SHUF_KEY_SQL}, {i + 1}, 1)) - 1) * {16 ** (3 - i)}"
-    for i in range(4)
-)
+_SHUF_SEEDED_SQL = "'shuf42:' || CAST(doc_id AS VARCHAR)"
+_SHUF_KEY_SQL = f"md5({_SHUF_SEEDED_SQL})"
 _SHUF_NSHARDS_SQL = (
     f"LEAST({_SHUF_MAX_SHARDS}, GREATEST({_SHUF_MIN_SHARDS}, "
     f"CAST(CEIL(COUNT(*) / {_SHUF_TARGET_DOCS}.0) AS INT)))"
 )
 
 
+def _shuf_seeded_spark():
+    return F.concat(F.lit("shuf42:"), F.col("doc_id").cast("string"))
+
+
 def _shuf_key_spark():
-    return F.md5(F.concat(F.lit("shuf42:"), F.col("doc_id").cast("string")))
-
-
-def _shuf_hash16_spark():
-    key = _shuf_key_spark()
-    h = F.lit(0)
-    for i in range(4):
-        h = h + (F.instr(F.lit(_HEX), F.substring(key, i + 1, 1)) - 1) * (
-            16 ** (3 - i)
-        )
-    return h
+    return F.md5(_shuf_seeded_spark())
 
 
 @register(
@@ -170,7 +159,7 @@ def _shuf_hash16_spark():
     oracle=f"""
     WITH ns AS (SELECT {_SHUF_NSHARDS_SQL} AS nshards FROM documents),
     keyed AS (
-      SELECT doc_id, ({_SHUF_HASH16_SQL}) % ns.nshards AS shard_id
+      SELECT doc_id, ({sql_md5_int(_SHUF_SEEDED_SQL, 4)}) % ns.nshards AS shard_id
       FROM documents, ns
     )
     SELECT doc_id,
@@ -209,7 +198,7 @@ def q_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("nshards")
     )
     key = _shuf_key_spark()
-    shard = (_shuf_hash16_spark() % F.col("nshards")).cast("bigint")
+    shard = (md5_int(_shuf_seeded_spark(), 4) % F.col("nshards")).cast("bigint")
     keyed = docs.join(broadcast(nshards)).select(
         "doc_id", shard.alias("shard_id")
     )

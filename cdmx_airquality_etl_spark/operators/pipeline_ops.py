@@ -18,8 +18,10 @@ from pyspark.sql.window import Window
 from ..functions.portable import (
     content_fingerprint,
     md5_int,
+    split_bucket,
     sql_content_fingerprint,
     sql_md5_int,
+    sql_split_bucket,
     sql_tokens,
     tokens,
 )
@@ -29,11 +31,11 @@ from ..sources.parquet import load_table
 
 @register(
     "q_train_test_split",
-    oracle="""
+    oracle=f"""
     SELECT split, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS total_chars
     FROM (
       SELECT n_chars,
-             CASE WHEN ascii(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) % 10 < 8
+             CASE WHEN {sql_split_bucket("doc_id", 1, 10)} < 8
                   THEN 'train' ELSE 'eval' END AS split
       FROM documents
     )
@@ -48,11 +50,10 @@ def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigns every doc identically. (For an exact 80/20, bucket on two hex
     chars: conv(substr(md5,1,2),16,10) % 10 < 8.)"""
     docs = load_table(spark, sf_dir, "documents")
-    bucket = F.ascii(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)) % 10
     return (
         docs.select(
             "n_chars",
-            F.when(bucket < 8, "train").otherwise("eval").alias("split"),
+            F.when(split_bucket("doc_id", 1, 10) < 8, "train").otherwise("eval").alias("split"),
         )
         .groupBy("split")
         .agg(
@@ -79,7 +80,7 @@ def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM clean
       GROUP BY {sql_content_fingerprint("text")}
     )
-    SELECT CASE WHEN ascii(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) % 10 < 8
+    SELECT CASE WHEN {sql_split_bucket("doc_id", 1, 10)} < 8
                 THEN 'train' ELSE 'eval' END AS split,
            lang,
            COUNT(*) AS n_docs,
@@ -115,10 +116,9 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    bucket = F.ascii(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)) % 10
     return (
         kept.select(
-            F.when(bucket < 8, "train").otherwise("eval").alias("split"),
+            F.when(split_bucket("doc_id", 1, 10) < 8, "train").otherwise("eval").alias("split"),
             "lang",
             "n_chars",
             F.size(toks).alias("n_toks"),
@@ -134,11 +134,11 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stratified_sample",
-    oracle="""
+    oracle=f"""
     SELECT lang,
            COUNT(*) AS n_total,
            COUNT(*) FILTER (
-             ascii(substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) % 16
+             {sql_split_bucket("doc_id", 2, 16)}
                < (CASE WHEN lang = 'en' THEN 12 ELSE 4 END)
            ) AS n_sampled
     FROM documents
@@ -155,10 +155,9 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     embarrassingly-parallel scan-side filter. Emitted as per-stratum
     totals + sampled counts (one conditional hash aggregate)."""
     docs = load_table(spark, sf_dir, "documents")
-    bucket = F.ascii(F.substring(F.md5(F.col("doc_id").cast("string")), 2, 1)) % 16
     rate16 = F.when(F.col("lang") == "en", 12).otherwise(4)
     return (
-        docs.select("lang", (bucket < rate16).alias("kept"))
+        docs.select("lang", (split_bucket("doc_id", 2, 16) < rate16).alias("kept"))
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_total"),

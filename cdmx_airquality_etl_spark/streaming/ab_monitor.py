@@ -30,7 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.analytics import _SEQ_C
-from .commit import assert_success_markers_enabled, available_now, committed, write_once
+from .commit import assert_success_markers_enabled, available_now, write_once
+from .commit import read_committed, read_latest
 
 _STATE_SCHEMA = (
     "na long, nb long, sa long, sb long, qa long, qb long"
@@ -74,12 +75,11 @@ def merge_moments(state: DataFrame, batch: DataFrame) -> DataFrame:
 
 
 def read_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """The newest COMMITTED cumulative moments; the zero row before any
-    batch commits."""
-    versions = committed(spark, state_path, "state")
-    if not versions:
-        return spark.createDataFrame([(0, 0, 0, 0, 0, 0)], _STATE_SCHEMA)
-    return spark.read.parquet(versions[-1][1]).select(*_MOMENTS)
+    """The newest committed cumulative moments (commit.read_latest, with
+    the declared schema); the zero row before any batch commits."""
+    return read_latest(
+        spark, state_path, "state", _STATE_SCHEMA, [(0,) * len(_MOMENTS)]
+    )
 
 
 def update_state(
@@ -114,17 +114,11 @@ def read_ab_trajectory(
     information fraction against the PLANNED sample size, the
     c/√info boundary and the stop flag — q_ab_sequential's row, produced
     from incrementally-maintained state (same fixed-shape expressions,
-    so the final version's z equals the batch statistic bitwise)."""
-    versions = committed(spark, state_path, "state")
-    if not versions:
-        return spark.createDataFrame(
-            [], "version long, " + _STATE_SCHEMA + ", z_welch double, "
-            "info_frac double, z_boundary double, crossed long"
-        )
-    allv = (
-        spark.read.option("basePath", state_path)
-        .parquet(*[p for _, p in versions])
-        .select(F.col("state").cast("long").alias("version"), *_MOMENTS)
+    so the final version's z equals the batch statistic bitwise). Reads
+    every committed version (commit.read_committed); empty before the
+    first commit."""
+    allv = read_committed(spark, state_path, "state", _STATE_SCHEMA).select(
+        F.col("state").alias("version"), *_MOMENTS
     )
     na, nb = F.col("na").cast("double"), F.col("nb").cast("double")
     sa, sb = F.col("sa").cast("double"), F.col("sb").cast("double")

@@ -41,7 +41,7 @@ from pyspark.sql.types import StructType
 
 from ..functions.portable import md5_int
 from ..operators.subdoc import doc_blocks
-from .commit import assert_success_markers_enabled, available_now, committed, write_once
+from .commit import assert_success_markers_enabled, available_now, read_committed, write_once
 
 _INDEX_SCHEMA = "block_hash long, n_docs long, n_occurrences long"
 
@@ -82,11 +82,9 @@ def read_block_index(spark: SparkSession, index_path: str) -> DataFrame:
     under-count). Before the first batch commits (or before the index
     exists at all) the index IS the empty relation — return it as one, so
     consumers can score against a fresh index without special-casing
-    bootstrap."""
-    complete = committed(spark, index_path, "batch")
-    if not complete:
-        return spark.createDataFrame([], _INDEX_SCHEMA)
-    raw = spark.read.option("basePath", index_path).parquet(*[p for _, p in complete])
+    bootstrap. The partials are read with the declared schema
+    (commit.read_committed)."""
+    raw = read_committed(spark, index_path, "batch", _INDEX_SCHEMA)
     return raw.groupBy("block_hash").agg(
         F.sum("n_docs").alias("n_docs"),
         F.sum("n_occurrences").alias("n_occurrences"),

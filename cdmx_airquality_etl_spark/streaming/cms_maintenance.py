@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..functions.portable import md5_int
-from .commit import assert_success_markers_enabled, available_now, committed, write_once
+from .commit import assert_success_markers_enabled, available_now, read_latest, write_once
 
 CMS_ROWS = 4
 CMS_WIDTH = 256  # q_countmin's geometry: est - exact ~ e/width * N
@@ -73,12 +73,9 @@ def merge_sketch(state: DataFrame, increments: DataFrame) -> DataFrame:
 
 
 def read_sketch(spark: SparkSession, state_path: str) -> DataFrame:
-    """The newest COMMITTED sketch version; the empty sketch before any
-    batch commits."""
-    versions = committed(spark, state_path, "state")
-    if not versions:
-        return spark.createDataFrame([], _STATE_SCHEMA)
-    return spark.read.parquet(versions[-1][1]).select("r", "bucket", "cnt")
+    """The newest committed sketch version (commit.read_latest, with the
+    declared schema); the empty sketch before any batch commits."""
+    return read_latest(spark, state_path, "state", _STATE_SCHEMA)
 
 
 def read_cms_estimates(

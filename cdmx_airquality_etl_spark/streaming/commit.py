@@ -21,8 +21,14 @@ replay harmless with one protocol, owned by this module:
   data files but no marker: :func:`committed` does not list it, and the
   batch's replay overwrites it in place. Committed directories are never
   rewritten, so a crash can never destroy prior state.
-- **Readers take the newest or the union.** Full-state sinks read the
-  last entry of :func:`committed`; append-only sinks read all of them.
+- **Readers take the newest or the union.** Full-state sinks read
+  :func:`read_latest`, which walks ids downward and stops at the first
+  committed one; append-only sinks read :func:`read_committed`, the union
+  of every committed version with its id as a column. Both read with the
+  sink's declared schema, so no state read infers one from the files (a
+  footer-reading job each); only the join view, whose schema is whatever
+  its caller seeded, passes none and infers. No sink lists versions or
+  reads a version directory itself.
 
 **One runner.** :func:`available_now` is the only place a stream over
 a file source starts; every public stream in this package goes through
@@ -41,7 +47,8 @@ conf), the other streams await it before they return.
 from __future__ import annotations
 
 import posixpath
-from typing import Callable
+import re
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
@@ -67,26 +74,77 @@ def assert_success_markers_enabled(spark: SparkSession) -> None:
         )
 
 
+def _version_dir(root: str, prefix: str, batch_id: int) -> str:
+    return posixpath.join(root, f"{prefix}={batch_id}")
+
+
+def _version_ids(
+    spark: SparkSession, root: str, prefix: str
+) -> tuple[list[int], Callable[[int], bool]]:
+    """The id of every ``<prefix>=<id>`` entry under `root`, committed or
+    not, in numeric order (none when `root` does not exist), and the
+    ``_SUCCESS`` probe of an id. The listing comes back from the JVM as
+    one ``{path,path,...}`` string, so it costs a few py4j round trips
+    however many versions there are; a name that only looks like a
+    version (a fragment of a path holding a comma) fails its probe."""
+    assert_success_markers_enabled(spark)
+    fs, jroot, jvm = fs_and_path(spark, root)
+
+    def is_committed(batch_id: int) -> bool:
+        bdir = _version_dir(root, prefix, batch_id)
+        return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(bdir, "_SUCCESS")))
+
+    if not fs.exists(jroot):
+        return [], is_committed
+    paths = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(fs.listStatus(jroot))
+    listing = str(jvm.org.apache.commons.lang3.ArrayUtils.toString(paths))
+    version = re.compile(re.escape(prefix) + r"=(-?\d+)")
+    names = (posixpath.basename(p) for p in listing[1:-1].split(","))
+    ids = {int(m.group(1)) for n in names if (m := version.fullmatch(n))}
+    return sorted(ids), is_committed
+
+
 def committed(spark: SparkSession, root: str, prefix: str) -> list[tuple[int, str]]:
     """(id, path) of every committed ``<prefix>=<id>`` directory under
     `root`, in numeric id order; ``[]`` when `root` does not exist.
     Listing goes through the Hadoop FileSystem API, so the state may live
     on any cluster filesystem."""
-    assert_success_markers_enabled(spark)
-    fs, jroot, jvm = fs_and_path(spark, root)
-    if not fs.exists(jroot):
-        return []
-    out = []
-    for st in fs.listStatus(jroot):
-        p = st.getPath()
-        name = p.getName()
-        if (
-            st.isDirectory()
-            and name.startswith(prefix + "=")
-            and fs.exists(jvm.org.apache.hadoop.fs.Path(p, "_SUCCESS"))
-        ):
-            out.append((int(name.split("=", 1)[1]), p.toString()))
-    return sorted(out)
+    ids, is_committed = _version_ids(spark, root, prefix)
+    return [(i, _version_dir(root, prefix, i)) for i in ids if is_committed(i)]
+
+
+def read_latest(
+    spark: SparkSession, root: str, prefix: str, schema: str, initial: Sequence = ()
+) -> DataFrame:
+    """The newest committed version under `root`, read with the declared
+    `schema`; the `initial` rows (none by default) before the first
+    commit. Ids are probed from the top down and the walk stops at the
+    first committed one, so a read costs one listing plus one probe per
+    torn version above it, not one per version ever written."""
+    ids, is_committed = _version_ids(spark, root, prefix)
+    newest = next((i for i in reversed(ids) if is_committed(i)), None)
+    if newest is None:
+        return spark.createDataFrame(list(initial), schema)
+    return spark.read.schema(schema).parquet(_version_dir(root, prefix, newest))
+
+
+def read_committed(
+    spark: SparkSession, root: str, prefix: str, schema: str | None
+) -> DataFrame:
+    """The union of every committed version under `root`, read with the
+    declared `schema` plus the version id as a BIGINT column named
+    `prefix` (the ``<prefix>=<id>`` directory, read as a partition); the
+    empty frame of that schema before the first commit. ``schema=None``
+    infers the schema from the files and raises FileNotFoundError when
+    nothing is committed, since there is then no schema to give."""
+    paths = [p for _, p in committed(spark, root, prefix)]
+    reader = spark.read.option("basePath", root)
+    if schema is None:
+        if not paths:
+            raise FileNotFoundError(f"no committed {prefix}=<id> version under {root!r}")
+        return reader.parquet(*paths)
+    schema = f"{schema}, {prefix} long"
+    return reader.schema(schema).parquet(*paths) if paths else spark.createDataFrame([], schema)
 
 
 def write_once(
@@ -101,7 +159,7 @@ def write_once(
     replay reads no state. Returns True when the batch was (re)written,
     False when it was skipped as committed."""
     assert_success_markers_enabled(spark)
-    bdir = posixpath.join(root, f"{prefix}={batch_id}")
+    bdir = _version_dir(root, prefix, batch_id)
     fs, jdir, jvm = fs_and_path(spark, bdir)
     if fs.exists(jvm.org.apache.hadoop.fs.Path(jdir, "_SUCCESS")):
         return False

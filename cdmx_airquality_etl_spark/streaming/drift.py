@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.types import StructType
 
-from .commit import assert_success_markers_enabled, available_now, committed, write_once
+from .commit import assert_success_markers_enabled, available_now, read_committed, write_once
 
 DEFAULT_THRESHOLD = 0.5  # L1 distance above which a batch counts as drifted
 _VERDICT_SCHEMA = "batch_id long, n_rows long, l1_distance double, drifted boolean"
@@ -67,13 +67,10 @@ def batch_drift(batch_df: DataFrame, reference: DataFrame, key_col: str) -> Data
 
 
 def read_drift_log(spark: SparkSession, out_path: str) -> DataFrame:
-    """The monitor's verdict log: union of all COMMITTED per-batch rows
-    (uncommitted crash leftovers excluded). Empty relation before any
-    batch commits."""
-    versions = committed(spark, out_path, "state")
-    if not versions:
-        return spark.createDataFrame([], _VERDICT_SCHEMA)
-    return spark.read.parquet(*[p for _, p in versions])
+    """The monitor's verdict log: union of all committed per-batch rows
+    (commit.read_committed with the declared schema; uncommitted crash
+    leftovers excluded). Empty relation before any batch commits."""
+    return read_committed(spark, out_path, "state", _VERDICT_SCHEMA).drop("state")
 
 
 def drift_monitor_stream(

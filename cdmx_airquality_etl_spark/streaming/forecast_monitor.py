@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.timeseries import hw_from_daily
-from .commit import assert_success_markers_enabled, available_now, committed, write_once
+from .commit import assert_success_markers_enabled, available_now, read_latest, write_once
 
 _STATE_SCHEMA = "d long, y long"
 
@@ -51,11 +51,9 @@ def merge_daily(state: DataFrame, batch: DataFrame) -> DataFrame:
 
 
 def read_daily_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """The newest COMMITTED day-count series; empty before any commit."""
-    versions = committed(spark, state_path, "state")
-    if not versions:
-        return spark.createDataFrame([], _STATE_SCHEMA)
-    return spark.read.parquet(versions[-1][1]).select("d", "y")
+    """The newest committed day-count series (commit.read_latest, with the
+    declared schema); empty before any commit."""
+    return read_latest(spark, state_path, "state", _STATE_SCHEMA)
 
 
 def update_daily_state(

@@ -21,8 +21,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
+from ..hadoop_fs import path_exists
 from ..plans.merge import merge_into_parquet
 from .commit import available_now
 
@@ -57,16 +58,32 @@ def ingest_stream(
     checkpoint commit (plans/merge.merge_upsert docstring; pinned by
     tests/test_streaming_recovery.py). Pass None for the raw
     reference-parity behavior where every re-merge bumps the counter.
+
+    Every merge reads the target with one schema, inferred from its files
+    once per call: by the first batch when the target exists, else by the
+    batch after the one that creates it. It is widened by the batch's
+    columns (the version column among them) and an INT counter, as the
+    merge writes it, so a target column the source lacks is kept and a
+    new source column is added, with no footer-reading job per
+    micro-batch.
     """
     if checkpoint_dir is None:
         raise ValueError("ingest_stream needs a checkpoint_dir that outlives the run")
+    schema: StructType | None = None
 
     def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal schema
         if batch_df.isEmpty():
             return
         src = batch_df
         if version_col is not None:
             src = src.withColumn(version_col, F.lit(int(batch_id)))
+        if schema is None and path_exists(src.sparkSession, target_path):
+            schema = src.sparkSession.read.parquet(target_path).schema
+            counter = [StructField(counter_col, IntegerType())] if counter_col else []
+            for f in [*src.schema.fields, *counter]:
+                if f.name not in schema.fieldNames():
+                    schema.add(f)
         merge_into_parquet(
             batch_df.sparkSession,
             src,
@@ -75,6 +92,7 @@ def ingest_stream(
             counter_col=counter_col,
             partition_col=partition_col,
             version_col=version_col,
+            schema=schema,
         )
 
     query = available_now(

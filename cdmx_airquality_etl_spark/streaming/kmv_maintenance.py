@@ -30,7 +30,7 @@ from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from ..functions.portable import md5_int
-from .commit import assert_success_markers_enabled, available_now, committed, write_once
+from .commit import assert_success_markers_enabled, available_now, read_latest, write_once
 
 KMV_K = 64
 _NCHARS = 15  # 60-bit hash space
@@ -62,12 +62,9 @@ def merge_sketch(state: DataFrame, batch: DataFrame) -> DataFrame:
 
 
 def read_sketch(spark: SparkSession, state_path: str) -> DataFrame:
-    """The newest COMMITTED sketch version; the empty sketch before any
-    batch commits."""
-    versions = committed(spark, state_path, "state")
-    if not versions:
-        return spark.createDataFrame([], _STATE_SCHEMA)
-    return spark.read.parquet(versions[-1][1]).select("key", "hv")
+    """The newest committed sketch version (commit.read_latest, with the
+    declared schema); the empty sketch before any batch commits."""
+    return read_latest(spark, state_path, "state", _STATE_SCHEMA)
 
 
 def read_kmv_estimate(spark: SparkSession, state_path: str) -> DataFrame:

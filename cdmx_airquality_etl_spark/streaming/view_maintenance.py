@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from ..plans.ivm_join import build_view
-from .commit import assert_success_markers_enabled, available_now, committed, write_once
+from .commit import assert_success_markers_enabled, available_now, read_committed, write_once
 
 SEED_BATCH_ID = -1  # the pre-stream view seed lives at batch=-1
 
@@ -87,17 +87,14 @@ def seed_view(view_df: DataFrame, view_path: str) -> None:
 
 
 def read_view(spark: SparkSession, view_path: str) -> DataFrame:
-    """The queryable view: union of all COMMITTED batch subdirectories.
-    Uncommitted (crashed, in-flight) batch dirs are excluded. Raises on a
-    view with no committed state — an unseeded view is a caller bug, not
-    an empty relation (the schema is unknowable here)."""
-    batches = committed(spark, view_path, "batch")
-    if not batches:
-        raise FileNotFoundError(
-            f"no committed batches under view {view_path!r} — seed_view first"
-        )
-    raw = spark.read.option("basePath", view_path).parquet(*[p for _, p in batches])
-    return raw.drop("batch")
+    """The queryable view: union of all committed batch subdirectories
+    (commit.read_committed). Uncommitted (crashed, in-flight) batch dirs
+    are excluded. The view has no declared schema, its schema is whatever
+    the caller seeded, so this is the one sink reader that infers its
+    schema from the files. Raises FileNotFoundError on a view with no
+    committed state: an unseeded view is a caller bug (seed_view first),
+    not an empty relation."""
+    return read_committed(spark, view_path, "batch", None).drop("batch")
 
 
 def view_maintenance_stream(

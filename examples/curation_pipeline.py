@@ -32,7 +32,7 @@ sys.path.insert(0, REPO_ROOT)
 
 from pyspark.sql import functions as F
 
-from cdmx_airquality_etl_spark.functions import tokens
+from cdmx_airquality_etl_spark.functions import content_fingerprint, split_bucket, tokens
 from cdmx_airquality_etl_spark.operators.llm_ops import (
     _DECON_N,
     _PACK_CAP,
@@ -105,7 +105,7 @@ def main() -> None:
     print(f"after model scores + legacy gate: {clean.count()} docs")
 
     # 2. exact dedup, keep the longest copy per fingerprint
-    fp = F.md5(F.regexp_replace(F.trim(F.lower("text")), r"\s+", " "))
+    fp = content_fingerprint(F.col("text"))
     quality = F.col("n_chars") * 10_000_000_000 - F.col("doc_id")
     deduped = (
         clean.withColumn("fp", fp)
@@ -131,9 +131,8 @@ def main() -> None:
     print(f"after decontamination: {survivors.count()} docs")
 
     # 4. content-hash train/eval split (stable under re-runs/repartitions)
-    bucket = F.ascii(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)) % 10
     split = survivors.withColumn(
-        "split", F.when(bucket < 8, "train").otherwise("eval")
+        "split", F.when(split_bucket("doc_id", 1, 10) < 8, "train").otherwise("eval")
     )
 
     # 5. greedy packing per (split, lang) via the pure recurrence

@@ -72,11 +72,11 @@ def test_ingest_stream_incremental_merge(spark, tmp_path):
     assert out3["UIZ"]["nupdates"] == 2
 
 
-def _land_snapshot(spark, src, rows, mtime):
+def _land_snapshot(spark, src, rows, mtime, schema=SNAP_SCHEMA):
     """Append one single-file snapshot to `src` and stamp its arrival time
     (the file source takes files in modification-time order)."""
     before = set(os.listdir(src)) if os.path.exists(src) else set()
-    spark.createDataFrame([Row(**r) for r in rows], SNAP_SCHEMA).coalesce(
+    spark.createDataFrame([Row(**r) for r in rows], schema).coalesce(
         1
     ).write.mode("append").parquet(src)
     for name in set(os.listdir(src)) - before:
@@ -110,6 +110,81 @@ def test_ingest_stream_requires_checkpoint(spark, tmp_path):
         ingest_stream(spark, src, SNAP_SCHEMA, tgt,
                       ["report_ts", "clave_str"], "nupdates", None, None)
     assert not os.path.exists(tgt)
+
+
+WIDE_SCHEMA = SNAP_SCHEMA + ", station string"
+KEYS = ["report_ts", "clave_str"]
+
+
+def _run(spark, tmp_path, name, schema, rows):
+    """One ingest_stream call over its own one-snapshot source, without the
+    version guard (each call has its own checkpoint, so batch ids restart)."""
+    src = str(tmp_path / name)
+    _land_snapshot(spark, src, rows, 1_700_000_000, schema)
+    ingest_stream(spark, src, schema, str(tmp_path / "table"), KEYS,
+                  checkpoint_dir=str(tmp_path / f"ckpt_{name}"), version_col=None)
+    rows = [r.asDict() for r in spark.read.parquet(str(tmp_path / "table")).collect()]
+    return {r["clave_str"]: (r["calidad"], r.get("station"), r["nupdates"]) for r in rows}
+
+
+def test_ingest_stream_keeps_a_target_column_the_source_lacks(spark, tmp_path):
+    """The target's schema comes from its files, not from the source: a
+    column an earlier, wider run wrote survives a narrower run."""
+    uiz = {"report_ts": 2025052314, "clave_str": "UIZ"}
+    _run(spark, tmp_path, "wide", WIDE_SCHEMA,
+         [{**uiz, "calidad": "mala", "station": "Iztapalapa"}])
+    got = _run(spark, tmp_path, "narrow", SNAP_SCHEMA,
+               [{**uiz, "calidad": "buena"},
+                {"report_ts": 2025052314, "clave_str": "MER", "calidad": "buena"}])
+    assert got == {"UIZ": ("buena", "Iztapalapa", 2), "MER": ("buena", None, 1)}
+
+
+def test_ingest_stream_adds_a_new_source_column(spark, tmp_path):
+    """The schema the merges read with is widened by the source's columns,
+    so a later, wider run still adds its column."""
+    uiz = {"report_ts": 2025052314, "clave_str": "UIZ"}
+    mer = {"report_ts": 2025052314, "clave_str": "MER"}
+    _run(spark, tmp_path, "narrow", SNAP_SCHEMA,
+         [{**uiz, "calidad": "mala"}, {**mer, "calidad": "buena"}])
+    got = _run(spark, tmp_path, "wide", WIDE_SCHEMA,
+               [{**uiz, "calidad": "buena", "station": "Iztapalapa"}])
+    assert got == {"UIZ": ("buena", "Iztapalapa", 2), "MER": ("buena", None, 1)}
+
+
+def _footer_jobs(spark, group: str) -> list[int]:
+    """Jobs of `group` that scan no file and start from a parallelized
+    list: parquet schema inference reading file footers."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    dot = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph.makeDotFile
+    tracker = sc.statusTracker()
+    found = []
+    for job in tracker.getJobIdsForGroup(group):
+        graphs = " ".join(
+            str(dot(store.operationGraphForStage(stage)))
+            for stage in tracker.getJobInfo(job).stageIds
+        )
+        if "ParallelCollectionRDD" in graphs and "Scan parquet" not in graphs:
+            found.append(job)
+    return found
+
+
+def test_ingest_stream_infers_the_target_schema_once_per_run(spark, tmp_path):
+    """Three snapshots into an existing target: the merges share one
+    inferred schema, so the run submits at most one footer-reading job
+    (one per micro-batch, 3, when each merge inferred its own)."""
+    src = str(tmp_path / "incoming")
+    tgt = str(tmp_path / "table")
+    ckpt = str(tmp_path / "ckpt")
+    key = {"report_ts": 2025052314, "clave_str": "UIZ"}
+    _land_snapshot(spark, src, [{**key, "calidad": "mala"}], 1_700_000_000)
+    ingest_stream(spark, src, SNAP_SCHEMA, tgt, KEYS, checkpoint_dir=ckpt)
+    for i in range(1, 4):
+        _land_snapshot(spark, src, [{**key, "calidad": f"c{i}"}], 1_700_000_000 + i)
+    q = ingest_stream(spark, src, SNAP_SCHEMA, tgt, KEYS, checkpoint_dir=ckpt)
+    assert len(_footer_jobs(spark, str(q.runId))) <= 1
+    got = [(r["calidad"], r["nupdates"]) for r in spark.read.parquet(tgt).collect()]
+    assert got == [("c3", 4)]
 
 
 def test_windowed_counts_stream_matches_batch(spark, tmp_path, sf_dir):

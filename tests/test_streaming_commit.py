@@ -1,18 +1,28 @@
 """Contract tests for the streaming commit protocol (streaming/commit.py),
 plus torn-version recovery for every full-state ``state=<id>/`` sink: a
 directory without ``_SUCCESS`` is invisible to readers and is rewritten,
-exactly once, when its batch id replays."""
+exactly once, when its batch id replays. commit.py is the protocol's one
+owner: no other streaming module lists versions, and every declared state
+schema describes what its writer writes."""
 
+import ast
 import os
 from datetime import datetime, timedelta
 from functools import reduce
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from py4j.clientserver import ClientServerConnection
 from pyspark.sql import DataFrame
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from cdmx_airquality_etl_spark.streaming import (
     ab_monitor,
+    block_index,
     cms_maintenance,
+    commit,
+    drift,
     forecast_monitor,
     kmv_maintenance,
 )
@@ -126,3 +136,112 @@ def test_torn_version_is_invisible_and_replayed_once(spark, tmp_path, sink):
     update(spark, batches[2], root, 2)
     assert os.path.exists(marker)
     assert state(root) == one_shot(batches, "three")
+
+
+def test_only_commit_lists_versions():
+    """No streaming module but commit.py finds committed versions itself:
+    a sink reads its state through commit.read_latest / read_committed."""
+    stream_dir = os.path.dirname(commit.__file__)
+    listing = {"committed", "_listed_ids", "listStatus", "globStatus"}
+    bad = []
+    for f in sorted(os.listdir(stream_dir)):
+        if not f.endswith(".py") or f == "commit.py":
+            continue
+        for node in ast.walk(ast.parse(open(os.path.join(stream_dir, f)).read())):
+            if isinstance(node, ast.ImportFrom):
+                bad += [f"{f}: imports {a.name}" for a in node.names if a.name in listing]
+            elif isinstance(node, ast.Call):
+                fn = node.func
+                name = getattr(fn, "id", None) or getattr(fn, "attr", None)
+                if name in listing:
+                    bad.append(f"{f}:{node.lineno}: calls {name}(")
+    assert not bad, bad
+
+
+def test_newest_version_read_probes_from_the_top(spark, tmp_path, monkeypatch):
+    """200 committed versions under a torn top one: the read returns the
+    newest committed version after two ``_SUCCESS`` probes (the torn
+    version, then its predecessor) and a handful of other py4j commands,
+    not a probe per version ever committed."""
+    root = tmp_path / "st"
+    for i in range(201):
+        d = root / f"state={i}"
+        d.mkdir(parents=True)
+        pq.write_table(
+            pa.table({"r": [0], "bucket": [0], "cnt": [i]}), d / "part-0.parquet"
+        )
+        if i < 200:
+            (d / "_SUCCESS").touch()
+    sent = []
+    real_send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent.append(command)
+        return real_send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    sketch = cms_maintenance.read_sketch(spark, str(root))
+    monkeypatch.undo()
+    assert [tuple(r) for r in sketch.collect()] == [(0, 0, 199)]
+    probes = [c for c in sent if "\nexists\n" in c]
+    assert len(probes) <= 3, probes  # the root, state=200, state=199
+    assert len(sent) <= 60, f"{len(sent)} py4j commands for one read"
+
+
+def _docs(spark, i: int) -> DataFrame:
+    """Four documents of 24 tokens each, two of them sharing their text."""
+    text = " ".join(f"w{i}_{j % 12}" for j in range(24))
+    return spark.createDataFrame(
+        [(i * 4 + j, text if j < 2 else f"{text} tail{j}", "en" if j else "es")
+         for j in range(4)],
+        "doc_id long, text string, lang string",
+    )
+
+
+def _drift_batch(spark, root, tmp_path):
+    """One committed verdict: the drift stream over a one-file source."""
+    src = tmp_path / "src"
+    src.mkdir()
+    pq.write_table(
+        pa.table({"doc_id": [1, 2, 3], "lang": ["en", "es", "en"]}),
+        src / "part-0.parquet",
+    )
+    schema = StructType([StructField("doc_id", LongType()), StructField("lang", StringType())])
+    ref = spark.createDataFrame([("en", 1.0)], "key string, frac double")
+    drift.drift_monitor_stream(
+        spark, str(src), schema, ref, "lang", root, str(tmp_path / "ck")
+    ).awaitTermination(120)
+
+
+# sink -> (declared schema, version prefix, commit batch 0 into root)
+DECLARED = {
+    **{
+        name: (mod._STATE_SCHEMA, "state", lambda s, r, t, u=SINKS[name][0]: u(s, _batch(s, 0), r, 0))
+        for name, mod in [
+            ("cms", cms_maintenance),
+            ("kmv", kmv_maintenance),
+            ("ab", ab_monitor),
+            ("forecast", forecast_monitor),
+        ]
+    },
+    "block_index": (
+        block_index._INDEX_SCHEMA,
+        "batch",
+        lambda s, r, t: block_index.update_block_index(s, _docs(s, 0), r, 0),
+    ),
+    "drift": (drift._VERDICT_SCHEMA, "state", _drift_batch),
+}
+
+
+@pytest.mark.parametrize("sink", sorted(DECLARED))
+def test_declared_schema_describes_the_written_state(spark, tmp_path, sink):
+    """The readers read with the declared schema instead of inferring one,
+    so it must name and type every column its writer writes."""
+    declared, prefix, commit_one = DECLARED[sink]
+    root = str(tmp_path / "st")
+    commit_one(spark, root, tmp_path)
+    written = spark.read.parquet(os.path.join(root, f"{prefix}=0")).schema
+    declared = spark.createDataFrame([], declared).schema
+    assert [(f.name, f.dataType) for f in written.fields] == [
+        (f.name, f.dataType) for f in declared.fields
+    ]
